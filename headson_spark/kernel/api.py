@@ -84,6 +84,22 @@ def _run(a: ar.Arena, cfg: RenderConfig, prio: dict, budget: int) -> str:
     return find_largest_render_under_budget(po, cfg, budget)
 
 
+def render_conversation(roles, texts, tools, cfg: RenderConfig, prio: dict,
+                        budget: int, kept: list[int] | None = None,
+                        total: int | None = None) -> str:
+    """Render one conversation {"turns": [{role, text, tool}, ...]} from
+    its column lists. Without `kept` the lists are the whole merged
+    conversation and the sampler runs here; with `kept` they are only the
+    rows at those original positions (the keep-set, filtered upstream)
+    and `total` is the conversation length the omission counts run
+    against."""
+    a = ar.build_conversation_arena(roles, texts, tools,
+                                    prio["array_max_items"], prio["sampler"],
+                                    pre_sampled_indices=kept,
+                                    pre_sampled_total=total)
+    return _run(a, cfg, prio, budget)
+
+
 def summarize(text: str | bytes, *, format: str = "auto",
               style: str = "default", character_budget: int | None = None,
               skew: str = "balanced", input_format: str = "json",

@@ -30,84 +30,90 @@ from typing import Iterator
 
 import pandas as pd
 
-from ..kernel.api import make_configs
-from ..kernel import arena as ar
-from ..kernel.order import build_order
-from ..kernel.render import find_largest_render_under_budget
+from ..kernel.api import make_configs, render_conversation
 
 PREVIEW_SCHEMA = ("conv_id string, preview string, n_turns int, "
                   "n_chars bigint, preview_bytes int")
 
 
-def _summarize_conv(pdf: pd.DataFrame, cfg, prio, budget) -> tuple:
-    # last-write-wins per turn_idx by ts, then stable order by turn_idx
-    pdf = (pdf.sort_values(["turn_idx", "ts"], kind="stable")
-              .drop_duplicates(subset=["turn_idx"], keep="last"))
-    roles = pdf["role"].tolist()
-    texts = pdf["text"].tolist()
-    tools = pdf["tool"].tolist()
-    # turns array sampled before building nodes (pre-parse limit pushdown)
-    a = ar.build_conversation_arena(roles, texts, tools,
-                                    prio["array_max_items"],
-                                    prio["sampler"])
-    po = build_order(a, prio["max_string_graphemes"],
-                     prefer_tail_arrays=prio["prefer_tail_arrays"],
-                     max_pops=max(budget, 1), lazy=True)
-    preview = find_largest_render_under_budget(po, cfg, budget)
-    n_chars = int(sum(len(t) for t in texts))
-    return (len(roles), n_chars, preview)
-
-
 def make_preview_fn(budget: int = 500, style: str = "default",
                     skew: str = "balanced", fmt: str = "json"):
-    """Build the mapInPandas kernel closure (pickled to executors)."""
+    """Build the mapInPandas kernel closure (pickled to executors), shared
+    by the full and the pushdown plans.
+
+    Rows arrive sorted by (conv_id, turn_idx, ts). A conversation with no
+    sentinel row is the whole delivered conversation and is sampled in
+    the kernel (full plan). The pushdown plans add one sentinel row per
+    conversation, recognised by a non-null `_total`, that sorts first
+    (turn_idx = -1, ts NULL); its `_total` / `_chars` carry the
+    pre-filter conversation length and the sum of text lengths over ALL
+    delivered rows, and the other rows are only the sampler keep-set.
+
+    n_chars is the text length over the LWW-winning turns, NULL text
+    counting 0 (as Spark's sum(length(text)) does). With a sentinel it is
+    `_chars` minus the lengths of duplicate-loser deliveries. Losers on
+    KEPT positions are visible here (the keep-set filter passes every
+    delivery of a kept turn_idx) and are subtracted exactly; a duplicate
+    delivery of a NON-kept turn is invisible post-filter, so its loser
+    length stays counted — exact whenever duplicate deliveries land on
+    keep-set positions (or nowhere) and an upper bound otherwise."""
+    import numpy as np
     cfg, prio, budget = make_configs(format=fmt, style=style,
                                      character_budget=budget, skew=skew)
 
-    import numpy as np
+    def flush(pdf: pd.DataFrame) -> pd.DataFrame:
+        conv = pdf["conv_id"].to_numpy()
+        tidx = pdf["turn_idx"].to_numpy()
+        # vectorized last-write-wins: rows are ts-ascending within
+        # (conv_id, turn_idx), so keep each run's last row
+        keep = np.empty(len(conv), dtype=bool)
+        keep[-1] = True
+        keep[:-1] = (conv[:-1] != conv[1:]) | (tidx[:-1] != tidx[1:])
+        loser_chars: dict = {}
+        if not keep.all():
+            for c, t in zip(conv[~keep], pdf["text"].to_numpy()[~keep]):
+                if t is not None:
+                    loser_chars[c] = loser_chars.get(c, 0) + len(t)
+            pdf = pdf[keep]
+            conv = conv[keep]
+            tidx = tidx[keep]
+        roles = pdf["role"].tolist()
+        texts = pdf["text"].tolist()
+        tools = pdf["tool"].tolist()
+        has_totals = "_total" in pdf.columns
+        if has_totals:
+            totals = pdf["_total"].tolist()
+            chars = pdf["_chars"].tolist()
+        # conversation boundaries on the sorted conv_id column
+        bounds = np.flatnonzero(conv[1:] != conv[:-1]) + 1
+        starts = np.concatenate(([0], bounds))
+        ends = np.concatenate((bounds, [len(conv)]))
+        out = {"conv_id": [], "preview": [], "n_turns": [],
+               "n_chars": [], "preview_bytes": []}
+        for s, e in zip(starts, ends):
+            cid = conv[s]
+            kept = total = None
+            if has_totals and pd.notna(totals[s]):  # the sentinel
+                total = int(totals[s])
+                n_chars = (int(chars[s]) if pd.notna(chars[s]) else 0) \
+                    - loser_chars.get(cid, 0)
+                s += 1
+                kept = [int(x) for x in tidx[s:e]]
+            else:
+                n_chars = sum(map(len, filter(None, texts[s:e])))
+            preview = render_conversation(roles[s:e], texts[s:e],
+                                          tools[s:e], cfg, prio, budget,
+                                          kept=kept, total=total)
+            out["conv_id"].append(cid)
+            out["preview"].append(preview)
+            out["n_turns"].append(e - s if total is None else total)
+            out["n_chars"].append(n_chars)
+            out["preview_bytes"].append(len(preview.encode("utf-8")))
+        return pd.DataFrame(out)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # rows arrive sorted by (conv_id, turn_idx, ts) — see
-        # conversation_previews; concat(carry, batch) preserves that order
+        # concat(carry, batch) preserves the (conv_id, turn_idx, ts) order
         carry: pd.DataFrame | None = None
-
-        def flush(pdf: pd.DataFrame) -> pd.DataFrame:
-            conv = pdf["conv_id"].to_numpy()
-            tidx = pdf["turn_idx"].to_numpy()
-            # vectorized last-write-wins: rows are ts-ascending within
-            # (conv_id, turn_idx), so keep each run's last row
-            keep = np.empty(len(conv), dtype=bool)
-            keep[-1] = True
-            keep[:-1] = (conv[:-1] != conv[1:]) | (tidx[:-1] != tidx[1:])
-            if not keep.all():
-                pdf = pdf[keep]
-                conv = conv[keep]
-            roles = pdf["role"].tolist()
-            texts = pdf["text"].tolist()
-            tools = pdf["tool"].tolist()
-            # conversation boundaries on the sorted conv_id column
-            bounds = np.flatnonzero(conv[1:] != conv[:-1]) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(conv)]))
-            out = {"conv_id": [], "preview": [], "n_turns": [],
-                   "n_chars": [], "preview_bytes": []}
-            for s, e in zip(starts, ends):
-                a = ar.build_conversation_arena(
-                    roles[s:e], texts[s:e], tools[s:e],
-                    prio["array_max_items"], prio["sampler"])
-                po = build_order(
-                    a, prio["max_string_graphemes"],
-                    prefer_tail_arrays=prio["prefer_tail_arrays"],
-                    max_pops=max(budget, 1), lazy=True)
-                preview = find_largest_render_under_budget(po, cfg, budget)
-                out["conv_id"].append(conv[s])
-                out["preview"].append(preview)
-                out["n_turns"].append(e - s)
-                out["n_chars"].append(
-                    int(sum(len(t) for t in texts[s:e])))
-                out["preview_bytes"].append(len(preview.encode("utf-8")))
-            return pd.DataFrame(out)
-
         for pdf in batches:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
@@ -128,108 +134,32 @@ def make_preview_fn(budget: int = 500, style: str = "default",
     return fn
 
 
-def make_presampled_preview_fn(budget: int, style: str, skew: str,
-                               fmt: str):
-    """mapInPandas kernel for pushed-down input: rows are already the
-    sampler keep-set, PLUS one sentinel row per conversation
-    (turn_idx == -1, sorted first) whose `_total` / `_chars` columns
-    carry the pre-filter conversation length and the sum of text lengths
-    over ALL delivered rows. The sentinel travels through the same single
-    exchange as the data — no totals join, so the pushdown plan costs the
-    same as the full plan even when nothing prunes.
+def _kernel_step(rows, budget: int, style: str, skew: str, fmt: str,
+                 num_partitions: int | None):
+    """The one exchange + sort + kernel step every plan ends in."""
+    if num_partitions is None:
+        # explicit count pins the exchange: AQE's size-based coalescing
+        # targets ~64MB partitions, which under-parallelizes a
+        # CPU-bound Python kernel stage (bytes are small, work is not)
+        sc = rows.sparkSession.sparkContext
+        num_partitions = max(sc.defaultParallelism * 4, 8)
+    dist = (rows.repartition(num_partitions, "conv_id")
+                .sortWithinPartitions("conv_id", "turn_idx", "ts"))
+    return dist.mapInPandas(make_preview_fn(budget, style, skew, fmt),
+                            schema=PREVIEW_SCHEMA)
 
-    n_chars semantics (matches the full pipeline: total chars over the
-    LWW-winning turns of the WHOLE conversation, not just the kept set):
-    n_chars = sentinel _chars minus the lengths of duplicate-loser
-    deliveries. Losers on KEPT positions are visible here (the keep-set
-    filter passes every delivery of a kept turn_idx) and are subtracted
-    exactly; a duplicate delivery of a NON-kept turn is invisible
-    post-filter, so its loser length stays counted — n_chars is exact
-    whenever duplicate deliveries land on keep-set positions (or nowhere)
-    and an upper bound otherwise."""
-    import numpy as np
-    cfg, prio, budget = make_configs(format=fmt, style=style,
-                                     character_budget=budget, skew=skew)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-
-        def flush(pdf: pd.DataFrame) -> pd.DataFrame:
-            conv = pdf["conv_id"].to_numpy()
-            tidx = pdf["turn_idx"].to_numpy()
-            keep = np.empty(len(conv), dtype=bool)
-            keep[-1] = True
-            keep[:-1] = (conv[:-1] != conv[1:]) | (tidx[:-1] != tidx[1:])
-            loser_chars: dict = {}
-            if not keep.all():
-                lose = pdf[~keep]
-                loser_chars = {
-                    c: int(s) for c, s in lose.groupby("conv_id")["text"]
-                    .apply(lambda col: sum(len(x) for x in col
-                                           if x is not None)).items()}
-                pdf = pdf[keep]
-                conv = conv[keep]
-                tidx = tidx[keep]
-            roles = pdf["role"].tolist()
-            texts = pdf["text"].tolist()
-            tools = pdf["tool"].tolist()
-            totals = pdf["_total"].to_numpy()
-            charss = pdf["_chars"].to_numpy()
-            bounds = np.flatnonzero(conv[1:] != conv[:-1]) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(conv)]))
-            out = {"conv_id": [], "preview": [], "n_turns": [],
-                   "n_chars": [], "preview_bytes": []}
-            for s, e in zip(starts, ends):
-                cid = conv[s]
-                chars_all = None
-                if tidx[s] == -1:  # sentinel first within the group
-                    total = int(totals[s])
-                    c = charss[s]
-                    # guard both null encodings (float NaN / object None)
-                    if c is not None and c == c:
-                        chars_all = int(c)
-                    s += 1
-                else:  # defensive: sentinel missing, count what we have
-                    total = e - s
-                a = ar.build_conversation_arena(
-                    roles[s:e], texts[s:e], tools[s:e],
-                    prio["array_max_items"], prio["sampler"],
-                    pre_sampled_indices=[int(x) for x in tidx[s:e]],
-                    pre_sampled_total=total)
-                po = build_order(
-                    a, prio["max_string_graphemes"],
-                    prefer_tail_arrays=prio["prefer_tail_arrays"],
-                    max_pops=max(budget, 1), lazy=True)
-                preview = find_largest_render_under_budget(po, cfg, budget)
-                if chars_all is not None:
-                    n_chars = chars_all - loser_chars.get(cid, 0)
-                else:
-                    n_chars = int(sum(len(t) for t in texts[s:e]))
-                out["conv_id"].append(cid)
-                out["preview"].append(preview)
-                out["n_turns"].append(total)
-                out["n_chars"].append(n_chars)
-                out["preview_bytes"].append(len(preview.encode("utf-8")))
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            last = pdf["conv_id"].iloc[-1]
-            vals = pdf["conv_id"].to_numpy()
-            cut = int(np.searchsorted(vals, last, side="left"))
-            carry = pdf.iloc[cut:]
-            ready = pdf.iloc[:cut]
-            if len(ready):
-                yield flush(ready)
-        if carry is not None and len(carry):
-            yield flush(carry)
-
-    return fn
+def _with_sentinels(kept, totals):
+    """Kept rows (NULL totals) unioned with one sentinel row per
+    conversation. Rows at a negative turn_idx break the dense-position
+    contract and would share the sentinel's turn_idx = -1 sort slot, so
+    they are dropped here."""
+    from pyspark.sql import functions as F
+    kept = kept.filter(F.col("turn_idx") >= 0).select(
+        "conv_id", "turn_idx", "role", "text", "tool", "ts",
+        F.lit(None).cast("int").alias("_total"),
+        F.lit(None).cast("bigint").alias("_chars"))
+    return kept.unionByName(_total_sentinels(totals))
 
 
 def conversation_previews_pushdown(df, *, budget: int = 500,
@@ -265,37 +195,11 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
     else:
         from .sampling import default_kept_positions
         keep = F.col("turn_idx").isin(default_kept_positions(cap))
-    # Duplicate (conv_id, turn_idx) deliveries merge last-write-wins in
-    # the kernel, so the document length is the number of DISTINCT
-    # turns — which, under this operator's dense-0-based-turn_idx
-    # PRECONDITION (the same contract the keep-set filter relies on),
-    # equals max(turn_idx) + 1. max() aggregates map-side (one tiny row
-    # per conversation per task through the exchange); countDistinct
-    # would shuffle every deduplicated (conv_id, turn_idx) pair — a
-    # second full-width exchange, measured +60% wall at 8M turns. The
-    # total then travels as ONE SENTINEL ROW per conversation
-    # (turn_idx = -1, sorts first) unioned with the kept rows through
-    # the same exchange — a totals sort-merge join would re-sort the
-    # whole kept set (also measured: 32.3 s vs 22.5 s at 8M turns).
-    # The sentinel also carries sum(length(text)) over ALL deliveries so
-    # the kernel can report whole-conversation n_chars (LWW losers on
-    # kept positions subtracted kernel-side — see
-    # make_presampled_preview_fn for the exactness contract).
-    kept = (df.filter(keep)
-              .withColumn("_total", F.lit(None).cast("int"))
-              .withColumn("_chars", F.lit(None).cast("bigint")))
-    sentinels = _total_sentinels(df)
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts",
-            "_total", "_chars"]
-    rows = kept.select(*cols).unionByName(sentinels.select(*cols))
-    if num_partitions is None:
-        sc = df.sparkSession.sparkContext
-        num_partitions = max(sc.defaultParallelism * 4, 8)
-    dist = (rows.repartition(num_partitions, "conv_id")
-                .sortWithinPartitions("conv_id", "turn_idx", "ts"))
-    return dist.mapInPandas(
-        make_presampled_preview_fn(budget, style, skew, fmt),
-        schema=PREVIEW_SCHEMA)
+    # Totals ride as sentinel rows through the one exchange; the
+    # rejected totals designs (countDistinct, a totals join) and their
+    # measurements are in PLANS.md §1a.
+    rows = _with_sentinels(df.filter(keep), _conv_totals(df))
+    return _kernel_step(rows, budget, style, skew, fmt, num_partitions)
 
 
 def _conv_totals(df):
@@ -309,11 +213,12 @@ def _conv_totals(df):
         F.sum(F.length("text")).cast("bigint").alias("_chars"))
 
 
-def _total_sentinels(df):
-    """Totals as sentinel rows (turn_idx = -1, sorts before any data row
-    of the conversation) in the transcript row shape."""
+def _total_sentinels(totals):
+    """_conv_totals rows as sentinel rows in the transcript row shape
+    (turn_idx = -1 and ts NULL, so each sorts before any data row of its
+    conversation)."""
     from pyspark.sql import functions as F
-    return _conv_totals(df).select(
+    return totals.select(
         "conv_id",
         F.lit(-1).cast("int").alias("turn_idx"),
         F.lit(None).cast("string").alias("role"),
@@ -334,18 +239,9 @@ def conversation_previews_tail_pushdown(df, *, budget: int = 500,
     keeps only `turn_idx >= total - cap` BEFORE the conv_id exchange, so
     the kernel shuffle ships O(cap) turns per conversation.
 
-    Join strategy is left to AQE. OBSERVED at sf0.1 (64k conversations):
-    AQE keeps a sort-merge join — the totals exchange is narrow and the
-    df-side exchange is the same width the full plan pays anyway, so the
-    measured 1.1-1.2x win over the full plan comes from bounding the
-    sort + Arrow + kernel input to O(cap) turns per conversation, not
-    from avoiding the shuffle. When AQE's runtime stats put the totals
-    under the broadcast threshold it upgrades to a broadcast join and
-    the df shuffle is avoided entirely (the pre-shuffle pruning win); no
-    hint is forced — a forced broadcast of a per-conversation table
-    would OOM at scale (the top_terms lesson). Byte-equal to
-    conversation_previews_full(skew="tail") (tested on the snapshot
-    matrix incl. the 50k-turn hot conversation)."""
+    Join strategy is left to AQE (no forced broadcast of a
+    per-conversation table; the observed plans are in PLANS.md §1a).
+    Byte-equal to conversation_previews_full(skew="tail")."""
     from pyspark.sql import functions as F
 
     cap = max(max(budget, 1) // 2, 1)
@@ -354,34 +250,15 @@ def conversation_previews_tail_pushdown(df, *, budget: int = 500,
                                   F.col("_total").alias("_tt")),
                     "conv_id")
               .filter(F.col("turn_idx") >= F.col("_tt") - cap)
-              .drop("_tt")
-              .withColumn("_total", F.lit(None).cast("int"))
-              .withColumn("_chars", F.lit(None).cast("bigint")))
-    sentinels = totals.select(
-        "conv_id",
-        F.lit(-1).cast("int").alias("turn_idx"),
-        F.lit(None).cast("string").alias("role"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-        "_total", "_chars")
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts",
-            "_total", "_chars"]
-    rows = kept.select(*cols).unionByName(sentinels.select(*cols))
-    if num_partitions is None:
-        sc = df.sparkSession.sparkContext
-        num_partitions = max(sc.defaultParallelism * 4, 8)
-    dist = (rows.repartition(num_partitions, "conv_id")
-                .sortWithinPartitions("conv_id", "turn_idx", "ts"))
-    return dist.mapInPandas(
-        make_presampled_preview_fn(budget, style, "tail", fmt),
-        schema=PREVIEW_SCHEMA)
+              .drop("_tt"))
+    rows = _with_sentinels(kept, totals)
+    return _kernel_step(rows, budget, style, "tail", fmt, num_partitions)
 
 
 # auto-dispatch threshold: the pushdown plan pays a totals pre-scan (one
 # map-side aggregate; balanced/head) or a totals join (tail), and wins by
 # pruning the kernel exchange to O(cap) turns per conversation. Measured
-# A/B (scripts/longconv_ab.py): ~16-turn conversations leave nothing to
+# A/B (PLANS.md §1a): ~16-turn conversations leave nothing to
 # prune and the pre-scan is pure overhead (+10-19%); 2000-turn
 # conversations win 1.4x. Require at least this fraction of shuffled rows
 # pruned before choosing the pushdown plan.
@@ -468,13 +345,9 @@ def conversation_previews(df, *, budget: int = 500, style: str = "default",
 
     n_chars exactness caveat under auto dispatch: the pushdown plan's
     n_chars is an upper bound when a NON-kept position receives
-    duplicate deliveries (the sentinel totals count every delivered
-    row's chars; LWW-loser lengths are only subtracted for kept
-    positions — see conversation_previews_pushdown). The full plan is
-    always exact. So on inputs with duplicate deliveries outside the
-    keep-set, n_chars can differ by plan choice; preview/n_turns never
-    do. Pin pushdown=False where exact n_chars matters more than the
-    pruned shuffle."""
+    duplicate deliveries (see make_preview_fn); the full plan is always
+    exact, and preview/n_turns never differ by plan. Pin pushdown=False
+    where exact n_chars matters more than the pruned shuffle."""
     if pushdown == "auto":
         plan = choose_preview_plan(df, budget=budget, skew=skew)
     elif pushdown in (True, False, "pushdown", "full"):
@@ -497,36 +370,6 @@ def conversation_previews_full(df, *, budget: int = 500,
                                skew: str = "balanced", fmt: str = "json",
                                num_partitions: int | None = None):
     """Full-shuffle preview pipeline: one exchange carrying every turn,
-    sampling inside the kernel. Needed for tail skew (the keep-set
-    depends on conversation length) and kept for A/B benchmarking.
-    """
-    if num_partitions is None:
-        # explicit count pins the exchange: AQE's size-based coalescing
-        # targets ~64MB partitions, which under-parallelizes a
-        # CPU-bound Python kernel stage (bytes are small, work is not)
-        sc = df.sparkSession.sparkContext
-        num_partitions = max(sc.defaultParallelism * 4, 8)
-    dist = df.repartition(num_partitions, "conv_id")
-    dist = dist.sortWithinPartitions("conv_id", "turn_idx", "ts")
-    return dist.mapInPandas(
-        make_preview_fn(budget, style, skew, fmt), schema=PREVIEW_SCHEMA)
-
-
-def conversation_previews_grouped(df, *, budget: int = 500,
-                                  style: str = "default",
-                                  skew: str = "balanced", fmt: str = "json"):
-    """applyInPandas variant (one UDF call per conversation) — kept for
-    A/B benchmarking against the mapInPandas pipeline."""
-    cfg, prio, budget_ = make_configs(format=fmt, style=style,
-                                      character_budget=budget, skew=skew)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_turns, n_chars, preview = _summarize_conv(pdf, cfg, prio, budget_)
-        return pd.DataFrame({
-            "conv_id": [pdf["conv_id"].iloc[0]],
-            "preview": [preview],
-            "n_turns": [n_turns],
-            "n_chars": [n_chars],
-            "preview_bytes": [len(preview.encode("utf-8"))]})
-
-    return df.groupBy("conv_id").applyInPandas(fn, schema=PREVIEW_SCHEMA)
+    sampling inside the kernel. The plan conversation_previews picks when
+    pruning would not pay for the pushdown plan's totals pre-scan."""
+    return _kernel_step(df, budget, style, skew, fmt, num_partitions)

@@ -4,15 +4,16 @@ Pipeline:
 
     readStream (file/rate/Iceberg source)
       -> withWatermark("ts", late_gap)
-      -> groupBy(conv_id).applyInPandasWithState(merge+preview kernel)
+      -> groupBy(pmod(xxhash64(conv_id), B) | conv_id)
+           .applyInPandasWithState(merge+preview kernel)
       -> foreachBatch idempotent keyed sink (exactly-once)
 
-Per-conversation state holds the merged turn map (the "stateful join" on
-(conv_id, turn_idx): late/duplicate turns merge last-write-wins by ts),
-with stable turn ordering enforced before budget allocation. Conversation
-sessions close via event-time timeout (session-window semantics hosted
-inside the stateful operator — declarative session_window cannot hold
-arbitrary state). Checkpointed and resumable; replays are idempotent
+Each group's state maps conv_id to that conversation's merged turns (the
+"stateful join" on (conv_id, turn_idx): late/duplicate turns merge
+last-write-wins by ts), with stable turn ordering enforced before budget
+allocation. Conversation sessions close via event-time timeout
+(session-window semantics hosted inside the stateful operator —
+declarative session_window cannot hold arbitrary state). Checkpointed and resumable; replays are idempotent
 because the sink MERGEs on conv_id and skips already-committed batch ids.
 
 Scale notes:
@@ -31,28 +32,21 @@ from typing import Any, Iterator, Tuple
 
 import pandas as pd
 
-from ..kernel.api import make_configs
-from ..kernel import arena as ar
-from ..kernel.order import build_order
-from ..kernel.render import find_largest_render_under_budget
+from ..kernel.api import make_configs, render_conversation
 
 OUTPUT_SCHEMA = ("conv_id string, preview string, n_turns int, "
                  "last_ts timestamp, final boolean")
-STATE_SCHEMA = "turns_json string, max_ts_us long, emitted_version int"
+# seen-bitmap / turn-map bound per conversation: rows at turn_idx outside
+# [0, MAX_TURNS_IN_STATE) are dropped (see _st_merge_cols)
+MAX_TURNS_IN_STATE = 100_000
 
 
 def _render_from_turn_map(turn_map: dict, cfg, prio, budget) -> str:
     idxs = sorted(turn_map, key=int)
-    roles = [turn_map[i][0] for i in idxs]
-    texts = [turn_map[i][1] for i in idxs]
-    tools = [turn_map[i][2] for i in idxs]
-    a = ar.build_conversation_arena(roles, texts, tools,
-                                    prio["array_max_items"],
-                                    prio["sampler"])
-    po = build_order(a, prio["max_string_graphemes"],
-                     prefer_tail_arrays=prio["prefer_tail_arrays"],
-                     max_pops=max(budget, 1), lazy=True)
-    return find_largest_render_under_budget(po, cfg, budget)
+    return render_conversation([turn_map[i][0] for i in idxs],
+                               [turn_map[i][1] for i in idxs],
+                               [turn_map[i][2] for i in idxs],
+                               cfg, prio, budget)
 
 
 # --------------------------------------------------------------------------
@@ -131,36 +125,16 @@ def _render_bounded(st: dict, cfg, prio, budget,
         if r in keepset:
             picked.append((r, v))
     picked.sort()
-    a = ar.build_conversation_arena(
+    return render_conversation(
         [v[0] for _, v in picked], [v[1] for _, v in picked],
-        [v[2] for _, v in picked],
-        prio["array_max_items"], prio["sampler"],
-        pre_sampled_indices=[r for r, _ in picked],
-        pre_sampled_total=total)
-    po = build_order(a, prio["max_string_graphemes"],
-                     prefer_tail_arrays=prio["prefer_tail_arrays"],
-                     max_pops=max(budget, 1), lazy=True)
-    return find_largest_render_under_budget(po, cfg, budget)
+        [v[2] for _, v in picked], cfg, prio, budget,
+        kept=[r for r, _ in picked], total=total)
 
 
 def _st_new() -> dict:
     # v counts completed merge rounds for this conversation (drives the
     # every_k emission policy)
     return {"b": bytearray(), "k": {}, "mx": 0, "n": 0, "v": 0}
-
-
-def _st_to_jsonable(st: dict) -> dict:
-    import base64
-    return {"b": base64.b64encode(bytes(st["b"])).decode("ascii"),
-            "k": st["k"], "mx": st["mx"], "n": st["n"],
-            "v": st.get("v", 0)}
-
-
-def _st_from_jsonable(d: dict) -> dict:
-    import base64
-    d["b"] = bytearray(base64.b64decode(d["b"]))
-    d.setdefault("v", 0)
-    return d
 
 
 def _should_emit(policy: str, every: int, version: int) -> bool:
@@ -177,30 +151,8 @@ def _should_emit(policy: str, every: int, version: int) -> bool:
     raise ValueError(f"unknown emit_policy: {policy!r}")
 
 
-def _st_encode(st: dict) -> str:
-    return json.dumps(_st_to_jsonable(st))
-
-
-def _st_decode(blob: str) -> dict:
-    return _st_from_jsonable(json.loads(blob))
-
-
-def _st_merge_rows(st: dict, pdf: pd.DataFrame,
-                   max_idx: int = 100_000) -> bool:
-    """LWW-merge a micro-batch slice into bounded state; True if any
-    content or count changed. (Column-extraction wrapper around
-    _st_merge_cols — the bucketed engine extracts columns once per
-    batch and calls _st_merge_cols per conversation slice instead.)"""
-    ts_us_arr = (pdf["ts"].to_numpy("datetime64[ns]")
-                 .astype("int64") // 1_000)
-    return _st_merge_cols(st, pdf["turn_idx"].tolist(),
-                          pdf["role"].tolist(), pdf["text"].tolist(),
-                          pdf["tool"].tolist(), ts_us_arr.tolist(),
-                          max_idx)
-
-
 def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list,
-                   max_idx: int = 100_000) -> bool:
+                   max_idx: int = MAX_TURNS_IN_STATE) -> bool:
     """LWW-merge pre-extracted column slices into bounded state; True if
     any content or count changed.
 
@@ -231,122 +183,21 @@ def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list,
     return changed
 
 
-def make_stateful_preview_fn(budget: int = 500, style: str = "default",
-                             skew: str = "balanced", fmt: str = "json",
-                             session_gap_ms: int = 600_000,
-                             max_turns_in_state: int = 100_000,
-                             emit_policy: str = "on_change",
-                             emit_every: int = 8):
-    """Build the applyInPandasWithState function (group key = conv_id).
-
-    Balanced/head skew uses budget-bounded state (O(cap) turn contents +
-    a seen-bitmap — see the module helpers); tail skew keeps the full
-    turn map because tail kept-ness depends on the final length.
-
-    emit_policy controls intermediate emissions (final session-close
-    emissions always fire): "on_change" re-renders every changed
-    conversation per micro-batch; "on_close" skips ALL intermediate
-    renders (one render per conversation at session close — the
-    throughput mode when only final previews matter); "every_k" renders
-    a changed conversation only on its every emit_every-th CHANGED
-    merge round (identical counting in the per-conv, bucketed and TWS
-    engines). All policies converge to identical final (final=True)
-    rows.
-    """
-    if emit_policy not in ("on_change", "on_close", "every_k"):
-        raise ValueError(f"unknown emit_policy: {emit_policy!r}")
-    cfg, prio, budget = make_configs(format=fmt, style=style,
-                                     character_budget=budget, skew=skew)
-    keep = _keepset(prio, budget)
-    keepset = set(keep) if keep is not None else None
-
-    def render(st: dict) -> str:
-        if keep is not None:
-            return _render_bounded(st, cfg, prio, budget, keepset)
-        return _render_from_turn_map(st["k"], cfg, prio, budget)
-
-    def n_turns_of(st: dict) -> int:
-        return st["n"] if keep is not None else len(st["k"])
-
-    def fn(key: Tuple[str], pdf_iter: Iterator[pd.DataFrame],
-           state: Any) -> Iterator[pd.DataFrame]:
-        conv_id = key[0]
-        if state.hasTimedOut:
-            # session closes: final emission, then evict state
-            blob, max_ts_us, version = state.get
-            st = _st_decode(blob)
-            preview = render(st)
-            state.remove()
-            yield pd.DataFrame({
-                "conv_id": [conv_id], "preview": [preview],
-                "n_turns": [n_turns_of(st)],
-                "last_ts": [pd.Timestamp(max_ts_us, unit="us", tz="UTC")],
-                "final": [True]})
-            return
-
-        if state.exists:
-            blob, max_ts_us, version = state.get
-            st = _st_decode(blob)
-            st["mx"] = max_ts_us
-        else:
-            st, version = _st_new(), 0
-
-        changed = False
-        for pdf in pdf_iter:
-            changed = (_st_merge_rows(st, pdf, max_turns_in_state)
-                       or changed)
-        if changed:
-            # st["v"] counts CHANGED merge rounds only — the every_k
-            # policy gates on it, matching the bucketed engine and the
-            # TWS processor exactly (a data-bearing round that changes
-            # nothing does not advance the emission cadence)
-            st["v"] = st.get("v", 0) + 1
-        if keep is not None:
-            _prune_kept(st, keep)
-        elif len(st["k"]) > max_turns_in_state:
-            # tail path hard cap against degenerate conversations
-            # (reference SAFETY_CAP precedent, scoring.rs:3)
-            ks = sorted(st["k"], key=int)[:max_turns_in_state]
-            st["k"] = {k: st["k"][k] for k in ks}
-
-        state.update((_st_encode(st), st["mx"], version + 1))
-        # session-window closure: event-time timeout at max_ts + gap.
-        # Clamp past the watermark: a late turn for an already-expired
-        # session would otherwise compute a deadline in the past and
-        # Spark rejects it (INVALID_TIMEOUT_TIMESTAMP); clamping closes
-        # the session on the next micro-batch instead.
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max(st["mx"] // 1000 + session_gap_ms, wm_ms + 1))
-
-        if changed and _should_emit(emit_policy, emit_every, st["v"]):
-            preview = render(st)
-            yield pd.DataFrame({
-                "conv_id": [conv_id], "preview": [preview],
-                "n_turns": [n_turns_of(st)],
-                "last_ts": [pd.Timestamp(st["mx"], unit="us", tz="UTC")],
-                "final": [False]})
-
-    return fn
-
-
 BUCKET_STATE_SCHEMA = "blob binary, n_convs int"
 
 
 def _bucket_encode(convs: dict) -> bytes:
-    """Bucket state blob: pickle (protocol 5) of {conv_id: state dict}.
-    Binary replaces the round-2..4 JSON+base64 format — the bitmap stays
-    raw bytes (no 4/3 base64 inflation) and encode/decode drop the
-    per-field JSON text scan, which was measurable per micro-batch at
-    512 buckets. State blobs never leave the state store, so pickle's
-    python-only format is fine here (the SINK stays parquet).
+    """Group state blob: pickle (protocol 5) of {conv_id: state dict}.
+    The bitmap stays raw bytes, and state blobs never leave the state
+    store, so pickle's python-only format is fine here (the SINK stays
+    parquet).
 
-    SECURITY: pickle.loads executes attacker-chosen code, so unlike the
-    old JSON format a tampered checkpoint/state directory compromises
-    the executors on resume. Checkpoint dirs must be trusted (ACL'd to
-    the job owner) — which Spark effectively requires anyway, since its
-    own state/offset files are integrity-unprotected, but the blast
-    radius here is code execution, not just wrong answers."""
+    SECURITY: pickle.loads executes attacker-chosen code, so a tampered
+    checkpoint/state directory compromises the executors on resume.
+    Checkpoint dirs must be trusted (ACL'd to the job owner) — which
+    Spark effectively requires anyway, since its own state/offset files
+    are integrity-unprotected, but the blast radius here is code
+    execution, not just wrong answers."""
     import pickle
     return pickle.dumps(convs, protocol=5)
 
@@ -359,30 +210,29 @@ def _bucket_decode(blob) -> dict:
 def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
                              skew: str = "balanced", fmt: str = "json",
                              session_gap_ms: int = 600_000,
-                             max_turns_in_state: int = 100_000,
                              emit_policy: str = "on_change",
                              emit_every: int = 8):
-    """Bucketed state coalescing: the stateful group key is
-    pmod(xxhash64(conv_id), B) instead of conv_id, so ONE
-    applyInPandasWithState group invocation carries ~n_convs/B
-    conversations. The per-group Python/Arrow/state-store machinery —
-    measured as the dominant cost of the per-conversation engine — is
-    amortized ~(n_convs/B)x; merge/render logic is identical.
+    """Build the applyInPandasWithState function. A group's state maps
+    conv_id to that conversation's state, so one function serves both
+    group keys: conv_id, and pmod(xxhash64(conv_id), B) — bucketed state
+    coalescing, where one group invocation carries ~n_convs/B
+    conversations and amortizes the per-group Python/Arrow/state-store
+    machinery, at the price of rewriting the bucket's blob whenever any
+    member changes. Balanced/head skew keeps budget-bounded state (O(cap)
+    contents + seen-bitmap, see the module helpers); tail keeps the full
+    turn map, since tail kept-ness depends on the final length.
 
-    Trade-off: the bucket's state blob is rewritten whenever any of its
-    conversations change (write amplification ~bucket size). B tunes
-    between per-group overhead (B too big) and amplification (B too
-    small). Budget-bounded per-conversation state (O(cap) contents +
-    seen-bitmap) keeps the blob small even for mega-conversations. The
-    per-conversation engine remains the semantics reference; the gated
-    transformWithStateInPandas path removes the trade-off entirely
-    (per-conv state granularity without per-group overhead).
+    Each conversation's session closes by event-time timeout at its max
+    ts + session_gap_ms: the group timeout is armed at the earliest open
+    deadline, and a firing closes (final=True) the conversations the
+    watermark has passed; the state is removed once none remain.
 
-    emit_policy: see make_stateful_preview_fn — "on_change" (default),
-    "on_close" (no intermediate renders; with bounded state the render
-    is the dominant per-batch cost, so this is the bulk-throughput
-    mode), "every_k" (render every emit_every-th changed round per
-    conversation). Final timeout emissions are policy-independent.
+    emit_policy controls intermediate emissions: "on_change" (default)
+    renders every changed conversation per micro-batch; "on_close"
+    renders none (one render per conversation at close — the
+    bulk-throughput mode); "every_k" renders a changed conversation on
+    its every emit_every-th CHANGED merge round. All policies converge to
+    identical final rows.
     """
     if emit_policy not in ("on_change", "on_close", "every_k"):
         raise ValueError(f"unknown emit_policy: {emit_policy!r}")
@@ -466,16 +316,17 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
                 if st is None:
                     st = convs[cid] = _st_new()
                 if _st_merge_cols(st, tidxs[s:e], roles[s:e],
-                                  texts[s:e], tools[s:e], ts_list[s:e],
-                                  max_turns_in_state):
+                                  texts[s:e], tools[s:e], ts_list[s:e]):
                     changed.add(cid)
         for cid in changed:
             st = convs[cid]
             st["v"] = st.get("v", 0) + 1
             if keep is not None:
                 _prune_kept(st, keep)
-            elif len(st["k"]) > max_turns_in_state:
-                ks = sorted(st["k"], key=int)[:max_turns_in_state]
+            elif len(st["k"]) > MAX_TURNS_IN_STATE:
+                # tail path hard cap against degenerate conversations
+                # (reference SAFETY_CAP precedent, scoring.rs:3)
+                ks = sorted(st["k"], key=int)[:MAX_TURNS_IN_STATE]
                 st["k"] = {k: st["k"][k] for k in ks}
         state.update((_bucket_encode(convs), len(convs)))
         _arm_timeout(state, convs, wm_ms)
@@ -502,64 +353,38 @@ def streaming_previews(stream_df, *, budget: int = 500,
                        emit_every: int = 8):
     """stream_df: streaming DataFrame with the transcript schema.
 
-    n_buckets engages bucketed state coalescing (the throughput path —
-    per-group applyInPandasWithState overhead amortized across
-    ~n_convs/n_buckets conversations per group); None selects the
-    per-conversation reference engine. Both produce identical rows.
+    n_buckets engages bucketed state coalescing: the stateful group key
+    is pmod(xxhash64(conv_id), n_buckets), amortizing per-group
+    applyInPandasWithState overhead across ~n_convs/n_buckets
+    conversations per group (the throughput path); None groups by
+    conv_id. Both run make_bucketed_preview_fn and produce identical
+    final rows.
 
     emit_policy: "on_change" (default) / "on_close" / "every_k" — see
-    make_stateful_preview_fn. All policies agree on final (final=True)
+    make_bucketed_preview_fn. All policies agree on final (final=True)
     rows; on_close trades intermediate visibility for throughput.
 
-    CHECKPOINT COMPATIBILITY: round 2 changed BOTH the stateful group
-    key (bucketed coalescing by pmod(xxhash64(conv_id), n_buckets) is
-    now the default) and the per-conversation state blob layout
-    (turn-map JSON -> base64 seen-bitmap + bounded keep-set dict).
-    Checkpoints written by the round-1 engine fail Spark's state
-    key/schema validation (or _st_decode) on resume — resume pre-round-2
-    jobs with a NEW checkpoint dir, or pass n_buckets=None to keep the
-    per-conversation grouping explicitly (its round-1 blobs are still
-    incompatible). The same applies when changing n_buckets between
-    runs: the bucket count is baked into the state key space. Round 5
-    changed the BUCKETED blob from JSON+base64 (string column) to pickle
-    (binary column) — Spark's state value-schema validation rejects
-    pre-round-5 bucketed checkpoints on resume; start bucketed jobs with
-    a NEW checkpoint dir after the upgrade (the per-conversation
-    engine's string STATE_SCHEMA is unchanged). Round 3
-    additionally widened the TWS engine's META_SCHEMA from
-    'max_ts_us long' to 'max_ts_us long, rounds int' (emit-policy round
-    counter) — TWS checkpoints written before that change fail Spark's
-    state VALUE-schema validation on resume (the validation runs before
-    the processor sees the row, so no in-processor fallback can help);
-    resume pre-round-3 TWS jobs with a NEW checkpoint dir too.
+    Checkpoint compatibility: changing n_buckets, or upgrading across a
+    state-format change, needs a NEW checkpoint dir (history in
+    MIGRATION.md).
     """
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if n_buckets:
-        fn = make_bucketed_preview_fn(budget, style, skew, fmt,
-                                      session_gap_ms,
-                                      emit_policy=emit_policy,
-                                      emit_every=emit_every)
-        return (stream_df
-                .withWatermark("ts", watermark)
-                .withColumn("_bucket",
-                            F.pmod(F.xxhash64("conv_id"),
-                                   F.lit(n_buckets)).cast("long"))
-                .groupBy("_bucket")
-                .applyInPandasWithState(
-                    fn, OUTPUT_SCHEMA, BUCKET_STATE_SCHEMA, "update",
-                    GroupStateTimeout.EventTimeTimeout))
-
-    fn = make_stateful_preview_fn(budget, style, skew, fmt, session_gap_ms,
+    fn = make_bucketed_preview_fn(budget, style, skew, fmt, session_gap_ms,
                                   emit_policy=emit_policy,
                                   emit_every=emit_every)
-    return (stream_df
-            .withWatermark("ts", watermark)
-            .groupBy("conv_id")
-            .applyInPandasWithState(
-                fn, OUTPUT_SCHEMA, STATE_SCHEMA, "update",
-                GroupStateTimeout.EventTimeTimeout))
+    keyed = stream_df.withWatermark("ts", watermark)
+    if n_buckets:
+        keyed = (keyed.withColumn(
+            "_bucket", F.pmod(F.xxhash64("conv_id"),
+                              F.lit(n_buckets)).cast("long"))
+            .groupBy("_bucket"))
+    else:
+        keyed = keyed.groupBy("conv_id")
+    return keyed.applyInPandasWithState(
+        fn, OUTPUT_SCHEMA, BUCKET_STATE_SCHEMA, "update",
+        GroupStateTimeout.EventTimeTimeout)
 
 
 # --------------------------------------------------------------------------
@@ -674,8 +499,8 @@ def run_stream(spark, source_dir: str, sink: KeyedParquetSink,
     """File-source streaming job (swap readStream.format('iceberg') for an
     Iceberg catalog deployment — same plan otherwise).
 
-    checkpoint_dir must be NEW when upgrading across the round-2 state
-    format change or when changing n_buckets — see streaming_previews."""
+    checkpoint_dir must be NEW when upgrading across a state format
+    change or when changing n_buckets — see MIGRATION.md."""
     schema = ("conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
     reader = (spark.readStream.schema(schema))

@@ -35,10 +35,21 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..kernel.api import make_configs
-from ..kernel import arena as ar
-from ..kernel.order import build_order
-from ..kernel.render import find_largest_render_under_budget
+from ..kernel.api import make_configs, render_conversation
+
+
+def _merged(arr) -> tuple[list[int], list, list, list]:
+    """Turn structs -> (turn_idxs, roles, texts, tools), last-write-wins
+    by ts per turn_idx, ascending turn_idx."""
+    items = sorted((r for r in (arr if arr is not None else [])
+                    if r is not None),
+                   key=lambda r: (r["turn_idx"], r["ts"]))
+    merged: dict[int, tuple] = {}
+    for r in items:
+        merged[r["turn_idx"]] = (r["role"], r["text"], r["tool"])
+    idxs = sorted(merged)
+    return (idxs, [merged[i][0] for i in idxs], [merged[i][1] for i in idxs],
+            [merged[i][2] for i in idxs])
 
 
 def make_render_udf(budget: int = 500, style: str = "default",
@@ -53,21 +64,9 @@ def make_render_udf(budget: int = 500, style: str = "default",
     def render_turns(turns: pd.Series) -> pd.Series:
         out = []
         for arr in turns:
-            items = sorted(arr, key=lambda r: (r["turn_idx"], r["ts"]))
-            # last-write-wins per turn_idx
-            merged: dict[int, tuple] = {}
-            for r in items:
-                merged[r["turn_idx"]] = (r["role"], r["text"], r["tool"])
-            idxs = sorted(merged)
-            a = ar.build_conversation_arena(
-                [merged[i][0] for i in idxs],
-                [merged[i][1] for i in idxs],
-                [merged[i][2] for i in idxs],
-                prio["array_max_items"], prio["sampler"])
-            po = build_order(a, prio["max_string_graphemes"],
-                             prefer_tail_arrays=prio["prefer_tail_arrays"],
-                             max_pops=max(budget_, 1))
-            out.append(find_largest_render_under_budget(po, cfg, budget_))
+            _, roles, texts, tools = _merged(arr)
+            out.append(render_conversation(roles, texts, tools, cfg, prio,
+                                           budget_))
         return pd.Series(out)
 
     return render_turns
@@ -88,24 +87,10 @@ def make_presampled_render_udf(budget: int = 500, style: str = "default",
     def render_kept(turns: pd.Series, total: pd.Series) -> pd.Series:
         out = []
         for arr, tot in zip(turns, total):
-            arr = arr if arr is not None else []
-            items = sorted((r for r in arr if r is not None),
-                           key=lambda r: (r["turn_idx"], r["ts"]))
-            merged: dict[int, tuple] = {}
-            for r in items:
-                merged[r["turn_idx"]] = (r["role"], r["text"], r["tool"])
-            idxs = sorted(merged)
-            a = ar.build_conversation_arena(
-                [merged[i][0] for i in idxs],
-                [merged[i][1] for i in idxs],
-                [merged[i][2] for i in idxs],
-                prio["array_max_items"], prio["sampler"],
-                pre_sampled_indices=idxs,
-                pre_sampled_total=max(int(tot), len(idxs)))
-            po = build_order(a, prio["max_string_graphemes"],
-                             prefer_tail_arrays=prio["prefer_tail_arrays"],
-                             max_pops=max(budget_, 1), lazy=True)
-            out.append(find_largest_render_under_budget(po, cfg, budget_))
+            idxs, roles, texts, tools = _merged(arr)
+            out.append(render_conversation(
+                roles, texts, tools, cfg, prio, budget_, kept=idxs,
+                total=max(int(tot), len(idxs))))
         return pd.Series(out)
 
     return render_kept

@@ -185,18 +185,22 @@ def test_mega_conversation_spans_arrow_batches(spark, tdf):
 @pytest.mark.parametrize("skew", ["balanced", "head", "tail"])
 def test_edge_shape_matrix_pushdown_equals_full(spark, budget, skew):
     """Crafted edge shapes, one union table, full-row equality across all
-    three plans: single-turn, empty-text, length exactly cap / cap±1,
-    fully-duplicated conversation (every turn redelivered later), ts-tie
-    duplicates, and a conversation whose turns all arrive with equal ts."""
+    three plans: single-turn, empty-text, NULL text (on some turns, and
+    on every turn), length exactly cap / cap±1, fully-duplicated
+    conversation (every turn redelivered later), ts-tie duplicates, and
+    a conversation whose turns all arrive with equal ts."""
     from headson_spark.operators.preview import (
         conversation_previews_pushdown, conversation_previews_tail_pushdown)
     cap = max(budget // 2, 1)
     rows = []
 
-    def conv(cid, n, dup_every=None, ts_tie=False, empty=False):
+    def conv(cid, n, dup_every=None, ts_tie=False, empty=False,
+             null_every=None):
         for t in range(n):
             ts = 1_000_000 if ts_tie else 1_000_000 + t
             text = "" if empty else f"{cid} turn {t} xyz"
+            if null_every and t % null_every == 0:
+                text = None
             rows.append((cid, t, "user", text, "", ts))
             if dup_every and t % dup_every == 0:
                 rows.append((cid, t, "user", f"{cid} V2 {t}", "",
@@ -204,6 +208,8 @@ def test_edge_shape_matrix_pushdown_equals_full(spark, budget, skew):
 
     conv("one_turn", 1)
     conv("empty_text", 3, empty=True)
+    conv("null_text", 5, null_every=2)
+    conv("all_null_text", 3, null_every=1)
     conv("exact_cap", cap)
     conv("cap_plus1", cap + 1)
     conv("cap_minus1", max(cap - 1, 1))
@@ -224,6 +230,26 @@ def test_edge_shape_matrix_pushdown_equals_full(spark, budget, skew):
     assert set(full) == set(push)
     diffs = {k: (full[k], push[k]) for k in full if full[k] != push[k]}
     assert not diffs, diffs
+
+
+@pytest.mark.parametrize("skew", ["tail", "balanced"])
+def test_pushdown_survives_negative_turn_idx(spark, skew):
+    """A contract-violating row at turn_idx = -1 must not collide with the
+    pushdown plans' per-conversation sentinel: every run finishes with
+    one row per conversation."""
+    rows = [("neg", -1, "user", "poison", "", 1_000_000)]
+    rows += [("neg", t, "user", f"neg turn {t}", "", 1_000_001 + t)
+             for t in range(3)]
+    rows += [("ok", t, "user", f"ok turn {t}", "", 1_000_000 + t)
+             for t in range(4)]
+    df = (spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts_us long")
+        .selectExpr("conv_id", "turn_idx", "role", "text", "tool",
+                    "timestamp_micros(ts_us) as ts"))
+    got = conversation_previews(df, budget=500, skew=skew,
+                                pushdown=True).collect()
+    assert sorted(r["conv_id"] for r in got) == ["neg", "ok"]
 
 
 def test_pushdown_arg_validated(spark, transcripts_df=None):

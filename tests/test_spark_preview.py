@@ -8,8 +8,7 @@ import pandas as pd
 import pytest
 
 from headson_spark.kernel import summarize_value
-from headson_spark.operators.preview import (
-    conversation_previews, conversation_previews_grouped)
+from headson_spark.operators.preview import conversation_previews
 
 
 def expected_previews(pdf: pd.DataFrame, budget=500, style="default",
@@ -31,11 +30,15 @@ def tdf(spark, transcripts_path):
     return spark.read.parquet(transcripts_path)
 
 
-def test_preview_matches_kernel(spark, tdf, transcripts_path):
+@pytest.mark.parametrize("pushdown", [False, True])
+@pytest.mark.parametrize("budget", [400, 500])
+def test_preview_matches_kernel(spark, tdf, transcripts_path, budget,
+                                pushdown):
     pdf = pd.read_parquet(transcripts_path)
-    exp = expected_previews(pdf)
+    exp = expected_previews(pdf, budget=budget)
     got = {r["conv_id"]: r["preview"]
-           for r in conversation_previews(tdf, budget=500).collect()}
+           for r in conversation_previews(tdf, budget=budget,
+                                          pushdown=pushdown).collect()}
     assert set(got) == set(exp)
     mismatches = {k for k in exp if got[k] != exp[k]}
     assert not mismatches, sorted(mismatches)[:5]
@@ -55,14 +58,6 @@ def test_preview_strict_json_parses(spark, tdf):
     for r in rows:
         doc = json.loads(r["preview"])
         assert isinstance(doc, dict)
-
-
-def test_grouped_variant_matches_mapinpandas(spark, tdf):
-    a = {r["conv_id"]: r["preview"]
-         for r in conversation_previews(tdf, budget=400).collect()}
-    b = {r["conv_id"]: r["preview"]
-         for r in conversation_previews_grouped(tdf, budget=400).collect()}
-    assert a == b
 
 
 def test_late_duplicates_last_write_wins(spark, tdf):

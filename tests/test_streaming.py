@@ -16,6 +16,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import write_stream_file
 
 from headson_spark.operators.preview import conversation_previews
 from headson_spark.sources.transcripts import generate_rows, to_arrow
@@ -37,8 +38,7 @@ def _late_chunks(tmp_path):
 
 
 def _write_chunk(src, i, pdf):
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
-                   str(src / f"chunk_{i}.parquet"))
+    write_stream_file(src / f"chunk_{i}.parquet", pdf)
 
 
 @pytest.fixture()
@@ -362,18 +362,14 @@ def test_merge_rows_rejects_contract_violating_turn_idx():
     """Bitmap state guard: negative turn_idx must not corrupt the bitmap
     via Python negative indexing and a huge turn_idx must not balloon
     state; both rows are dropped, valid rows still merge."""
-    from headson_spark.streaming.engine import (_st_merge_rows, _st_new,
+    from headson_spark.streaming.engine import (_st_merge_cols, _st_new,
                                                 _bits_ranks)
     st = _st_new()
-    pdf = pd.DataFrame({
-        "turn_idx": pd.array([0, -5, 1, 2 ** 31 - 1, 1], dtype="int64"),
-        "role": ["user"] * 5,
-        "text": ["ok0", "poison-neg", "ok1", "poison-huge", "ok1-v2"],
-        "tool": [""] * 5,
-        "ts": pd.Series([pd.Timestamp("2026-01-01")] * 4
-                        + [pd.Timestamp("2026-01-02")],
-                        dtype="datetime64[us]")})
-    changed = _st_merge_rows(st, pdf, max_idx=100_000)
+    day_us = 86_400_000_000
+    changed = _st_merge_cols(
+        st, [0, -5, 1, 2 ** 31 - 1, 1], ["user"] * 5,
+        ["ok0", "poison-neg", "ok1", "poison-huge", "ok1-v2"], [""] * 5,
+        [day_us] * 4 + [2 * day_us], max_idx=100_000)
     assert changed
     total, _ = _bits_ranks(st["b"])
     assert total == 2  # only turns 0 and 1 registered
@@ -427,12 +423,12 @@ def test_on_close_policy_resumes_from_checkpoint(spark, tmp_path):
 
 def test_every_k_counts_changed_rounds_identically_across_engines(
         spark, tmp_path):
-    """The every_k cadence is defined over CHANGED merge rounds in all
-    three engines (per-conv, bucketed, TWS). A duplicate-only delivery
+    """The every_k cadence is defined over CHANGED merge rounds under
+    both group keys (conv_id and bucketed). A duplicate-only delivery
     (older ts, LWW loser -> changed=False) must not advance the cadence:
     with emit_every=2 the single intermediate emission lands on the
-    2nd CHANGED round (n_turns=2) in both Spark engines, and the
-    intermediate rows are identical across them."""
+    2nd CHANGED round (n_turns=2) under both keys, and the intermediate
+    rows are identical across them."""
     day = 24 * 3600 * 1000
     t0 = pd.Timestamp("2026-01-01")
 

@@ -6,8 +6,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
+from conftest import write_stream_file
 
 from headson_spark.streaming.dedup import streaming_dedup_exact
 
@@ -34,8 +33,7 @@ def test_streaming_dedup_drops_cross_batch_duplicates(spark, tmp_path):
                ["Something ELSE?", "genuinely new"],
                [t0 + pd.Timedelta(minutes=1)] * 2)
     for i, c in enumerate((c0, c1)):
-        pq.write_table(pa.Table.from_pandas(c, preserve_index=False),
-                       str(src / f"c{i}.parquet"))
+        write_stream_file(src / f"c{i}.parquet", c)
 
     stream = (spark.readStream.schema(SCHEMA)
               .option("maxFilesPerTrigger", 1).parquet(str(src)))
@@ -69,8 +67,7 @@ def test_streaming_dedup_matches_batch_distinct(spark, tmp_path):
     os.makedirs(src, exist_ok=True)
     texts = [f"doc number {i % 7}" for i in range(40)]  # 7 distinct
     c = _docs(list(range(40)), texts, [t0] * 40)
-    pq.write_table(pa.Table.from_pandas(c, preserve_index=False),
-                   str(src / "all.parquet"))
+    write_stream_file(src / "all.parquet", c)
     stream = spark.readStream.schema(SCHEMA).parquet(str(src))
     out = streaming_dedup_exact(stream, keep_hash=True)
     q = (out.writeStream.format("memory").queryName("dd2")
@@ -105,8 +102,7 @@ def test_streaming_dedup_horizon_expiry_readmits(spark, tmp_path):
     c2 = _docs([3], ["Expire, ME!"], [t0 + pd.Timedelta(hours=6)])
     c3 = _docs([4], ["EXPIRE me??"], [t0 + pd.Timedelta(hours=7)])
     for i, c in enumerate((c0, c1, c2, c3)):
-        pq.write_table(pa.Table.from_pandas(c, preserve_index=False),
-                       str(src / f"c{i}.parquet"))
+        write_stream_file(src / f"c{i}.parquet", c)
     stream = (spark.readStream.schema(SCHEMA)
               .option("maxFilesPerTrigger", 1).parquet(str(src)))
     out = streaming_dedup_exact(stream, watermark="1 hour")
