@@ -44,6 +44,14 @@ def resolve_template(format: str, style: str) -> str:
     return t
 
 
+def array_cap(budget: int) -> int:
+    """Array item cap for a character budget: max(budget // 2, 1), with a
+    budget below 1 counted as 1 (python/src/lib.rs:95-124). Every
+    sampler keep-set, in the kernel and in the Spark pushdown filters,
+    is a function of this cap."""
+    return max(max(budget, 1) // 2, 1)
+
+
 def make_configs(*, format: str = "auto", style: str = "default",
                  character_budget: int | None = None,
                  skew: str = "balanced",
@@ -70,8 +78,8 @@ def make_configs(*, format: str = "auto", style: str = "default",
     prio = {
         "max_string_graphemes": (DEFAULT_STRING_CAP if string_cap is None
                                  else max(int(string_cap), 0)),
-        "array_max_items": max(max(budget, 1) // 2, 1),
-        "sampler": skew if skew != "balanced" else "balanced",
+        "array_max_items": array_cap(budget),
+        "sampler": skew,
         "prefer_tail_arrays": prefer_tail,
     }
     return cfg, prio, budget

@@ -16,6 +16,7 @@ headson_spark.operators.sampling).
 from __future__ import annotations
 
 import json
+from bisect import bisect_left
 from dataclasses import dataclass, field
 
 # NodeKind codes (reference order/types.rs:28-35)
@@ -89,6 +90,41 @@ _SAMPLERS = {
 
 def sample_indices(sampler: str, cap: int, total: int) -> list[int]:
     return _SAMPLERS[sampler](cap, total)
+
+
+# longest stream a position-only keep-set is listed for: positions at or
+# past it are never kept by the keep rule or the Spark keep-set filter
+KEPT_POSITIONS_MAX = 1 << 20
+
+
+class KeepRule:
+    """The sampler keep-set as a rule over a turn's rank r (its position
+    among the n turns delivered so far) and its dense index i >= r.
+
+    Balanced and head keep a fixed position set K = K(cap), so rank r is
+    shown iff r in K. Tail keeps the last cap ranks, r >= n - cap. A
+    rank only grows toward i as missing earlier turns arrive, and the
+    count n - r of delivered turns at or after i only grows, so a turn
+    can ever be shown again iff K ∩ [r, i] != ∅ (balanced/head) or
+    n - r <= cap (tail). Everything else is droppable state."""
+
+    def __init__(self, sampler: str, cap: int):
+        self.cap = cap
+        self.tail = sampler == "tail"
+        self.positions = ([] if self.tail else
+                          sample_indices(sampler, cap, KEPT_POSITIONS_MAX))
+        self._kept = frozenset(self.positions)
+
+    def shown(self, r: int, n: int) -> bool:
+        if self.tail:
+            return r >= n - self.cap
+        return r in self._kept
+
+    def live(self, r: int, i: int, n: int) -> bool:
+        if self.tail:
+            return n - r <= self.cap
+        j = bisect_left(self.positions, r)
+        return j < len(self.positions) and self.positions[j] <= i
 
 
 # --- arena -------------------------------------------------------------------
@@ -259,40 +295,22 @@ def build_conversation_arena(roles, texts, tools, array_cap: int,
     pre_sampled_indices and the pre-filter conversation length via
     pre_sampled_total: the keep-sets are position-deterministic, so the
     resulting arena is identical to sampling here."""
-    a = Arena()
-    if pre_sampled_indices is not None:
+    if pre_sampled_indices is None:
+        total = len(roles)
+        orig = sample_indices(sampler, array_cap, total)
+        rows = orig
+    else:
         total = (pre_sampled_total if pre_sampled_total is not None
                  else len(roles))
-        idxs = list(range(len(roles)))  # rows are already the kept set
-        arr_node = Node(kind=ARRAY, array_len=total)
-        arr_id = a.push(arr_node)
-        children = []
-        for i in idxs:
-            t = Node(kind=OBJECT, keys=["role", "text", "tool"],
-                     object_len=3)
-            tid = a.push(t)
-            t.children = [
-                a.push(Node(kind=STRING, string_value=roles[i])),
-                a.push(Node(kind=STRING, string_value=texts[i])),
-                a.push(Node(kind=STRING, string_value=tools[i])),
-            ]
-            children.append(tid)
-        arr_node.children = children
         orig = list(pre_sampled_indices)
-        arr_node.arr_indices = (None if orig == list(range(len(orig)))
-                                else orig)
-        root = Node(kind=OBJECT, keys=["turns"], children=[arr_id],
-                    object_len=1)
-        a.root_id = a.push(root)
-        return a
-    total = len(roles)
-    idxs = sample_indices(sampler, array_cap, total)
+        rows = range(len(roles))  # rows are already the kept set
+    a = Arena()
     arr_node = Node(kind=ARRAY, array_len=total)
     # arena node ids don't affect output ordering (pq ids do), so layout
     # here may differ from the recursive builder's — only structure matters
     arr_id = a.push(arr_node)
     children = []
-    for i in idxs:
+    for i in rows:
         t = Node(kind=OBJECT, keys=["role", "text", "tool"], object_len=3)
         tid = a.push(t)
         t.children = [
@@ -302,8 +320,8 @@ def build_conversation_arena(roles, texts, tools, array_cap: int,
         ]
         children.append(tid)
     arr_node.children = children
-    arr_node.arr_indices = (None if idxs == list(range(len(idxs)))
-                            else idxs)
+    arr_node.arr_indices = (None if orig == list(range(len(orig)))
+                            else orig)
     root = Node(kind=OBJECT, keys=["turns"], children=[arr_id],
                 object_len=1)
     a.root_id = a.push(root)

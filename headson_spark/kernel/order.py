@@ -134,7 +134,6 @@ def count_assignable(a: ar.Arena, max_string_graphemes: int,
 
 def build_order(a: ar.Arena, max_string_graphemes: int,
                 prefer_tail_arrays: bool = False,
-                array_bias: str = "head_mid_tail",
                 max_pops: int | None = None,
                 lazy: bool = False) -> PriorityOrder:
     """Heap expansion producing by_priority pop order.
@@ -233,8 +232,6 @@ def build_order(a: ar.Arena, max_string_graphemes: int,
             if prefer_tail_arrays:
                 ii = max(kept - 1 - i, 0)
                 extra = ii * ii * ii * ARRAY_INDEX_CUBIC_WEIGHT
-            elif array_bias == "head":
-                extra = i * i * i * ARRAY_INDEX_CUBIC_WEIGHT
             else:  # head_mid_tail
                 mid = max(kept - 1, 0) // 2
                 d = min(i, (kept - 1) - i, abs(i - mid))

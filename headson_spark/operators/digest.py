@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..kernel.api import summarize_many
+from ..kernel.api import array_cap, summarize_many
 from .sampling import head_cap
 
 
@@ -39,7 +39,7 @@ def corpus_digest(df: DataFrame, *, global_budget: int = 4000,
     conv_ids = [r["conv_id"] for r in
                 df.select("conv_id").distinct().orderBy("conv_id")
                   .limit(take).collect()]
-    cap = max(per_conv // 2, 1)
+    cap = array_cap(per_conv)
     reduced = head_cap(df.where(F.col("conv_id").isin(conv_ids)), cap)
     rows = (reduced.select("conv_id", "turn_idx", "role", "text", "tool")
             .orderBy("conv_id", "turn_idx").collect())

@@ -30,7 +30,8 @@ from typing import Iterator
 
 import pandas as pd
 
-from ..kernel.api import make_configs, render_conversation
+from ..kernel.api import array_cap, make_configs, render_conversation
+from .sampling import kept_position_filter
 
 PREVIEW_SCHEMA = ("conv_id string, preview string, n_turns int, "
                   "n_chars bigint, preview_bytes int")
@@ -175,30 +176,33 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
     PRECONDITION: turn_idx is the dense 0-based position within the
     conversation (the transcript schema contract, FIXTURES.md §1) — the
     keep-sets are position-deterministic functions of the cap, so the
-    filter reproduces the kernel's sampling exactly. Applies directly for
-    balanced (mix64 keep-set) and head (prefix) skew; tail needs the
-    conversation length before filtering and dispatches to the two-pass
-    conversation_previews_tail_pushdown.
+    filter reproduces the kernel's sampling exactly. Balanced (mix64
+    keep-set) and head (prefix) filter the scan directly. Tail kept-ness
+    depends on the conversation length, so tail joins the per-conversation
+    totals back and keeps `turn_idx >= _total - cap`; the join strategy
+    is left to AQE (no forced broadcast of a per-conversation table; the
+    observed plans are in PLANS.md §1a).
 
     Per-conversation totals (length + char count) travel as one sentinel
     row per conversation through the same exchange as the kept rows.
     """
     from pyspark.sql import functions as F
 
-    if skew == "tail":
-        return conversation_previews_tail_pushdown(
-            df, budget=budget, style=style, fmt=fmt,
-            num_partitions=num_partitions)
-    cap = max(max(budget, 1) // 2, 1)
-    if skew == "head":
-        keep = F.col("turn_idx") < cap
+    cap = array_cap(budget)
+    keep = kept_position_filter(skew, cap)
+    totals = _conv_totals(df)
+    if keep is None:
+        kept = (df.join(totals.select("conv_id",
+                                      F.col("_total").alias("_tt")),
+                        "conv_id")
+                  .filter(F.col("turn_idx") >= F.col("_tt") - cap)
+                  .drop("_tt"))
     else:
-        from .sampling import default_kept_positions
-        keep = F.col("turn_idx").isin(default_kept_positions(cap))
+        kept = df.filter(keep)
     # Totals ride as sentinel rows through the one exchange; the
     # rejected totals designs (countDistinct, a totals join) and their
     # measurements are in PLANS.md §1a.
-    rows = _with_sentinels(df.filter(keep), _conv_totals(df))
+    rows = _with_sentinels(kept, totals)
     return _kernel_step(rows, budget, style, skew, fmt, num_partitions)
 
 
@@ -226,33 +230,6 @@ def _total_sentinels(totals):
         F.lit(None).cast("string").alias("tool"),
         F.lit(None).cast("timestamp").alias("ts"),
         "_total", "_chars")
-
-
-def conversation_previews_tail_pushdown(df, *, budget: int = 500,
-                                        style: str = "default",
-                                        fmt: str = "json",
-                                        num_partitions: int | None = None):
-    """Tail-skew limit pushdown (two-pass). Tail kept-ness depends on the
-    conversation length, so unlike balanced/head the keep-set cannot be a
-    static scan filter. Pass 1 computes per-conversation totals (map-side
-    combined max/sum — narrow rows); pass 2 joins the totals back and
-    keeps only `turn_idx >= total - cap` BEFORE the conv_id exchange, so
-    the kernel shuffle ships O(cap) turns per conversation.
-
-    Join strategy is left to AQE (no forced broadcast of a
-    per-conversation table; the observed plans are in PLANS.md §1a).
-    Byte-equal to conversation_previews_full(skew="tail")."""
-    from pyspark.sql import functions as F
-
-    cap = max(max(budget, 1) // 2, 1)
-    totals = _conv_totals(df)
-    kept = (df.join(totals.select("conv_id",
-                                  F.col("_total").alias("_tt")),
-                    "conv_id")
-              .filter(F.col("turn_idx") >= F.col("_tt") - cap)
-              .drop("_tt"))
-    rows = _with_sentinels(kept, totals)
-    return _kernel_step(rows, budget, style, "tail", fmt, num_partitions)
 
 
 # auto-dispatch threshold: the pushdown plan pays a totals pre-scan (one
@@ -293,8 +270,8 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
     exact for all three skews. At deployment scale this comes from a
     maintained table-stats aggregate rather than a per-query scan."""
     from pyspark.sql import functions as F
-    cap = max(max(budget, 1) // 2, 1)
-    shape = "prefix" if skew in ("head", "tail") else "balanced"
+    cap = array_cap(budget)
+    shape = "head" if skew.lower() in ("head", "tail") else "balanced"
     key = None
     if use_cache:
         try:
@@ -304,11 +281,7 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
             key = None
         if key is not None and key in _PLAN_DECISIONS:
             return _PLAN_DECISIONS[key]
-    if shape == "prefix":
-        keep = F.col("turn_idx") < cap
-    else:
-        from .sampling import default_kept_positions
-        keep = F.col("turn_idx").isin(default_kept_positions(cap))
+    keep = kept_position_filter(shape, cap)
     kept_frac = df.agg(F.avg(keep.cast("double"))).first()[0]
     if kept_frac is None:
         plan = "full"
@@ -339,8 +312,8 @@ def conversation_previews(df, *, budget: int = 500, style: str = "default",
     full pipeline ships every turn of every conversation through the
     exchange, the pushdown one ships O(budget/2) turns per conversation
     and structurally bounds the mapInPandas carry buffer. pushdown=True
-    (or "pushdown") forces the pushdown plan (all skews, incl. the
-    two-pass tail variant); pushdown=False (or "full") forces the
+    (or "pushdown") forces the pushdown plan (all skews; tail joins
+    the totals back before filtering); pushdown=False (or "full") forces the
     full-shuffle pipeline.
 
     n_chars exactness caveat under auto dispatch: the pushdown plan's

@@ -11,14 +11,31 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..kernel.arena import default_sample_indices
+from ..kernel.arena import KEPT_POSITIONS_MAX, default_sample_indices
 
 
-def default_kept_positions(cap: int, max_len: int = 1 << 20) -> list[int]:
+def default_kept_positions(cap: int,
+                           max_len: int = KEPT_POSITIONS_MAX) -> list[int]:
     """The default sampler's kept-position sequence K(cap): for any stream
     of length L the kept set is {i in K(cap) : i < L} (prefix-closed), so
     one precomputed list serves every conversation."""
     return default_sample_indices(cap, max_len)
+
+
+def kept_position_filter(skew: str, cap: int):
+    """The sampler keep-set as a column predicate on the dense position
+    `turn_idx`: a prefix for head, K(cap) for balanced. None for tail,
+    whose keep-set depends on the conversation length. The Spark form of
+    kernel.arena.KeepRule.shown, evaluated before any shuffle."""
+    skew = skew.lower()
+    if skew == "tail":
+        return None
+    if skew == "head":
+        return F.col("turn_idx") < cap
+    if skew == "balanced":
+        return F.col("turn_idx").isin(default_kept_positions(cap))
+    raise ValueError(
+        f"unknown skew: {skew} (expected 'balanced' | 'head' | 'tail')")
 
 
 def with_turn_ordinal(df: DataFrame) -> DataFrame:

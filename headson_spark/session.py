@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 # read_widened gate: inputs at or above this size keep the plain scan
 # (they already split into enough tasks); only tiny inputs pay the ~free
@@ -29,8 +30,14 @@ def read_widened(spark, path: str, max_bytes: int = WIDEN_MAX_BYTES):
     row-local maps, integer/min/max/count aggregates, joins and windows
     with deterministic tie-breaks. Order-dependent float sums (their
     partial-aggregation tree changes with partitioning) must keep the
-    plain read."""
+    plain read.
+
+    A path with a URI scheme (file://, s3a://, hdfs://) or one that does
+    not exist locally has no size the os module can see, so it counts as
+    large and keeps the plain scan."""
     df = spark.read.parquet(path)
+    if urlparse(path).scheme or not os.path.exists(path):
+        return df
     try:
         if os.path.isfile(path):
             nbytes = os.path.getsize(path)

@@ -17,8 +17,9 @@ declarative session_window cannot hold arbitrary state). Checkpointed and resuma
 because the sink MERGEs on conv_id and skips already-committed batch ids.
 
 Scale notes:
-- state per conversation is O(array_cap) once the turn cap is applied;
-  the watermark bounds how long state lives
+- state per conversation is O(array_cap) turn contents plus a
+  1-bit-per-turn seen-bitmap, for every skew; the watermark bounds how
+  long state lives
 - conv_id skew: the state shuffle hashes conv_id; a hot conversation is
   bounded by the turn cap + kernel SAFETY_CAP; upstream salting helper in
   headson_spark.plans.salting pre-aggregates oversized conversations
@@ -33,6 +34,7 @@ from typing import Any, Iterator, Tuple
 import pandas as pd
 
 from ..kernel.api import make_configs, render_conversation
+from ..kernel.arena import KeepRule
 
 OUTPUT_SCHEMA = ("conv_id string, preview string, n_turns int, "
                  "last_ts timestamp, final boolean")
@@ -41,39 +43,18 @@ OUTPUT_SCHEMA = ("conv_id string, preview string, n_turns int, "
 MAX_TURNS_IN_STATE = 100_000
 
 
-def _render_from_turn_map(turn_map: dict, cfg, prio, budget) -> str:
-    idxs = sorted(turn_map, key=int)
-    return render_conversation([turn_map[i][0] for i in idxs],
-                               [turn_map[i][1] for i in idxs],
-                               [turn_map[i][2] for i in idxs],
-                               cfg, prio, budget)
-
-
 # --------------------------------------------------------------------------
-# budget-bounded conversation state (balanced/head skew)
+# budget-bounded conversation state
 #
-# The sampler keep-sets are prefix-closed position sets K(cap): for any
-# conversation length L the rendered turns are {rank r in K : r < L}. A
-# turn's rank (position among delivered turns) only GROWS as earlier late
-# turns arrive, and equals its dense turn_idx once the conversation is
-# complete. So a turn's content can ever be rendered iff
-# [current_rank, turn_idx] intersects K — everything else is droppable,
-# and state shrinks to O(cap) content entries + a seen-bitmap (1 bit per
-# turn) instead of the full transcript. A 50k-turn conversation holds
-# ~250 turn contents + 6.2 KB of bitmap in state instead of ~6 MB of
-# JSON-encoded turns re-serialized every micro-batch.
-
-
-def _keepset(prio, budget) -> list[int] | None:
-    """Sorted keep-set positions for the active sampler, None for tail
-    (tail kept-ness depends on final length — unbounded state path)."""
-    from ..operators.sampling import default_kept_positions
-    cap = prio["array_max_items"]
-    if prio["prefer_tail_arrays"]:
-        return None
-    if prio["sampler"] == "head":
-        return list(range(cap))
-    return sorted(default_kept_positions(cap))
+# A turn's rank (position among delivered turns) only GROWS as earlier
+# late turns arrive, and equals its dense turn_idx once the conversation
+# is complete. kernel.arena.KeepRule says, from the rank, the turn_idx
+# and the delivered total, whether a turn is shown now and whether it can
+# ever be shown again; the state keeps only the contents of turns that
+# can, plus a seen-bitmap (1 bit per turn) that yields ranks and the
+# total. A 50k-turn conversation holds ~250 turn contents + 6.2 KB of
+# bitmap in state instead of ~6 MB of turns re-serialized every
+# micro-batch, for every skew.
 
 
 def _bits_set(bits: bytearray, idx: int) -> None:
@@ -93,48 +74,38 @@ def _bits_ranks(bits: bytes):
     return total, cum - arr  # exclusive prefix sum
 
 
-def _prune_kept(st: dict, keep: list[int]) -> None:
-    """Drop turn contents that can never be rendered again: a turn at
-    dense index i with current rank r is needed iff K ∩ [r, i] != ∅
-    (rank grows monotonically toward i as missing earlier turns land)."""
-    from bisect import bisect_left
-    total, rank = _bits_ranks(st["b"])
-    st["n"] = total
+def _prune_kept(st: dict, rule: KeepRule, total: int, rank) -> None:
+    """Drop turn contents the keep rule says can never be shown again."""
     kept = st["k"]
-    drop = []
-    for key in kept:
-        i = int(key)
-        r = int(rank[i])
-        j = bisect_left(keep, r)
-        if j >= len(keep) or keep[j] > i:
-            drop.append(key)
-    for key in drop:
+    for key in [k for k in kept
+                if not rule.live(int(rank[int(k)]), int(k), total)]:
         del kept[key]
 
 
-def _render_bounded(st: dict, cfg, prio, budget,
-                    keepset: set[int]) -> str:
-    """Render from bounded state: turns whose CURRENT rank is in the
-    keep-set, as the pre-sampled arena (byte-equal to the batch pipeline
-    on the same delivered turns — the pushdown equivalence)."""
-    total, rank = _bits_ranks(st["b"])
+def _render_bounded(st: dict, rule: KeepRule, total: int, rank, cfg, prio,
+                    budget) -> tuple[str, int]:
+    """(preview, delivered total) from bounded state: the turns whose
+    CURRENT rank the keep rule shows, as the pre-sampled arena
+    (byte-equal to the batch pipeline on the same delivered turns — the
+    pushdown equivalence). Contents the rule no longer shows (e.g. a
+    state written before they were pruned) are skipped."""
     picked = []
     for key, v in st["k"].items():
-        i = int(key)
-        r = int(rank[i])
-        if r in keepset:
+        r = int(rank[int(key)])
+        if rule.shown(r, total):
             picked.append((r, v))
     picked.sort()
-    return render_conversation(
+    preview = render_conversation(
         [v[0] for _, v in picked], [v[1] for _, v in picked],
         [v[2] for _, v in picked], cfg, prio, budget,
         kept=[r for r, _ in picked], total=total)
+    return preview, total
 
 
 def _st_new() -> dict:
     # v counts completed merge rounds for this conversation (drives the
     # every_k emission policy)
-    return {"b": bytearray(), "k": {}, "mx": 0, "n": 0, "v": 0}
+    return {"b": bytearray(), "k": {}, "mx": 0, "v": 0}
 
 
 def _should_emit(policy: str, every: int, version: int) -> bool:
@@ -218,9 +189,9 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
     coalescing, where one group invocation carries ~n_convs/B
     conversations and amortizes the per-group Python/Arrow/state-store
     machinery, at the price of rewriting the bucket's blob whenever any
-    member changes. Balanced/head skew keeps budget-bounded state (O(cap)
-    contents + seen-bitmap, see the module helpers); tail keeps the full
-    turn map, since tail kept-ness depends on the final length.
+    member changes. Every skew keeps budget-bounded state: O(cap) turn
+    contents + a seen-bitmap, pruned and rendered through
+    kernel.arena.KeepRule (see the module helpers).
 
     Each conversation's session closes by event-time timeout at its max
     ts + session_gap_ms: the group timeout is armed at the earliest open
@@ -238,16 +209,10 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
         raise ValueError(f"unknown emit_policy: {emit_policy!r}")
     cfg, prio, budget = make_configs(format=fmt, style=style,
                                      character_budget=budget, skew=skew)
-    keep = _keepset(prio, budget)
-    keepset = set(keep) if keep is not None else None
+    rule = KeepRule(prio["sampler"], prio["array_max_items"])
 
-    def render(st: dict) -> str:
-        if keep is not None:
-            return _render_bounded(st, cfg, prio, budget, keepset)
-        return _render_from_turn_map(st["k"], cfg, prio, budget)
-
-    def n_turns_of(st: dict) -> int:
-        return st["n"] if keep is not None else len(st["k"])
+    def render(st: dict, ranks) -> tuple[str, int]:
+        return _render_bounded(st, rule, *ranks, cfg, prio, budget)
 
     def emit(rows):
         return pd.DataFrame({
@@ -274,7 +239,7 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
             closed, remaining = [], {}
             for cid, st in convs.items():
                 if st["mx"] // 1000 + session_gap_ms <= wm_ms:
-                    closed.append((cid, render(st), n_turns_of(st),
+                    closed.append((cid, *render(st, _bits_ranks(st["b"])),
                                    st["mx"], True))
                 else:
                     remaining[cid] = st
@@ -318,28 +283,18 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
                 if _st_merge_cols(st, tidxs[s:e], roles[s:e],
                                   texts[s:e], tools[s:e], ts_list[s:e]):
                     changed.add(cid)
-        for cid in changed:
+        rows = []
+        for cid in sorted(changed):
             st = convs[cid]
             st["v"] = st.get("v", 0) + 1
-            if keep is not None:
-                _prune_kept(st, keep)
-            elif len(st["k"]) > MAX_TURNS_IN_STATE:
-                # tail path hard cap against degenerate conversations
-                # (reference SAFETY_CAP precedent, scoring.rs:3)
-                ks = sorted(st["k"], key=int)[:MAX_TURNS_IN_STATE]
-                st["k"] = {k: st["k"][k] for k in ks}
+            ranks = _bits_ranks(st["b"])
+            _prune_kept(st, rule, *ranks)
+            if _should_emit(emit_policy, emit_every, st["v"]):
+                rows.append((cid, *render(st, ranks), st["mx"], False))
         state.update((_bucket_encode(convs), len(convs)))
         _arm_timeout(state, convs, wm_ms)
-        if changed:
-            rows = []
-            for cid in sorted(changed):
-                st = convs[cid]
-                if not _should_emit(emit_policy, emit_every, st["v"]):
-                    continue
-                rows.append((cid, render(st), n_turns_of(st), st["mx"],
-                             False))
-            if rows:
-                yield emit(rows)
+        if rows:
+            yield emit(rows)
 
     return fn
 

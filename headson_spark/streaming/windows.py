@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..kernel.api import make_configs, render_conversation
+from ..kernel.api import array_cap, make_configs, render_conversation
 
 
 def _merged(arr) -> tuple[list[int], list, list, list]:
@@ -50,26 +50,6 @@ def _merged(arr) -> tuple[list[int], list, list, list]:
     idxs = sorted(merged)
     return (idxs, [merged[i][0] for i in idxs], [merged[i][1] for i in idxs],
             [merged[i][2] for i in idxs])
-
-
-def make_render_udf(budget: int = 500, style: str = "default",
-                    skew: str = "balanced", fmt: str = "json"):
-    """Render UDF over a complete (unfiltered) turn-struct array — used
-    when the caller collected every turn of the group (the row IS the
-    group; one kernel render per row)."""
-    cfg, prio, budget_ = make_configs(format=fmt, style=style,
-                                      character_budget=budget, skew=skew)
-
-    @pandas_udf("string")
-    def render_turns(turns: pd.Series) -> pd.Series:
-        out = []
-        for arr in turns:
-            _, roles, texts, tools = _merged(arr)
-            out.append(render_conversation(roles, texts, tools, cfg, prio,
-                                           budget_))
-        return pd.Series(out)
-
-    return render_turns
 
 
 def make_presampled_render_udf(budget: int = 500, style: str = "default",
@@ -118,14 +98,11 @@ def rolling_previews(stream_df, *, window: str = "5 minutes",
     kept for the same reason. Where whole-conversation previews per
     window matter, use the stateful session engine instead.
     """
-    from ..operators.sampling import default_kept_positions
+    from ..operators.sampling import kept_position_filter
 
-    cap = max(max(budget, 1) // 2, 1)
-    if skew == "head":
-        keep = F.col("turn_idx") < cap
-    elif skew == "balanced":
-        keep = F.col("turn_idx").isin(default_kept_positions(cap))
-    else:
+    cap = array_cap(budget)
+    keep = kept_position_filter(skew, cap)
+    if keep is None:
         raise ValueError(
             f"rolling_previews supports skew='balanced'|'head', got "
             f"{skew!r}; tail kept-ness needs the conversation length — "

@@ -295,3 +295,25 @@ def test_lazy_order_out_of_contract_budget_falls_back():
     assert out_e == out_l
     # after the fallback pump the lazy order popped exactly the limit
     assert len(lazy.by_priority) == len(eager.by_priority)
+
+
+@pytest.mark.parametrize("sampler", ["balanced", "head", "tail"])
+def test_keep_rule_matches_samplers(sampler):
+    """KeepRule.shown over the ranks of n delivered turns is exactly the
+    sampler's keep-set of a length-n array, and KeepRule.live(r, i, n)
+    holds iff some later delivery state shows the turn: a more turns
+    land below it (rank r + a, a <= i - r) and b more above it (total
+    n + a + b)."""
+    from headson_spark.kernel.arena import KeepRule, sample_indices
+    for cap in (1, 2, 3, 5, 10):
+        rule = KeepRule(sampler, cap)
+        for n in range(0, 40):
+            shown = [r for r in range(n) if rule.shown(r, n)]
+            assert shown == sample_indices(sampler, cap, n), (cap, n)
+        for n in range(1, 16):
+            for r in range(n):
+                for i in range(r, r + 12):
+                    can = any(rule.shown(r + a, n + a + b)
+                              for a in range(i - r + 1)
+                              for b in range(3 * cap))
+                    assert rule.live(r, i, n) == can, (cap, n, r, i)

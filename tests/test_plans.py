@@ -47,6 +47,20 @@ def test_filter_pushdown_reaches_scan(spark, transcripts_path):
     assert "text" not in plan.split("ReadSchema")[1].split("\n")[0]
 
 
+def test_read_widened_keeps_plain_scan_for_uri_paths(spark, tmp_path):
+    """A file:// URI has no size the os module can see, so read_widened
+    must treat it as large (plain scan) rather than as 0 bytes (a
+    round-robin spread of the whole table). The same table read by its
+    local path under a large gate is spread."""
+    from headson_spark.session import read_widened
+    path = str(tmp_path / "small_table.parquet")
+    spark.range(10).write.parquet(path)
+    local = formatted_plan(read_widened(spark, path, max_bytes=1 << 30))
+    assert "RoundRobinPartitioning" in local, local
+    uri = formatted_plan(read_widened(spark, "file://" + path, max_bytes=1))
+    assert "RoundRobinPartitioning" not in uri, uri
+
+
 def test_broadcast_join_for_small_dim(spark):
     import __spark_entry__ as em
     df = em.queries()["join_top_customers"](spark, "/root/testdata/sf0.001")

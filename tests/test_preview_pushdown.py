@@ -11,7 +11,7 @@ import pytest
 
 from headson_spark.operators.preview import (
     choose_preview_plan, conversation_previews, conversation_previews_full,
-    conversation_previews_pushdown, conversation_previews_tail_pushdown)
+    conversation_previews_pushdown)
 
 
 @pytest.fixture(scope="module")
@@ -45,10 +45,12 @@ def test_forced_dispatch_is_pushdown(spark, tdf):
 
 @pytest.mark.parametrize("budget", [120, 500])
 def test_tail_pushdown_equals_full(spark, tdf, budget):
-    """Two-pass tail pushdown: byte-equal to the full pipeline on the
-    whole fixture matrix incl. the 50k-turn hot conversation."""
+    """Tail pushdown (totals joined back before the filter): byte-equal
+    to the full pipeline on the whole fixture matrix incl. the 50k-turn
+    hot conversation."""
     a = _rows(conversation_previews_full(tdf, budget=budget, skew="tail"))
-    b = _rows(conversation_previews_tail_pushdown(tdf, budget=budget))
+    b = _rows(conversation_previews_pushdown(tdf, budget=budget,
+                                             skew="tail"))
     assert set(a) == set(b)
     diffs = [k for k in a if a[k] != b[k]]
     assert not diffs, (diffs[:3], a[diffs[0]], b[diffs[0]]) if diffs else ""
@@ -189,8 +191,6 @@ def test_edge_shape_matrix_pushdown_equals_full(spark, budget, skew):
     on every turn), length exactly cap / cap±1, fully-duplicated
     conversation (every turn redelivered later), ts-tie duplicates, and
     a conversation whose turns all arrive with equal ts."""
-    from headson_spark.operators.preview import (
-        conversation_previews_pushdown, conversation_previews_tail_pushdown)
     cap = max(budget // 2, 1)
     rows = []
 
@@ -222,11 +222,8 @@ def test_edge_shape_matrix_pushdown_equals_full(spark, budget, skew):
         .selectExpr("conv_id", "turn_idx", "role", "text", "tool",
                     "timestamp_micros(ts_us) as ts"))
     full = _rows(conversation_previews_full(df, budget=budget, skew=skew))
-    if skew == "tail":
-        push = _rows(conversation_previews_tail_pushdown(df, budget=budget))
-    else:
-        push = _rows(conversation_previews_pushdown(df, budget=budget,
-                                                    skew=skew))
+    push = _rows(conversation_previews_pushdown(df, budget=budget,
+                                                skew=skew))
     assert set(full) == set(push)
     diffs = {k: (full[k], push[k]) for k in full if full[k] != push[k]}
     assert not diffs, diffs

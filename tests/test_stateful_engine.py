@@ -153,18 +153,90 @@ def test_out_of_order_backfill():
     _assert_matches_kernel(out, batches)
 
 
+def _held(state):
+    """Turn contents held in the conversation's state."""
+    return len(_bucket_decode(state.get[0])["conv"]["k"])
+
+
 @pytest.mark.parametrize("skew", ["balanced", "head", "tail"])
 def test_long_conversation_bounded_vs_full_state(skew):
-    """600 turns at budget 500: balanced/head hold bounded state (keep-set
-    contents + seen-bitmap), tail holds the full turn map; previews equal
-    the kernel either way."""
+    """600 turns at budget 500: every skew holds bounded state (the
+    contents the keep rule can still show + seen-bitmap), at most the
+    cap of 250 contents, and previews equal the kernel on all turns."""
     turns = [(i, f"turn {i} says something number {i * 7}", i)
              for i in range(600)]
     batches = [_batch(turns[:250]), _batch(turns[250:])]
     out, state = run(batches, skew=skew, expire=False)
     _assert_matches_kernel(out, batches, skew=skew)
-    held = len(_bucket_decode(state.get[0])["conv"]["k"])
-    assert held == 600 if skew == "tail" else held <= 250
+    assert _held(state) <= 250
+
+
+def test_tail_bounded_state_backfill_redelivery_close():
+    """Tail skew on bounded state: 590 turns (10..599) prune the early
+    ones; a late low-index backfill (0..9) shifts every rank; a pruned
+    turn re-delivered with a newer ts is merged and pruned again; a
+    shown turn's rewrite replaces it; the close renders the rest. Every
+    emission equals the kernel on the full merged turns."""
+    batches = [_batch([(i, f"tail turn {i}", 100 + i)
+                       for i in range(10, 600)]),
+               _batch([(i, f"late turn {i}", i) for i in range(10)]),
+               _batch([(20, "REWRITE-PRUNED", 900)]),
+               _batch([(599, "REWRITE-SHOWN", 901)])]
+    fn = make_bucketed_preview_fn(budget=500, skew="tail",
+                                  session_gap_ms=GAP_MS)
+    state = FakeGroupState()
+    out = []
+    last_250 = {str(i) for i in range(350, 600)}
+    for i, b in enumerate(batches):
+        for pdf in fn(("conv",), iter([b]), state):
+            out.extend((i + 1, r) for _, r in pdf.iterrows())
+        assert set(_bucket_decode(state.get[0])["conv"]["k"]) == last_250
+    for pdf in _close(fn, state):
+        out.extend((len(batches), r) for _, r in pdf.iterrows())
+    assert _finals(out) == [False] * 4 + [True]
+    assert [r["n_turns"] for _, r in out] == [590, 600, 600, 600, 600]
+    assert "REWRITE-PRUNED" not in out[2][1]["preview"]
+    assert "REWRITE-SHOWN" in out[-1][1]["preview"]
+    _assert_matches_kernel(out, batches, skew="tail")
+    assert not state.exists
+
+
+def test_tail_state_from_full_turn_map_resumes():
+    """A tail state written with the full turn map and an `"n"` field
+    (the earlier layout, same blob schema) resumes in place: the close
+    renders from it directly, and a new batch prunes it to the cap; both
+    count and render like the kernel."""
+    from headson_spark.streaming.engine import _bits_set, _bucket_encode
+    turns = [(i, f"old turn {i}", i) for i in range(300)]
+    ts_us = [(T0 + pd.Timedelta(seconds=t[2])).value // 1000 for t in turns]
+    st = {"b": bytearray(), "k": {}, "mx": max(ts_us), "n": 0, "v": 1}
+    for (i, text, _), us in zip(turns, ts_us):
+        _bits_set(st["b"], i)
+        st["k"][str(i)] = ["user" if i % 2 == 0 else "assistant", text,
+                           "", us]
+    blob = (_bucket_encode({"conv": st}), 1)
+    fn = make_bucketed_preview_fn(budget=500, skew="tail",
+                                  session_gap_ms=GAP_MS)
+
+    closing = FakeGroupState()
+    closing.update(blob)
+    closing.timeout_ts = _deadline(299)
+    final = _close(fn, closing)
+    out = [(1, r) for _, r in final[0].iterrows()]
+    assert _finals(out) == [True] and out[0][1]["n_turns"] == 300
+    _assert_matches_kernel(out, [_batch(turns)], skew="tail")
+
+    resumed = FakeGroupState()
+    resumed.update(blob)
+    new = _batch([(300, "new turn 300", 300)])
+    out = [(2, r) for pdf in fn(("conv",), iter([new]), resumed)
+           for _, r in pdf.iterrows()]
+    assert _held(resumed) <= 250
+    out += [(2, r) for pdf in _close(fn, resumed)
+            for _, r in pdf.iterrows()]
+    assert _finals(out) == [False, True]
+    assert [r["n_turns"] for _, r in out] == [301, 301]
+    _assert_matches_kernel(out, [_batch(turns), new], skew="tail")
 
 
 def test_timer_expiry_clears_state():

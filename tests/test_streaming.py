@@ -541,13 +541,13 @@ def test_rolling_window_tail_skew_rejected(spark, tmp_path):
 
 
 def test_render_udfs_agree_on_dense_prefix(spark):
-    """make_render_udf (complete array) and make_presampled_render_udf
-    (keep-set array + total) must render identically when the kept set
-    is exactly the sampler keep-set over the full list — the pushdown
-    exactness contract at UDF granularity."""
+    """make_presampled_render_udf (keep-set array + total) must render
+    exactly what kernel.summarize_value renders from the full turn list
+    when the kept set is the sampler keep-set over that list — the
+    pushdown exactness contract at UDF granularity."""
+    from headson_spark.kernel import summarize_value
     from headson_spark.operators.sampling import default_kept_positions
-    from headson_spark.streaming.windows import (make_presampled_render_udf,
-                                                 make_render_udf)
+    from headson_spark.streaming.windows import make_presampled_render_udf
 
     budget = 300
     cap = budget // 2
@@ -562,15 +562,14 @@ def test_render_udfs_agree_on_dense_prefix(spark):
 
     struct_t = ("array<struct<turn_idx:int,role:string,text:string,"
                 "tool:string,ts:timestamp>>")
-    df = spark.createDataFrame(
-        [(turns, kept, n)],
-        f"full {struct_t}, kept {struct_t}, total int")
-    full_udf = make_render_udf(budget=budget)
+    df = spark.createDataFrame([(kept, n)], f"kept {struct_t}, total int")
     pre_udf = make_presampled_render_udf(budget=budget)
-    row = df.select(full_udf("full").alias("a"),
-                    pre_udf("kept", "total").alias("b")).first()
-    assert row["a"] == row["b"]
-    assert row["a"].startswith("{")
+    got = df.select(pre_udf("kept", "total").alias("b")).first()["b"]
+    doc = {"turns": [{"role": t["role"], "text": t["text"], "tool": ""}
+                     for t in turns]}
+    assert got == summarize_value(doc, format="json",
+                                  character_budget=budget)
+    assert got.startswith("{")
 
 
 def test_rolling_sliding_windows_consistent_keepset(spark, tmp_path):
