@@ -401,11 +401,20 @@ def hashmin_components(pairs: DataFrame, left: str = "id_a",
     with min-root union-find — the identical {node: min reachable id}
     labeling — in one pass. Above the gate the distributed loop runs
     unchanged, so the 100 TB posture is preserved: the driver never
-    holds an unbounded graph."""
+    holds an unbounded graph.
+
+    The gate probe and both directions of the edge union read `pairs`,
+    so an uncached `pairs` is persisted for the call: its lineage (LSH
+    banding, BLAS nomination) runs once, not once per reader."""
+    own_cache = not pairs.is_cached
+    if own_cache:
+        pairs = pairs.persist()
     if driver_gate_edges and driver_gate_edges > 0:
         head = (pairs.select(left, right)
                 .limit(driver_gate_edges + 1).collect())
         if len(head) <= driver_gate_edges:
+            if own_cache:
+                pairs.unpersist()
             labels = _unionfind_min_labels(head)
             from pyspark.sql.types import StructField, StructType
             t = pairs.schema[left].dataType
@@ -420,6 +429,10 @@ def hashmin_components(pairs: DataFrame, left: str = "id_a",
                                  F.col(left).alias("dst")))).cache()
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .withColumn("lbl", F.col("node"))).localCheckpoint()
+    if own_cache:
+        # the checkpoint above read every edge partition into the edges
+        # cache, so the loop no longer needs pairs
+        pairs.unpersist()
     changed = 0
     for _ in range(max_iter):
         # smallest label among self + neighbors

@@ -2,11 +2,17 @@
 
 Spark plan (scale-first, one shuffle total):
 
-    repartition(conv_id)                  -- single hash shuffle; AQE handles
-    sortWithinPartitions(conv_id,         -- skewed/coalesced partitions
+    repartition(N, conv_id)               -- single hash shuffle with an
+                                          -- explicit width (REPARTITION_BY_NUM:
+                                          -- AQE neither coalesces nor splits it)
+    sortWithinPartitions(conv_id,
                          turn_idx, ts)
     mapInPandas(kernel)                   -- Arrow batches; one Python call
                                           -- per ~10k rows, NOT per group
+
+N defaults to defaultParallelism, one kernel task per task slot: every
+Python-UDF task pays a fixed start-up cost before its first row, so the
+stage runs in one wave (PLANS.md §1b).
 
 Compared to groupBy().applyInPandas this avoids one Python invocation per
 conversation (millions of tiny groups at 100 TB) while computing the exact
@@ -26,12 +32,15 @@ Reference semantics: conversation = document {"turns":[{role,text,tool}..]}
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import pandas as pd
 
 from ..kernel.api import array_cap, make_configs, render_conversation
 from .sampling import kept_position_filter
+
+log = logging.getLogger("headson_spark.preview")
 
 PREVIEW_SCHEMA = ("conv_id string, preview string, n_turns int, "
                   "n_chars bigint, preview_bytes int")
@@ -138,16 +147,22 @@ def make_preview_fn(budget: int = 500, style: str = "default",
 def _kernel_step(rows, budget: int, style: str, skew: str, fmt: str,
                  num_partitions: int | None):
     """The one exchange + sort + kernel step every plan ends in."""
-    if num_partitions is None:
-        # explicit count pins the exchange: AQE's size-based coalescing
-        # targets ~64MB partitions, which under-parallelizes a
-        # CPU-bound Python kernel stage (bytes are small, work is not)
-        sc = rows.sparkSession.sparkContext
-        num_partitions = max(sc.defaultParallelism * 4, 8)
-    dist = (rows.repartition(num_partitions, "conv_id")
+    dist = (rows.repartition(_kernel_width(rows, num_partitions), "conv_id")
                 .sortWithinPartitions("conv_id", "turn_idx", "ts"))
     return dist.mapInPandas(make_preview_fn(budget, style, skew, fmt),
                             schema=PREVIEW_SCHEMA)
+
+
+def _kernel_width(df, num_partitions: int | None) -> int:
+    """Kernel-stage task count: `num_partitions` if given, else one task
+    per task slot. Explicit either way, so AQE cannot coalesce the
+    exchange toward ~64MB partitions (a few tasks for a CPU-bound Python
+    stage whose bytes are small and work is not). One wave, not several,
+    because each Python-UDF task pays a fixed 0.25-0.5 s before its
+    first row (PLANS.md §1b)."""
+    if num_partitions is not None:
+        return num_partitions
+    return df.sparkSession.sparkContext.defaultParallelism
 
 
 def _with_sentinels(kept, totals):
@@ -255,9 +270,22 @@ def clear_plan_cache() -> None:
     _PLAN_DECISIONS.clear()
 
 
+class PlanChoice(str):
+    """choose_preview_plan's answer, 'pushdown' or 'full', carrying the
+    statistic that decided it: `kept_frac` (None for an empty input)
+    and `memo` (True when the decision memo answered)."""
+
+    def __new__(cls, plan: str, kept_frac: float | None,
+                memo: bool = False):
+        self = super().__new__(cls, plan)
+        self.kept_frac = kept_frac
+        self.memo = memo
+        return self
+
+
 def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
                         min_prune: float = PUSHDOWN_MIN_PRUNE,
-                        use_cache: bool = True) -> str:
+                        use_cache: bool = True) -> PlanChoice:
     """Pick 'pushdown' or 'full' from input statistics: the EXACT
     fraction of rows the keep-set filter would prune — the quantity the
     pushdown plan's benefit is proportional to. One map-side-combined
@@ -280,14 +308,16 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
         except Exception:
             key = None
         if key is not None and key in _PLAN_DECISIONS:
-            return _PLAN_DECISIONS[key]
+            hit = _PLAN_DECISIONS[key]
+            return PlanChoice(hit, hit.kept_frac, memo=True)
     keep = kept_position_filter(shape, cap)
     kept_frac = df.agg(F.avg(keep.cast("double"))).first()[0]
     if kept_frac is None:
-        plan = "full"
+        plan = PlanChoice("full", None)
     else:
-        plan = ("pushdown" if (1.0 - float(kept_frac)) > min_prune
-                else "full")
+        kept_frac = float(kept_frac)
+        plan = PlanChoice("pushdown" if (1.0 - kept_frac) > min_prune
+                          else "full", kept_frac)
     if key is not None:
         if len(_PLAN_DECISIONS) >= 1024:  # long-lived-service backstop
             _PLAN_DECISIONS.clear()
@@ -323,19 +353,22 @@ def conversation_previews(df, *, budget: int = 500, style: str = "default",
     where exact n_chars matters more than the pruned shuffle."""
     if pushdown == "auto":
         plan = choose_preview_plan(df, budget=budget, skew=skew)
+        why = (f"kept_frac={plan.kept_frac}"
+               + (" from the plan memo" if plan.memo else ""))
     elif pushdown in (True, False, "pushdown", "full"):
         plan = "pushdown" if pushdown in (True, "pushdown") else "full"
+        why = f"forced by pushdown={pushdown!r}"
     else:
         raise ValueError(
             f"pushdown must be True/False/'pushdown'/'full'/'auto', "
             f"got {pushdown!r}")
-    if plan == "pushdown":
-        return conversation_previews_pushdown(
-            df, budget=budget, style=style, skew=skew, fmt=fmt,
-            num_partitions=num_partitions)
-    return conversation_previews_full(df, budget=budget, style=style,
-                                      skew=skew, fmt=fmt,
-                                      num_partitions=num_partitions)
+    width = _kernel_width(df, num_partitions)
+    log.info("conversation_previews: plan=%s (%s), kernel stage width=%d",
+             plan, why, width)
+    build = (conversation_previews_pushdown if plan == "pushdown"
+             else conversation_previews_full)
+    return build(df, budget=budget, style=style, skew=skew, fmt=fmt,
+                 num_partitions=width)
 
 
 def conversation_previews_full(df, *, budget: int = 500,

@@ -114,6 +114,36 @@ def test_hashmin_driver_gate_matches_distributed(spark):
     assert fast  # non-empty
 
 
+def test_hashmin_runs_pairs_lineage_once_above_gate(spark):
+    """Above the driver gate, the gate probe and both directions of the
+    edge union all read `pairs`; its lineage (here a Python UDF that
+    counts its calls) must run exactly once per input row, and the
+    labels must still be the union-find ones."""
+    from pyspark.sql import functions as F
+    from headson_spark.operators.dedup import (_unionfind_min_labels,
+                                               hashmin_components)
+    calls = spark.sparkContext.accumulator(0)
+
+    def hub(i):          # star components of 5: every node -> block min
+        return i - i % 5
+
+    def counted_hub(i):
+        calls.add(1)
+        return hub(i)
+
+    n = 60
+    pairs = (spark.range(0, n, 1, 4)
+             .select(F.col("id").alias("id_a"),
+                     F.udf(counted_hub, "long")("id").alias("id_b")))
+    got = {(r["node"], r["lbl"])
+           for r in hashmin_components(pairs,
+                                       driver_gate_edges=5).collect()}
+    assert calls.value == n
+    want = _unionfind_min_labels([(i, hub(i)) for i in range(n)])
+    assert got == set(want.items())
+    assert not pairs.is_cached
+
+
 def test_contamination_check_semantics(spark):
     """Planted contamination: a training doc embedding a verbatim eval
     passage is flagged with the right overlap count; paraphrase with

@@ -92,3 +92,26 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert "conv_id" in df.columns and "preview" in df.columns
+
+
+def test_price_percentiles_keeps_null_flag_group(spark, tmp_path):
+    """The split price_percentiles plan joins its two aggregates on
+    l_returnflag; a NULL flag group must survive that join, exactly as
+    one unsplit groupBy aggregate of the same three values keeps it."""
+    from pyspark.sql import functions as F
+    li = spark.createDataFrame(
+        [("A", 10.0), ("A", 30.0), ("R", 5.0), (None, 7.0), (None, 9.0)],
+        "l_returnflag string, l_extendedprice double")
+    li.write.parquet(str(tmp_path / "lineitem.parquet"))
+    got = QUERIES["price_percentiles"](spark, str(tmp_path)).collect()
+    want = (li.groupBy("l_returnflag")
+            .agg(F.round(F.percentile("l_extendedprice", F.lit(0.5)), 4)
+                 .alias("p50"),
+                 F.round(F.percentile("l_extendedprice", F.lit(0.95)), 4)
+                 .alias("p95"),
+                 F.round(F.stddev_pop("l_extendedprice"), 4)
+                 .alias("stddev"))
+            .collect())
+    assert len(want) == 3
+    assert sorted(map(tuple, got), key=repr) == \
+        sorted(map(tuple, want), key=repr)

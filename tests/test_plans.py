@@ -37,6 +37,53 @@ def test_pushdown_preview_filters_before_shuffle(spark, tdf):
         "PushedFilters")[1].split("\n")[0], plan
 
 
+def _kernel_exchange_width(df) -> int:
+    """N of the one REPARTITION_BY_NUM hashpartitioning(conv_id, N)
+    exchange feeding the preview kernel."""
+    import re
+    widths = re.findall(r"hashpartitioning\(conv_id#\d+, (\d+)\), "
+                        r"REPARTITION_BY_NUM", formatted_plan(df))
+    assert len(widths) == 1, formatted_plan(df)
+    return int(widths[0])
+
+
+@pytest.mark.parametrize("plan", ["full", "balanced", "tail"])
+def test_kernel_stage_is_one_wave(spark, tdf, plan):
+    """The kernel exchange defaults to one task per task slot (every
+    Python-UDF task pays a fixed start-up cost, so extra waves only add
+    it); an explicit num_partitions still wins."""
+    from headson_spark.operators.preview import (
+        conversation_previews_full, conversation_previews_pushdown)
+
+    def build(**kw):
+        if plan == "full":
+            return conversation_previews_full(tdf, budget=300, **kw)
+        return conversation_previews_pushdown(tdf, budget=300, skew=plan,
+                                              **kw)
+
+    width = spark.sparkContext.defaultParallelism
+    assert _kernel_exchange_width(build()) == width
+    assert _kernel_exchange_width(build(num_partitions=3)) == 3
+
+
+@pytest.mark.parametrize("pushdown", [False, True])
+def test_previews_do_not_depend_on_kernel_width(spark, tdf, pushdown):
+    """Each conversation is contiguous in one partition at any width, so
+    the rows are the same at the default width, one partition, and four
+    waves of partitions."""
+    width = spark.sparkContext.defaultParallelism
+
+    def rows(n):
+        return sorted(map(tuple, conversation_previews(
+            tdf, budget=300, pushdown=pushdown,
+            num_partitions=n).collect()))
+
+    default = rows(None)
+    assert len(default) > 0
+    assert rows(1) == default
+    assert rows(4 * width) == default
+
+
 def test_filter_pushdown_reaches_scan(spark, transcripts_path):
     df = (spark.read.parquet(transcripts_path)
           .filter(F.col("conv_id") == "cplain_000001")

@@ -111,6 +111,36 @@ def test_dispatch_decision_is_memoized(spark, tdf):
         clear_plan_cache()
 
 
+def test_plan_decision_is_logged(spark, tdf, caplog):
+    """conversation_previews logs one INFO line per call: the chosen
+    plan, the statistic that decided it (kept_frac, or that the memo
+    or the caller answered) and the kernel-stage width."""
+    from headson_spark.operators.preview import clear_plan_cache
+    width = spark.sparkContext.defaultParallelism
+    clear_plan_cache()
+    try:
+        lines = []
+        for kw in ({}, {}, {"pushdown": False, "num_partitions": 3}):
+            caplog.clear()
+            with caplog.at_level("INFO", logger="headson_spark.preview"):
+                conversation_previews(tdf, budget=500, **kw)
+            got = [r for r in caplog.records
+                   if r.name == "headson_spark.preview"]
+            assert len(got) == 1 and got[0].levelname == "INFO"
+            lines.append(got[0].getMessage())
+    finally:
+        clear_plan_cache()
+    fresh, memo, forced = lines
+    kept = choose_preview_plan(tdf, budget=500, use_cache=False).kept_frac
+    assert kept is not None and kept < 0.5
+    assert "plan=pushdown" in fresh and f"kept_frac={kept}" in fresh
+    assert "memo" not in fresh and f"width={width}" in fresh
+    assert "plan=pushdown" in memo and f"kept_frac={kept}" in memo
+    assert "memo" in memo and f"width={width}" in memo
+    assert "plan=full" in forced and "pushdown=False" in forced
+    assert "kept_frac" not in forced and "width=3" in forced
+
+
 def test_pushdown_nchars_upper_bound_on_unkept_dup(spark):
     """Documented exactness contract: a duplicate delivery on a NON-kept
     position is invisible to the pushdown kernel post-filter, so n_chars
