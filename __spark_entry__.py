@@ -116,8 +116,7 @@ def _ivf_index(spark, sf_dir):
     if a is None:
         from headson_spark.operators import similarity
         a = similarity.ivf_assign(_emb(spark, sf_dir),
-                                  stride=IVF_STRIDE,
-                                  broadcast_ok=True).cache()
+                                  stride=IVF_STRIDE).cache()
         a.count()  # materialize eagerly so queries measure probe cost
         _IVF_INDEX_CACHE[key] = a
     return a
@@ -620,18 +619,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["multimodal_audio_stats"] = multimodal_audio_stats
 
     def ivf_assign(spark, sf_dir):
-        # broadcast_ok: IVF_STRIDE on the fixed-SF test fixture gives a
-        # provably tiny centroid table (k = n/32 at sf<=0.1)
         return similarity.ivf_assign(_emb(spark, sf_dir),
-                                     stride=IVF_STRIDE,
-                                     broadcast_ok=True)
+                                     stride=IVF_STRIDE)
     q["ivf_assign"] = ivf_assign
 
     def ivf_topk(spark, sf_dir):
         return similarity.ivf_topk(_emb(spark, sf_dir), QUERY_VEC,
                                    k=ANN_K, n_probe=IVF_PROBES,
-                                   stride=IVF_STRIDE,
-                                   broadcast_ok=True)
+                                   stride=IVF_STRIDE)
     q["ivf_topk"] = ivf_topk
 
     def ivf_topk_indexed(spark, sf_dir):

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from . import arena as ar
 from .order import build_order
-from .render import RenderConfig, find_largest_render_under_budget
+from .render import (_STYLE_TO_JSON_TEMPLATE, RenderConfig,
+                     find_largest_render_under_budget)
 
 DEFAULT_BUDGET = 500
 DEFAULT_STRING_CAP = 500
@@ -27,8 +28,6 @@ _FORMAT_TO_TEMPLATE = {
     "yml": "yaml",
     "text": "text",
 }
-_STYLE_TO_JSON_TEMPLATE = {
-    "strict": "json", "default": "pseudo", "detailed": "js"}
 _SKEWS = ("balanced", "head", "tail")
 
 

@@ -82,7 +82,6 @@ def tail_sample_indices(cap: int, total: int) -> list[int]:
 
 _SAMPLERS = {
     "balanced": default_sample_indices,
-    "default": default_sample_indices,
     "head": head_sample_indices,
     "tail": tail_sample_indices,
 }
@@ -309,15 +308,17 @@ def build_conversation_arena(roles, texts, tools, array_cap: int,
     # arena node ids don't affect output ordering (pq ids do), so layout
     # here may differ from the recursive builder's — only structure matters
     arr_id = a.push(arr_node)
+
+    def leaf(v) -> int:
+        if v is None:
+            return a.push(Node(kind=NULL, token="null"))
+        return a.push(Node(kind=STRING, string_value=v))
+
     children = []
     for i in rows:
         t = Node(kind=OBJECT, keys=["role", "text", "tool"], object_len=3)
         tid = a.push(t)
-        t.children = [
-            a.push(Node(kind=STRING, string_value=roles[i])),
-            a.push(Node(kind=STRING, string_value=texts[i])),
-            a.push(Node(kind=STRING, string_value=tools[i])),
-        ]
+        t.children = [leaf(roles[i]), leaf(texts[i]), leaf(tools[i])]
         children.append(tid)
     arr_node.children = children
     arr_node.arr_indices = (None if orig == list(range(len(orig)))
@@ -332,12 +333,16 @@ def build_fileset_arena(inputs: list[tuple[str, object]], array_cap: int,
                         sampler: str = "balanced",
                         ingest: str = "json") -> Arena:
     """Multi-input fileset: synthetic root object keyed by input name
-    (json_ingest/mod.rs:36-58, text_ingest/mod.rs:124-148)."""
+    (json_ingest/mod.rs:36-58, text_ingest/mod.rs:124-148). A payload
+    that is already an Arena (built with the same cap and sampler) is
+    merged as-is."""
     a = Arena()
     keys: list[str] = []
     children: list[int] = []
     for name, payload in inputs:
-        if ingest == "text":
+        if isinstance(payload, Arena):
+            sub = payload
+        elif ingest == "text":
             sub = build_text_arena(payload, array_cap, sampler)
         elif ingest == "yaml":
             from .yaml_ingest import build_yaml_arena

@@ -164,18 +164,6 @@ def graphemes(s: str) -> list[str]:
     return [s[b[i]:b[i + 1]] for i in range(len(b) - 1)]
 
 
-def count_graphemes_capped(s: str, cap: int) -> tuple[int, bool]:
-    """(count up to cap, truncated?) — reference build.rs:107-114."""
-    if not s:
-        return 0, False
-    if ascii_printable(s):
-        n = len(s)
-        return (min(n, cap), n > cap)
-    b = grapheme_breaks(s)
-    n = len(b) - 1
-    return (min(n, cap), n > cap)
-
-
 def take_n_graphemes(s: str, n: int) -> str:
     """First n grapheme clusters of s — reference utils/text.rs:5-14."""
     if n <= 0:

@@ -22,9 +22,6 @@ from .order import (PriorityOrder, K_ARRAY, K_OBJECT, K_STRING, K_ATOMIC,
 
 OMISSION = "…"
 
-TEMPLATES = ("json", "pseudo", "js", "yaml", "text", "auto")
-STYLES = ("strict", "default", "detailed")
-
 _STYLE_TO_JSON_TEMPLATE = {
     "strict": "json", "default": "pseudo", "detailed": "js"}
 

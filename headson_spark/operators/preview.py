@@ -284,7 +284,6 @@ class PlanChoice(str):
 
 
 def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
-                        min_prune: float = PUSHDOWN_MIN_PRUNE,
                         use_cache: bool = True) -> PlanChoice:
     """Pick 'pushdown' or 'full' from input statistics: the EXACT
     fraction of rows the keep-set filter would prune — the quantity the
@@ -295,8 +294,10 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
     while a short-conversation bulk keeps the full plan. For tail skew,
     `turn_idx < cap` counts exactly min(cap, len) rows per conversation —
     the same count the last-cap keep-set retains — so the statistic is
-    exact for all three skews. At deployment scale this comes from a
-    maintained table-stats aggregate rather than a per-query scan."""
+    exact for all three skews. Pushdown is chosen when more than
+    PUSHDOWN_MIN_PRUNE of the rows would be pruned. At deployment scale
+    this comes from a maintained table-stats aggregate rather than a
+    per-query scan."""
     from pyspark.sql import functions as F
     cap = array_cap(budget)
     shape = "head" if skew.lower() in ("head", "tail") else "balanced"
@@ -304,7 +305,7 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
     if use_cache:
         try:
             key = (df._jdf.queryExecution().analyzed().semanticHash(),
-                   cap, shape, min_prune)
+                   cap, shape)
         except Exception:
             key = None
         if key is not None and key in _PLAN_DECISIONS:
@@ -316,7 +317,8 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
         plan = PlanChoice("full", None)
     else:
         kept_frac = float(kept_frac)
-        plan = PlanChoice("pushdown" if (1.0 - kept_frac) > min_prune
+        pruned = 1.0 - kept_frac
+        plan = PlanChoice("pushdown" if pruned > PUSHDOWN_MIN_PRUNE
                           else "full", kept_frac)
     if key is not None:
         if len(_PLAN_DECISIONS) >= 1024:  # long-lived-service backstop

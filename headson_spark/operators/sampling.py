@@ -80,13 +80,11 @@ def tail_cap(df: DataFrame, cap: int) -> DataFrame:
                 .drop("_n"))
 
 
-def default_cap(df: DataFrame, cap: int,
-                max_len: int = 100_000) -> DataFrame:
+def default_cap(df: DataFrame, cap: int) -> DataFrame:
     """Default 3-phase sampler as a broadcast IN-set filter — bit-exact
     with the kernel's mix64 acceptance (samplers/default.rs:131-217)."""
-    kept = default_kept_positions(cap, max_len)
     return (with_turn_ordinal(df)
-            .filter(F.col("turn_ord").isin(kept)))
+            .filter(F.col("turn_ord").isin(default_kept_positions(cap))))
 
 
 def stratified_sample(df: DataFrame, fractions: dict[str, float],

@@ -222,8 +222,7 @@ def lloyd_refine(df: DataFrame, stride: int | None = 32,
                  n_iters: int = 1,
                  id_col: str = "vec_id",
                  vec_col: str = "embedding",
-                 k_target: int = 4096,
-                 broadcast_ok: bool | None = None) -> DataFrame:
+                 k_target: int = 4096) -> DataFrame:
     """Optional Lloyd (k-means) refinement of the strided-sample IVF
     centroids: n_iters rounds of assign-to-nearest + recompute-as-mean.
     Improves inverted-list balance (hence recall at a given n_probe) at
@@ -235,10 +234,10 @@ def lloyd_refine(df: DataFrame, stride: int | None = 32,
     probe ranking and the inverted lists disagree and recall silently
     degrades).
 
-    Plan per iteration: the assignment crossJoin (same broadcast
-    discipline as ivf_assign) -> posexplode the vector (one narrow
-    (centroid, dim_pos, value) stream, partial-aggregated map-side to
-    k x dim rows per task) -> groupBy(centroid_id, pos) mean -> regroup
+    Plan per iteration: ivf_assign against the current centroids (a
+    zero-exchange map) -> join back to the vectors -> posexplode the
+    vector (one narrow (centroid, dim_pos, value) stream,
+    partial-aggregated map-side to k x dim rows per task) -> groupBy(centroid_id, pos) mean -> regroup
     to arrays. Shuffle volume is O(tasks * k * dim), independent of n.
     Empty clusters keep their previous centroid (standard Lloyd
     posture), so k never shrinks.
@@ -252,12 +251,10 @@ def lloyd_refine(df: DataFrame, stride: int | None = 32,
     """
     if stride is None:
         stride = derive_ivf_stride(df, k_target, id_col)
-        if broadcast_ok is None:
-            broadcast_ok = True
     cents = ivf_centroids(df, stride, id_col, vec_col)
     for _ in range(max(n_iters, 0)):
         assigned = ivf_assign(df, stride, id_col, vec_col,
-                              broadcast_ok=broadcast_ok, centroids=cents)
+                              centroids=cents)
         means = (df.join(assigned, id_col)
                  .select("centroid_id",
                          F.posexplode(vec_col).alias("_pos", "_v"))
@@ -319,7 +316,6 @@ def ivf_assign(df: DataFrame, stride: int | None = 32,
                id_col: str = "vec_id",
                vec_col: str = "embedding",
                k_target: int = 4096,
-               broadcast_ok: bool | None = None,
                centroids: DataFrame | None = None) -> DataFrame:
     """IVF indexing step: assign every vector to its nearest centroid
     (arg-min L2, ties broken by centroid id — deterministic).
@@ -359,8 +355,6 @@ def ivf_assign(df: DataFrame, stride: int | None = 32,
     reads. k stays bounded by the stride contract (stride=None derives
     k <= k_target); a fixed stride on a growing corpus is capped loudly
     at MAX_COLLECTED_CENTROIDS instead of OOMing the driver.
-    broadcast_ok is retained for API compatibility (the join it hinted
-    no longer exists).
 
     Pass `centroids` (a precomputed/refined ivf_centroids-shaped table,
     e.g. from lloyd_refine) to assign against those instead of the
@@ -425,8 +419,7 @@ def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
              id_col: str = "vec_id",
              vec_col: str = "embedding",
              assignment: DataFrame | None = None,
-             k_target: int = 4096,
-             broadcast_ok: bool | None = None) -> DataFrame:
+             k_target: int = 4096) -> DataFrame:
     """IVF ANN query: rank centroids by distance to the query, probe the
     n_probe nearest inverted lists, exact cosine re-rank inside them.
     Recall/latency knob = n_probe (n_probe = k_centroids degrades to the
@@ -446,8 +439,7 @@ def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
               .limit(n_probe)
               .select("centroid_id"))
     if assignment is None:
-        assignment = ivf_assign(df, stride, id_col, vec_col,
-                                broadcast_ok=broadcast_ok)
+        assignment = ivf_assign(df, stride, id_col, vec_col)
     cand_ids = (assignment
                 .join(F.broadcast(probes), "centroid_id")
                 .select(id_col))

@@ -20,9 +20,9 @@ Scale notes:
 - state per conversation is O(array_cap) turn contents plus a
   1-bit-per-turn seen-bitmap, for every skew; the watermark bounds how
   long state lives
-- conv_id skew: the state shuffle hashes conv_id; a hot conversation is
-  bounded by the turn cap + kernel SAFETY_CAP; upstream salting helper in
-  headson_spark.plans.salting pre-aggregates oversized conversations
+- conv_id skew: the state shuffle hashes conv_id; a hot conversation
+  ships every delivered row to one task, but its state and render stay
+  O(array_cap) turns
 """
 
 from __future__ import annotations
@@ -103,23 +103,9 @@ def _render_bounded(st: dict, rule: KeepRule, total: int, rank, cfg, prio,
 
 
 def _st_new() -> dict:
-    # v counts completed merge rounds for this conversation (drives the
-    # every_k emission policy)
-    return {"b": bytearray(), "k": {}, "mx": 0, "v": 0}
-
-
-def _should_emit(policy: str, every: int, version: int) -> bool:
-    """Intermediate-emission decision (final timeout emissions always
-    fire). on_change: every update; on_close: never (the render itself is
-    skipped — one render per conversation total); every_k: every k-th
-    merge round that changed the conversation."""
-    if policy == "on_change":
-        return True
-    if policy == "on_close":
-        return False
-    if policy == "every_k":
-        return version % max(every, 1) == 0
-    raise ValueError(f"unknown emit_policy: {policy!r}")
+    # a state written by an earlier layout may also carry "n" or "v";
+    # both are ignored
+    return {"b": bytearray(), "k": {}, "mx": 0}
 
 
 def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list,
@@ -181,8 +167,7 @@ def _bucket_decode(blob) -> dict:
 def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
                              skew: str = "balanced", fmt: str = "json",
                              session_gap_ms: int = 600_000,
-                             emit_policy: str = "on_change",
-                             emit_every: int = 8):
+                             emit_policy: str = "on_change"):
     """Build the applyInPandasWithState function. A group's state maps
     conv_id to that conversation's state, so one function serves both
     group keys: conv_id, and pmod(xxhash64(conv_id), B) — bucketed state
@@ -201,12 +186,11 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
     emit_policy controls intermediate emissions: "on_change" (default)
     renders every changed conversation per micro-batch; "on_close"
     renders none (one render per conversation at close — the
-    bulk-throughput mode); "every_k" renders a changed conversation on
-    its every emit_every-th CHANGED merge round. All policies converge to
-    identical final rows.
+    bulk-throughput mode). Both converge to identical final rows.
     """
-    if emit_policy not in ("on_change", "on_close", "every_k"):
+    if emit_policy not in ("on_change", "on_close"):
         raise ValueError(f"unknown emit_policy: {emit_policy!r}")
+    on_change = emit_policy == "on_change"
     cfg, prio, budget = make_configs(format=fmt, style=style,
                                      character_budget=budget, skew=skew)
     rule = KeepRule(prio["sampler"], prio["array_max_items"])
@@ -286,10 +270,9 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
         rows = []
         for cid in sorted(changed):
             st = convs[cid]
-            st["v"] = st.get("v", 0) + 1
             ranks = _bits_ranks(st["b"])
             _prune_kept(st, rule, *ranks)
-            if _should_emit(emit_policy, emit_every, st["v"]):
+            if on_change:
                 rows.append((cid, *render(st, ranks), st["mx"], False))
         state.update((_bucket_encode(convs), len(convs)))
         _arm_timeout(state, convs, wm_ms)
@@ -304,8 +287,7 @@ def streaming_previews(stream_df, *, budget: int = 500,
                        fmt: str = "json", watermark: str = "10 minutes",
                        session_gap_ms: int = 600_000,
                        n_buckets: int | None = 512,
-                       emit_policy: str = "on_change",
-                       emit_every: int = 8):
+                       emit_policy: str = "on_change"):
     """stream_df: streaming DataFrame with the transcript schema.
 
     n_buckets engages bucketed state coalescing: the stateful group key
@@ -315,9 +297,9 @@ def streaming_previews(stream_df, *, budget: int = 500,
     conv_id. Both run make_bucketed_preview_fn and produce identical
     final rows.
 
-    emit_policy: "on_change" (default) / "on_close" / "every_k" — see
-    make_bucketed_preview_fn. All policies agree on final (final=True)
-    rows; on_close trades intermediate visibility for throughput.
+    emit_policy: "on_change" (default) / "on_close" — see
+    make_bucketed_preview_fn. Both agree on final (final=True) rows;
+    on_close trades intermediate visibility for throughput.
 
     Checkpoint compatibility: changing n_buckets, or upgrading across a
     state-format change, needs a NEW checkpoint dir (history in
@@ -327,8 +309,7 @@ def streaming_previews(stream_df, *, budget: int = 500,
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     fn = make_bucketed_preview_fn(budget, style, skew, fmt, session_gap_ms,
-                                  emit_policy=emit_policy,
-                                  emit_every=emit_every)
+                                  emit_policy=emit_policy)
     keyed = stream_df.withWatermark("ts", watermark)
     if n_buckets:
         keyed = (keyed.withColumn(
@@ -363,11 +344,8 @@ class KeyedParquetSink:
     stay consistent with committed batches and exactly-once is
     unaffected."""
 
-    def __init__(self, path: str, key: str = "conv_id",
-                 order_col: str = "last_ts"):
+    def __init__(self, path: str):
         self.path = path
-        self.key = key
-        self.order_col = order_col
         os.makedirs(path, exist_ok=True)
 
     @property
@@ -429,7 +407,8 @@ class KeyedParquetSink:
         os.replace(tmp, self.manifest)  # atomic commit point
 
     def read_latest(self, spark):
-        """Latest row per key across committed batches (MERGE view)."""
+        """Latest row per conv_id across committed batches (MERGE view):
+        highest batch id first, then latest last_ts."""
         from pyspark.sql import Window, functions as F
         committed = self.committed()
         if not committed:
@@ -437,8 +416,8 @@ class KeyedParquetSink:
         paths = [os.path.join(self.path, f"batch={b}") for b in committed]
         paths = [p for p in paths if os.path.exists(p)]
         df = spark.read.parquet(*paths)
-        w = Window.partitionBy(self.key).orderBy(
-            F.desc("_batch_id"), F.desc(self.order_col))
+        w = Window.partitionBy("conv_id").orderBy(
+            F.desc("_batch_id"), F.desc("last_ts"))
         return (df.withColumn("_rn", F.row_number().over(w))
                   .filter("_rn = 1").drop("_rn"))
 
@@ -450,7 +429,7 @@ def run_stream(spark, source_dir: str, sink: KeyedParquetSink,
                session_gap_ms: int = 600_000, available_now: bool = True,
                max_files_per_trigger: int | None = None,
                n_buckets: int | None = 512,
-               emit_policy: str = "on_change", emit_every: int = 8):
+               emit_policy: str = "on_change"):
     """File-source streaming job (swap readStream.format('iceberg') for an
     Iceberg catalog deployment — same plan otherwise).
 
@@ -466,8 +445,7 @@ def run_stream(spark, source_dir: str, sink: KeyedParquetSink,
                              watermark=watermark,
                              session_gap_ms=session_gap_ms,
                              n_buckets=n_buckets,
-                             emit_policy=emit_policy,
-                             emit_every=emit_every)
+                             emit_policy=emit_policy)
     writer = (out.writeStream
               .foreachBatch(sink)
               .outputMode("update")

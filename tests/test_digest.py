@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from headson_spark.operators.digest import corpus_digest
 
 
@@ -32,3 +34,31 @@ def test_corpus_digest_empty(spark):
         [], "conv_id string, turn_idx int, role string, text string, "
             "tool string, ts timestamp")
     assert corpus_digest(df) == ""
+
+
+@pytest.mark.parametrize("skew", ["balanced", "head", "tail"])
+def test_corpus_digest_equals_summarize_many(spark, skew):
+    """The digest of conversations longer than the per-conversation cap
+    equals summarize_many over the merged full conversations: the skew's
+    own window sampler, omission counts against the full length, and a
+    late duplicate delivery merged last-write-wins."""
+    from headson_spark.kernel import summarize_many
+    lens = {"a": 200, "b": 200, "c": 5}
+    rows = [(cid, i, "user" if i % 2 == 0 else "assistant",
+             f"{cid} turn {i}", "", 1_000 + i)
+            for cid, n in lens.items() for i in range(n)]
+    rows.append(("a", 7, "user", "a turn 7 v2", "", 5_000))
+    df = (spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts_s long")
+        .selectExpr("conv_id", "turn_idx", "role", "text", "tool",
+                    "timestamp_seconds(ts_s) as ts"))
+    merged = {r[0]: {} for r in rows}
+    for cid, i, role, text, tool, _ in rows:  # rows are ts-ascending
+        merged[cid][i] = {"role": role, "text": text, "tool": tool}
+    inputs = [(cid, {"turns": [merged[cid][i] for i in sorted(merged[cid])]})
+              for cid in sorted(merged)]
+    want = summarize_many(inputs, format="json", style="detailed",
+                          skew=skew, character_budget=600)
+    got = corpus_digest(df, global_budget=600, style="detailed", skew=skew)
+    assert got == want

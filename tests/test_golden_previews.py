@@ -41,3 +41,27 @@ def test_golden_preview(conv_id, doc, style, skew, budget):
 
 def test_matrix_complete():
     assert len(GOLDEN) == len(CASES) == 432
+
+
+@pytest.mark.parametrize("skew", SKEWS)
+@pytest.mark.parametrize("field", ["role", "text", "tool"])
+def test_render_conversation_null_field_matches_value_arena(field, skew):
+    """The conversation arena renders a NULL role, text or tool as the
+    value arena does (a JSON null), in the full and pre-sampled forms."""
+    from headson_spark.kernel.api import make_configs, render_conversation
+    from headson_spark.kernel.arena import sample_indices
+    turns = [{"role": "user", "text": f"turn {i}", "tool": "t"}
+             for i in range(300)]  # more than the cap of 250
+    for t in turns[::2]:
+        t[field] = None
+    cfg, prio, budget = make_configs(format="json", style="detailed",
+                                     character_budget=500, skew=skew)
+    want = summarize_value({"turns": turns}, format="json",
+                           style="detailed", character_budget=500, skew=skew)
+    assert "null" in want
+    cols = [[t[k] for t in turns] for k in ("role", "text", "tool")]
+    assert render_conversation(*cols, cfg, prio, budget) == want
+    kept = sample_indices(skew, prio["array_max_items"], len(turns))
+    picked = [[c[i] for i in kept] for c in cols]
+    assert render_conversation(*picked, cfg, prio, budget, kept=kept,
+                               total=len(turns)) == want

@@ -11,9 +11,6 @@ from headson_spark.plans.inspect import (count_exchanges,
                                          formatted_plan,
                                          has_broadcast_join,
                                          has_pushed_filters)
-from headson_spark.plans.salting import (salted_head_prereduce,
-                                         salted_tail_prereduce)
-from headson_spark.operators.sampling import head_cap, tail_cap
 
 
 @pytest.fixture(scope="module")
@@ -112,32 +109,6 @@ def test_broadcast_join_for_small_dim(spark):
     import __spark_entry__ as em
     df = em.queries()["join_top_customers"](spark, "/root/testdata/sf0.001")
     assert has_broadcast_join(df)
-
-
-def test_salted_head_prereduce_equivalent(spark, tdf):
-    cap = 7
-    hot = tdf.filter("conv_id like 'cskewhot%' or conv_id like 'cbig%'")
-    direct = {(r["conv_id"], r["turn_idx"])
-              for r in head_cap(hot, cap).select(
-                  "conv_id", "turn_idx").collect()}
-    pre = salted_head_prereduce(hot, cap, n_salts=8)
-    merged = {(r["conv_id"], r["turn_idx"])
-              for r in head_cap(pre, cap).select(
-                  "conv_id", "turn_idx").collect()}
-    assert merged == direct
-
-
-def test_salted_tail_prereduce_equivalent(spark, tdf):
-    cap = 7
-    hot = tdf.filter("conv_id like 'cskewhot%' or conv_id like 'cbig%'")
-    direct = {(r["conv_id"], r["turn_idx"])
-              for r in tail_cap(hot, cap).select(
-                  "conv_id", "turn_idx").collect()}
-    pre = salted_tail_prereduce(hot, cap, n_salts=8)
-    merged = {(r["conv_id"], r["turn_idx"])
-              for r in tail_cap(pre, cap).select(
-                  "conv_id", "turn_idx").collect()}
-    assert merged == direct
 
 
 def test_ivf_assign_plan_is_shuffle_free_map(spark):

@@ -257,6 +257,13 @@ def test_edge_shape_matrix_pushdown_equals_full(spark, budget, skew):
     assert set(full) == set(push)
     diffs = {k: (full[k], push[k]) for k in full if full[k] != push[k]}
     assert not diffs, diffs
+    # NULL text renders as the kernel renders a JSON null
+    from headson_spark.kernel import summarize_value
+    for cid in ("null_text", "all_null_text"):
+        doc = {"turns": [{"role": r[2], "text": r[3], "tool": r[4]}
+                         for r in rows if r[0] == cid]}
+        assert full[cid][0] == summarize_value(
+            doc, format="json", character_budget=budget, skew=skew), cid
 
 
 @pytest.mark.parametrize("skew", ["tail", "balanced"])

@@ -174,8 +174,7 @@ def test_lloyd_refine_matches_numpy_reference(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     stride = 40  # 6 centroids: ids 0, 40, ..., 200
 
-    refined = lloyd_refine(df, stride=stride, n_iters=1,
-                           broadcast_ok=True)
+    refined = lloyd_refine(df, stride=stride, n_iters=1)
     got = {r["centroid_id"]: np.array(r["_cvec"])
            for r in refined.collect()}
 
@@ -201,8 +200,7 @@ def test_lloyd_refine_matches_numpy_reference(spark):
     assert sse1 <= sse0 + 1e-9, (sse0, sse1)
 
     # refined centroids drop into ivf_assign unchanged (plan contract)
-    a = ivf_assign(df, stride=stride, broadcast_ok=True,
-                   centroids=refined)
+    a = ivf_assign(df, stride=stride, centroids=refined)
     assert a.count() == len(rows)
     assert a.select("centroid_id").distinct().count() <= 6
 
@@ -215,6 +213,6 @@ def test_lloyd_refine_matches_numpy_reference(spark):
     # vec 1000 % 40 == 0 -> the far vector IS a centroid; every normal
     # vector avoids it, so its cluster = {itself}; after refinement it
     # must still exist with a finite centroid
-    ref2 = lloyd_refine(df2, stride=40, n_iters=1, broadcast_ok=True)
+    ref2 = lloyd_refine(df2, stride=40, n_iters=1)
     ids2 = {r["centroid_id"] for r in ref2.collect()}
     assert ids2 == {r["centroid_id"] for r in cents.collect()}

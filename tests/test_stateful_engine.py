@@ -202,10 +202,10 @@ def test_tail_bounded_state_backfill_redelivery_close():
 
 
 def test_tail_state_from_full_turn_map_resumes():
-    """A tail state written with the full turn map and an `"n"` field
-    (the earlier layout, same blob schema) resumes in place: the close
-    renders from it directly, and a new batch prunes it to the cap; both
-    count and render like the kernel."""
+    """A tail state written with the full turn map and the `"n"` and
+    `"v"` fields (earlier layouts, same blob schema) resumes in place:
+    the close renders from it directly, and a new batch prunes it to the
+    cap; both count and render like the kernel."""
     from headson_spark.streaming.engine import _bits_set, _bucket_encode
     turns = [(i, f"old turn {i}", i) for i in range(300)]
     ts_us = [(T0 + pd.Timedelta(seconds=t[2])).value // 1000 for t in turns]
@@ -258,15 +258,13 @@ def test_state_removed_on_close():
 
 
 def test_emit_policies_agree_on_final_state():
-    """on_change / on_close / every_k: identical final render, the
-    documented intermediate-emission counts (3 changed rounds; every_k
-    with k=2 emits on round 2 only)."""
+    """on_change / on_close: identical final render, the documented
+    intermediate-emission counts (3 changed rounds)."""
     batches = [_batch([(0, "a", 0)]), _batch([(1, "b", 1)]),
                _batch([(2, "c", 2)])]
     finals = {}
-    for policy, expect_inter in (("on_change", 3), ("on_close", 0),
-                                 ("every_k", 1)):
-        out, _ = run(batches, emit_policy=policy, emit_every=2)
+    for policy, expect_inter in (("on_change", 3), ("on_close", 0)):
+        out, _ = run(batches, emit_policy=policy)
         assert _finals(out).count(False) == expect_inter, policy
         assert _finals(out)[-1]
         finals[policy] = out[-1][1]["preview"]
@@ -275,8 +273,9 @@ def test_emit_policies_agree_on_final_state():
 
 
 def test_rejects_unknown_policy():
-    with pytest.raises(ValueError):
-        make_bucketed_preview_fn(emit_policy="sometimes")
+    for policy in ("sometimes", "every_k"):
+        with pytest.raises(ValueError):
+            make_bucketed_preview_fn(emit_policy=policy)
 
 
 def test_no_emission_on_unchanged_batch():
@@ -284,20 +283,6 @@ def test_no_emission_on_unchanged_batch():
     out, _ = run([_batch([(0, "x", 300)]), _batch([(0, "ignored", 0)])],
                  expire=False)
     assert [seen for seen, _ in out] == [1]
-
-
-def test_every_k_cadence_skips_unchanged_rounds():
-    """every_k counts CHANGED merge rounds only: a stale-replay round
-    (LWW loser) must not advance the cadence. Changed rounds here are
-    1,2,3,4 with a stale round between 2 and 3; emit_every=2 =>
-    intermediates on changed rounds 2 and 4 exactly."""
-    batches = [_batch([(0, "a", 300)]), _batch([(1, "b", 301)]),
-               _batch([(0, "stale", 0)]), _batch([(2, "c", 302)]),
-               _batch([(3, "d", 303)])]
-    out, _ = run(batches, emit_policy="every_k", emit_every=2,
-                 expire=False)
-    assert [r["n_turns"] for _, r in out] == [2, 4]
-    _assert_matches_kernel(out, batches)
 
 
 def test_timeout_monotone_under_late_turns():

@@ -310,8 +310,8 @@ def _policy_rows(conv, idxs, ts):
 @pytest.mark.parametrize("n_buckets", [None, 2],
                          ids=["per-conv", "bucketed2"])
 def test_emit_policies_agree_on_final_states(spark, tmp_path, n_buckets):
-    """on_change / on_close / every_k must converge to identical
-    final (final=True) rows; on_close must emit NOTHING before close."""
+    """on_change / on_close must converge to identical final
+    (final=True) rows; on_close must emit NOTHING before close."""
     day = 24 * 3600 * 1000
     t0 = pd.Timestamp("2026-01-01")
 
@@ -330,7 +330,7 @@ def test_emit_policies_agree_on_final_states(spark, tmp_path, n_buckets):
                                       t0 + pd.Timedelta(days=30)))
 
     finals, intermediates = {}, {}
-    for policy in ("on_change", "on_close", "every_k"):
+    for policy in ("on_change", "on_close"):
         sink = KeyedParquetSink(
             str(tmp_path / f"pol_sink_{n_buckets}_{policy}"))
         q = run_stream(
@@ -338,7 +338,7 @@ def test_emit_policies_agree_on_final_states(spark, tmp_path, n_buckets):
             str(tmp_path / f"pol_ckpt_{n_buckets}_{policy}"),
             budget=500, available_now=True, watermark="1 hour",
             session_gap_ms=day, max_files_per_trigger=1,
-            n_buckets=n_buckets, emit_policy=policy, emit_every=2)
+            n_buckets=n_buckets, emit_policy=policy)
         q.awaitTermination(300)
         all_rows = spark.read.parquet(
             *[os.path.join(sink.path, f"batch={b}")
@@ -349,13 +349,11 @@ def test_emit_policies_agree_on_final_states(spark, tmp_path, n_buckets):
                           for r in all_rows if r["final"]}
         intermediates[policy] = [r for r in all_rows if not r["final"]]
 
-    assert finals["on_change"] == finals["on_close"] == finals["every_k"]
+    assert finals["on_change"] == finals["on_close"]
     assert set(finals["on_change"]) == {"conv_a", "conv_b"}
     assert not intermediates["on_close"], \
         "on_close must skip all intermediate emissions"
-    assert len(intermediates["every_k"]) < len(
-        intermediates["on_change"]), \
-        "every_k must emit less often than on_change"
+    assert intermediates["on_change"]
 
 
 def test_merge_rows_rejects_contract_violating_turn_idx():
@@ -421,14 +419,11 @@ def test_on_close_policy_resumes_from_checkpoint(spark, tmp_path):
     assert got["conv_r"][1] == 3
 
 
-def test_every_k_counts_changed_rounds_identically_across_engines(
-        spark, tmp_path):
-    """The every_k cadence is defined over CHANGED merge rounds under
-    both group keys (conv_id and bucketed). A duplicate-only delivery
-    (older ts, LWW loser -> changed=False) must not advance the cadence:
-    with emit_every=2 the single intermediate emission lands on the
-    2nd CHANGED round (n_turns=2) under both keys, and the intermediate
-    rows are identical across them."""
+def test_changed_rounds_emit_identically_across_engines(spark, tmp_path):
+    """Under both group keys (conv_id and bucketed) on_change emits once
+    per CHANGED merge round: a duplicate-only delivery (older ts, LWW
+    loser -> changed=False) emits nothing, so the intermediate rows are
+    n_turns 1, 2, 3, identical across the keys."""
     day = 24 * 3600 * 1000
     t0 = pd.Timestamp("2026-01-01")
 
@@ -436,7 +431,7 @@ def test_every_k_counts_changed_rounds_identically_across_engines(
     os.makedirs(src, exist_ok=True)
     _write_chunk(src, 0, _policy_rows("conv_a", [0], t0))
     # duplicate of turn 0 with an OLDER ts: merged away (LWW loser),
-    # changed=False -> must not count as a round
+    # changed=False -> must not emit
     _write_chunk(src, 1, _policy_rows("conv_a", [0],
                                       t0 - pd.Timedelta(minutes=5)))
     _write_chunk(src, 2, _policy_rows("conv_a", [1],
@@ -453,7 +448,7 @@ def test_every_k_counts_changed_rounds_identically_across_engines(
             spark, str(src), sink, str(tmp_path / f"ek_ckpt_{label}"),
             budget=500, available_now=True, watermark="1 hour",
             session_gap_ms=day, max_files_per_trigger=1,
-            n_buckets=nb, emit_policy="every_k", emit_every=2)
+            n_buckets=nb)
         q.awaitTermination(300)
         rows = spark.read.parquet(
             *[os.path.join(sink.path, f"batch={b}")
@@ -464,7 +459,8 @@ def test_every_k_counts_changed_rounds_identically_across_engines(
             (r["conv_id"], r["n_turns"], r["preview"])
             for r in rows if not r["final"])
     assert inter["per-conv"] == inter["bucketed"]
-    assert [(c, n) for c, n, _ in inter["per-conv"]] == [("conv_a", 2)]
+    assert [(c, n) for c, n, _ in inter["per-conv"]] == [
+        ("conv_a", 1), ("conv_a", 2), ("conv_a", 3), ("conv_c", 1)]
 
 
 def test_rolling_window_hot_conv_bounded_and_batch_equal(spark, tmp_path):
