@@ -14,7 +14,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, functions as F
+
+_NON_ALNUM = re.compile("[^a-z0-9]+")
 
 
 def normalized(col: str = "text"):
@@ -91,17 +95,12 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     DISTINCT shingle set equals min over the multiset, so a Python set
     stands in for array_distinct. Oracle-verified (lsh_pairs /
     near_dup_clusters) at sf0.001/0.01/0.1."""
-    import hashlib
-    import re as _re
-
     import numpy as np
 
     params = minhash_params(n_hashes)
     A = np.asarray([a for a, _ in params], dtype=np.int64)
     Bv = np.asarray([b for _, b in params], dtype=np.int64)
-    P = MINHASH_P
     w = shingle_k
-    split_re = _re.compile("[^a-z0-9]+")
     id_t = df.schema[id_col].dataType.simpleString()
     out_schema = ", ".join([f"{id_col} {id_t}"]
                            + [f"mh{j} bigint" for j in range(n_hashes)])
@@ -112,17 +111,7 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
             ids = pdf[id_col].tolist()
             out = np.empty((len(ids), n_hashes), dtype=np.int64)
             for r, t in enumerate(pdf[text_col]):
-                toks = [x for x in split_re.split((t or "").lower())
-                        if x != ""]
-                n = len(toks)
-                sh = {" ".join(toks[i:i + w])
-                      for i in range(max(n - w + 1, 1))}
-                xs = np.fromiter(
-                    (int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-                     % P for s in sh),
-                    dtype=np.int64, count=len(sh))
-                out[r] = ((xs[:, None] * A[None, :] + Bv[None, :]) % P
-                          ).min(axis=0)
+                out[r] = _minhash_row(t, A, Bv, w)
             data = {id_col: ids}
             for j in range(n_hashes):
                 data[f"mh{j}"] = out[:, j]
@@ -130,6 +119,21 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
 
     return df.select(id_col, text_col).mapInPandas(sig_batches,
                                                    out_schema)
+
+
+def _minhash_row(text, A, Bv, w: int):
+    """One document's signature: min over its distinct word w-shingles of
+    (A * x + Bv) mod MINHASH_P, x = the shingle's md5 integer."""
+    import hashlib
+
+    import numpy as np
+    P = MINHASH_P
+    toks = [x for x in _NON_ALNUM.split((text or "").lower()) if x != ""]
+    sh = {" ".join(toks[i:i + w]) for i in range(max(len(toks) - w + 1, 1))}
+    xs = np.fromiter(
+        (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % P for s in sh),
+        dtype=np.int64, count=len(sh))
+    return ((xs[:, None] * A[None, :] + Bv[None, :]) % P).min(axis=0)
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -199,19 +203,11 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
     # greatest(len-k+1, 1)) including the short-string (whole-text
     # shingle) and empty-string cases. 5.0 s -> sub-second at sf1.0
     # (55k docs / 7.9k pairs).
-    import re as _re
-
     k = shingle_k
     id_a_t = pairs.schema["id_a"].dataType.simpleString()
     id_b_t = pairs.schema["id_b"].dataType.simpleString()
     out_schema = (f"id_a {id_a_t}, id_b {id_b_t}, "
                   f"_inter int, _union int")
-    strip = _re.compile("[^a-z0-9]+")
-
-    def shingle_set(text):
-        norm = strip.sub(" ", (text or "").lower()).strip()
-        return {norm[i:i + k]
-                for i in range(max(len(norm) - k + 1, 1))}
 
     def counts(pdfs):
         import pandas as pd
@@ -221,7 +217,7 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
             def sset(doc_id, text):
                 s = cache.get(doc_id)
                 if s is None:
-                    s = cache[doc_id] = shingle_set(text)
+                    s = cache[doc_id] = _char_shingles(text, k)
                 return s
 
             inter, union = [], []
@@ -240,6 +236,12 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
         "id_a", "id_b",
         F.round(F.col("_inter").cast("double") / F.col("_union"), 6)
          .alias("jaccard"))
+
+
+def _char_shingles(text, k: int) -> set:
+    """The distinct character k-shingles of the normalized text."""
+    norm = _NON_ALNUM.sub(" ", (text or "").lower()).strip()
+    return {norm[i:i + k] for i in range(max(len(norm) - k + 1, 1))}
 
 
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",

@@ -86,6 +86,50 @@ PACK_SCHEMA = ("bucket bigint, pack_id bigint, doc_id bigint, "
                "oversize boolean")
 
 
+def _pack_bucket(pdf: pd.DataFrame, capacity: int, id_col: str,
+                 tok_col: str) -> pd.DataFrame:
+    """Next-fit packing of one bucket's rows (see pack_sequences)."""
+    if len(pdf) > (1 << 20):
+        raise ValueError(
+            f"bucket holds {len(pdf)} rows > 2^20; pack_id ordinals "
+            f"would overflow into the next bucket (duplicate doc_ids?)")
+    pdf = (pdf.sort_values([id_col, tok_col], kind="stable")
+              .reset_index(drop=True))
+    ids = pdf[id_col].to_numpy()
+    toks = pdf[tok_col].to_numpy()
+    bucket = int(pdf["_bucket"].iloc[0]) if len(ids) else 0
+    pack_local = []
+    pos = []
+    fill = 0
+    cur = 0
+    p = 0
+    for t in toks:
+        t = int(t)
+        if fill > 0 and fill + t > capacity:
+            p += 1
+            fill = 0
+            cur = 0
+        pack_local.append(p)
+        pos.append(cur)
+        fill += t
+        cur += 1
+        if fill >= capacity:  # full (or oversize singleton): close
+            p += 1
+            fill = 0
+            cur = 0
+    out = pd.DataFrame({
+        "bucket": bucket,
+        "pack_id": [bucket * (1 << 20) + pl for pl in pack_local],
+        "doc_id": ids,
+        "tok_count": toks,
+        "pack_pos": pos,
+    })
+    totals = out.groupby("pack_id")["tok_count"].transform("sum")
+    out["pack_total"] = totals
+    out["oversize"] = out["tok_count"] > capacity
+    return out
+
+
 def pack_sequences(df: DataFrame, capacity: int = 2048,
                    bucket_width: int = 4096,
                    id_col: str = "doc_id",
@@ -116,45 +160,7 @@ def pack_sequences(df: DataFrame, capacity: int = 2048,
             f"bucket_width must be in [1, 2^20], got {bucket_width}")
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > (1 << 20):
-            raise ValueError(
-                f"bucket holds {len(pdf)} rows > 2^20; pack_id ordinals "
-                f"would overflow into the next bucket (duplicate doc_ids?)")
-        pdf = (pdf.sort_values([id_col, tok_col], kind="stable")
-                  .reset_index(drop=True))
-        ids = pdf[id_col].to_numpy()
-        toks = pdf[tok_col].to_numpy()
-        bucket = int(pdf["_bucket"].iloc[0]) if len(ids) else 0
-        pack_local = []
-        pos = []
-        fill = 0
-        cur = 0
-        p = 0
-        for t in toks:
-            t = int(t)
-            if fill > 0 and fill + t > capacity:
-                p += 1
-                fill = 0
-                cur = 0
-            pack_local.append(p)
-            pos.append(cur)
-            fill += t
-            cur += 1
-            if fill >= capacity:  # full (or oversize singleton): close
-                p += 1
-                fill = 0
-                cur = 0
-        out = pd.DataFrame({
-            "bucket": bucket,
-            "pack_id": [bucket * (1 << 20) + pl for pl in pack_local],
-            "doc_id": ids,
-            "tok_count": toks,
-            "pack_pos": pos,
-        })
-        totals = out.groupby("pack_id")["tok_count"].transform("sum")
-        out["pack_total"] = totals
-        out["oversize"] = out["tok_count"] > capacity
-        return out
+        return _pack_bucket(pdf, capacity, id_col, tok_col)
 
     return (df.select(F.col(id_col), F.col(tok_col))
               .withColumn("_bucket",

@@ -2,7 +2,7 @@
 
 Spark plan (scale-first, one shuffle total):
 
-    repartition(N, conv_id)               -- single hash shuffle with an
+    repartition(N, xxhash64(conv_id))     -- single hash shuffle with an
                                           -- explicit width (REPARTITION_BY_NUM:
                                           -- AQE neither coalesces nor splits it)
     sortWithinPartitions(conv_id,
@@ -146,8 +146,18 @@ def make_preview_fn(budget: int = 500, style: str = "default",
 
 def _kernel_step(rows, budget: int, style: str, skew: str, fmt: str,
                  num_partitions: int | None):
-    """The one exchange + sort + kernel step every plan ends in."""
-    dist = (rows.repartition(_kernel_width(rows, num_partitions), "conv_id")
+    """The one exchange + sort + kernel step every plan ends in.
+
+    The exchange hashes xxhash64(conv_id), not conv_id: Spark drops a
+    repartition whose child is already hash-partitioned on the same key
+    and width, and the tail plan's union (the totals join plus the
+    sentinel aggregate) is exactly that when the width equals
+    spark.sql.shuffle.partitions. AQE then re-plans the join as a
+    broadcast with a local shuffle read, which splits a conversation's
+    sentinel from its rows, and the kernel renders it twice."""
+    from pyspark.sql import functions as F
+    dist = (rows.repartition(_kernel_width(rows, num_partitions),
+                             F.xxhash64("conv_id"))
                 .sortWithinPartitions("conv_id", "turn_idx", "ts"))
     return dist.mapInPandas(make_preview_fn(budget, style, skew, fmt),
                             schema=PREVIEW_SCHEMA)
@@ -158,8 +168,12 @@ def _kernel_width(df, num_partitions: int | None) -> int:
     per task slot. Explicit either way, so AQE cannot coalesce the
     exchange toward ~64MB partitions (a few tasks for a CPU-bound Python
     stage whose bytes are small and work is not). One wave, not several,
-    because each Python-UDF task pays a fixed 0.25-0.5 s before its
-    first row (PLANS.md §1b)."""
+    because each Python-UDF task pays a fixed set-up cost before its
+    first row (PLANS.md §1b). Most of it was the worker's per-task
+    `importlib.invalidate_caches()` re-reading the pyspark and py4j zip
+    directories once per zipimporter, 16 times a task on CPython 3.11;
+    `headson_spark._zipcache` now skips the re-read of an unchanged
+    archive, which leaves about 0.1 s a task."""
     if num_partitions is not None:
         return num_partitions
     return df.sparkSession.sparkContext.defaultParallelism

@@ -124,33 +124,16 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     # the BLAS nomination. Bucket width stays bounded by the n_planes
     # knob exactly as documented above, so per-group work is
     # ~width^2 * dim native flops.
-    import numpy as np
-
     id_t = df.schema[id_col].dataType.simpleString()
     cand_schema = f"id_a {id_t}, id_b {id_t}"
     margin = float(threshold) - 0.5e-4 - 1e-9
 
     def bucket_candidates(pdf):
         import pandas as pd
-        n = len(pdf)
-        if n < 2:
+        if len(pdf) < 2:
             return pd.DataFrame({"id_a": [], "id_b": []})
-        ids = pdf[id_col].tolist()
-        V = np.asarray([np.asarray(v, dtype=np.float64)
-                        for v in pdf[vec_col]])
-        nv = np.sqrt(np.einsum("ij,ij->i", V, V))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            C = (V @ V.T) / np.outer(nv, nv)
-        ii, jj = np.nonzero(np.triu(C >= margin, 1))
-        out_a, out_b = [], []
-        for i, j in zip(ii.tolist(), jj.tolist()):
-            a, bb = ids[i], ids[j]
-            if a == bb:
-                continue  # the old a.id < b.id join dropped equal ids
-            if bb < a:
-                a, bb = bb, a
-            out_a.append(a)
-            out_b.append(bb)
+        out_a, out_b = _nominate_pairs(pdf[id_col].tolist(), pdf[vec_col],
+                                       margin)
         return pd.DataFrame({"id_a": out_a, "id_b": out_b})
 
     cand = (e.groupBy("band", "bucket")
@@ -171,6 +154,27 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
            .where(F.col("cosine") >= threshold)
            .select("id_a", "id_b", "cosine"))
     return out
+
+
+def _nominate_pairs(ids: list, vecs, margin: float) -> tuple[list, list]:
+    """(id_a, id_b) with id_a < id_b for every pair of one bucket's
+    vectors whose BLAS cosine is >= margin."""
+    import numpy as np
+    V = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+    nv = np.sqrt(np.einsum("ij,ij->i", V, V))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        C = (V @ V.T) / np.outer(nv, nv)
+    ii, jj = np.nonzero(np.triu(C >= margin, 1))
+    out_a, out_b = [], []
+    for i, j in zip(ii.tolist(), jj.tolist()):
+        a, bb = ids[i], ids[j]
+        if a == bb:
+            continue  # the old a.id < b.id join dropped equal ids
+        if bb < a:
+            a, bb = bb, a
+        out_a.append(a)
+        out_b.append(bb)
+    return out_a, out_b
 
 
 def _l2sq_expr(a: str, b: str) -> str:

@@ -124,6 +124,58 @@ RH_BASE = 257
 RH_MOD = 9007199254740881
 
 
+# windows hashed per block by _fp_one: bounds its int64 window matrix at
+# FP_BLOCK x window, whatever the document length
+FP_BLOCK = 65536
+
+# powers of RH_BASE mod RH_MOD, grown on demand and cached per python worker
+_pcache: dict = {}
+
+
+def _powers(n: int):
+    import numpy as np
+    p = _pcache.get("p")
+    if p is None or len(p) < n:
+        size = max(n, 4096)
+        out = np.empty(size, dtype=np.int64)
+        out[0] = 1
+        for i in range(1, size):
+            out[i] = (out[i - 1] * RH_BASE) % RH_MOD
+        p = _pcache["p"] = out
+    return p
+
+
+def _mod_sum_last(prods):
+    """Sum of mod-reduced int64 terms over the last axis without
+    overflow: partial sums of <= 512 terms (each < M ~ 9e15) stay under
+    2^62."""
+    import numpy as np
+    total = np.zeros(prods.shape[:-1], dtype=np.int64)
+    for s in range(0, prods.shape[-1], 512):
+        total = (total + prods[..., s:s + 512].sum(axis=-1)) % RH_MOD
+    return total
+
+
+def _fp_one(norm_bytes: bytes, W: int) -> tuple:
+    """(doc_fp, win_fp, norm_len) of one normalized ASCII document."""
+    import numpy as np
+    M = RH_MOD
+    c = np.frombuffer(norm_bytes, dtype=np.uint8).astype(np.int64)
+    n = len(c)
+    if n == 0:
+        return 0, 0, 0
+    pw_n = _powers(n)
+    # doc_fp: the window polynomial over the whole document
+    doc_fp = int(_mod_sum_last((c * pw_n[n - 1::-1]) % M))
+    if n <= W:
+        return doc_fp, doc_fp, n
+    wins = np.lib.stride_tricks.sliding_window_view(c, W)
+    pw_w = pw_n[W - 1::-1]
+    win_fp = min(int(_mod_sum_last((wins[s:s + FP_BLOCK] * pw_w) % M).min())
+                 for s in range(0, len(wins), FP_BLOCK))
+    return doc_fp, win_fp, n
+
+
 def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
                         window: int = 16) -> DataFrame:
@@ -154,52 +206,20 @@ def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id",
     ~ 2.3e18 < 2^63 before their mod; the mod-reduced terms (< M ~
     9e15) sum in chunks of 512 (< 4.6e18 < 2^63) with a mod between
     chunks. doc_fp uses the same polynomial form over the whole
-    document."""
+    document.
+
+    Memory: the window matrix is built FP_BLOCK windows at a time and
+    win_fp is the minimum over the blocks, so a document costs O(len)
+    plus one (FP_BLOCK x window) block (8 MB at window=16), not an
+    (len-window+1) x window matrix (0.5 GB for a 1 MB document). Each
+    window's arithmetic is unchanged, so the output is bit-identical."""
     import re as _re
 
-    import numpy as np
-
     strip = _re.compile("[^a-z0-9]+")
-    B, M, W = RH_BASE, RH_MOD, window
+    W = window
     id_t = df.schema[id_col].dataType.simpleString()
     out_schema = (f"{id_col} {id_t}, doc_fp bigint, win_fp bigint, "
                   f"norm_len int")
-
-    def _mod_sum_last(prods: "np.ndarray") -> "np.ndarray":
-        # sum of mod-reduced int64 terms (last axis) without overflow:
-        # partial sums of <=512 terms (each < M ~ 9e15) stay under 2^62
-        total = np.zeros(prods.shape[:-1], dtype=np.int64)
-        for s in range(0, prods.shape[-1], 512):
-            total = (total + prods[..., s:s + 512].sum(axis=-1)) % M
-        return total
-
-    def fp_one(norm_bytes: bytes) -> tuple:
-        c = np.frombuffer(norm_bytes, dtype=np.uint8).astype(np.int64)
-        n = len(c)
-        if n == 0:
-            return 0, 0, 0
-        # doc_fp: Horner fold (h*B + c_i) mod M — h*B+c < M*257 < 2^63
-        pw_n = _POWERS_CACHE(n)
-        doc_fp = int(_mod_sum_last((c * pw_n[n - 1::-1]) % M))
-        if n <= W:
-            return doc_fp, doc_fp, n
-        wins = np.lib.stride_tricks.sliding_window_view(c, W)
-        win_h = _mod_sum_last((wins * pw_n[W - 1::-1]) % M)
-        return doc_fp, int(win_h.min()), n
-
-    # powers of B mod M, grown on demand and cached per python worker
-    _pcache: dict = {}
-
-    def _POWERS_CACHE(n: int) -> "np.ndarray":
-        p = _pcache.get("p")
-        if p is None or len(p) < n:
-            size = max(n, 4096)
-            out = np.empty(size, dtype=np.int64)
-            out[0] = 1
-            for i in range(1, size):
-                out[i] = (out[i - 1] * B) % M
-            p = _pcache["p"] = out
-        return p
 
     def fp_batches(pdfs):
         import pandas as pd
@@ -207,7 +227,7 @@ def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id",
             ids, dfs_, wfs, lens = [], [], [], []
             for i, t in zip(pdf[id_col], pdf[text_col]):
                 norm = strip.sub(" ", (t or "").lower()).strip()
-                d, w, ln = fp_one(norm.encode("ascii"))
+                d, w, ln = _fp_one(norm.encode("ascii"), W)
                 ids.append(i)
                 dfs_.append(d)
                 wfs.append(w)

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import logging
 import os
 from urllib.parse import urlparse
+
+log = logging.getLogger("headson_spark.session")
 
 # read_widened gate: inputs at or above this size keep the plain scan
 # (they already split into enough tasks); only tiny inputs pay the ~free
@@ -34,22 +37,31 @@ def read_widened(spark, path: str, max_bytes: int = WIDEN_MAX_BYTES):
 
     A path with a URI scheme (file://, s3a://, hdfs://) or one that does
     not exist locally has no size the os module can see, so it counts as
-    large and keeps the plain scan."""
+    large and keeps the plain scan. Each call logs one INFO line on
+    `headson_spark.session` with the size, the gate and the decision."""
     df = spark.read.parquet(path)
-    if urlparse(path).scheme or not os.path.exists(path):
-        return df
-    try:
-        if os.path.isfile(path):
-            nbytes = os.path.getsize(path)
-        else:
-            nbytes = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path) for f in fs)
-    except OSError:
-        return df
-    if nbytes >= max_bytes:
+    nbytes = _local_bytes(path)
+    widen = nbytes is not None and nbytes < max_bytes
+    log.info("read_widened %s: bytes=%s max_bytes=%d -> %s", path,
+             "URI/non-local" if nbytes is None else nbytes, max_bytes,
+             "widened" if widen else "plain scan")
+    if not widen:
         return df
     return df.repartition(spark.sparkContext.defaultParallelism)
+
+
+def _local_bytes(path: str) -> int | None:
+    """Total bytes under a local file or directory; None for a URI, a path
+    that does not exist locally, or one that cannot be sized."""
+    if urlparse(path).scheme or not os.path.exists(path):
+        return None
+    try:
+        if os.path.isfile(path):
+            return os.path.getsize(path)
+        return sum(os.path.getsize(os.path.join(r, f))
+                   for r, _, fs in os.walk(path) for f in fs)
+    except OSError:
+        return None
 
 
 def get_spark(app: str = "headson_spark", master: str | None = None,

@@ -11,9 +11,12 @@ import threading
 
 class MetricsRecorder:
     """Appends one JSON line per finished micro-batch: batch id, input
-    rows, processed rows/sec, state rows, watermark — the stream's flight
-    recorder. Partition-level lineage rides on the sink's _batch_id /
-    _partition_id audit columns."""
+    rows, processed rows/sec, state rows, watermark, every `durationMs`
+    phase (`durations_ms`: addBatch, queryPlanning, walCommit, ...) and
+    every field of every state operator (`state_operators`: numRowsTotal,
+    numRowsUpdated, allUpdatesTimeMs, commitTimeMs, memoryUsedBytes,
+    customMetrics, ...) — the stream's flight recorder. Partition-level
+    lineage rides on the sink's _batch_id / _partition_id audit columns."""
 
     def __init__(self, path: str):
         self.path = path
@@ -42,6 +45,8 @@ class MetricsRecorder:
                     if p.eventTime else None,
                     "state_rows": (p.stateOperators[0].numRowsTotal
                                    if p.stateOperators else None),
+                    "durations_ms": dict(p.durationMs),
+                    "state_operators": [dict(o) for o in p.stateOperators],
                 }
                 rec._write(row)
 

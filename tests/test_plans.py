@@ -35,11 +35,12 @@ def test_pushdown_preview_filters_before_shuffle(spark, tdf):
 
 
 def _kernel_exchange_width(df) -> int:
-    """N of the one REPARTITION_BY_NUM hashpartitioning(conv_id, N)
-    exchange feeding the preview kernel."""
+    """N of the one REPARTITION_BY_NUM
+    hashpartitioning(xxhash64(conv_id), N) exchange feeding the preview
+    kernel."""
     import re
-    widths = re.findall(r"hashpartitioning\(conv_id#\d+, (\d+)\), "
-                        r"REPARTITION_BY_NUM", formatted_plan(df))
+    widths = re.findall(r"hashpartitioning\(xxhash64\(conv_id#\d+, 42\), "
+                        r"(\d+)\), REPARTITION_BY_NUM", formatted_plan(df))
     assert len(widths) == 1, formatted_plan(df)
     return int(widths[0])
 
@@ -61,6 +62,31 @@ def test_kernel_stage_is_one_wave(spark, tdf, plan):
     width = spark.sparkContext.defaultParallelism
     assert _kernel_exchange_width(build()) == width
     assert _kernel_exchange_width(build(num_partitions=3)) == 3
+
+
+def test_tail_kernel_exchange_survives_co_partitioned_union(spark):
+    """When the totals join is planned as a sort-merge join (an input
+    without size statistics) and the kernel width equals
+    spark.sql.shuffle.partitions, the tail plan's union is already
+    hash-partitioned on conv_id at that width. The kernel exchange must
+    still be planned: without it AQE's broadcast re-plan reads the join
+    side locally and a conversation's sentinel lands apart from its rows
+    (two preview rows per conversation)."""
+    from headson_spark.operators.preview import conversation_previews_pushdown
+    width = spark.sparkContext.defaultParallelism
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == width
+    rows = [(c, t, "user", f"{c} turn {t}", "", 1_000_000 + t)
+            for c in ("a", "b", "c") for t in range(4)]
+    df = (spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts_us long")
+        .selectExpr("conv_id", "turn_idx", "role", "text", "tool",
+                    "timestamp_micros(ts_us) as ts"))
+    out = conversation_previews_pushdown(df, budget=500, skew="tail")
+    assert "SortMergeJoin" in formatted_plan(out)
+    assert _kernel_exchange_width(out) == width
+    for _ in range(3):
+        assert sorted(r["conv_id"] for r in out.collect()) == ["a", "b", "c"]
 
 
 @pytest.mark.parametrize("pushdown", [False, True])
@@ -103,6 +129,32 @@ def test_read_widened_keeps_plain_scan_for_uri_paths(spark, tmp_path):
     assert "RoundRobinPartitioning" in local, local
     uri = formatted_plan(read_widened(spark, "file://" + path, max_bytes=1))
     assert "RoundRobinPartitioning" not in uri, uri
+
+
+def test_read_widened_gate_is_logged(spark, tmp_path, caplog):
+    """read_widened logs one INFO line per call: the path's byte size (or
+    that it has none the os module can see), the gate and the decision."""
+    import os
+    from headson_spark.session import read_widened
+    path = str(tmp_path / "gate_table.parquet")
+    spark.range(10).write.parquet(path)
+    nbytes = sum(os.path.getsize(os.path.join(r, f))
+                 for r, _, fs in os.walk(path) for f in fs)
+    lines = []
+    for p, gate in ((path, 1 << 30), (path, nbytes), ("file://" + path, 1)):
+        caplog.clear()
+        with caplog.at_level("INFO", logger="headson_spark.session"):
+            read_widened(spark, p, max_bytes=gate)
+        got = [r for r in caplog.records if r.name == "headson_spark.session"]
+        assert len(got) == 1 and got[0].levelname == "INFO"
+        lines.append(got[0].getMessage())
+    small, at_gate, uri = lines
+    assert f"bytes={nbytes}" in small and f"max_bytes={1 << 30}" in small
+    assert small.endswith("-> widened")
+    assert f"bytes={nbytes}" in at_gate and f"max_bytes={nbytes}" in at_gate
+    assert at_gate.endswith("-> plain scan")
+    assert "bytes=URI/non-local" in uri and "max_bytes=1" in uri
+    assert uri.endswith("-> plain scan")
 
 
 def test_broadcast_join_for_small_dim(spark):

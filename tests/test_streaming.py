@@ -74,8 +74,18 @@ def test_stream_matches_batch_exactly_once(spark, late_stream, tmp_path,
     # lineage audit columns present
     assert "_batch_id" in got_df.columns
     assert "_partition_id" in got_df.columns
-    # metrics recorded progress
-    assert any(m.get("event") == "progress" for m in metrics.read())
+    # metrics recorded progress: every durationMs phase and the state
+    # operator's update and commit times on every line
+    progress = [m for m in metrics.read() if m.get("event") == "progress"]
+    assert progress
+    for m in progress:
+        assert "addBatch" in m["durations_ms"]
+        assert m["durations_ms"]["triggerExecution"] == m["duration_ms"]
+        assert m["state_operators"]
+        for op in m["state_operators"]:
+            for k in ("numRowsTotal", "numRowsUpdated", "allUpdatesTimeMs",
+                      "commitTimeMs", "memoryUsedBytes", "customMetrics"):
+                assert k in op, k
 
 
 def test_stream_resume_from_checkpoint(spark, late_stream, tmp_path):

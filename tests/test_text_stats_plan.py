@@ -103,3 +103,37 @@ def test_rolling_fp_matches_pure_python_reference(spark):
            for r in rolling_fingerprint(df).collect()}
     for i, text in rows:
         assert got[i] == ref(text), (i, repr(text), got[i], ref(text))
+
+
+@pytest.mark.parametrize("block", [65536, 7])
+def test_rolling_fp_blocked_equals_one_shot(monkeypatch, block):
+    """win_fp hashed FP_BLOCK windows at a time equals the one-shot
+    (n-W+1) x W matrix, bit for bit, on random ASCII documents whose
+    window counts fall just under, at and just over a block edge (and
+    over two edges). A document of one repeated letter ending in a
+    different character has exactly one distinct window, the last one,
+    so it also checks that the window at each edge is hashed."""
+    import numpy as np
+    from headson_spark.operators import text_stats as ts
+    W = 16
+    rng = np.random.default_rng(7)
+    alphabet = b"abcdefghijklmnopqrstuvwxyz0123456789 "
+    monkeypatch.setattr(ts, "FP_BLOCK", block)
+    last_is_min = 0
+    for n in (block + W - 2, block + W - 1, block + W, 2 * block + W):
+        docs = [rng.choice(np.frombuffer(alphabet, dtype=np.uint8),
+                           n).tobytes()]
+        docs += [b"a" * (n - 1) + bytes([x]) for x in alphabet[1:]]
+        for doc in docs:
+            blocked = ts._fp_one(doc, W)
+            c = np.frombuffer(doc, dtype=np.uint8).astype(np.int64)
+            wins = np.lib.stride_tricks.sliding_window_view(c, W)
+            one_shot = ts._mod_sum_last(
+                (wins * ts._powers(W)[W - 1::-1]) % ts.RH_MOD)
+            assert blocked[2] == n
+            assert blocked[1] == int(one_shot.min()), (block, n, doc[-1:])
+            last_is_min += int(one_shot.argmin()) == len(one_shot) - 1
+            monkeypatch.setattr(ts, "FP_BLOCK", 10**9)
+            assert ts._fp_one(doc, W) == blocked
+            monkeypatch.setattr(ts, "FP_BLOCK", block)
+    assert last_is_min >= 4
