@@ -1,7 +1,15 @@
 """Generate tests/fixtures/golden_previews.json — the FIXTURES.md §3
 golden matrix: per-conversation previews across budgets × styles × skews,
 produced by the kernel (which is byte-verified against the reference's
-own snapshot corpus) and committed as regression pins."""
+own snapshot corpus) and committed as regression pins.
+
+Two families of pins:
+- `conversations()` × STYLES × SKEWS × BUDGETS through `summarize_value`
+  (the json-family templates), keyed `{conv_id}__{style}__{skew}__n{b}`;
+- `fallback_cases()`: one conversation per tag through `summarize` with
+  the yaml template (JSON input) and the text template (CRLF-joined turn
+  texts as text input), keyed `{conv_id}__{format}__{style}__{skew}__n{b}`.
+"""
 
 from __future__ import annotations
 
@@ -13,14 +21,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd
 
-from headson_spark.kernel import summarize_value
+from headson_spark.kernel import summarize, summarize_value
 from headson_spark.sources.transcripts import generate_rows
 
-BUDGETS = [10, 100, 250, 1000]
+BUDGETS = [0, 1, 10, 100, 250, 500, 1000, 10000]
 STYLES = ["strict", "default", "detailed"]
 SKEWS = ["balanced", "head", "tail"]
 TAGS = ["plain", "uni", "esc", "big", "long", "empty"]
 CONVS_PER_TAG = 2
+FALLBACK_FORMATS = ["yaml", "text"]
+FALLBACK_BUDGETS = [0, 100, 500, 10000]
 
 
 def conversations():
@@ -37,6 +47,32 @@ def conversations():
             yield conv_id, doc
 
 
+def fallback_input(doc: dict, fmt: str) -> tuple[str, str]:
+    """(input text, input_format) for a yaml or text template pin."""
+    if fmt == "yaml":
+        return json.dumps(doc, ensure_ascii=False), "json"
+    return "\r\n".join(t["text"] or "" for t in doc["turns"]), "text"
+
+
+def fallback_cases():
+    """(key, text, format, input_format, style, skew, budget) for the
+    yaml and text template pins: the first conversation of each tag."""
+    seen = set()
+    for conv_id, doc in conversations():
+        tag = conv_id.split("_")[0]
+        if tag in seen:
+            continue
+        seen.add(tag)
+        for fmt in FALLBACK_FORMATS:
+            text, input_format = fallback_input(doc, fmt)
+            for style in STYLES:
+                for skew in SKEWS:
+                    for budget in FALLBACK_BUDGETS:
+                        key = f"{conv_id}__{fmt}__{style}__{skew}__n{budget}"
+                        yield (key, text, fmt, input_format, style, skew,
+                               budget)
+
+
 def main():
     out = {}
     for conv_id, doc in conversations():
@@ -47,6 +83,11 @@ def main():
                     out[key] = summarize_value(
                         doc, format="json", style=style,
                         character_budget=budget, skew=skew)
+    for key, text, fmt, input_format, style, skew, budget in \
+            fallback_cases():
+        out[key] = summarize(text, format=fmt, style=style,
+                             character_budget=budget, skew=skew,
+                             input_format=input_format)
     path = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "tests", "fixtures",
         "golden_previews.json")

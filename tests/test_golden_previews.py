@@ -10,8 +10,9 @@ from pathlib import Path
 
 import pytest
 
-from scripts.gen_golden_previews import conversations, BUDGETS, STYLES, SKEWS
-from headson_spark.kernel import summarize_value
+from scripts.gen_golden_previews import (conversations, fallback_cases,
+                                         BUDGETS, STYLES, SKEWS)
+from headson_spark.kernel import summarize, summarize_value
 
 GOLDEN = json.loads(
     (Path(__file__).parent / "fixtures" / "golden_previews.json")
@@ -27,6 +28,7 @@ def all_cases():
 
 
 CASES = list(all_cases())
+FALLBACK_CASES = list(fallback_cases())
 
 
 @pytest.mark.parametrize(
@@ -39,8 +41,20 @@ def test_golden_preview(conv_id, doc, style, skew, budget):
     assert got == GOLDEN[key], key
 
 
+@pytest.mark.parametrize(
+    "key,text,fmt,input_format,style,skew,budget", FALLBACK_CASES,
+    ids=[c[0] for c in FALLBACK_CASES])
+def test_golden_fallback_preview(key, text, fmt, input_format, style, skew,
+                                 budget):
+    """The yaml and text templates (render-per-probe budget search)."""
+    got = summarize(text, format=fmt, style=style, character_budget=budget,
+                    skew=skew, input_format=input_format)
+    assert got == GOLDEN[key], key
+
+
 def test_matrix_complete():
-    assert len(GOLDEN) == len(CASES) == 432
+    assert len(CASES) == 864 and len(FALLBACK_CASES) == 432
+    assert len(GOLDEN) == len(CASES) + len(FALLBACK_CASES) == 1296
 
 
 @pytest.mark.parametrize("skew", SKEWS)
