@@ -9,6 +9,12 @@ Re-expression of the reference's render path:
 
 Budgets are measured in BYTES of the rendered UTF-8 string (Rust
 `String::len`), not characters.
+
+The budget search probes k in exactly the reference's binary_search_max
+order. For the json-family templates (strict/pseudo/js) on a non-fileset
+root, each probe is answered from a byte-length table built in pop order
+(`_LengthTable`) and the preview is rendered once, at the chosen k; the
+yaml and text templates and fileset roots render every probe.
 """
 
 from __future__ import annotations
@@ -59,22 +65,21 @@ def json_key(s: str) -> str:
 
 
 class RenderSet:
-    """Per-conversation inclusion index shared across binary-search probes.
+    """Per-conversation inclusion index: a node is in the render set for
+    any k iff eff_rank[node] < k.
 
     Equivalent to the reference's top-k + ancestor-closure marking
-    (graph.rs:41-61) but computed ONCE: a node is in the render set for
-    any k iff eff_rank[node] < k. Because children enter the heap only
-    after their parent pops (build_order's lazy pushes), every node's
-    ancestors pop strictly earlier, so the subtree-min pop rank IS the
-    node's own pop rank and the ancestor closure is automatic — the
-    explicit descending subtree-min fold this class originally carried
-    was a no-op (property-tested in test_kernel_props:
-    ancestors-pop-first invariant + old-fold equivalence). Per-string
-    kept-part counts come from a bisect over the string's ascending
-    part-rank list, collected in pop order (already ascending).
+    (graph.rs:41-61) but computed ONCE: because children enter the heap
+    only after their parent pops (build_order's lazy pushes), every
+    node's ancestors pop strictly earlier, so the subtree-min pop rank IS
+    the node's own pop rank and the ancestor closure is automatic
+    (property-tested in test_kernel_props: ancestors-pop-first
+    invariant). A string's LeafParts hold a contiguous id block and pop
+    in id order, so its ranks ascend along the block and the kept-part
+    count for k is a bisect over that slice of eff_rank.
     """
 
-    __slots__ = ("eff_rank", "part_ranks", "_po", "_synced")
+    __slots__ = ("eff_rank", "_po", "_synced")
 
     _INF = 1 << 60
 
@@ -82,7 +87,6 @@ class RenderSet:
         self._po = po
         self._synced = 0
         self.eff_rank: list[int] = []
-        self.part_ranks: dict[int, list[int]] = {}
         self.sync()
 
     def sync(self):
@@ -90,33 +94,20 @@ class RenderSet:
         by_priority between probes; rank order is append-only)."""
         po = self._po
         bp = po.by_priority
-        start = self._synced
-        n_pops = len(bp)
-        if n_pops == start and len(self.eff_rank) >= po.total_nodes:
-            return
         rank = self.eff_rank
         if len(rank) < po.total_nodes:
             rank.extend([self._INF] * (po.total_nodes - len(rank)))
-        kind = po.kind
-        parent = po.parent
-        part_ranks = self.part_ranks
-        for i in range(start, n_pops):
-            pq_id = bp[i]
-            rank[pq_id] = i
-            if kind[pq_id] == K_PART:
-                p = parent[pq_id]
-                lst = part_ranks.get(p)
-                if lst is None:
-                    part_ranks[p] = [i]
-                else:
-                    lst.append(i)  # pop order => ascending ranks
-        self._synced = n_pops
+        for i in range(self._synced, len(bp)):
+            rank[bp[i]] = i
+        self._synced = len(bp)
 
     def kept_parts_for(self, string_id: int, k: int) -> int:
-        lst = self.part_ranks.get(string_id)
-        if not lst:
+        po = self._po
+        start = po.part_start[string_id]
+        if start < 0:
             return 0
-        return bisect_left(lst, k)
+        return bisect_left(self.eff_rank, k, start,
+                           start + po.part_count[string_id]) - start
 
 
 class _Renderer:
@@ -565,12 +556,217 @@ def render_top_k(po: PriorityOrder, k: int, cfg: RenderConfig,
     return r.render_node(0, 0, False, cfg.template)
 
 
+# templates whose probes are answered from a _LengthTable (non-fileset
+# roots); yaml, text and auto keep the render-per-probe search
+_TABLE_TEMPLATES = ("json", "pseudo", "js")
+
+
+def _escaped_bytes(g: str) -> int:
+    """UTF-8 bytes of `g` inside a JSON string literal (json_string escapes
+    per character, so literal lengths add up grapheme by grapheme)."""
+    if _NEEDS_ESCAPE.search(g) is None:
+        return len(g.encode("utf-8"))
+    return len(json.dumps(g, ensure_ascii=False).encode("utf-8")) - 2
+
+
+class _LengthTable:
+    """Exact UTF-8 byte length of `render_top_k(po, k, cfg)` for every k up
+    to the pops folded so far, for the json-family templates on a
+    non-fileset root.
+
+    Built in pop order: pop i adds the (i+1)-th node to the render set, so
+    lens[i] = lens[i-1] + what that node changes. A LeafPart pop changes
+    only its string's literal (one more grapheme; the "…" goes when an
+    untruncated string completes). Any other pop adds the node's own
+    opening form (a leaf, or an empty container's "[]" / "{ … }"), its
+    indent, key and newline, and changes only its parent's frame: the kept
+    count (commas, the empty form), the omitted marker and, in arrays, the
+    gap markers between included neighbours. Every length is in bytes, so
+    the search predicate `lens[k-1] <= budget` is the render's own."""
+
+    __slots__ = ("po", "lens", "_ind", "_nl", "_sp", "_tail", "_omark",
+                 "_arr_mark", "_obj_mark", "_depth", "_kept", "_frame",
+                 "_orig", "_gaps", "_fast", "_slow", "_keylen")
+
+    def __init__(self, po: PriorityOrder, cfg: RenderConfig):
+        self.po = po
+        self.lens: list[int] = []
+        self._ind = len(cfg.indent_unit.encode("utf-8"))
+        self._nl = len(cfg.newline.encode("utf-8"))
+        self._sp = len(cfg.space.encode("utf-8"))
+        self._tail = 1 if cfg.prefer_tail_arrays else 0
+        t = cfg.template
+        # marker byte lengths as a function of the count they name; the
+        # array's gap and omitted markers share one form (_render_array)
+        if t == "pseudo":
+            self._arr_mark = self._obj_mark = lambda n, _b=len(
+                OMISSION.encode("utf-8")): _b
+        elif t == "js":
+            self._arr_mark = lambda n: len(f"/* {n} more items */")
+            self._obj_mark = lambda n: len(f"/* {n} more properties */")
+        else:
+            self._arr_mark = self._obj_mark = None
+        self._depth: dict[int, int] = {}    # container -> depth
+        self._kept: dict[int, int] = {}     # container -> included children
+        self._frame: dict[int, int] = {}    # container -> frame bytes
+        self._orig: dict[int, list[int]] = {}  # array -> included orig idx
+        self._gaps: dict[int, int] = {}     # array -> gap-line bytes
+        # string -> id of the part that completes it untruncated (or -1),
+        # for printable ASCII with no escapes: each part adds one byte
+        self._fast: dict[int, int] = {}
+        # other strings -> (that id, value, grapheme breaks, first part id)
+        self._slow: dict[int, tuple] = {}
+        self._keylen: dict[str | None, int] = {}
+
+    def length(self, k: int) -> int:
+        """Byte length of render_top_k(k); k <= len(by_priority)."""
+        if len(self.lens) < k:
+            self._fold(k)
+        return self.lens[k - 1]
+
+    def _fold(self, upto: int):
+        po = self.po
+        bp = po.by_priority
+        kind = po.kind
+        parent = po.parent
+        fast = self._fast
+        slow = self._slow
+        lens = self.lens
+        total = lens[-1] if lens else 0
+        for i in range(len(lens), upto):
+            x = bp[i]
+            kx = kind[x]
+            if kx == K_PART:
+                s = parent[x]
+                last = fast.get(s)
+                if last is not None:
+                    total += -2 if x == last else 1
+                else:
+                    last, value, brks, start = slow[s]
+                    j = x - start
+                    g = (value[j] if brks is None
+                         else value[brks[j]:brks[j + 1]])
+                    n = _escaped_bytes(g)
+                    total += n - 3 if x == last else n
+            else:
+                p = parent[x]
+                own = self._open(x, kx, p)
+                total = own if p < 0 else total + own + self._attach(p, x, kx)
+            lens.append(total)
+
+    def _open(self, x: int, kx: int, p: int) -> int:
+        """Bytes of node x as it renders on entering the set (no children
+        or parts yet), without its indent; registers its state."""
+        po = self.po
+        if kx == K_ATOMIC:
+            return len((po.value[x] or "").encode("utf-8"))
+        if kx == K_STRING:
+            count = po.string_len[x]
+            trunc = po.string_truncated[x]
+            n = po.part_count[x]
+            if n:
+                start = po.part_start[x]
+                value = po.value[x]
+                brks = po.breaks[x]
+                last = start + count - 1 if n == count and not trunc else -1
+                if brks is None and _NEEDS_ESCAPE.search(value) is None:
+                    self._fast[x] = last
+                else:
+                    self._slow[x] = (last, value, brks, start)
+            # '""' for an empty string, else '"…"' until parts arrive
+            return 2 if count == 0 and not trunc else 2 + 3
+        self._depth[x] = 0 if p < 0 else self._depth[p] + 1
+        self._kept[x] = 0
+        if kx == K_ARRAY:
+            self._orig[x] = []
+            self._gaps[x] = 0
+        f = self._frame[x] = self._frame_bytes(x, kx, 0)
+        return f
+
+    def _frame_bytes(self, c: int, kc: int, m: int) -> int:
+        """Bytes of container c with m included children, excluding its
+        leading indent and its children's own lines."""
+        total = self.po.total_len[c]
+        omitted = total - m if total is not None and total > m else 0
+        mark = self._arr_mark if kc == K_ARRAY else self._obj_mark
+        marked = mark is not None and omitted > 0
+        if m == 0:
+            if not marked:
+                return 2  # "[]" / "{}"
+            # "[ " + marker + " ]" / "{" + space + marker + space + "}"
+            return (4 if kc == K_ARRAY else 2 + 2 * self._sp) + mark(omitted)
+        d = self._depth[c]
+        f = 2 + self._nl + (m - 1) + self._ind * d
+        if kc == K_ARRAY:
+            f += self._gaps[c]
+        if marked:
+            f += self._ind * (d + 1) + mark(omitted) + self._nl
+            if kc == K_ARRAY:
+                f += self._tail  # head-side marker line takes a comma
+        return f
+
+    def _attach(self, p: int, x: int, kx: int) -> int:
+        """Bytes that adding child x changes outside x's own form: its
+        indent, key and newline, and the parent's frame."""
+        po = self.po
+        d = self._depth[p] + 1
+        kp = po.kind[p]
+        add = self._nl + self._ind * d
+        if kp == K_OBJECT:
+            key = po.key[x]
+            kl = self._keylen.get(key)
+            if kl is None:
+                kl = self._keylen[key] = len(
+                    json_key(key or "").encode("utf-8"))
+            add += kl + 1 + self._sp  # key + ":" + space
+        else:
+            if kx == K_ATOMIC:
+                tok = po.value[x] or ""
+                if "\n" in tok or "\r" in tok:
+                    add -= self._ind * d  # multi-line items skip the indent
+            if self._arr_mark is not None:
+                self._add_gap(p, d, po.orig_index[x])
+        m = self._kept[p] = self._kept[p] + 1
+        old = self._frame[p]
+        new = self._frame[p] = self._frame_bytes(p, kp, m)
+        return add + new - old
+
+    def _add_gap(self, p: int, d: int, oi: int | None):
+        """Insert child index oi into array p's included indexes and update
+        the bytes of the gap-marker lines between included neighbours."""
+        oi = oi if oi is not None else 0
+        lst = self._orig[p]
+        pos = bisect_left(lst, oi)
+        prev = lst[pos - 1] if pos else None
+        nxt = lst[pos] if pos < len(lst) else None
+        delta = 0
+        if prev is not None:
+            delta += self._gap_line(prev, oi, d)
+            if nxt is not None:
+                delta -= self._gap_line(prev, nxt, d)
+        if nxt is not None:
+            delta += self._gap_line(oi, nxt, d)
+        lst.insert(pos, oi)
+        self._gaps[p] += delta
+
+    def _gap_line(self, a: int, b: int, d: int) -> int:
+        if b <= a + 1:
+            return 0
+        return self._ind * d + self._arr_mark(b - a - 1) + self._nl
+
+
 def find_largest_render_under_budget(po: PriorityOrder, cfg: RenderConfig,
                                      budget: int) -> str:
     """Binary-search max k whose rendered BYTE length fits (lib.rs:117-179).
 
-    The flag array and escaped-string cache are shared across probes
-    (the reference's epoch-stamped inclusion flags, lib.rs:132-136).
+    For the json-family templates (strict/pseudo/js) on a non-fileset
+    root, each probe is answered from a _LengthTable, the exact byte
+    length of render_top_k(k) built incrementally in pop order, and
+    render_top_k runs once, at the chosen k. The yaml, text and auto
+    templates and fileset roots render every probe, sharing the flag
+    array and escaped-string cache across probes (the reference's
+    epoch-stamped inclusion flags, lib.rs:132-136). Either way the
+    output is the render at the same k.
 
     NOTE: the probe sequence must be EXACTLY the reference's
     binary_search_max (utils/search.rs:2-18). The fits-predicate is not
@@ -596,21 +792,29 @@ def find_largest_render_under_budget(po: PriorityOrder, cfg: RenderConfig,
         total = po.total_nodes
     if total == 0:
         return ""
-    rset = RenderSet(po)
+    bp = po.by_priority
+    table = (_LengthTable(po, cfg) if cfg.template in _TABLE_TEMPLATES
+             and not po.is_fileset else None)
+    rset = None if table is not None else RenderSet(po)
     escaped: dict[int, str] = {}
     lo, hi = 1, min(total, max(budget, 1))
-    best_render = None
+    best, best_render = 1, None
     while lo <= hi:
         mid = (lo + hi) // 2
-        if lazy and len(po.by_priority) < mid:
+        if lazy and len(bp) < mid:
             pump(mid)
+        if table is not None:
+            s = None
+            size = table.length(min(mid, len(bp)))
+        else:
             rset.sync()
-        s = render_top_k(po, mid, cfg, rset, escaped)
-        if len(s.encode("utf-8")) <= budget:
-            best_render = s
+            s = render_top_k(po, mid, cfg, rset, escaped)
+            size = len(s.encode("utf-8"))
+        if size <= budget:
+            best, best_render = mid, s
             lo = mid + 1
         else:
             hi = mid - 1
     if best_render is not None:
         return best_render
-    return render_top_k(po, 1, cfg, rset, escaped)
+    return render_top_k(po, best, cfg, rset, escaped)
