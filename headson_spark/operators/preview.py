@@ -180,15 +180,18 @@ def _kernel_width(df, num_partitions: int | None) -> int:
 
 
 def _with_sentinels(kept, totals):
-    """Kept rows (NULL totals) unioned with one sentinel row per
-    conversation. Rows at a negative turn_idx break the dense-position
+    """Kept rows unioned with one sentinel row per conversation. Kept rows
+    carry NULL totals unless they already carry them (the tail join); the
+    kernel reads the totals off each conversation's first row only, the
+    sentinel. Rows at a negative turn_idx break the dense-position
     contract and would share the sentinel's turn_idx = -1 sort slot, so
     they are dropped here."""
     from pyspark.sql import functions as F
-    kept = kept.filter(F.col("turn_idx") >= 0).select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts",
+    carried = ("_total", "_chars") if "_total" in kept.columns else (
         F.lit(None).cast("int").alias("_total"),
         F.lit(None).cast("bigint").alias("_chars"))
+    kept = kept.filter(F.col("turn_idx") >= 0).select(
+        "conv_id", "turn_idx", "role", "text", "tool", "ts", *carried)
     return kept.unionByName(_total_sentinels(totals))
 
 
@@ -221,11 +224,15 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
     keep = kept_position_filter(skew, cap)
     totals = _conv_totals(df)
     if keep is None:
-        kept = (df.join(totals.select("conv_id",
-                                      F.col("_total").alias("_tt")),
-                        "conv_id")
-                  .filter(F.col("turn_idx") >= F.col("_tt") - cap)
-                  .drop("_tt"))
+        # The join and the sentinels read one totals plan, so Spark
+        # aggregates the input once and reuses that exchange: the
+        # null-safe key infers no isnotnull(conv_id) filter into it, and
+        # the kept rows keep both totals, so column pruning leaves it
+        # whole.
+        tot = totals.withColumnRenamed("conv_id", "_tc")
+        kept = (df.join(tot, df["conv_id"].eqNullSafe(tot["_tc"]))
+                  .filter(F.col("turn_idx") >= F.col("_total") - cap)
+                  .drop("_tc"))
     else:
         kept = df.filter(keep)
     # Totals ride as sentinel rows through the one exchange; the

@@ -89,6 +89,36 @@ def test_tail_kernel_exchange_survives_co_partitioned_union(spark):
         assert sorted(r["conv_id"] for r in out.collect()) == ["a", "b", "c"]
 
 
+def _final_plan_nodes(df) -> dict[int, str]:
+    """Node id -> detail block, for the nodes of an executed query's
+    final adaptive plan."""
+    import re
+    plan = formatted_plan(df)
+    tree = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    ids = {int(i) for i in re.findall(r"\((\d+)\)", tree)}
+    blocks = re.split(r"^(?=\(\d+\) )", plan, flags=re.MULTILINE)
+    return {int(b[1:b.index(")")]): b for b in blocks
+            if b.startswith("(") and int(b[1:b.index(")")]) in ids}
+
+
+def test_tail_pushdown_aggregates_totals_once(spark, tdf):
+    """The tail plan's totals join and its sentinel rows read one totals
+    aggregate: one partial max(turn_idx) over one scan of the input, its
+    exchange reused by the second reader."""
+    from headson_spark.operators.preview import conversation_previews_pushdown
+    out = conversation_previews_pushdown(tdf, budget=100, skew="tail")
+    out.collect()
+    nodes = _final_plan_nodes(out)
+    detail = formatted_plan(out)
+    aggs = [b for b in nodes.values() if "partial_max(turn_idx" in b]
+    assert len(aggs) == 1, detail
+    scans = [b for b in nodes.values() if b.split("\n")[0].endswith(
+        "Scan parquet ")]
+    assert len(scans) == 2, detail
+    assert any(b.split("\n")[0].split(" ", 1)[1].startswith("ReusedExchange")
+               for b in nodes.values()), detail
+
+
 @pytest.mark.parametrize("pushdown", [False, True])
 def test_previews_do_not_depend_on_kernel_width(spark, tdf, pushdown):
     """Each conversation is contiguous in one partition at any width, so
