@@ -14,9 +14,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import logging
 import re
 
 from pyspark.sql import DataFrame, functions as F
+
+log = logging.getLogger("headson_spark.dedup")
 
 _NON_ALNUM = re.compile("[^a-z0-9]+")
 
@@ -407,23 +410,31 @@ def hashmin_components(pairs: DataFrame, left: str = "id_a",
 
     The gate probe and both directions of the edge union read `pairs`,
     so an uncached `pairs` is persisted for the call: its lineage (LSH
-    banding, BLAS nomination) runs once, not once per reader."""
+    banding, BLAS nomination) runs once, not once per reader.
+
+    Logs one INFO line on `headson_spark.dedup`: the edges the gate probe
+    saw (at most driver_gate_edges + 1), the gate, and the path taken."""
     own_cache = not pairs.is_cached
     if own_cache:
         pairs = pairs.persist()
+    head = None
     if driver_gate_edges and driver_gate_edges > 0:
         head = (pairs.select(left, right)
                 .limit(driver_gate_edges + 1).collect())
-        if len(head) <= driver_gate_edges:
-            if own_cache:
-                pairs.unpersist()
-            labels = _unionfind_min_labels(head)
-            from pyspark.sql.types import StructField, StructType
-            t = pairs.schema[left].dataType
-            schema = StructType([StructField("node", t),
-                                 StructField("lbl", t)])
-            return pairs.sparkSession.createDataFrame(
-                sorted(labels.items()), schema)
+    small = head is not None and len(head) <= driver_gate_edges
+    log.info("hashmin_components: edges=%s driver_gate_edges=%d -> %s",
+             "not probed" if head is None else len(head),
+             driver_gate_edges or 0, "union-find" if small else "distributed")
+    if small:
+        if own_cache:
+            pairs.unpersist()
+        labels = _unionfind_min_labels(head)
+        from pyspark.sql.types import StructField, StructType
+        t = pairs.schema[left].dataType
+        schema = StructType([StructField("node", t),
+                             StructField("lbl", t)])
+        return pairs.sparkSession.createDataFrame(
+            sorted(labels.items()), schema)
     # undirected edges, both directions
     edges = (pairs.select(F.col(left).alias("src"),
                           F.col(right).alias("dst"))

@@ -114,6 +114,26 @@ def test_hashmin_driver_gate_matches_distributed(spark):
     assert fast  # non-empty
 
 
+def test_hashmin_gate_is_logged(spark, caplog):
+    """hashmin_components logs one INFO line per call: the edges the gate
+    probe saw (capped at gate + 1), the gate and the path taken."""
+    from headson_spark.operators.dedup import hashmin_components
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(5)],
+                                  "id_a int, id_b int")
+    lines = []
+    for gate in (10, 3, 0):
+        caplog.clear()
+        with caplog.at_level("INFO", logger="headson_spark.dedup"):
+            hashmin_components(pairs, driver_gate_edges=gate).collect()
+        got = [r for r in caplog.records if r.name == "headson_spark.dedup"]
+        assert len(got) == 1 and got[0].levelname == "INFO"
+        lines.append(got[0].getMessage())
+    below, above, off = lines
+    assert "edges=5 driver_gate_edges=10 -> union-find" in below
+    assert "edges=4 driver_gate_edges=3 -> distributed" in above
+    assert "edges=not probed driver_gate_edges=0 -> distributed" in off
+
+
 def test_hashmin_runs_pairs_lineage_once_above_gate(spark):
     """Above the driver gate, the gate probe and both directions of the
     edge union all read `pairs`; its lineage (here a Python UDF that
