@@ -559,6 +559,7 @@ def render_top_k(po: PriorityOrder, k: int, cfg: RenderConfig,
 # templates whose probes are answered from a _LengthTable (non-fileset
 # roots); yaml, text and auto keep the render-per-probe search
 _TABLE_TEMPLATES = ("json", "pseudo", "js")
+_OMISSION_BYTES = len(OMISSION.encode("utf-8"))
 
 
 def _escaped_bytes(g: str) -> int:
@@ -584,9 +585,9 @@ class _LengthTable:
     gap markers between included neighbours. Every length is in bytes, so
     the search predicate `lens[k-1] <= budget` is the render's own."""
 
-    __slots__ = ("po", "lens", "_ind", "_nl", "_sp", "_tail", "_omark",
-                 "_arr_mark", "_obj_mark", "_depth", "_kept", "_frame",
-                 "_orig", "_gaps", "_fast", "_slow", "_keylen")
+    __slots__ = ("po", "lens", "_ind", "_nl", "_sp", "_tail", "_arr_mark",
+                 "_obj_mark", "_depth", "_kept", "_frame", "_orig", "_gaps",
+                 "_fast", "_slow", "_keylen")
 
     def __init__(self, po: PriorityOrder, cfg: RenderConfig):
         self.po = po
@@ -599,8 +600,7 @@ class _LengthTable:
         # marker byte lengths as a function of the count they name; the
         # array's gap and omitted markers share one form (_render_array)
         if t == "pseudo":
-            self._arr_mark = self._obj_mark = lambda n, _b=len(
-                OMISSION.encode("utf-8")): _b
+            self._arr_mark = self._obj_mark = lambda n: _OMISSION_BYTES
         elif t == "js":
             self._arr_mark = lambda n: len(f"/* {n} more items */")
             self._obj_mark = lambda n: len(f"/* {n} more properties */")
@@ -640,14 +640,14 @@ class _LengthTable:
                 s = parent[x]
                 last = fast.get(s)
                 if last is not None:
-                    total += -2 if x == last else 1
+                    total += 1 - _OMISSION_BYTES if x == last else 1
                 else:
                     last, value, brks, start = slow[s]
                     j = x - start
                     g = (value[j] if brks is None
                          else value[brks[j]:brks[j + 1]])
                     n = _escaped_bytes(g)
-                    total += n - 3 if x == last else n
+                    total += n - _OMISSION_BYTES if x == last else n
             else:
                 p = parent[x]
                 own = self._open(x, kx, p)
@@ -674,7 +674,7 @@ class _LengthTable:
                 else:
                     self._slow[x] = (last, value, brks, start)
             # '""' for an empty string, else '"…"' until parts arrive
-            return 2 if count == 0 and not trunc else 2 + 3
+            return 2 if count == 0 and not trunc else 2 + _OMISSION_BYTES
         self._depth[x] = 0 if p < 0 else self._depth[p] + 1
         self._kept[x] = 0
         if kx == K_ARRAY:
