@@ -286,6 +286,26 @@ def test_pushdown_survives_negative_turn_idx(spark, skew):
     assert sorted(r["conv_id"] for r in got) == ["neg", "ok"]
 
 
+def test_tail_pushdown_keeps_null_conv_id(spark):
+    """Rows with a NULL conv_id are one conversation in the full plan. The
+    tail plan's totals join is null-safe, so it keeps their tail turns
+    too, and both plans give the same row."""
+    rows = [(None, t, "user", f"null turn {t}", "", 1_000_000 + t)
+            for t in range(6)]
+    rows += [("a", t, "user", f"a turn {t}", "", 1_000_000 + t)
+             for t in range(3)]
+    df = (spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts_us long")
+        .selectExpr("conv_id", "turn_idx", "role", "text", "tool",
+                    "timestamp_micros(ts_us) as ts"))
+    full = _rows(conversation_previews_full(df, budget=8, skew="tail"))
+    push = _rows(conversation_previews_pushdown(df, budget=8, skew="tail"))
+    assert set(full) == {None, "a"}
+    assert push == full
+    assert "null turn 5" in push[None][0]
+
+
 def test_pushdown_arg_validated(spark, transcripts_df=None):
     import pytest
     from headson_spark.operators.preview import conversation_previews
