@@ -131,9 +131,12 @@ def make_preview_fn(budget: int = 500, style: str = "default",
             if len(pdf) == 0:
                 continue
             last = pdf["conv_id"].iloc[-1]
-            # hold back the (possibly incomplete) trailing conversation
-            vals = pdf["conv_id"].to_numpy()
-            cut = int(np.searchsorted(vals, last, side="left"))
+            # hold back the (possibly incomplete) trailing conversation:
+            # the rows are sorted by conv_id, so it starts after the last
+            # row of another conversation (an elementwise compare, since
+            # a NULL conv_id does not order against strings in numpy)
+            other = np.flatnonzero(pdf["conv_id"].to_numpy() != last)
+            cut = int(other[-1]) + 1 if len(other) else 0
             carry = pdf.iloc[cut:]
             ready = pdf.iloc[:cut]
             if len(ready):

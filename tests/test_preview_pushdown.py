@@ -287,11 +287,12 @@ def test_pushdown_survives_negative_turn_idx(spark, skew):
 
 
 def test_tail_pushdown_keeps_null_conv_id(spark):
-    """Rows with a NULL conv_id are one conversation in the full plan. The
-    tail plan's totals join is null-safe, so it keeps their tail turns
-    too, and both plans give the same row."""
+    """Rows with a NULL conv_id are one conversation: the kernel's batch
+    carry tells it from the others, and the tail plan's totals join is
+    null-safe, so it keeps that conversation's tail turns too and both
+    plans give the same row."""
     rows = [(None, t, "user", f"null turn {t}", "", 1_000_000 + t)
-            for t in range(6)]
+            for t in range(300)]  # more than the cap of 250
     rows += [("a", t, "user", f"a turn {t}", "", 1_000_000 + t)
              for t in range(3)]
     df = (spark.createDataFrame(
@@ -299,11 +300,12 @@ def test_tail_pushdown_keeps_null_conv_id(spark):
               "tool string, ts_us long")
         .selectExpr("conv_id", "turn_idx", "role", "text", "tool",
                     "timestamp_micros(ts_us) as ts"))
-    full = _rows(conversation_previews_full(df, budget=8, skew="tail"))
-    push = _rows(conversation_previews_pushdown(df, budget=8, skew="tail"))
+    full = _rows(conversation_previews_full(df, budget=500, skew="tail"))
+    push = _rows(conversation_previews_pushdown(df, budget=500,
+                                                skew="tail"))
     assert set(full) == {None, "a"}
     assert push == full
-    assert "null turn 5" in push[None][0]
+    assert "null turn 299" in push[None][0] and push[None][1] == 300
 
 
 def test_pushdown_arg_validated(spark, transcripts_df=None):
