@@ -11,8 +11,9 @@ from pathlib import Path
 import pytest
 
 from scripts.gen_golden_previews import (conversations, fallback_cases,
+                                         fileset_cases, shape_cases,
                                          BUDGETS, STYLES, SKEWS)
-from headson_spark.kernel import summarize, summarize_value
+from headson_spark.kernel import summarize, summarize_many, summarize_value
 
 GOLDEN = json.loads(
     (Path(__file__).parent / "fixtures" / "golden_previews.json")
@@ -29,6 +30,8 @@ def all_cases():
 
 CASES = list(all_cases())
 FALLBACK_CASES = list(fallback_cases())
+FILESET_CASES = list(fileset_cases())
+SHAPE_CASES = list(shape_cases())
 
 
 @pytest.mark.parametrize(
@@ -52,9 +55,35 @@ def test_golden_fallback_preview(key, text, fmt, input_format, style, skew,
     assert got == GOLDEN[key], key
 
 
+@pytest.mark.parametrize(
+    "key,inputs,style,skew,budget", FILESET_CASES,
+    ids=[c[0] for c in FILESET_CASES])
+def test_golden_fileset_preview(key, inputs, style, skew, budget):
+    """Fileset roots (the auto template, ingest by file extension), whose
+    budget search renders every probe."""
+    got = summarize_many(inputs, format="auto", style=style,
+                         character_budget=budget, skew=skew,
+                         input_format="auto")
+    assert got == GOLDEN[key], key
+
+
+@pytest.mark.parametrize(
+    "key,text,fmt,input_format,style,skew,budget", SHAPE_CASES,
+    ids=[c[0] for c in SHAPE_CASES])
+def test_golden_shape_preview(key, text, fmt, input_format, style, skew,
+                              budget):
+    """Empty and one-item arrays, an object holding an empty array, and
+    yaml flow sequences."""
+    got = summarize(text, format=fmt, style=style, character_budget=budget,
+                    skew=skew, input_format=input_format)
+    assert got == GOLDEN[key], key
+
+
 def test_matrix_complete():
     assert len(CASES) == 864 and len(FALLBACK_CASES) == 432
-    assert len(GOLDEN) == len(CASES) + len(FALLBACK_CASES) == 1296
+    assert len(FILESET_CASES) == 324 and len(SHAPE_CASES) == 288
+    assert len(GOLDEN) == (len(CASES) + len(FALLBACK_CASES)
+                           + len(FILESET_CASES) + len(SHAPE_CASES)) == 1908
 
 
 @pytest.mark.parametrize("skew", SKEWS)
