@@ -607,10 +607,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # REAL WAV (RIFF PCM16) decode path: synthesized fixed-geometry
     # payloads -> hand-written chunk parser -> exact amplitude stats.
-    # Replaces the round-3 stub-featureizer registry slot (the stub
-    # fallback stays pytest-covered in test_multimodal.py) — same
-    # payload-from-text construction, but the decode step is now real
-    # for audio, like the PPM path is for images.
+    # Replaces the round-3 stub-featurizer registry slot (the stub is
+    # removed) — same payload-from-text construction, but the decode step
+    # is real for audio, like the PPM path is for images.
     def multimodal_audio_stats(spark, sf_dir):
         from headson_spark.operators.multimodal import (audio_stats,
                                                         synth_wav_media)

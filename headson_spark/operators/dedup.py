@@ -40,24 +40,6 @@ def exact_duplicate_groups(df: DataFrame, id_col: str = "doc_id",
               .filter(F.col("n_docs") > 1))
 
 
-def _shingles_expr(text_col: str, k: int) -> str:
-    """Distinct character k-shingles of the normalized text (SQL expr)."""
-    norm = (f"trim(regexp_replace(lower({text_col}), '[^a-z0-9]+', ' '))")
-    return (f"array_distinct(transform("
-            f"sequence(1, greatest(length({norm}) - {k - 1}, 1)), "
-            f"i -> substring({norm}, i, {k})))")
-
-
-def _word_shingles_expr(text_col: str, w: int) -> str:
-    """Distinct w-word shingles — the standard document MinHash unit
-    (~10x fewer shingles than char shingles at the same recall)."""
-    toks = (f"filter(split(lower({text_col}), '[^a-z0-9]+'), "
-            f"x -> x != '')")
-    return (f"array_distinct(transform("
-            f"sequence(1, greatest(size({toks}) - {w - 1}, 1)), "
-            f"i -> array_join(slice({toks}, i, {w}), ' ')))")
-
-
 # 2^31 - 1: keeps (x % P) * a + b < 2^62, safe under ANSI bigint overflow
 MINHASH_P = 2147483647
 
@@ -67,14 +49,6 @@ def minhash_params(n_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     return [(mix64((seed << 20) ^ (2 * j)) % (MINHASH_P - 1) + 1,
              mix64((seed << 20) ^ (2 * j + 1)) % MINHASH_P)
             for j in range(n_hashes)]
-
-
-def _shingle_int_expr(shingles: str) -> str:
-    """One md5 per shingle -> 60-bit integer; the (a*x+b) mod P family
-    derives every hash from this single digest."""
-    return (f"transform({shingles}, s -> "
-            f"cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) "
-            f"% {MINHASH_P})")
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
@@ -198,14 +172,15 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
     # per-pair Catalyst array_intersect/array_union over ~len(norm)
     # element arrays, and the final double — round(inter / union, 6) —
     # is still produced by the ORIGINAL Spark expression below, so the
-    # emitted values are bit-identical by construction. The Python
-    # shingling mirrors _shingles_expr exactly: after
-    # lower + [^a-z0-9]+ -> ' ' + trim, the normalized text is pure
-    # ASCII [a-z0-9 ], where Python slicing == Java substring; the
-    # index set range(0, max(len-k+1, 1)) == sequence(1,
-    # greatest(len-k+1, 1)) including the short-string (whole-text
-    # shingle) and empty-string cases. 5.0 s -> sub-second at sf1.0
-    # (55k docs / 7.9k pairs).
+    # emitted values are bit-identical by construction. A document's
+    # shingles are the distinct k-character substrings of its
+    # normalized text (lower-cased, each run of characters outside
+    # [a-z0-9] replaced by one space, then trimmed) starting at every
+    # index in range(0, max(len - k + 1, 1)), so a text shorter than k,
+    # the empty text included, is its own single shingle. The
+    # normalized text is pure ASCII [a-z0-9 ], so SQL's 1-based
+    # substring over sequence(1, greatest(len - k + 1, 1)) gives the
+    # same set. 5.0 s -> sub-second at sf1.0 (55k docs / 7.9k pairs).
     k = shingle_k
     id_a_t = pairs.schema["id_a"].dataType.simpleString()
     id_b_t = pairs.schema["id_b"].dataType.simpleString()

@@ -1,21 +1,18 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed by Arrow-batched mapInPandas kernels.
+"""Multimodal column plumbing: image and audio payloads as opaque binary
+columns with typed metadata, processed by Arrow-batched mapInPandas
+kernels.
 
-All four multimodal pipeline verbs are REAL hand-written paths in this
-environment: DECODE (PPM P6 images via `ppm_decode`, RIFF/WAVE PCM16
-audio via `wav_decode`), FEATURE-EXTRACT (`extract_features`,
-`image_channel_stats`, `audio_stats` — the latter two DuckDB-oracled
-bit-for-bit), RESIZE (`image_resize`, nearest-neighbor numpy), and
-FRAME-SAMPLE (`frame_sample` over a concatenated-P6 video container).
-Only exotic codecs fall back to a deterministic STUB (no PIL/ffmpeg in
-this environment) — swap `_decode_frame`'s fallback for a real decoder
-in production; the Arrow batching, schema, partitioning and UDF
-signature are the real pipeline either way.
+The codecs are hand-written in numpy, with no media library dependency:
+binary PPM (P6) images via `ppm_encode` / `ppm_decode`, and RIFF/WAVE
+PCM16 audio via `wav_encode` / `wav_decode`. `synth_ppm_media` and
+`synth_wav_media` derive fixed-geometry payloads from a text column, and
+`image_channel_stats` and `audio_stats` decode them into per-channel
+means and amplitude statistics that a DuckDB oracle reproduces bit for
+bit.
 """
 
 from __future__ import annotations
 
-import hashlib
 import math
 import re
 import struct
@@ -23,26 +20,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 MEDIA_SCHEMA = ("media_id bigint, kind string, payload binary, "
                 "width int, height int, sample_rate int")
-
-FEATURE_SCHEMA = ("media_id bigint, kind string, n_bytes int, "
-                  "sha256 string, feat array<float>")
-
-
-def synth_media(df: DataFrame, id_col: str, text_col: str,
-                kind: str = "image") -> DataFrame:
-    """Derive a deterministic binary 'media' column from a text column —
-    stands in for real image/audio payloads in tests."""
-    return df.select(
-        F.col(id_col).alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
-        F.lit(64).alias("width"), F.lit(64).alias("height"),
-        F.lit(16000).alias("sample_rate"))
-
 
 PPM_W, PPM_H = 16, 16  # synth fixture geometry (768 RGB bytes)
 _PRINTABLE = re.compile(r"[^ -~]")
@@ -58,7 +39,7 @@ def ppm_decode(payload: bytes) -> tuple[int, int, np.ndarray]:
     """Hand-written binary PPM (P6) parser: magic, '#' comments,
     whitespace-separated width/height/maxval, then w*h*3 sample bytes.
     Returns (width, height, pixels[h, w, 3] uint8). Raises ValueError on
-    malformed input — callers fall back to the stub featureizer."""
+    malformed input."""
     if not payload.startswith(b"P6"):
         raise ValueError("not a P6 PPM")
     pos, fields = 2, []
@@ -125,7 +106,7 @@ def wav_decode(payload: bytes) -> tuple[int, int, np.ndarray]:
     chunks like LIST/INFO are skipped), requires a PCM 16-bit 'fmt ' and
     a 'data' chunk. Returns (sample_rate, channels, samples[int16],
     shaped (n, channels) when channels > 1). Raises ValueError on
-    malformed input — callers fall back to the stub featureizer."""
+    malformed input."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, fmt, data = 12, None, None
@@ -170,39 +151,6 @@ def text_to_wav(text: str) -> bytes:
     samples = ((np.frombuffer(raw, dtype=np.uint8).astype(np.int32) - 80)
                * 256).astype(np.int16)
     return wav_encode(samples, WAV_RATE)
-
-
-def _decode_frame(payload: bytes, kind: str, dim: int) -> np.ndarray:
-    """Decoder: REAL paths for PPM images (hand-written P6 parser ->
-    per-channel mean/std features) and RIFF/WAVE PCM16 audio (hand-
-    written chunk parser -> amplitude statistics); deterministic STUB for
-    everything else (no media libraries in this environment — production
-    swaps the fallback for PIL/torchaudio/ffmpeg)."""
-    if kind == "image" and payload[:2] == b"P6":
-        _, _, px = ppm_decode(payload)
-        chans = px.reshape(-1, 3).astype(np.float64)
-        feat = np.concatenate([chans.mean(axis=0) / 255.0,
-                               chans.std(axis=0) / 255.0])
-        out = np.zeros(dim, dtype=np.float32)
-        out[: min(dim, 6)] = feat[: min(dim, 6)].astype(np.float32)
-        return out
-    if kind == "audio" and payload[:4] == b"RIFF":
-        _, _, samples = wav_decode(payload)
-        flat = samples.reshape(-1).astype(np.float64)
-        if flat.size == 0:
-            flat = np.zeros(1)
-        zcr = float(np.count_nonzero(np.signbit(flat[1:])
-                                     != np.signbit(flat[:-1])))
-        feat = np.array([flat.mean() / 32768.0, flat.std() / 32768.0,
-                         np.abs(flat).max() / 32768.0,
-                         zcr / max(flat.size - 1, 1)])
-        out = np.zeros(dim, dtype=np.float32)
-        out[: min(dim, 4)] = feat[: min(dim, 4)].astype(np.float32)
-        return out
-    h = hashlib.sha256(payload or b"").digest()
-    raw = (h * ((dim * 4) // len(h) + 1))[: dim * 4]
-    arr = np.frombuffer(raw, dtype=np.uint32).astype(np.float32)[:dim]
-    return arr / np.float32(2**32)
 
 
 def synth_ppm_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -307,131 +255,3 @@ def image_channel_stats(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return df.mapInPandas(fn, schema=CHANNEL_STATS_SCHEMA)
-
-
-def extract_features(df: DataFrame, dim: int = 8,
-                     batch_size_hint: int = 1024) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _decode_frame(p if isinstance(p, (bytes, bytearray))
-                              else bytes(p), k, dim).tolist()
-                for p, k in zip(pdf["payload"], pdf["kind"])]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "n_bytes": [len(p) for p in pdf["payload"]],
-                "sha256": [hashlib.sha256(bytes(p)).hexdigest()
-                         for p in pdf["payload"]],
-                "feat": feats,
-            })
-
-    return df.mapInPandas(fn, schema=FEATURE_SCHEMA)
-
-
-# --- video (multi-frame) + resize: the remaining multimodal verbs, REAL ---
-#
-# Container: concatenated binary PPM (P6) frames, back-to-back — the
-# in-sandbox stand-in for a video bitstream (MJPEG-like: every frame
-# independently decodable). Together with ppm_decode / wav_decode /
-# extract_features this makes all four multimodal pipeline verbs
-# (decode, feature-extract, resize, frame-sample) REAL hand-written
-# paths; only exotic codecs fall back to the stub.
-
-
-def ppm_video_encode(frames: list[np.ndarray], width: int,
-                     height: int) -> bytes:
-    """Concatenate frames ((h*w*3,) uint8 each) as back-to-back P6."""
-    return b"".join(ppm_encode(f, width, height) for f in frames)
-
-
-def ppm_video_decode(payload: bytes):
-    """Split a concatenated-P6 payload into frames.
-
-    Yields (width, height, pixels) per frame; raises ValueError on a
-    malformed frame (same validation as ppm_decode). Container
-    contract: CANONICAL headers as written by ppm_encode
-    ("P6\\n<w> <h>\\n255\\n" — exactly three newlines before the
-    raster); a non-canonical frame desyncs the walk and fails the next
-    frame's magic check."""
-    pos, n = 0, len(payload)
-    while pos < n:
-        nl1 = payload.index(b"\n", pos)
-        nl2 = payload.index(b"\n", nl1 + 1)
-        nl3 = payload.index(b"\n", nl2 + 1)
-        head_end = nl3 + 1
-        w, h, px = ppm_decode(payload[pos:])
-        frame_len = (head_end - pos) + w * h * 3
-        yield w, h, px
-        pos += frame_len
-
-
-FRAME_SCHEMA = ("media_id bigint, frame_idx int, width int, height int, "
-                "frame binary")
-
-
-def frame_sample(df: DataFrame, every_k: int = 2) -> DataFrame:
-    """Frame sampling: decode the concatenated-P6 'video' payload and
-    keep every k-th frame, re-encoded as a standalone PPM — one output
-    row per kept frame (media_id, frame_idx, width, height, frame).
-    Arrow-batched mapInPandas; at scale the explode happens map-side
-    with no shuffle."""
-    if every_k < 1:
-        raise ValueError(f"every_k must be >= 1, got {every_k}")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "width": [],
-                    "height": [], "frame": []}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                p = p if isinstance(p, (bytes, bytearray)) else bytes(p)
-                for i, (w, h, px) in enumerate(ppm_video_decode(p)):
-                    if i % every_k:
-                        continue
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(i)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["frame"].append(
-                        ppm_encode(px.reshape(-1), w, h))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(fn, schema=FRAME_SCHEMA)
-
-
-def resize_nearest(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize of an (h, w, 3) uint8 image — pure numpy
-    index arithmetic (pixel centers, the standard NN mapping
-    src_i = floor((i + 0.5) * src / dst))."""
-    h, w = px.shape[0], px.shape[1]
-    rows = ((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64)
-    cols = ((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64)
-    return px[np.minimum(rows, h - 1)][:, np.minimum(cols, w - 1)]
-
-
-def image_resize(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Real resize over PPM payloads: decode -> nearest-neighbor ->
-    re-encode. Output schema matches MEDIA_SCHEMA so resize composes
-    with image_channel_stats / extract_features."""
-    if out_w < 1 or out_h < 1:
-        raise ValueError(f"bad target size {out_w}x{out_h}")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for p in pdf["payload"]:
-                p = p if isinstance(p, (bytes, bytearray)) else bytes(p)
-                _, _, px = ppm_decode(p)
-                small = resize_nearest(px, out_w, out_h)
-                payloads.append(ppm_encode(small.reshape(-1), out_w,
-                                           out_h))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": "image",
-                "payload": payloads,
-                "width": out_w, "height": out_h,
-                "sample_rate": 0})
-
-    return df.mapInPandas(fn, schema=MEDIA_SCHEMA)

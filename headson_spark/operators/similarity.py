@@ -2,13 +2,13 @@
 
 - brute_force_cosine_topk: exact baseline — one pass, JVM-side
   zip_with/aggregate dot products, no shuffle until the final top-k.
-- lsh_bucket_topk: random-hyperplane LSH scale path — deterministic
-  hyperplanes from mix64, candidates restricted to the query's bucket
-  (and optional multi-probe neighbors), exact re-rank inside the bucket.
-
-At 100 TB the brute force path is a full scan per query; the LSH path
-prunes to one bucket via a partition-pruned lookup when the bucket id is
-written as a partition column.
+- lsh_buckets / embedding_near_dup_pairs: random-hyperplane LSH —
+  deterministic hyperplanes from mix64; the bucket id per vector, and
+  banded blocking with exact cosine verification for near-duplicate
+  pairs.
+- ivf_centroids / ivf_assign / ivf_topk: an IVF index over strided-sample
+  centroids — a shuffle-free BLAS assignment, then probes of the nearest
+  inverted lists with an exact re-rank inside them.
 """
 
 from __future__ import annotations
@@ -200,8 +200,7 @@ def ivf_centroids(df: DataFrame, stride: int | None = 32,
     """Deterministic sampled centroids for the IVF coarse quantizer:
     every stride-th vector by id (the standard sampled-centroid IVF
     baseline — engine-independent and reproducible anywhere, unlike a
-    seeded k-means; Lloyd refinement is an optional deployment step that
-    only moves the centroids, not the algorithm).
+    seeded k-means).
 
     SCALING CONTRACT: k_centroids = n / stride, so a FIXED stride grows
     k linearly with the corpus and eventually breaks the broadcast in
@@ -220,62 +219,6 @@ def ivf_centroids(df: DataFrame, stride: int | None = 32,
     return (df.filter((F.col(id_col) % stride) == 0)
               .select(F.col(id_col).alias("centroid_id"),
                       F.col(vec_col).alias("_cvec")))
-
-
-def lloyd_refine(df: DataFrame, stride: int | None = 32,
-                 n_iters: int = 1,
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 k_target: int = 4096) -> DataFrame:
-    """Optional Lloyd (k-means) refinement of the strided-sample IVF
-    centroids: n_iters rounds of assign-to-nearest + recompute-as-mean.
-    Improves inverted-list balance (hence recall at a given n_probe) at
-    the same downstream plan shape — the refined table drops into
-    ivf_assign via its `centroids` parameter (ivf_topk has no such
-    parameter: it ranks probes against the deterministic sampled
-    centroids, so pass a refined ASSIGNMENT only together with probe
-    selection you computed against the same refined centroids, or the
-    probe ranking and the inverted lists disagree and recall silently
-    degrades).
-
-    Plan per iteration: ivf_assign against the current centroids (a
-    zero-exchange map) -> join back to the vectors -> posexplode the
-    vector (one narrow (centroid, dim_pos, value) stream,
-    partial-aggregated map-side to k x dim rows per task) -> groupBy(centroid_id, pos) mean -> regroup
-    to arrays. Shuffle volume is O(tasks * k * dim), independent of n.
-    Empty clusters keep their previous centroid (standard Lloyd
-    posture), so k never shrinks.
-
-    Determinism caveat: cluster means are distributed float sums, so the
-    exact bit pattern depends on aggregation order; vectors whose two
-    nearest refined centroids are within float-rounding distance could
-    flip lists between runs. Fine for ANN (recall changes by at most the
-    boundary set); the oracled queries keep the UNREFINED deterministic
-    centroids — refinement is an opt-in quality step.
-    """
-    if stride is None:
-        stride = derive_ivf_stride(df, k_target, id_col)
-    cents = ivf_centroids(df, stride, id_col, vec_col)
-    for _ in range(max(n_iters, 0)):
-        assigned = ivf_assign(df, stride, id_col, vec_col,
-                              centroids=cents)
-        means = (df.join(assigned, id_col)
-                 .select("centroid_id",
-                         F.posexplode(vec_col).alias("_pos", "_v"))
-                 .groupBy("centroid_id", "_pos")
-                 .agg(F.avg(F.col("_v").cast("double")).alias("_m"))
-                 .groupBy("centroid_id")
-                 .agg(F.array_sort(F.collect_list(
-                     F.struct("_pos", "_m"))).alias("_pm"))
-                 .select("centroid_id",
-                         F.expr("transform(_pm, x -> x._m)")
-                         .alias("_newvec")))
-        # empty clusters: keep the previous centroid
-        cents = (cents.join(means, "centroid_id", "left")
-                 .select("centroid_id",
-                         F.coalesce("_newvec", F.col("_cvec").cast(
-                             "array<double>")).alias("_cvec")))
-    return cents
 
 
 # ivf_assign refuses to collect more centroid rows than this: 2^20 rows
@@ -319,8 +262,7 @@ def _exact_l2sq(v, c) -> float:
 def ivf_assign(df: DataFrame, stride: int | None = 32,
                id_col: str = "vec_id",
                vec_col: str = "embedding",
-               k_target: int = 4096,
-               centroids: DataFrame | None = None) -> DataFrame:
+               k_target: int = 4096) -> DataFrame:
     """IVF indexing step: assign every vector to its nearest centroid
     (arg-min L2, ties broken by centroid id — deterministic).
 
@@ -358,17 +300,12 @@ def ivf_assign(df: DataFrame, stride: int | None = 32,
     materialized partitioned BY centroid_id for partition-pruned probe
     reads. k stays bounded by the stride contract (stride=None derives
     k <= k_target); a fixed stride on a growing corpus is capped loudly
-    at MAX_COLLECTED_CENTROIDS instead of OOMing the driver.
-
-    Pass `centroids` (a precomputed/refined ivf_centroids-shaped table,
-    e.g. from lloyd_refine) to assign against those instead of the
-    sampled ones."""
+    at MAX_COLLECTED_CENTROIDS instead of OOMing the driver."""
     import numpy as np
 
     if stride is None:
         stride = derive_ivf_stride(df, k_target, id_col)
-    cents_df = (centroids if centroids is not None
-                else ivf_centroids(df, stride, id_col, vec_col))
+    cents_df = ivf_centroids(df, stride, id_col, vec_col)
     # limit() bounds the driver-side collect by construction; it is the
     # identity whenever k is within the documented cap
     rows = (cents_df.select("centroid_id", "_cvec")
@@ -448,18 +385,4 @@ def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
                 .join(F.broadcast(probes), "centroid_id")
                 .select(id_col))
     cand = df.join(cand_ids, id_col, "semi")
-    return brute_force_cosine_topk(cand, query_vec, k, id_col, vec_col)
-
-
-def lsh_bucket_topk(df: DataFrame, query_vec: list[float], k: int = 10,
-                    n_planes: int = 8, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """ANN: restrict to the query's hyperplane bucket, exact re-rank."""
-    planes = hyperplanes(len(query_vec), n_planes)
-    qsig = 0
-    for p, plane in enumerate(planes):
-        if sum(float(a) * b for a, b in zip(query_vec, plane)) > 0:
-            qsig |= 1 << p
-    sig = F.expr(lsh_signature_expr(vec_col, planes))
-    cand = df.where(sig == F.lit(qsig))
     return brute_force_cosine_topk(cand, query_vec, k, id_col, vec_col)

@@ -20,9 +20,5 @@ def count_exchanges(df) -> int:
                           flags=re.MULTILINE))
 
 
-def has_pushed_filters(df) -> bool:
-    return "PushedFilters: [" in formatted_plan(df)
-
-
 def has_broadcast_join(df) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)

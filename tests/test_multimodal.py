@@ -1,6 +1,5 @@
-"""PPM (P6) + RIFF/WAVE PCM16 codecs + multimodal feature path: the
-decode step is REAL for PPM images and WAV audio (hand-written parsers),
-stubbed only for formats with no library in this environment."""
+"""PPM (P6) and RIFF/WAVE PCM16 codecs and the fixed-geometry payloads
+the multimodal operators decode (hand-written parsers)."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ import pytest
 
 from headson_spark.operators.multimodal import (PPM_H, PPM_W,
                                                 WAV_RATE, WAV_SAMPLES,
-                                                _decode_frame,
                                                 ppm_decode, ppm_encode,
                                                 printable_ascii,
                                                 text_to_ppm, text_to_wav,
@@ -60,25 +58,6 @@ def test_printable_ascii_fallback():
     assert printable_ascii("") == "x"
     assert printable_ascii("é中") == "x"  # no printable ASCII
     assert printable_ascii("aéb") == "ab"
-
-
-def test_decode_frame_real_path_channel_means():
-    # solid color image: means must be exact channel values / 255
-    px = np.tile(np.array([10, 100, 200], dtype=np.uint8), PPM_W * PPM_H)
-    payload = ppm_encode(px, PPM_W, PPM_H)
-    feat = _decode_frame(payload, "image", 8)
-    assert feat[0] == pytest.approx(10 / 255.0)
-    assert feat[1] == pytest.approx(100 / 255.0)
-    assert feat[2] == pytest.approx(200 / 255.0)
-    assert feat[3] == feat[4] == feat[5] == 0.0  # zero std
-    assert feat[6] == feat[7] == 0.0
-
-
-def test_decode_frame_stub_fallback_deterministic():
-    a = _decode_frame(b"\x00\x01\x02", "audio", 8)
-    b = _decode_frame(b"\x00\x01\x02", "audio", 8)
-    assert np.array_equal(a, b)
-    assert a.shape == (8,)
 
 
 # --- WAV (RIFF PCM16) codec ---
@@ -157,23 +136,6 @@ def test_text_to_wav_deterministic_samples():
     assert len(payload) == 44 + 2 * WAV_SAMPLES
 
 
-def test_decode_frame_real_audio_path():
-    # constant positive signal: mean == peak, zero std, zero crossings
-    samples = np.full(WAV_SAMPLES, 4096, dtype=np.int16)
-    payload = wav_encode(samples, WAV_RATE)
-    feat = _decode_frame(payload, "audio", 8)
-    assert feat[0] == pytest.approx(4096 / 32768.0)
-    assert feat[1] == 0.0                      # std
-    assert feat[2] == pytest.approx(4096 / 32768.0)  # peak
-    assert feat[3] == 0.0                      # zero-crossing rate
-    # alternating sign: zcr == 1
-    alt = np.tile(np.array([1000, -1000], dtype=np.int16),
-                  WAV_SAMPLES // 2)
-    feat2 = _decode_frame(wav_encode(alt, WAV_RATE), "audio", 8)
-    assert feat2[3] == pytest.approx(1.0)
-    assert feat2[0] == pytest.approx(0.0)
-
-
 def test_audio_stats_matches_numpy_reference():
     """audio_stats math cross-checked in pure Python on the exact
     construction the oracle reproduces."""
@@ -209,84 +171,3 @@ def test_wav_roundtrip_property():
         r, c, out = wav_decode(payload)
         assert (r, c) == (rate, channels)
         assert np.array_equal(out.reshape(-1), vals)
-
-
-# --- video container (concatenated P6) + resize ---
-
-
-def _mk_frames(k, w=4, h=3):
-    return [(np.arange(w * h * 3, dtype=np.int64) * (i + 1) % 256)
-            .astype(np.uint8) for i in range(k)]
-
-
-def test_ppm_video_roundtrip():
-    from headson_spark.operators.multimodal import (ppm_video_decode,
-                                                    ppm_video_encode)
-    frames = _mk_frames(5)
-    payload = ppm_video_encode(frames, 4, 3)
-    out = list(ppm_video_decode(payload))
-    assert len(out) == 5
-    for f, (w, h, px) in zip(frames, out):
-        assert (w, h) == (4, 3)
-        assert np.array_equal(px.reshape(-1), f)
-
-
-def test_ppm_video_decode_rejects_desync():
-    from headson_spark.operators.multimodal import (ppm_video_decode,
-                                                    ppm_video_encode)
-    frames = _mk_frames(2)
-    payload = ppm_video_encode(frames, 4, 3) + b"garbage"
-    with pytest.raises(ValueError):
-        list(ppm_video_decode(payload))
-
-
-def test_resize_nearest_exact():
-    from headson_spark.operators.multimodal import resize_nearest
-    # 2x2 -> 4x4: each source pixel becomes a 2x2 block
-    px = np.array([[[0, 0, 0], [10, 10, 10]],
-                   [[20, 20, 20], [30, 30, 30]]], dtype=np.uint8)
-    up = resize_nearest(px, 4, 4)
-    assert up.shape == (4, 4, 3)
-    assert (up[:2, :2] == 0).all() and (up[:2, 2:] == 10).all()
-    assert (up[2:, :2] == 20).all() and (up[2:, 2:] == 30).all()
-    # identity resize
-    assert np.array_equal(resize_nearest(px, 2, 2), px)
-    # downsample picks pixel centers
-    down = resize_nearest(up, 2, 2)
-    assert np.array_equal(down, px)
-
-
-def test_frame_sample_and_resize_spark(spark):
-    import pandas as pd
-    from headson_spark.operators.multimodal import (frame_sample,
-                                                    image_resize,
-                                                    image_channel_stats,
-                                                    ppm_video_encode)
-    frames = _mk_frames(6, w=8, h=8)
-    pdf = pd.DataFrame({
-        "media_id": [1, 2],
-        "kind": ["video"] * 2,
-        "payload": [ppm_video_encode(frames, 8, 8),
-                    ppm_video_encode(frames[:3], 8, 8)],
-        "width": 8, "height": 8, "sample_rate": 0})
-    df = spark.createDataFrame(pdf)
-    out = frame_sample(df, every_k=2).toPandas()
-    # media 1: frames 0,2,4 kept; media 2: frames 0,2
-    assert sorted(zip(out.media_id, out.frame_idx)) == [
-        (1, 0), (1, 2), (1, 4), (2, 0), (2, 2)]
-    # each emitted frame is a standalone decodable PPM
-    for f in out.frame:
-        w, h, px = ppm_decode(bytes(f))
-        assert (w, h) == (8, 8)
-    # resize composes with the stats operator (schema-compatible):
-    # build single-frame media from the first sampled frame per id
-    first = out[out.frame_idx == 0]
-    single = spark.createDataFrame(pd.DataFrame({
-        "media_id": first.media_id,
-        "kind": "image",
-        "payload": [bytes(f) for f in first.frame],
-        "width": 8, "height": 8, "sample_rate": 0}))
-    small = image_resize(single, 4, 4)
-    stats = image_channel_stats(small).toPandas()
-    assert set(stats.media_id) == {1, 2}
-    assert (stats.n_bytes == len(b"P6\n4 4\n255\n") + 4 * 4 * 3).all()

@@ -1,8 +1,6 @@
-"""chunk_text + pack_sequences: training-example assembly operators.
-
-chunk_text is cross-checked against a DuckDB oracle (same
-generate_series/list-slice construction the driver-style harness would
-use); pack_sequences against a pure-Python reference plus invariants.
+"""chunk_text: the training-example chunker, cross-checked against a
+DuckDB oracle (the same generate_series/list-slice construction the
+driver-style harness uses).
 """
 
 from __future__ import annotations
@@ -11,7 +9,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from headson_spark.operators.packing import chunk_text, pack_sequences
+from headson_spark.operators.packing import chunk_text
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -108,99 +106,3 @@ def test_chunk_text_validates_params(spark):
         chunk_text(sdf, size=0)
     with pytest.raises(ValueError):
         chunk_text(sdf, size=4, stride=0)
-
-
-# --- pack_sequences -------------------------------------------------------
-
-
-def _ref_pack(ids, toks, capacity):
-    """Pure-Python reference: greedy next-fit in id order."""
-    order = sorted(range(len(ids)), key=lambda i: ids[i])
-    packs = []
-    cur = []
-    fill = 0
-    for i in order:
-        t = toks[i]
-        if cur and fill + t > capacity:
-            packs.append(cur)
-            cur, fill = [], 0
-        cur.append(ids[i])
-        fill += t
-        if fill >= capacity:
-            packs.append(cur)
-            cur, fill = [], 0
-    if cur:
-        packs.append(cur)
-    return packs
-
-
-def test_pack_sequences_matches_reference(spark):
-    pdf = pd.DataFrame({
-        "doc_id": list(range(20)),
-        "tok_count": [100, 900, 500, 600, 2048, 3000, 10, 10, 10, 2000,
-                      1024, 1024, 1, 2047, 2048, 7, 7, 7, 7, 2000],
-    })
-    df = spark.createDataFrame(pdf)
-    out = (pack_sequences(df, capacity=2048, bucket_width=1 << 20)
-           .toPandas().sort_values("doc_id").reset_index(drop=True))
-    # one bucket -> order matches the global reference
-    ref = _ref_pack(list(pdf.doc_id), list(pdf.tok_count), 2048)
-    got_packs = [sorted(g["doc_id"]) for _, g in
-                 sorted(out.groupby("pack_id"), key=lambda kv: kv[0])]
-    assert got_packs == [sorted(p) for p in ref]
-
-
-def test_pack_sequences_invariants(spark):
-    import random
-    rng = random.Random(11)
-    pdf = pd.DataFrame({
-        "doc_id": list(range(500)),
-        "tok_count": [rng.randrange(1, 900) for _ in range(500)],
-    })
-    cap = 2048
-    df = spark.createDataFrame(pdf).repartition(7)  # partition-invariance
-    out = (pack_sequences(df, capacity=cap, bucket_width=128)
-           .toPandas().sort_values("doc_id").reset_index(drop=True))
-    # every doc exactly once, counts preserved
-    assert list(out["doc_id"]) == list(pdf["doc_id"])
-    assert list(out["tok_count"]) == list(pdf["tok_count"])
-    # no pack exceeds capacity (no doc here is oversize)
-    assert not out["oversize"].any()
-    per_pack = out.groupby("pack_id")["tok_count"].sum()
-    assert (per_pack <= cap).all()
-    # pack_total column agrees with the groupby
-    assert (out.groupby("pack_id")["pack_total"].first() == per_pack).all()
-    # buckets respected: all docs of a pack share one bucket
-    assert (out.groupby("pack_id")["bucket"].nunique() == 1).all()
-    assert (out["bucket"] == out["doc_id"] // 128).all()
-    # fill efficiency: average pack fill should be high for random sizes
-    closed = per_pack[per_pack.index < per_pack.index.max()]
-    if len(closed):
-        assert closed.mean() > cap * 0.7
-
-
-def test_pack_sequences_oversize_singletons(spark):
-    pdf = pd.DataFrame({"doc_id": [0, 1, 2],
-                        "tok_count": [5000, 10, 4096]})
-    df = spark.createDataFrame(pdf)
-    out = (pack_sequences(df, capacity=2048, bucket_width=1 << 20)
-           .toPandas().sort_values("doc_id").reset_index(drop=True))
-    assert list(out["oversize"]) == [True, False, True]
-    # oversize docs are alone in their packs
-    for pid, grp in out.groupby("pack_id"):
-        if grp["oversize"].any():
-            assert len(grp) == 1
-
-
-def test_pack_sequences_deterministic_across_partitions(spark):
-    pdf = pd.DataFrame({
-        "doc_id": list(range(300)),
-        "tok_count": [((i * 37) % 700) + 1 for i in range(300)],
-    })
-    outs = []
-    for nparts in (1, 13):
-        df = spark.createDataFrame(pdf).repartition(nparts)
-        out = (pack_sequences(df, capacity=1024, bucket_width=64)
-               .toPandas().sort_values("doc_id").reset_index(drop=True))
-        outs.append(out)
-    pd.testing.assert_frame_equal(outs[0], outs[1])

@@ -9,8 +9,7 @@ from pyspark.sql import functions as F
 from headson_spark.operators.preview import conversation_previews
 from headson_spark.plans.inspect import (count_exchanges,
                                          formatted_plan,
-                                         has_broadcast_join,
-                                         has_pushed_filters)
+                                         has_broadcast_join)
 
 
 @pytest.fixture(scope="module")

@@ -158,61 +158,3 @@ def test_ivf_derived_stride_bounds_k(spark):
     t_derived = ivf_topk(df, q, k=5, n_probe=2, stride=None, k_target=10)
     t_explicit = ivf_topk(df, q, k=5, n_probe=2, stride=30)
     assert t_derived.collect() == t_explicit.collect()
-
-
-def test_lloyd_refine_matches_numpy_reference(spark):
-    """One Lloyd iteration == numpy reference (assign argmin L2, tie ->
-    smallest centroid_id; recompute as cluster mean; empty clusters keep
-    the previous centroid), and the refinement monotonically improves
-    (never worsens) the within-cluster SSE — the Lloyd invariant."""
-    import numpy as np
-    from headson_spark.operators.similarity import (ivf_assign,
-                                                    ivf_centroids,
-                                                    lloyd_refine)
-
-    rows = [(i, _mk_vec(i * 3)) for i in range(240)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    stride = 40  # 6 centroids: ids 0, 40, ..., 200
-
-    refined = lloyd_refine(df, stride=stride, n_iters=1)
-    got = {r["centroid_id"]: np.array(r["_cvec"])
-           for r in refined.collect()}
-
-    X = np.array([v for _, v in rows])
-    cents0 = {i * stride: X[i * stride] for i in range(6)}
-    cids = sorted(cents0)
-    C = np.stack([cents0[c] for c in cids])
-    d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-    assign = d2.argmin(1)  # argmin returns first (= smallest id) on ties
-    exp = {}
-    for j, cid in enumerate(cids):
-        members = X[assign == j]
-        exp[cid] = members.mean(0) if len(members) else cents0[cid]
-
-    assert set(got) == set(exp)
-    for cid in exp:
-        assert np.allclose(got[cid], exp[cid], atol=1e-9), cid
-
-    # Lloyd invariant: SSE(assign to refined, refined) <= SSE(initial)
-    C1 = np.stack([got[c] for c in cids])
-    sse0 = d2.min(1).sum()
-    sse1 = ((X[:, None, :] - C1[None, :, :]) ** 2).sum(-1).min(1).sum()
-    assert sse1 <= sse0 + 1e-9, (sse0, sse1)
-
-    # refined centroids drop into ivf_assign unchanged (plan contract)
-    a = ivf_assign(df, stride=stride, centroids=refined)
-    assert a.count() == len(rows)
-    assert a.select("centroid_id").distinct().count() <= 6
-
-    # empty-cluster retention: plant a far-away centroid nobody picks
-    far = [(1000, [1e6] * DIM)]
-    df2 = spark.createDataFrame(rows + far,
-                                "vec_id long, embedding array<double>")
-    # stride 1000 won't hit 1000 exactly; use explicit centroid table
-    cents = ivf_centroids(df2, stride=40)
-    # vec 1000 % 40 == 0 -> the far vector IS a centroid; every normal
-    # vector avoids it, so its cluster = {itself}; after refinement it
-    # must still exist with a finite centroid
-    ref2 = lloyd_refine(df2, stride=40, n_iters=1)
-    ids2 = {r["centroid_id"] for r in ref2.collect()}
-    assert ids2 == {r["centroid_id"] for r in cents.collect()}

@@ -170,9 +170,9 @@ def test_every_python_kernel_imports_the_package_when_unpickled(
     """The patch is installed by importing headson_spark in a worker, so
     it reaches a kernel's tasks only if unpickling the kernel's closure
     imports the package. Checked for every closure the registry's Python
-    kernels hand to Spark, the stateful streaming function, the window
-    render UDF and the packing kernel, each unpickled in a process where
-    the package is not yet imported."""
+    kernels hand to Spark, the stateful streaming function and the window
+    render UDF, each unpickled in a process where the package is not yet
+    imported."""
     import pickle
 
     import __spark_entry__ as em
@@ -180,7 +180,6 @@ def test_every_python_kernel_imports_the_package_when_unpickled(
     from test_entry_correctness import SF_DIR
     from pyspark.sql.group import GroupedData
 
-    from headson_spark.operators.packing import pack_sequences
     from headson_spark.streaming.engine import make_bucketed_preview_fn
     from headson_spark.streaming.windows import make_presampled_render_udf
 
@@ -201,8 +200,6 @@ def test_every_python_kernel_imports_the_package_when_unpickled(
     queries = em.queries()
     for q in _KERNEL_QUERIES:
         queries[q](spark, SF_DIR)
-    pack_sequences(spark.createDataFrame([(1, 5)], "doc_id long, "
-                                                   "tok_count int"))
     blobs["stateful"] = cloudpickle.dumps(make_bucketed_preview_fn())
     blobs["window_udf"] = cloudpickle.dumps(make_presampled_render_udf().func)
     assert len(blobs) >= 10, sorted(blobs)
