@@ -16,6 +16,7 @@ headson_spark.operators.sampling).
 from __future__ import annotations
 
 import json
+import re
 from bisect import bisect_left
 from dataclasses import dataclass, field
 
@@ -175,6 +176,9 @@ def format_number_token(v) -> str:
     return r
 
 
+_SURROGATE = re.compile("[\ud800-\udfff]")
+
+
 class _ObjectPairs(list):
     """json.loads object_pairs_hook marker preserving duplicate keys."""
 
@@ -185,9 +189,32 @@ def _reject_constant(name: str):
     raise ValueError(f"invalid JSON constant: {name}")
 
 
+def _reject_lone_surrogates(value) -> None:
+    # json.loads joins an escaped surrogate pair into one code point and
+    # leaves an unpaired one as is; such a string has no UTF-8 form, so
+    # reject it at parse time as the reference's serde_json does
+    stack = [value]
+    while stack:
+        v = stack.pop()
+        if isinstance(v, _ObjectPairs):
+            for k, cv in v:
+                stack.append(k)
+                stack.append(cv)
+        elif isinstance(v, list):
+            stack.extend(v)
+        elif isinstance(v, str) and not v.isascii():
+            m = _SURROGATE.search(v)
+            if m:
+                raise ValueError(
+                    f"invalid JSON string: unpaired surrogate "
+                    f"U+{ord(m.group()):04X}")
+
+
 def parse_json(text: str | bytes):
-    return json.loads(text, object_pairs_hook=_ObjectPairs,
-                      parse_constant=_reject_constant)
+    value = json.loads(text, object_pairs_hook=_ObjectPairs,
+                       parse_constant=_reject_constant)
+    _reject_lone_surrogates(value)
+    return value
 
 
 def build_value_arena(value, array_cap: int, sampler: str = "balanced",

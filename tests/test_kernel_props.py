@@ -171,6 +171,25 @@ def test_string_escaping_roundtrip():
     out = run(doc, "json", 10000)
     assert json.loads(out) == {"k": tricky}
 
+@pytest.mark.parametrize("doc", ['["\\ud800"]', '["a\\udc00b"]',
+                                 '{"\\ud83d": 1}', '{"k": [["x", "\\ude00"]]}',
+                                 '["\\ude00\\ud83d"]'])
+def test_unpaired_surrogate_is_a_parse_error(doc):
+    # serde_json rejects an unpaired UTF-16 surrogate escape at parse
+    # time; the string has no UTF-8 form, so no template can render it
+    from headson_spark.kernel import summarize_many
+    for fmt in ("json", "yaml", "text"):
+        with pytest.raises(ValueError, match=r"unpaired surrogate U\+D"):
+            summarize(doc, format=fmt)
+    with pytest.raises(ValueError, match=r"unpaired surrogate U\+D"):
+        summarize_many([("a.json", doc)], format="auto")
+
+
+@pytest.mark.parametrize("fmt,want", [("json", '[\n  "😀"\n]'),
+                                      ("yaml", "- 😀\n"), ("text", "😀\n")])
+def test_escaped_surrogate_pair_renders(fmt, want):
+    assert summarize('["\\ud83d\\ude00"]', format=fmt) == want
+
 
 # --- text mode (text_ingest/mod.rs tests) ---------------------------------------
 
