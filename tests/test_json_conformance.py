@@ -8,28 +8,33 @@ import glob
 
 import pytest
 
+from conftest import REFERENCE, reference_cases, requires_reference
 from headson_spark.kernel import summarize
 
-DIR = "/root/reference/tests/fixtures/json/JSONTestSuite/test_parsing"
+DIR = REFERENCE / "tests/fixtures/json/JSONTestSuite/test_parsing"
 N_FILES = sorted(glob.glob(f"{DIR}/n_*.json"))
 Y_FILES = sorted(glob.glob(f"{DIR}/y_*.json"))
 
 
-@pytest.mark.parametrize("path", N_FILES,
-                         ids=[p.rsplit("/", 1)[-1] for p in N_FILES])
+def _cases(paths):
+    return reference_cases(
+        [pytest.param(p, id=p.rsplit("/", 1)[-1]) for p in paths], "path")
+
+
+@pytest.mark.parametrize("path", _cases(N_FILES))
 def test_malformed_json_rejected(path):
     data = open(path, "rb").read()
     with pytest.raises(Exception):
         summarize(data, character_budget=100)
 
 
-@pytest.mark.parametrize("path", Y_FILES,
-                         ids=[p.rsplit("/", 1)[-1] for p in Y_FILES])
+@pytest.mark.parametrize("path", _cases(Y_FILES))
 def test_valid_json_accepted(path):
     data = open(path, "rb").read()
     out = summarize(data, character_budget=10000)
     assert isinstance(out, str)
 
 
+@requires_reference
 def test_corpus_present():
     assert len(N_FILES) >= 180 and len(Y_FILES) >= 90

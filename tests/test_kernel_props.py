@@ -13,15 +13,15 @@
 from __future__ import annotations
 
 import json
-from pathlib import Path
 
 import pytest
 
+from conftest import REFERENCE, reference_cases, requires_reference
 from headson_spark.kernel import summarize
 from headson_spark.kernel.graphemes import graphemes, take_n_graphemes
 
-EXPLICIT = Path("/root/reference/tests/fixtures/explicit")
-PARAMETRIC = Path("/root/reference/tests/fixtures/parametric")
+EXPLICIT = REFERENCE / "tests" / "fixtures" / "explicit"
+PARAMETRIC = REFERENCE / "tests" / "fixtures" / "parametric"
 
 TEMPLATES = {
     "json": {"format": "json", "style": "strict"},
@@ -41,6 +41,7 @@ def run(text, template, budget, skew="balanced"):
 @pytest.mark.parametrize("fixture", ["object_small.json",
                                      "array_numbers_50.json"])
 @pytest.mark.parametrize("template", list(TEMPLATES))
+@requires_reference
 def test_monotonic_and_within_budget(fixture, template):
     text = (EXPLICIT / fixture).read_text()
     budgets = [0, 1, 5, 10, 20, 30, 50, 60, 100, 120, 1000]
@@ -91,6 +92,7 @@ def test_object_key_order_stable_under_truncation(template, budget):
 
 # --- array caps: kept + omitted == total --------------------------------------
 
+@requires_reference
 def test_array_kept_plus_omitted_is_total_js():
     text = (EXPLICIT / "array_numbers_50.json").read_text()
     total = len(json.loads(text))
@@ -115,8 +117,8 @@ def test_array_kept_plus_omitted_is_total_js():
 
 # --- strict JSON parses at every budget ----------------------------------------
 
-@pytest.mark.parametrize("fixture", sorted(p.name for p in
-                                           PARAMETRIC.glob("*.json")))
+@pytest.mark.parametrize("fixture", reference_cases(
+    sorted(p.name for p in PARAMETRIC.glob("*.json")), "fixture"))
 @pytest.mark.parametrize("budget", [0, 1, 3, 10, 33, 100, 250, 1000, 10000])
 def test_strict_output_parses_as_json(fixture, budget):
     text = (PARAMETRIC / fixture).read_text()
@@ -170,6 +172,7 @@ def test_string_escaping_roundtrip():
     doc = json.dumps({"k": tricky}, ensure_ascii=False)
     out = run(doc, "json", 10000)
     assert json.loads(out) == {"k": tricky}
+
 
 @pytest.mark.parametrize("doc", ['["\\ud800"]', '["a\\udc00b"]',
                                  '{"\\ud83d": 1}', '{"k": [["x", "\\ude00"]]}',

@@ -5,13 +5,15 @@ node ids + pop order must match exactly."""
 from __future__ import annotations
 
 import re
-from pathlib import Path
 
+from conftest import REFERENCE, requires_reference
 from headson_spark.kernel import arena as ar
 from headson_spark.kernel.order import (build_order, K_ARRAY, K_OBJECT,
                                         K_STRING, K_ATOMIC, K_PART)
 
-SNAP = Path("/root/reference/src/order/snapshots")
+pytestmark = requires_reference
+
+SNAP = REFERENCE / "src" / "order" / "snapshots"
 
 _KIND_REPR = {K_ARRAY: "Array", K_OBJECT: "Object",
               K_STRING: "SplittableLeaf", K_PART: "LeafPart",

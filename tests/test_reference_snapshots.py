@@ -20,11 +20,11 @@ from pathlib import Path
 
 import pytest
 
+from conftest import REFERENCE, reference_cases, requires_reference
 from headson_spark.kernel import summarize
 
-REF = Path("/root/reference")
-SNAP_DIR = REF / "tests" / "snapshots"
-FIXTURES = REF / "tests" / "fixtures" / "parametric"
+SNAP_DIR = REFERENCE / "tests" / "snapshots"
+FIXTURES = REFERENCE / "tests" / "fixtures" / "parametric"
 
 TEMPLATE_TO_ARGS = {
     "json": {"format": "json", "style": "strict"},
@@ -98,7 +98,9 @@ ALL_CASES = (_cases("e2e", "balanced") + _cases("e2e_head", "head")
              + _cases("e2e_tail", "tail"))
 
 
-@pytest.mark.parametrize("snap,tag,template,budget,skew", ALL_CASES)
+@pytest.mark.parametrize(
+    "snap,tag,template,budget,skew",
+    reference_cases(ALL_CASES, "snap,tag,template,budget,skew"))
 def test_e2e_snapshot(snap, tag, template, budget, skew):
     expected = read_snapshot(snap)
     fx = fixture_path(tag)
@@ -111,5 +113,6 @@ def test_e2e_snapshot(snap, tag, template, budget, skew):
         f"snapshot mismatch for {snap.name}")
 
 
+@requires_reference
 def test_snapshot_corpus_nonempty():
     assert len(ALL_CASES) >= 100, f"only {len(ALL_CASES)} snapshot cases found"

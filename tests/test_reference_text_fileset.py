@@ -4,11 +4,14 @@
 from __future__ import annotations
 
 import re
-from pathlib import Path
 
+from conftest import REFERENCE, requires_reference
 from headson_spark.kernel import summarize, summarize_many
 
-SNAP = Path("/root/reference/tests/snapshots")
+pytestmark = requires_reference
+
+SNAP = REFERENCE / "tests" / "snapshots"
+EXPLICIT = REFERENCE / "tests" / "fixtures" / "explicit"
 
 
 def read_snap(name: str) -> str:
@@ -37,7 +40,7 @@ def test_fileset_text_files_snapshot():
 
 def test_combined_limits_single_file_snapshot():
     # CLI: -n 80 -N 200 => effective 80 (tests/combined_limits.rs:57-66)
-    p = Path("/root/reference/tests/fixtures/explicit/string_escaping.json")
+    p = EXPLICIT / "string_escaping.json"
     out = summarize(p.read_text(), format="json", style="default",
                     character_budget=80)
     assert norm(out) == norm(read_snap(
@@ -46,9 +49,8 @@ def test_combined_limits_single_file_snapshot():
 
 def test_combined_limits_min_semantics():
     # -n 300 -N 120 across two files == -N 120 (combined_limits.rs:46-56)
-    p1 = Path("/root/reference/tests/fixtures/explicit/object_small.json")
-    p2 = Path(
-        "/root/reference/tests/fixtures/explicit/array_numbers_50.json")
+    p1 = EXPLICIT / "object_small.json"
+    p2 = EXPLICIT / "array_numbers_50.json"
     inputs = [(str(p1), p1.read_text()), (str(p2), p2.read_text())]
     both = summarize_many(inputs, format="json", style="strict",
                           character_budget=120, per_input_budget=300)
@@ -58,9 +60,8 @@ def test_combined_limits_min_semantics():
 
 
 def test_pseudo_fileset_headers_and_summary():
-    p1 = Path("/root/reference/tests/fixtures/explicit/object_small.json")
-    p2 = Path(
-        "/root/reference/tests/fixtures/explicit/array_numbers_50.json")
+    p1 = EXPLICIT / "object_small.json"
+    p2 = EXPLICIT / "array_numbers_50.json"
     out = summarize_many(
         [(str(p1), p1.read_text()), (str(p2), p2.read_text())],
         format="json", style="default", per_input_budget=100_000)

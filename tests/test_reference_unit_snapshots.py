@@ -6,15 +6,15 @@ configs, including the YAML template."""
 from __future__ import annotations
 
 import re
-from pathlib import Path
 
 import pytest
 
+from conftest import REFERENCE, requires_reference
 from headson_spark.kernel import arena as ar
 from headson_spark.kernel.order import build_order
 from headson_spark.kernel.render import RenderConfig, render_top_k
 
-SNAP = Path("/root/reference/src/serialization/snapshots")
+SNAP = REFERENCE / "src" / "serialization" / "snapshots"
 
 
 def read_snap(name: str) -> str:
@@ -61,6 +61,7 @@ CASES = [
 
 @pytest.mark.parametrize("snap,json_text,k,template,style,kwargs",
                          CASES, ids=[c[0] for c in CASES])
+@requires_reference
 def test_unit_snapshot(snap, json_text, k, template, style, kwargs):
     got = render(json_text, k, template, style, **kwargs)
     assert got.rstrip("\n") == read_snap(snap)

@@ -9,6 +9,7 @@ import json
 
 import pytest
 
+from conftest import REFERENCE, reference_cases, requires_reference
 from headson_spark.kernel import summarize
 from headson_spark.kernel.arena import BOOL, NULL, NUMBER
 from headson_spark.kernel.yaml_ingest import (_ALIAS_TAG, _canon_key,
@@ -17,7 +18,7 @@ from headson_spark.kernel.yaml_ingest import (_ALIAS_TAG, _canon_key,
 from yaml.nodes import MappingNode, ScalarNode, SequenceNode
 
 CORPUS = sorted(glob.glob(
-    "/root/reference/tests/fixtures/yaml/yaml-test-suite/*.yaml"))
+    f"{REFERENCE}/tests/fixtures/yaml/yaml-test-suite/*.yaml"))
 
 # Round-1 flagged 5 fixtures as "re-flow divergences"; the real cause was
 # the default string cap (500 graphemes) truncating their long embedded
@@ -59,8 +60,8 @@ def _wrap(docs):
     return [_norm(d) for d in docs]
 
 
-@pytest.mark.parametrize(
-    "path", CORPUS, ids=[p.rsplit("/", 1)[-1] for p in CORPUS])
+@pytest.mark.parametrize("path", reference_cases(
+    [pytest.param(p, id=p.rsplit("/", 1)[-1]) for p in CORPUS], "path"))
 def test_yaml_roundtrip_semantic(path):
     data = open(path, "rb").read()
     out = summarize(data, format="yaml", input_format="yaml",
@@ -69,5 +70,6 @@ def test_yaml_roundtrip_semantic(path):
         _wrap(compose_documents(out))
 
 
+@requires_reference
 def test_corpus_present():
     assert len(CORPUS) >= 300
