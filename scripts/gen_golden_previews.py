@@ -139,7 +139,8 @@ def shape_cases():
             for style in STYLES:
                 for skew in SKEWS:
                     for budget in SHAPE_BUDGETS:
-                        key = f"shape__{name}__{fmt}__{style}__{skew}__n{budget}"
+                        key = (f"shape__{name}__{fmt}__{style}__{skew}"
+                               f"__n{budget}")
                         yield (key, text, fmt, input_format, style, skew,
                                budget)
 
