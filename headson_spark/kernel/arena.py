@@ -189,10 +189,21 @@ def _reject_constant(name: str):
     raise ValueError(f"invalid JSON constant: {name}")
 
 
+def reject_lone_surrogate(s: str, kind: str) -> None:
+    """Raise ValueError naming the first unpaired surrogate in `s`: such a
+    string has no UTF-8 form, so no template can render it."""
+    if not s.isascii():
+        m = _SURROGATE.search(s)
+        if m:
+            raise ValueError(
+                f"invalid {kind} string: unpaired surrogate "
+                f"U+{ord(m.group()):04X}")
+
+
 def _reject_lone_surrogates(value) -> None:
     # json.loads joins an escaped surrogate pair into one code point and
-    # leaves an unpaired one as is; such a string has no UTF-8 form, so
-    # reject it at parse time as the reference's serde_json does
+    # leaves an unpaired one as is; reject that at parse time as the
+    # reference's serde_json does
     stack = [value]
     while stack:
         v = stack.pop()
@@ -202,12 +213,8 @@ def _reject_lone_surrogates(value) -> None:
                 stack.append(cv)
         elif isinstance(v, list):
             stack.extend(v)
-        elif isinstance(v, str) and not v.isascii():
-            m = _SURROGATE.search(v)
-            if m:
-                raise ValueError(
-                    f"invalid JSON string: unpaired surrogate "
-                    f"U+{ord(m.group()):04X}")
+        elif isinstance(v, str):
+            reject_lone_surrogate(v, "JSON")
 
 
 def parse_json(text: str | bytes):
@@ -217,13 +224,13 @@ def parse_json(text: str | bytes):
     return value
 
 
-def build_value_arena(value, array_cap: int, sampler: str = "balanced",
-                      arena: Arena | None = None) -> Arena:
+def build_value_arena(value, array_cap: int, sampler: str = "balanced"
+                      ) -> Arena:
     """Build an arena from a parsed value tree, sampling arrays inline.
 
     Mirrors json_ingest/builder.rs NodeVisitor + finish_array/finish_object.
     """
-    a = arena if arena is not None else Arena()
+    a = Arena()
 
     def build(v) -> int:
         if isinstance(v, (_ObjectPairs, dict)):
@@ -278,6 +285,7 @@ def _normalize_newlines(s: str) -> str:
 def _text_lines(text: str | bytes) -> list[str]:
     if isinstance(text, bytes):
         text = text.decode("utf-8", errors="replace")
+    reject_lone_surrogate(text, "text")
     norm = _normalize_newlines(text)
     # split_terminator semantics: no trailing empty line for trailing \n
     lines = norm.split("\n")

@@ -24,7 +24,8 @@ from yaml.composer import Composer
 from yaml.events import AliasEvent
 from yaml.nodes import MappingNode, ScalarNode, SequenceNode
 
-from .arena import Arena, Node, ARRAY, BOOL, NULL, NUMBER, OBJECT, STRING
+from .arena import (Arena, Node, ARRAY, BOOL, NULL, NUMBER, OBJECT, STRING,
+                    reject_lone_surrogate)
 
 _ALIAS_TAG = "!__headson_alias__"
 _IMPLICIT_TAG = "!__headson_implicit__"
@@ -219,6 +220,20 @@ def compose_documents(text: str | bytes):
             docs.append(loader.get_node())
     finally:
         loader.dispose()
+    # the reader rejects a raw surrogate, but a double-quoted "\ud800"
+    # escape composes to one; check every scalar, sampled or not, as JSON
+    # ingest checks the whole document
+    stack = list(docs)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, ScalarNode):
+            reject_lone_surrogate(node.value, "YAML")
+        elif isinstance(node, SequenceNode):
+            stack.extend(node.value)
+        elif isinstance(node, MappingNode):
+            for k, v in node.value:
+                stack.append(k)
+                stack.append(v)
     return docs
 
 

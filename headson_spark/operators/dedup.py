@@ -24,35 +24,33 @@ log = logging.getLogger("headson_spark.dedup")
 _NON_ALNUM = re.compile("[^a-z0-9]+")
 
 
-def normalized(col: str = "text"):
-    """Lowercase, collapse non-alphanumerics — shared by dedup + stats."""
-    return F.trim(F.regexp_replace(F.lower(F.col(col)), "[^a-z0-9]+", " "))
-
-
-def exact_duplicate_groups(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical documents (after normalization)."""
-    h = F.md5(normalized(text_col)).alias("content_hash")
-    return (df.select(h, F.col(id_col))
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
+    """Groups of byte-identical documents (after normalization: lowercase,
+    non-alphanumeric runs collapsed to one space, trimmed)."""
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+",
+                                   " "))
+    return (df.select(F.md5(norm).alias("content_hash"), F.col("doc_id"))
               .groupBy("content_hash")
               .agg(F.count("*").alias("n_docs"),
-                   F.min(id_col).alias("keep_id"))
+                   F.min("doc_id").alias("keep_id"))
               .filter(F.col("n_docs") > 1))
 
 
 # 2^31 - 1: keeps (x % P) * a + b < 2^62, safe under ANSI bigint overflow
 MINHASH_P = 2147483647
+# the seed of the (a_j, b_j) MinHash family; the oracle SQL reads the
+# same family through minhash_params
+MINHASH_SEED = 7
 
 
-def minhash_params(n_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
+def minhash_params(n_hashes: int) -> list[tuple[int, int]]:
     from ..kernel.arena import mix64
-    return [(mix64((seed << 20) ^ (2 * j)) % (MINHASH_P - 1) + 1,
-             mix64((seed << 20) ^ (2 * j + 1)) % MINHASH_P)
+    return [(mix64((MINHASH_SEED << 20) ^ (2 * j)) % (MINHASH_P - 1) + 1,
+             mix64((MINHASH_SEED << 20) ^ (2 * j + 1)) % MINHASH_P)
             for j in range(n_hashes)]
 
 
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", n_hashes: int = 12,
+def minhash_signatures(df: DataFrame, n_hashes: int = 12,
                        shingle_k: int = 3) -> DataFrame:
     """MinHash signature per document: sig_j = min over shingles of
     (a_j * x + b_j) mod P, x = md5-derived shingle integer. One md5 per
@@ -78,24 +76,23 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     A = np.asarray([a for a, _ in params], dtype=np.int64)
     Bv = np.asarray([b for _, b in params], dtype=np.int64)
     w = shingle_k
-    id_t = df.schema[id_col].dataType.simpleString()
-    out_schema = ", ".join([f"{id_col} {id_t}"]
+    id_t = df.schema["doc_id"].dataType.simpleString()
+    out_schema = ", ".join([f"doc_id {id_t}"]
                            + [f"mh{j} bigint" for j in range(n_hashes)])
 
     def sig_batches(pdfs):
         import pandas as pd
         for pdf in pdfs:
-            ids = pdf[id_col].tolist()
+            ids = pdf["doc_id"].tolist()
             out = np.empty((len(ids), n_hashes), dtype=np.int64)
-            for r, t in enumerate(pdf[text_col]):
+            for r, t in enumerate(pdf["text"]):
                 out[r] = _minhash_row(t, A, Bv, w)
-            data = {id_col: ids}
+            data = {"doc_id": ids}
             for j in range(n_hashes):
                 data[f"mh{j}"] = out[:, j]
             yield pd.DataFrame(data)
 
-    return df.select(id_col, text_col).mapInPandas(sig_batches,
-                                                   out_schema)
+    return df.select("doc_id", "text").mapInPandas(sig_batches, out_schema)
 
 
 def _minhash_row(text, A, Bv, w: int):
@@ -113,37 +110,35 @@ def _minhash_row(text, A, Bv, w: int):
     return ((xs[:, None] * A[None, :] + Bv[None, :]) % P).min(axis=0)
 
 
-def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n_hashes: int = 12,
+def lsh_candidate_pairs(df: DataFrame, n_hashes: int = 12,
                         bands: int = 4, shingle_k: int = 3) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash banding: documents agree
     on any band of rows => candidate pair. One self-join keyed by
     (band_idx, band_hash) — the scale-path replacement for all-pairs."""
     rows = n_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, n_hashes, shingle_k)
+    sig = minhash_signatures(df, n_hashes, shingle_k)
     band_cols = []
     for b in range(bands):
         parts = [f"mh{b * rows + r}" for r in range(rows)]
         band_cols.append(F.md5(F.concat_ws("|", *parts)).alias(f"band{b}"))
-    banded = sig.select(F.col(id_col), *band_cols)
+    banded = sig.select(F.col("doc_id"), *band_cols)
     stacked = banded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band_idx"),
                      F.col(f"band{b}").alias("band_hash"))
             for b in range(bands)])).alias("bb")
-    ).select(id_col, "bb.band_idx", "bb.band_hash")
+    ).select("doc_id", "bb.band_idx", "bb.band_hash")
     a = stacked.alias("a")
     b_ = stacked.alias("b")
     return (a.join(b_, ["band_idx", "band_hash"])
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"))
+            .where(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(F.col("a.doc_id").alias("id_a"),
+                    F.col("b.doc_id").alias("id_b"))
             .distinct())
 
 
 def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
                         shingle_k: int = 5) -> DataFrame:
     """Exact n-gram Jaccard similarity for candidate pairs (verification
     stage after LSH).
@@ -156,15 +151,15 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
     difference between shingling the corpus and shingling the survivors
     of LSH. Join results are unchanged (the equi-joins below only ever
     consume pair participants)."""
-    members = (pairs.select(F.col("id_a").alias(id_col))
-               .union(pairs.select(F.col("id_b").alias(id_col)))
+    members = (pairs.select(F.col("id_a").alias("doc_id"))
+               .union(pairs.select(F.col("id_b").alias("doc_id")))
                .distinct())
-    pruned = df.join(members, id_col, "left_semi")
-    texts = pruned.select(F.col(id_col), F.col(text_col).alias("_t"))
+    pruned = df.join(members, "doc_id", "left_semi")
+    texts = pruned.select(F.col("doc_id"), F.col("text").alias("_t"))
     j = (pairs
-         .join(texts.withColumnRenamed(id_col, "id_a")
+         .join(texts.withColumnRenamed("doc_id", "id_a")
                     .withColumnRenamed("_t", "_ta"), "id_a")
-         .join(texts.withColumnRenamed(id_col, "id_b")
+         .join(texts.withColumnRenamed("doc_id", "id_b")
                     .withColumnRenamed("_t", "_tb"), "id_b"))
 
     # Set sizes are exact INTEGERS, so they can be computed with Python
@@ -222,8 +217,7 @@ def _char_shingles(text, k: int) -> set:
     return {norm[i:i + k] for i in range(max(len(norm) - k + 1, 1))}
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 16) -> DataFrame:
+def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash over word tokens; bit p of md5(token) votes +/-1.
 
     Doc-local (no shuffle): tokens -> per-bit vote sums via aggregate() ->
@@ -235,11 +229,10 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # because the digest lived inside the per-bit lambda — Spark does not
     # CSE across higher-order-function lambda instantiations.
     nhex = (bits + 3) // 4
-    toks = (f"filter(split(lower({text_col}), '[^a-z0-9]+'), "
-            f"x -> x != '')")
-    staged = (df.select(F.col(id_col), F.col(text_col))
+    from .text_stats import TOKENS
+    staged = (df.select(F.col("doc_id"), F.col("text"))
                 .withColumn("_th", F.expr(
-                    f"transform({toks}, t -> cast(conv(substring(md5(t), "
+                    f"transform({TOKENS}, t -> cast(conv(substring(md5(t), "
                     f"1, {nhex}), 16, 10) as bigint))")))
     # bit p (old nibble-wise order) == bit (4*nhex - 1 - p) of the staged
     # integer, so the packed simhash value is unchanged vs round 1.
@@ -252,13 +245,11 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     packed = (f"aggregate(zip_with({votes}, sequence(0, {bits - 1}), "
               f"(v, p) -> case when v > 0 then shiftleft(1L, p) "
               f"else 0L end), 0L, (a, b) -> a + b)")
-    return staged.select(F.col(id_col), F.expr(packed).alias("simhash"))
+    return staged.select(F.col("doc_id"), F.expr(packed).alias("simhash"))
 
 
-def near_dup_clusters(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", n_hashes: int = 12,
-                      bands: int = 4, shingle_k: int = 3,
-                      max_iter: int = 30) -> DataFrame:
+def near_dup_clusters(df: DataFrame, n_hashes: int = 12,
+                      bands: int = 4, shingle_k: int = 3) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the LSH
     candidate-pair graph (HashMin label propagation — every document
     converges to the smallest doc id reachable from it). The canonical
@@ -273,20 +264,18 @@ def near_dup_clusters(df: DataFrame, id_col: str = "doc_id",
     does not grow with iterations. Singleton documents never enter the
     loop; they are restored by the final left join.
     """
-    pairs = lsh_candidate_pairs(df, id_col, text_col, n_hashes, bands,
-                                shingle_k)
-    labels = hashmin_components(pairs, max_iter=max_iter)
-    return (df.select(F.col(id_col))
-            .join(labels.withColumnRenamed("node", id_col), id_col,
+    pairs = lsh_candidate_pairs(df, n_hashes, bands, shingle_k)
+    labels = hashmin_components(pairs)
+    return (df.select(F.col("doc_id"))
+            .join(labels.withColumnRenamed("node", "doc_id"), "doc_id",
                   "left")
-            .select(F.col(id_col),
-                    F.coalesce("lbl", F.col(id_col))
+            .select(F.col("doc_id"),
+                    F.coalesce("lbl", F.col("doc_id"))
                      .alias("cluster_id")))
 
 
 def contamination_check(docs: DataFrame, eval_docs: DataFrame,
-                        n: int = 8, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+                        n: int = 8) -> DataFrame:
     """Pre-training decontamination: word n-gram overlap between corpus
     documents and an evaluation/benchmark set — the standard check that
     training data does not contain eval content (verbatim or lightly
@@ -299,36 +288,38 @@ def contamination_check(docs: DataFrame, eval_docs: DataFrame,
     broadcasts under AQE; the corpus side explodes ~tokens-per-doc grams
     and semi-joins — no all-pairs, per-doc work is linear, and the only
     wide exchange is the per-doc overlap count aggregate."""
-    from .text_stats import tokens_expr
+    from .text_stats import TOKENS
 
     def grams(df):
-        toks = tokens_expr(text_col)
         g = (f"array_distinct(transform(sequence(1, "
-             f"greatest(size({toks}) - {n - 1}, 1)), "
-             f"i -> array_join(slice({toks}, i, {n}), ' ')))")
-        return (df.select(F.col(id_col), F.explode(F.expr(g))
+             f"greatest(size({TOKENS}) - {n - 1}, 1)), "
+             f"i -> array_join(slice({TOKENS}, i, {n}), ' ')))")
+        return (df.select(F.col("doc_id"), F.explode(F.expr(g))
                           .alias("gram"))
                   .where(F.col("gram") != ""))
 
     eval_grams = grams(eval_docs).select("gram").distinct()
     hits = (grams(docs).join(eval_grams, "gram")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("*").cast("bigint").alias("n_overlap")))
-    return (docs.select(F.col(id_col))
-            .join(hits, id_col, "left")
-            .select(F.col(id_col),
+    return (docs.select(F.col("doc_id"))
+            .join(hits, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce("n_overlap", F.lit(0)).cast("bigint")
                      .alias("n_overlap"),
                     (F.coalesce("n_overlap", F.lit(0)) > 0)
                      .alias("contaminated")))
 
 
-# hashmin_components small-graph gate: below this many edges the
+# hashmin_components small-graph gate: up to this many edges the
 # candidate graph is collected and solved with union-find on the driver
 # (exact same min-label result); above it the distributed HashMin loop
 # runs. 1M edge rows ~ a few hundred MB of driver heap — the same order
 # as a broadcast join build side.
 HASHMIN_DRIVER_GATE_EDGES = 1_000_000
+# rounds the distributed HashMin loop runs before it warns that labels
+# may be non-minimal; near-dup components converge in 3-5
+HASHMIN_MAX_ITER = 30
 
 
 def _unionfind_min_labels(edge_rows) -> dict:
@@ -359,13 +350,9 @@ def _unionfind_min_labels(edge_rows) -> dict:
     return {n: find(n) for n in parent}
 
 
-def hashmin_components(pairs: DataFrame, left: str = "id_a",
-                       right: str = "id_b",
-                       max_iter: int = 30,
-                       driver_gate_edges: int = HASHMIN_DRIVER_GATE_EDGES
-                       ) -> DataFrame:
+def hashmin_components(pairs: DataFrame) -> DataFrame:
     """Connected components over an arbitrary pair DataFrame via HashMin
-    label propagation: DataFrame[left, right] -> DataFrame[node, lbl]
+    label propagation: DataFrame[id_a, id_b] -> DataFrame[node, lbl]
     where lbl is the smallest id reachable from node. Only nodes that
     appear in a pair are returned (callers restore singletons with a
     left join + coalesce). One shuffle join per round, O(component
@@ -376,51 +363,51 @@ def hashmin_components(pairs: DataFrame, left: str = "id_a",
     Small-graph fast path (round 6): each HashMin round is 3 Spark jobs
     of fixed overhead, which dominated wall time on post-LSH candidate
     graphs (they are tiny relative to the corpus — 12.3 s at sf1.0 for
-    a graph of a few thousand edges). Below `driver_gate_edges` the edge
-    list is collected (bounded by construction via limit()) and solved
-    with min-root union-find — the identical {node: min reachable id}
-    labeling — in one pass. Above the gate the distributed loop runs
-    unchanged, so the 100 TB posture is preserved: the driver never
-    holds an unbounded graph.
+    a graph of a few thousand edges). Up to HASHMIN_DRIVER_GATE_EDGES
+    edges (read at call time) the edge list is collected (bounded by
+    construction via limit()) and solved with min-root union-find — the
+    identical {node: min reachable id} labeling — in one pass. Above the
+    gate the distributed loop runs, for at most HASHMIN_MAX_ITER rounds
+    (read at call time; it warns if labels are still changing), so the
+    100 TB posture is preserved: the driver never holds an unbounded
+    graph.
 
     The gate probe and both directions of the edge union read `pairs`,
     so an uncached `pairs` is persisted for the call: its lineage (LSH
     banding, BLAS nomination) runs once, not once per reader.
 
     Logs one INFO line on `headson_spark.dedup`: the edges the gate probe
-    saw (at most driver_gate_edges + 1), the gate, and the path taken."""
+    saw (at most the gate + 1), the gate, and the path taken."""
+    gate = HASHMIN_DRIVER_GATE_EDGES
     own_cache = not pairs.is_cached
     if own_cache:
         pairs = pairs.persist()
-    head = None
-    if driver_gate_edges and driver_gate_edges > 0:
-        head = (pairs.select(left, right)
-                .limit(driver_gate_edges + 1).collect())
-    small = head is not None and len(head) <= driver_gate_edges
-    log.info("hashmin_components: edges=%s driver_gate_edges=%d -> %s",
-             "not probed" if head is None else len(head),
-             driver_gate_edges or 0, "union-find" if small else "distributed")
+    head = pairs.select("id_a", "id_b").limit(gate + 1).collect()
+    small = len(head) <= gate
+    log.info("hashmin_components: edges=%d driver_gate_edges=%d -> %s",
+             len(head), gate, "union-find" if small else "distributed")
     if small:
         if own_cache:
             pairs.unpersist()
         labels = _unionfind_min_labels(head)
         from pyspark.sql.types import StructField, StructType
-        t = pairs.schema[left].dataType
+        t = pairs.schema["id_a"].dataType
         schema = StructType([StructField("node", t),
                              StructField("lbl", t)])
         return pairs.sparkSession.createDataFrame(
             sorted(labels.items()), schema)
     # undirected edges, both directions
-    edges = (pairs.select(F.col(left).alias("src"),
-                          F.col(right).alias("dst"))
-             .union(pairs.select(F.col(right).alias("src"),
-                                 F.col(left).alias("dst")))).cache()
+    edges = (pairs.select(F.col("id_a").alias("src"),
+                          F.col("id_b").alias("dst"))
+             .union(pairs.select(F.col("id_b").alias("src"),
+                                 F.col("id_a").alias("dst")))).cache()
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .withColumn("lbl", F.col("node"))).localCheckpoint()
     if own_cache:
         # the checkpoint above read every edge partition into the edges
         # cache, so the loop no longer needs pairs
         pairs.unpersist()
+    max_iter = HASHMIN_MAX_ITER
     changed = 0
     for _ in range(max_iter):
         # smallest label among self + neighbors
@@ -445,7 +432,7 @@ def hashmin_components(pairs: DataFrame, left: str = "id_a",
         warnings.warn(
             f"hashmin_components: did not converge within "
             f"{max_iter} iterations ({changed} labels still changing); "
-            f"cluster ids may be non-minimal — raise max_iter",
+            f"cluster ids may be non-minimal — raise HASHMIN_MAX_ITER",
             RuntimeWarning, stacklevel=2)
     # labels is localCheckpoint()ed (no lineage back to edges), so the
     # cached edge set can be released before the caller consumes labels

@@ -89,11 +89,13 @@ WAV_SAMPLES = 1024   # synth fixture geometry: power of two -> exact means
 WAV_RATE = 16000
 
 
-def wav_encode(samples: np.ndarray, sample_rate: int,
-               channels: int = 1) -> bytes:
+def wav_encode(samples: np.ndarray, sample_rate: int) -> bytes:
     """Minimal canonical RIFF/WAVE writer: PCM, 16-bit little-endian.
-    `samples` is int16, frame-major ((n,) mono or (n, channels))."""
-    data = np.asarray(samples, dtype="<i2").tobytes()
+    `samples` is int16, frame-major: shape (n,) is mono and (n, c) has c
+    channels."""
+    arr = np.asarray(samples, dtype="<i2")
+    channels = 1 if arr.ndim == 1 else arr.shape[1]
+    data = arr.tobytes()
     return (b"RIFF" + (36 + len(data)).to_bytes(4, "little") + b"WAVE"
             + b"fmt " + (16).to_bytes(4, "little")
             + struct.pack("<HHIIHH", 1, channels, sample_rate,

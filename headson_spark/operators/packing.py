@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame, functions as F
 WS_TOKEN_PATTERN = "\\s+"
 
 
-def chunk_text(df: DataFrame, size: int = 64, stride: int | None = None,
-               id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def chunk_text(df: DataFrame, size: int = 64, stride: int | None = None
+               ) -> DataFrame:
     """Token-window chunker: whitespace tokens, windows of `size` tokens
     every `stride` tokens (stride defaults to size = no overlap).
 
@@ -41,10 +41,10 @@ def chunk_text(df: DataFrame, size: int = 64, stride: int | None = None,
     stride = size if stride is None else stride
     if stride < 1:
         raise ValueError(f"stride must be >= 1, got {stride}")
-    toks = F.filter(F.split(F.col(text_col), WS_TOKEN_PATTERN),
+    toks = F.filter(F.split(F.col("text"), WS_TOKEN_PATTERN),
                     lambda t: t != "")
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("_toks"),
     ).withColumn("_n", F.size("_toks"))
     # window starts: 0..max(n-1, 0) step stride (n=0 -> single start 0)
@@ -52,10 +52,10 @@ def chunk_text(df: DataFrame, size: int = 64, stride: int | None = None,
                         F.greatest(F.col("_n") - 1, F.lit(0)),
                         F.lit(stride))
     return (base
-            .select(id_col, "_toks", "_n",
+            .select("doc_id", "_toks", "_n",
                     F.posexplode(starts).alias("chunk_idx", "start_tok"))
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.col("chunk_idx").cast("int"),
                 F.col("start_tok").cast("int"),
                 F.least(F.col("_n") - F.col("start_tok"),

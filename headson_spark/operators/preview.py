@@ -10,7 +10,7 @@ Spark plan (scale-first, one shuffle total):
     mapInPandas(kernel)                   -- Arrow batches; one Python call
                                           -- per ~10k rows, NOT per group
 
-N defaults to defaultParallelism, one kernel task per task slot: every
+N is defaultParallelism, one kernel task per task slot: every
 Python-UDF task pays a fixed start-up cost before its first row, so the
 stage runs in one wave (PLANS.md §1b).
 
@@ -147,8 +147,7 @@ def make_preview_fn(budget: int = 500, style: str = "default",
     return fn
 
 
-def _kernel_step(rows, budget: int, style: str, skew: str, fmt: str,
-                 num_partitions: int | None):
+def _kernel_step(rows, budget: int, style: str, skew: str, fmt: str):
     """The one exchange + sort + kernel step every plan ends in.
 
     The exchange hashes xxhash64(conv_id), not conv_id: Spark drops a
@@ -159,41 +158,46 @@ def _kernel_step(rows, budget: int, style: str, skew: str, fmt: str,
     broadcast with a local shuffle read, which splits a conversation's
     sentinel from its rows, and the kernel renders it twice."""
     from pyspark.sql import functions as F
-    dist = (rows.repartition(_kernel_width(rows, num_partitions),
-                             F.xxhash64("conv_id"))
+    dist = (rows.repartition(_kernel_width(rows), F.xxhash64("conv_id"))
                 .sortWithinPartitions("conv_id", "turn_idx", "ts"))
     return dist.mapInPandas(make_preview_fn(budget, style, skew, fmt),
                             schema=PREVIEW_SCHEMA)
 
 
-def _kernel_width(df, num_partitions: int | None) -> int:
-    """Kernel-stage task count: `num_partitions` if given, else one task
-    per task slot. Explicit either way, so AQE cannot coalesce the
-    exchange toward ~64MB partitions (a few tasks for a CPU-bound Python
-    stage whose bytes are small and work is not). One wave, not several,
-    because each Python-UDF task pays a fixed set-up cost before its
-    first row (PLANS.md §1b). Most of it was the worker's per-task
+def _kernel_width(df) -> int:
+    """Kernel-stage task count: one task per task slot. Explicit, so AQE
+    cannot coalesce the exchange toward ~64MB partitions (a few tasks for
+    a CPU-bound Python stage whose bytes are small and work is not). One
+    wave, not several, because each Python-UDF task pays a fixed set-up
+    cost before its first row (PLANS.md §1b). Most of it was the worker's per-task
     `importlib.invalidate_caches()` re-reading the pyspark and py4j zip
     directories once per zipimporter, 16 times a task on CPython 3.11;
     `headson_spark._zipcache` now skips the re-read of an unchanged
     archive, which leaves about 0.1 s a task."""
-    if num_partitions is not None:
-        return num_partitions
     return df.sparkSession.sparkContext.defaultParallelism
+
+
+def _dense_turns(df):
+    """The rows both plans preview: those at turn_idx >= 0. A negative or
+    NULL turn_idx breaks the dense-position contract (a negative one
+    would share the pushdown sentinel's turn_idx = -1 sort slot), so
+    such rows are dropped before any count, and n_turns and n_chars
+    leave them out under either plan."""
+    from pyspark.sql import functions as F
+    return df.filter(F.col("turn_idx") >= 0)
 
 
 def _with_sentinels(kept, totals):
     """Kept rows unioned with one sentinel row per conversation. Kept rows
     carry NULL totals unless they already carry them (the tail join); the
     kernel reads the totals off each conversation's first row only, the
-    sentinel. Rows at a negative turn_idx break the dense-position
-    contract and would share the sentinel's turn_idx = -1 sort slot, so
-    they are dropped here."""
+    sentinel, which sorts first because _dense_turns left no row at a
+    negative turn_idx."""
     from pyspark.sql import functions as F
     carried = ("_total", "_chars") if "_total" in kept.columns else (
         F.lit(None).cast("int").alias("_total"),
         F.lit(None).cast("bigint").alias("_chars"))
-    kept = kept.filter(F.col("turn_idx") >= 0).select(
+    kept = kept.select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts", *carried)
     return kept.unionByName(_total_sentinels(totals))
 
@@ -201,8 +205,7 @@ def _with_sentinels(kept, totals):
 def conversation_previews_pushdown(df, *, budget: int = 500,
                                    style: str = "default",
                                    skew: str = "balanced",
-                                   fmt: str = "json",
-                                   num_partitions: int | None = None):
+                                   fmt: str = "json"):
     """Shuffle-volume-optimized preview pipeline: the sampler keep-set is
     applied BEFORE the conv_id shuffle, so each conversation ships at most
     O(budget/2) turns instead of all of them — the Spark analogue of the
@@ -225,6 +228,7 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
 
     cap = array_cap(budget)
     keep = kept_position_filter(skew, cap)
+    df = _dense_turns(df)
     totals = _conv_totals(df)
     if keep is None:
         # The join and the sentinels read one totals plan, so Spark
@@ -242,7 +246,7 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
     # rejected totals designs (countDistinct, a totals join) and their
     # measurements are in PLANS.md §1a.
     rows = _with_sentinels(kept, totals)
-    return _kernel_step(rows, budget, style, skew, fmt, num_partitions)
+    return _kernel_step(rows, budget, style, skew, fmt)
 
 
 def _conv_totals(df):
@@ -353,8 +357,7 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
 
 def conversation_previews(df, *, budget: int = 500, style: str = "default",
                           skew: str = "balanced", fmt: str = "json",
-                          num_partitions: int | None = None,
-                          pushdown: bool | str = "auto"):
+                          pushdown: str = "auto"):
     """DataFrame[conv_id, turn_idx, role, text, tool, ts] ->
     DataFrame[conv_id, preview, n_turns, n_chars, preview_bytes].
 
@@ -367,41 +370,38 @@ def conversation_previews(df, *, budget: int = 500, style: str = "default",
     pre-scan, else the single-exchange full pipeline. At 100x scale the
     full pipeline ships every turn of every conversation through the
     exchange, the pushdown one ships O(budget/2) turns per conversation
-    and structurally bounds the mapInPandas carry buffer. pushdown=True
-    (or "pushdown") forces the pushdown plan (all skews; tail joins
-    the totals back before filtering); pushdown=False (or "full") forces the
+    and structurally bounds the mapInPandas carry buffer.
+    pushdown="pushdown" forces the pushdown plan (all skews; tail joins
+    the totals back before filtering); pushdown="full" forces the
     full-shuffle pipeline.
 
     n_chars exactness caveat under auto dispatch: the pushdown plan's
     n_chars is an upper bound when a NON-kept position receives
     duplicate deliveries (see make_preview_fn); the full plan is always
-    exact, and preview/n_turns never differ by plan. Pin pushdown=False
+    exact, and preview/n_turns never differ by plan. Pin pushdown="full"
     where exact n_chars matters more than the pruned shuffle."""
     if pushdown == "auto":
         plan = choose_preview_plan(df, budget=budget, skew=skew)
         why = (f"kept_frac={plan.kept_frac}"
                + (" from the plan memo" if plan.memo else ""))
-    elif pushdown in (True, False, "pushdown", "full"):
-        plan = "pushdown" if pushdown in (True, "pushdown") else "full"
+    elif pushdown in ("pushdown", "full"):
+        plan = pushdown
         why = f"forced by pushdown={pushdown!r}"
     else:
         raise ValueError(
-            f"pushdown must be True/False/'pushdown'/'full'/'auto', "
+            f"pushdown must be 'auto', 'full' or 'pushdown', "
             f"got {pushdown!r}")
-    width = _kernel_width(df, num_partitions)
     log.info("conversation_previews: plan=%s (%s), kernel stage width=%d",
-             plan, why, width)
+             plan, why, _kernel_width(df))
     build = (conversation_previews_pushdown if plan == "pushdown"
              else conversation_previews_full)
-    return build(df, budget=budget, style=style, skew=skew, fmt=fmt,
-                 num_partitions=width)
+    return build(df, budget=budget, style=style, skew=skew, fmt=fmt)
 
 
 def conversation_previews_full(df, *, budget: int = 500,
                                style: str = "default",
-                               skew: str = "balanced", fmt: str = "json",
-                               num_partitions: int | None = None):
+                               skew: str = "balanced", fmt: str = "json"):
     """Full-shuffle preview pipeline: one exchange carrying every turn,
     sampling inside the kernel. The plan conversation_previews picks when
     pruning would not pay for the pushdown plan's totals pre-scan."""
-    return _kernel_step(df, budget, style, skew, fmt, num_partitions)
+    return _kernel_step(_dense_turns(df), budget, style, skew, fmt)

@@ -88,11 +88,11 @@ def default_cap(df: DataFrame, cap: int) -> DataFrame:
 
 
 def stratified_sample(df: DataFrame, fractions: dict[str, float],
-                      id_col: str = "doc_id", strat_col: str = "lang",
                       default_frac: float = 0.0) -> DataFrame:
     """Deterministic per-stratum downsampling — the standard
     training-data mixture-rebalancing step (e.g. cap English at 10%,
-    keep low-resource languages at 100%).
+    keep low-resource languages at 100%). The stratum is the `lang`
+    column and the id the `doc_id` column.
 
     Keep decision: u(id) < fraction(stratum), with u(id) a uniform
     [0,1) value derived from md5(id) (first 15 hex nibbles = 60 bits).
@@ -101,11 +101,11 @@ def stratified_sample(df: DataFrame, fractions: dict[str, float],
     per partition. Pure column expressions, zero shuffle: at 100 TB this
     is a scan-side filter.
     """
-    u = (f"cast(conv(substring(md5(cast({id_col} as string)), 1, 15), "
-         f"16, 10) as bigint) / 1152921504606846976.0")  # / 2^60
+    u = ("cast(conv(substring(md5(cast(doc_id as string)), 1, 15), "
+         "16, 10) as bigint) / 1152921504606846976.0")  # / 2^60
     frac = "CASE"
     for k in sorted(fractions):
-        frac += f" WHEN {strat_col} = '{k}' THEN cast({fractions[k]!r} as double)"
+        frac += f" WHEN lang = '{k}' THEN cast({fractions[k]!r} as double)"
     frac += f" ELSE cast({default_frac!r} as double) END"
     return (df.withColumn("_u", F.expr(u))
               .filter(F.expr(f"_u < {frac}"))

@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>). Every operator
+reads an embeddings table with `vec_id` and `embedding` columns.
 
 - brute_force_cosine_topk: exact baseline — one pass, JVM-side
   zip_with/aggregate dot products, no shuffle until the final top-k.
@@ -29,28 +30,31 @@ def _norm_expr(vec_col: str) -> str:
             f"acc + cast(x as double) * cast(x as double)))")
 
 
-def cosine_scores(df: DataFrame, query_vec: list[float],
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
+def cosine_scores(df: DataFrame, query_vec: list[float]) -> DataFrame:
     qnorm = sum(float(x) * float(x) for x in query_vec) ** 0.5
-    dot = _dot_expr(vec_col, query_vec)
+    dot = _dot_expr("embedding", query_vec)
     return df.select(
-        F.col(id_col),
-        F.round(F.expr(f"({dot}) / ({_norm_expr(vec_col)} * {qnorm!r})"), 4)
-         .alias("cosine"))
+        F.col("vec_id"),
+        F.round(F.expr(f"({dot}) / ({_norm_expr('embedding')} * {qnorm!r})"),
+                4).alias("cosine"))
 
 
 def brute_force_cosine_topk(df: DataFrame, query_vec: list[float],
-                            k: int = 10, id_col: str = "vec_id",
-                            vec_col: str = "embedding") -> DataFrame:
-    return (cosine_scores(df, query_vec, id_col, vec_col)
-            .orderBy(F.desc("cosine"), F.col(id_col))
+                            k: int = 10) -> DataFrame:
+    return (cosine_scores(df, query_vec)
+            .orderBy(F.desc("cosine"), F.col("vec_id"))
             .limit(k))
 
 
-def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[int]]:
+# the seed of the hyperplane family; the oracle SQL reads the same planes
+# through hyperplanes
+HYPERPLANE_SEED = 42
+
+
+def hyperplanes(dim: int, n_planes: int) -> list[list[int]]:
     """Deterministic ±1 hyperplanes from mix64 — reproducible anywhere."""
-    return [[1 if mix64((seed << 32) ^ (j << 16) ^ i) % 2 == 0 else -1
+    return [[1 if mix64((HYPERPLANE_SEED << 32) ^ (j << 16) ^ i) % 2 == 0
+             else -1
              for i in range(dim)]
             for j in range(n_planes)]
 
@@ -63,19 +67,16 @@ def lsh_signature_expr(vec_col: str, planes: list[list[int]]) -> str:
     return " + ".join(terms)
 
 
-def lsh_buckets(df: DataFrame, dim: int = 64, n_planes: int = 8,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def lsh_buckets(df: DataFrame, dim: int = 64, n_planes: int = 8
+                ) -> DataFrame:
     planes = hyperplanes(dim, n_planes)
     return df.select(
-        F.col(id_col),
-        F.expr(lsh_signature_expr(vec_col, planes)).alias("bucket"))
+        F.col("vec_id"),
+        F.expr(lsh_signature_expr("embedding", planes)).alias("bucket"))
 
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                              dim: int = 64, n_planes: int = 8,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
                              n_bands: int = 1) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at scale: banded
     random-hyperplane blocking followed by exact cosine verification —
@@ -97,18 +98,19 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     not the vectors)."""
     total = n_planes * n_bands
     planes = hyperplanes(dim, total)
-    b = df.select(F.col(id_col), F.col(vec_col))
+    b = df.select(F.col("vec_id"), F.col("embedding"))
     for band in range(n_bands):
         band_planes = planes[band * n_planes:(band + 1) * n_planes]
         b = b.withColumn(f"_band{band}",
-                         F.expr(lsh_signature_expr(vec_col, band_planes)))
+                         F.expr(lsh_signature_expr("embedding",
+                                                   band_planes)))
     # one row per (vector, band): candidates collide on (band, bucket)
     bands_arr = F.array(*[
         F.struct(F.lit(i).alias("band"),
                  F.col(f"_band{i}").alias("bucket"))
         for i in range(n_bands)])
     e = (b.withColumn("_bb", F.explode(bands_arr))
-          .select(id_col, vec_col,
+          .select("vec_id", "embedding",
                   F.col("_bb.band").alias("band"),
                   F.col("_bb.bucket").alias("bucket")))
     # Round-6 plan (guide §4.2): the within-bucket comparison runs as a
@@ -124,7 +126,7 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     # the BLAS nomination. Bucket width stays bounded by the n_planes
     # knob exactly as documented above, so per-group work is
     # ~width^2 * dim native flops.
-    id_t = df.schema[id_col].dataType.simpleString()
+    id_t = df.schema["vec_id"].dataType.simpleString()
     cand_schema = f"id_a {id_t}, id_b {id_t}"
     margin = float(threshold) - 0.5e-4 - 1e-9
 
@@ -132,17 +134,17 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
         import pandas as pd
         if len(pdf) < 2:
             return pd.DataFrame({"id_a": [], "id_b": []})
-        out_a, out_b = _nominate_pairs(pdf[id_col].tolist(), pdf[vec_col],
-                                       margin)
+        out_a, out_b = _nominate_pairs(pdf["vec_id"].tolist(),
+                                       pdf["embedding"], margin)
         return pd.DataFrame({"id_a": out_a, "id_b": out_b})
 
     cand = (e.groupBy("band", "bucket")
             .applyInPandas(bucket_candidates, cand_schema)
             .distinct())
-    av = df.select(F.col(id_col).alias("id_a"),
-                   F.col(vec_col).alias("_va"))
-    bv = df.select(F.col(id_col).alias("id_b"),
-                   F.col(vec_col).alias("_vb"))
+    av = df.select(F.col("vec_id").alias("id_a"),
+                   F.col("embedding").alias("_va"))
+    bv = df.select(F.col("vec_id").alias("id_b"),
+                   F.col("embedding").alias("_vb"))
     dot = ("aggregate(zip_with(_va, _vb, (x, y) -> "
            "cast(x as double) * cast(y as double)), 0D, "
            "(acc, v) -> acc + v)")
@@ -184,46 +186,27 @@ def _l2sq_expr(a: str, b: str) -> str:
             f"(acc, v) -> acc + v)")
 
 
-def derive_ivf_stride(df: DataFrame, k_target: int = 4096,
-                      id_col: str = "vec_id") -> int:
-    """stride = max(n // k_target, 1): holds k_centroids at ~k_target
-    regardless of corpus size. One count() at index-build time — noise
-    next to the O(n * k) assignment it sizes."""
-    n = df.select(id_col).count()
-    return max(n // max(k_target, 1), 1)
-
-
-def ivf_centroids(df: DataFrame, stride: int | None = 32,
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding",
-                  k_target: int = 4096) -> DataFrame:
+def ivf_centroids(df: DataFrame, stride: int = 32) -> DataFrame:
     """Deterministic sampled centroids for the IVF coarse quantizer:
     every stride-th vector by id (the standard sampled-centroid IVF
     baseline — engine-independent and reproducible anywhere, unlike a
-    seeded k-means).
+    seeded k-means, so the oracle SQL samples the same rows).
 
-    SCALING CONTRACT: k_centroids = n / stride, so a FIXED stride grows
-    k linearly with the corpus and eventually breaks the broadcast in
-    ivf_assign (the same hazard class as force-broadcasting a growing
-    dim table). stride=None (the scale-safe default posture) derives
-    stride from the corpus size via derive_ivf_stride, holding k at the
-    IVF sweet spot (~sqrt(n), or a fixed few thousand — 4k centroids
-    x 64 dims x 8 B = 2 MB broadcast, safe anywhere). An explicit stride
-    keeps results reproducible without a count() (tests/oracles) but
-    forfeits the boundedness proof — ivf_assign then leaves the join
-    strategy to AQE instead of forcing a broadcast. Assignment cost is
-    O(n * k) distance evaluations either way — another reason k must
-    not track n."""
-    if stride is None:
-        stride = derive_ivf_stride(df, k_target, id_col)
-    return (df.filter((F.col(id_col) % stride) == 0)
-              .select(F.col(id_col).alias("centroid_id"),
-                      F.col(vec_col).alias("_cvec")))
+    SCALING CONTRACT: k_centroids = n / stride, so a fixed stride grows
+    k linearly with the corpus; a caller holds k near the IVF sweet
+    spot (~sqrt(n), or a fixed few thousand — 4k centroids x 64 dims x
+    8 B = 2 MB on the driver) by choosing stride for its corpus, and
+    ivf_assign refuses more than MAX_COLLECTED_CENTROIDS. Assignment
+    cost is O(n * k) distance evaluations — another reason k must not
+    track n."""
+    return (df.filter((F.col("vec_id") % stride) == 0)
+              .select(F.col("vec_id").alias("centroid_id"),
+                      F.col("embedding").alias("_cvec")))
 
 
 # ivf_assign refuses to collect more centroid rows than this: 2^20 rows
 # x 64 dims x 8 B ~ 512 MB on the driver — past the point where the
-# caller should have used stride=None (k <= k_target) instead.
+# caller should have raised the stride.
 MAX_COLLECTED_CENTROIDS = 1 << 20
 
 
@@ -259,10 +242,7 @@ def _exact_l2sq(v, c) -> float:
     return acc
 
 
-def ivf_assign(df: DataFrame, stride: int | None = 32,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding",
-               k_target: int = 4096) -> DataFrame:
+def ivf_assign(df: DataFrame, stride: int = 32) -> DataFrame:
     """IVF indexing step: assign every vector to its nearest centroid
     (arg-min L2, ties broken by centroid id — deterministic).
 
@@ -298,25 +278,23 @@ def ivf_assign(df: DataFrame, stride: int | None = 32,
     Scale shape (100 TB): per-task work is (rows-in-task x k x dim)
     BLAS; no shuffle at all. In deployment the assignment is then
     materialized partitioned BY centroid_id for partition-pruned probe
-    reads. k stays bounded by the stride contract (stride=None derives
-    k <= k_target); a fixed stride on a growing corpus is capped loudly
-    at MAX_COLLECTED_CENTROIDS instead of OOMing the driver."""
+    reads. k = n / stride (see ivf_centroids); a stride too small for a
+    growing corpus is capped loudly at MAX_COLLECTED_CENTROIDS instead
+    of OOMing the driver."""
     import numpy as np
 
-    if stride is None:
-        stride = derive_ivf_stride(df, k_target, id_col)
-    cents_df = ivf_centroids(df, stride, id_col, vec_col)
+    cents_df = ivf_centroids(df, stride)
     # limit() bounds the driver-side collect by construction; it is the
     # identity whenever k is within the documented cap
     rows = (cents_df.select("centroid_id", "_cvec")
             .limit(MAX_COLLECTED_CENTROIDS + 1).collect())
     if len(rows) > MAX_COLLECTED_CENTROIDS:
         raise ValueError(
-            f"ivf_assign: > {MAX_COLLECTED_CENTROIDS} centroids; use "
-            f"stride=None (k_target bounds k) for corpora this large")
-    id_t = df.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_t}, centroid_id {id_t}"
-    narrow = df.select(id_col, vec_col)
+            f"ivf_assign: > {MAX_COLLECTED_CENTROIDS} centroids at "
+            f"stride={stride}; raise the stride for a corpus this large")
+    id_t = df.schema["vec_id"].dataType.simpleString()
+    out_schema = f"vec_id {id_t}, centroid_id {id_t}"
+    narrow = df.select("vec_id", "embedding")
     if not rows:
         # no centroids -> empty result (the old crossJoin semantics)
         return narrow.mapInArrow(lambda it: iter(()), out_schema)
@@ -350,17 +328,14 @@ def ivf_assign(df: DataFrame, stride: int | None = 32,
                         best_key, best[i] = key, j
             out_c = pa.array(cids[best], type=ids.type)
             yield pa.RecordBatch.from_arrays([ids, out_c],
-                                             [id_col, "centroid_id"])
+                                             ["vec_id", "centroid_id"])
 
     return narrow.mapInArrow(assign_batches, out_schema)
 
 
 def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
-             n_probe: int = 4, stride: int | None = 32,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             assignment: DataFrame | None = None,
-             k_target: int = 4096) -> DataFrame:
+             n_probe: int = 4, stride: int = 32,
+             assignment: DataFrame | None = None) -> DataFrame:
     """IVF ANN query: rank centroids by distance to the query, probe the
     n_probe nearest inverted lists, exact cosine re-rank inside them.
     Recall/latency knob = n_probe (n_probe = k_centroids degrades to the
@@ -372,17 +347,15 @@ def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
     inline, which dominates the single-query wall time."""
     arr = ("array(" + ",".join(f"cast({float(x)!r} as double)"
                                for x in query_vec) + ")")
-    if stride is None:
-        stride = derive_ivf_stride(df, k_target, id_col)
-    cents = ivf_centroids(df, stride, id_col, vec_col)
+    cents = ivf_centroids(df, stride)
     probes = (cents.withColumn("_qd", F.expr(_l2sq_expr("_cvec", arr)))
               .orderBy("_qd", "centroid_id")
               .limit(n_probe)
               .select("centroid_id"))
     if assignment is None:
-        assignment = ivf_assign(df, stride, id_col, vec_col)
+        assignment = ivf_assign(df, stride)
     cand_ids = (assignment
                 .join(F.broadcast(probes), "centroid_id")
-                .select(id_col))
-    cand = df.join(cand_ids, id_col, "semi")
-    return brute_force_cosine_topk(cand, query_vec, k, id_col, vec_col)
+                .select("vec_id"))
+    cand = df.join(cand_ids, "vec_id", "semi")
+    return brute_force_cosine_topk(cand, query_vec, k)

@@ -1,6 +1,7 @@
 """Text analysis operators: language-ID, quality scoring, token counting,
 document fingerprinting — all JVM-side column expressions (no Python in the
-hot path), each reproducible in ANSI SQL for the DuckDB oracle."""
+hot path), each reproducible in ANSI SQL for the DuckDB oracle. Every
+operator reads a documents table with `doc_id` and `text` columns."""
 
 from __future__ import annotations
 
@@ -16,59 +17,53 @@ STOPWORDS = {
 LANGS = sorted(STOPWORDS)
 
 
-def tokens_expr(text_col: str = "text") -> str:
-    return f"filter(split(lower({text_col}), '[^a-z0-9]+'), x -> x != '')"
+# the lowercased [a-z0-9]+ word tokens of `text`, as a SQL expression
+TOKENS = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
 
 
-def token_counts(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace/punct token count + a BPE-ish subword estimate
     (ceil(chars/4) per token, the common ~4-chars-per-token heuristic)."""
-    toks = tokens_expr(text_col)
     return df.select(
-        F.col(id_col),
-        F.expr(f"size({toks})").alias("n_tokens"),
-        F.expr(f"aggregate({toks}, 0L, (acc, t) -> "
+        F.col("doc_id"),
+        F.expr(f"size({TOKENS})").alias("n_tokens"),
+        F.expr(f"aggregate({TOKENS}, 0L, (acc, t) -> "
                f"acc + cast(ceil(length(t) / 4.0) as bigint))")
          .alias("n_subwords"))
 
 
-def _hits(lang: str, text_col: str) -> str:
+def _hits(lang: str) -> str:
     words = ",".join(f"'{w}'" for w in STOPWORDS[lang])
-    return (f"size(filter({tokens_expr(text_col)}, "
+    return (f"size(filter({TOKENS}, "
             f"x -> array_contains(array({words}), x)))")
 
 
-def language_id(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Stopword-vote language ID: argmax hits, deterministic tie-break by
     language code; 'und' when no stopword hits at all."""
-    hit_cols = [F.expr(_hits(lg, text_col)).alias(f"hits_{lg}")
-                for lg in LANGS]
-    scored = df.select(F.col(id_col), *hit_cols)
+    hit_cols = [F.expr(_hits(lg)).alias(f"hits_{lg}") for lg in LANGS]
+    scored = df.select(F.col("doc_id"), *hit_cols)
     best = F.greatest(*[F.col(f"hits_{lg}") for lg in LANGS])
     pred = F.when(best == 0, F.lit("und"))
     for lg in LANGS:  # sorted => deterministic tie-break
         pred = pred.when(F.col(f"hits_{lg}") == best, F.lit(lg))
-    return scored.select(F.col(id_col), pred.alias("lang_pred"),
+    return scored.select(F.col("doc_id"), pred.alias("lang_pred"),
                          best.alias("stopword_hits"))
 
 
-def quality_scores(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Composite quality score in [0,1]: alpha ratio, stopword ratio,
     length saturation — the standard cheap pre-filter for training data."""
-    toks = tokens_expr(text_col)
-    n_chars = f"greatest(length({text_col}), 1)"
-    alpha_ratio = (f"length(regexp_replace({text_col}, '[^A-Za-z]', ''))"
+    n_chars = "greatest(length(text), 1)"
+    alpha_ratio = (f"length(regexp_replace(text, '[^A-Za-z]', ''))"
                    f" / cast({n_chars} as double)")
     all_stops = ",".join(f"'{w}'" for ws in STOPWORDS.values() for w in ws)
-    stop_ratio = (f"size(filter({toks}, x -> array_contains("
+    stop_ratio = (f"size(filter({TOKENS}, x -> array_contains("
                   f"array({all_stops}), x))) / "
-                  f"cast(greatest(size({toks}), 1) as double)")
-    len_score = f"least(length({text_col}) / 500.0, 1.0)"
+                  f"cast(greatest(size({TOKENS}), 1) as double)")
+    len_score = "least(length(text) / 500.0, 1.0)"
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(F.expr(f"0.5 * ({alpha_ratio}) + 0.3 * ({stop_ratio}) "
                        f"+ 0.2 * ({len_score})"), 4).alias("quality"))
 
@@ -77,42 +72,38 @@ EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 PHONE_RE = "\\+?[0-9][0-9()\\-\\s]{6,}[0-9]"
 
 
-def pii_mask(df: DataFrame, id_col: str = "doc_id",
-             text_col: str = "text") -> DataFrame:
+def pii_mask(df: DataFrame) -> DataFrame:
     """Mask emails/phone-shaped spans and count them — the standard
     pre-training scrub pass, pure regexp column expressions."""
     masked = F.regexp_replace(
-        F.regexp_replace(F.col(text_col), EMAIL_RE, "<EMAIL>"),
+        F.regexp_replace(F.col("text"), EMAIL_RE, "<EMAIL>"),
         PHONE_RE, "<PHONE>")
     n_emails = F.size(F.expr(
-        f"regexp_extract_all({text_col}, '{EMAIL_RE}', 0)"))
+        f"regexp_extract_all(text, '{EMAIL_RE}', 0)"))
     return df.select(
-        F.col(id_col), masked.alias("masked_text"),
+        F.col("doc_id"), masked.alias("masked_text"),
         n_emails.cast("int").alias("n_emails"),
         F.length(masked).cast("bigint").alias("masked_len"))
 
 
-def repetition_ratio(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def repetition_ratio(df: DataFrame) -> DataFrame:
     """Boilerplate signal: fraction of duplicate word-trigrams
     (1 - distinct/total); high values flag template/repetitive text."""
-    toks = tokens_expr(text_col)
-    tri = (f"transform(sequence(1, greatest(size({toks}) - 2, 1)), "
-           f"i -> array_join(slice({toks}, i, 3), ' '))")
+    tri = (f"transform(sequence(1, greatest(size({TOKENS}) - 2, 1)), "
+           f"i -> array_join(slice({TOKENS}, i, 3), ' '))")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(F.expr(
             f"1.0 - size(array_distinct({tri})) / "
             f"cast(greatest(size({tri}), 1) as double)"), 4)
          .alias("rep_ratio"))
 
 
-def fingerprints(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Normalized-content fingerprint (md5 of lowercased, punctuation-
     collapsed text) — stable under formatting noise."""
-    norm = (f"trim(regexp_replace(lower({text_col}), '[^a-z0-9]+', ' '))")
-    return df.select(F.col(id_col),
+    norm = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' '))"
+    return df.select(F.col("doc_id"),
                      F.expr(f"md5({norm})").alias("fingerprint"),
                      F.expr(f"length({norm})").alias("norm_len"))
 
@@ -124,8 +115,11 @@ RH_BASE = 257
 RH_MOD = 9007199254740881
 
 
+# rolling_fingerprint's win_fp window, in characters
+FP_WINDOW = 16
+
 # windows hashed per block by _fp_one: bounds its int64 window matrix at
-# FP_BLOCK x window, whatever the document length
+# FP_BLOCK x FP_WINDOW, whatever the document length
 FP_BLOCK = 65536
 
 # powers of RH_BASE mod RH_MOD, grown on demand and cached per python worker
@@ -176,13 +170,11 @@ def _fp_one(norm_bytes: bytes, W: int) -> tuple:
     return doc_fp, win_fp, n
 
 
-def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        window: int = 16) -> DataFrame:
+def rolling_fingerprint(df: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprint (Rabin-Karp polynomial over the
     normalized text): `doc_fp` = hash of the whole document — exact-dup
     key robust to formatting noise; `win_fp` = the MINIMUM hash over all
-    `window`-length character windows (winnowing-style) — shift-invariant,
+    FP_WINDOW-length character windows (winnowing-style) — shift-invariant,
     so a document with content inserted at the front keeps the same
     win_fp as long as the minimizing window survives.
 
@@ -210,37 +202,35 @@ def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id",
 
     Memory: the window matrix is built FP_BLOCK windows at a time and
     win_fp is the minimum over the blocks, so a document costs O(len)
-    plus one (FP_BLOCK x window) block (8 MB at window=16), not an
+    plus one (FP_BLOCK x FP_WINDOW) block (8 MB), not an
     (len-window+1) x window matrix (0.5 GB for a 1 MB document). Each
     window's arithmetic is unchanged, so the output is bit-identical."""
     import re as _re
 
     strip = _re.compile("[^a-z0-9]+")
-    W = window
-    id_t = df.schema[id_col].dataType.simpleString()
-    out_schema = (f"{id_col} {id_t}, doc_fp bigint, win_fp bigint, "
+    W = FP_WINDOW
+    id_t = df.schema["doc_id"].dataType.simpleString()
+    out_schema = (f"doc_id {id_t}, doc_fp bigint, win_fp bigint, "
                   f"norm_len int")
 
     def fp_batches(pdfs):
         import pandas as pd
         for pdf in pdfs:
             ids, dfs_, wfs, lens = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
+            for i, t in zip(pdf["doc_id"], pdf["text"]):
                 norm = strip.sub(" ", (t or "").lower()).strip()
                 d, w, ln = _fp_one(norm.encode("ascii"), W)
                 ids.append(i)
                 dfs_.append(d)
                 wfs.append(w)
                 lens.append(ln)
-            yield pd.DataFrame({id_col: ids, "doc_fp": dfs_,
+            yield pd.DataFrame({"doc_id": ids, "doc_fp": dfs_,
                                 "win_fp": wfs, "norm_len": lens})
 
-    return df.select(id_col, text_col).mapInPandas(fp_batches, out_schema)
+    return df.select("doc_id", "text").mapInPandas(fp_batches, out_schema)
 
 
-def top_terms(df: DataFrame, k: int = 3, id_col: str = "doc_id",
-              text_col: str = "text", n_docs: int | None = None
-              ) -> DataFrame:
+def top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-k most characteristic terms per document: rank by
     tf * (N + 1) / (df + 1) — term frequency weighted by smoothed inverse
     document frequency. The rational idf variant (no log) is chosen
@@ -263,27 +253,22 @@ def top_terms(df: DataFrame, k: int = 3, id_col: str = "doc_id",
     """
     from pyspark.sql import Window
 
-    toks = tokens_expr(text_col)
-    tf = (df.select(F.col(id_col), F.explode(F.expr(toks)).alias("term"))
-            .groupBy(id_col, "term")
+    tf = (df.select(F.col("doc_id"),
+                    F.explode(F.expr(TOKENS)).alias("term"))
+            .groupBy("doc_id", "term")
             .agg(F.count("*").alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df_t"))
-    if n_docs is not None:
-        n1 = F.lit(float(n_docs + 1))
-    else:
-        ndocs = df.agg((F.count("*").cast("double") + F.lit(1.0))
-                       .alias("_n1"))
-        tf = tf.crossJoin(F.broadcast(ndocs))  # one row — always safe
-        n1 = F.col("_n1")
+    ndocs = df.agg((F.count("*").cast("double") + F.lit(1.0)).alias("_n1"))
+    tf = tf.crossJoin(F.broadcast(ndocs))  # one row — always safe
     scored = (tf.join(dfreq, "term")
-                .withColumn("score",
-                            (F.col("tf") * n1) / (F.col("df_t") + F.lit(1.0)))
+                .withColumn("score", (F.col("tf") * F.col("_n1"))
+                            / (F.col("df_t") + F.lit(1.0)))
                 .drop("_n1"))
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"),
-                                           F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"),
+                                             F.asc("term"))
     return (scored.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k)
-                  .select(F.col(id_col), "term",
+                  .select(F.col("doc_id"), "term",
                           F.col("tf").cast("bigint").alias("tf"),
                           F.col("df_t").cast("bigint").alias("df_t"),
                           "score", F.col("rank").cast("int")

@@ -15,7 +15,7 @@ log = logging.getLogger("headson_spark.session")
 WIDEN_MAX_BYTES = 256 << 20
 
 
-def read_widened(spark, path: str, max_bytes: int = WIDEN_MAX_BYTES):
+def read_widened(spark, path: str):
     """Read a parquet table, restoring scan parallelism for tiny inputs.
 
     Parquet row groups are the unit of split assignment (each scan task
@@ -24,10 +24,10 @@ def read_widened(spark, path: str, max_bytes: int = WIDEN_MAX_BYTES):
     splits Spark creates — every pre-shuffle expression then runs on one
     core (guide §2.5 input skew / §6 input split size). The driver's sf
     tables are written exactly like that: one file, one row group. A
-    round-robin repartition of a <= max_bytes input is a near-free
-    exchange that restores full parallelism; at deployment scale (many
-    files / many row groups, well past the gate) this is a no-op, so no
-    shuffle is ever added to a large scan.
+    round-robin repartition of an input under WIDEN_MAX_BYTES (read at
+    call time) is a near-free exchange that restores full parallelism;
+    at deployment scale (many files / many row groups, well past the
+    gate) this is a no-op, so no shuffle is ever added to a large scan.
 
     ONLY safe for queries whose results are partitioning-invariant:
     row-local maps, integer/min/max/count aggregates, joins and windows
@@ -41,10 +41,10 @@ def read_widened(spark, path: str, max_bytes: int = WIDEN_MAX_BYTES):
     `headson_spark.session` with the size, the gate and the decision."""
     df = spark.read.parquet(path)
     nbytes = _local_bytes(path)
-    widen = nbytes is not None and nbytes < max_bytes
+    widen = nbytes is not None and nbytes < WIDEN_MAX_BYTES
     log.info("read_widened %s: bytes=%s max_bytes=%d -> %s", path,
-             "URI/non-local" if nbytes is None else nbytes, max_bytes,
-             "widened" if widen else "plain scan")
+             "URI/non-local" if nbytes is None else nbytes,
+             WIDEN_MAX_BYTES, "widened" if widen else "plain scan")
     if not widen:
         return df
     return df.repartition(spark.sparkContext.defaultParallelism)

@@ -176,13 +176,12 @@ def to_arrow(cols) -> pa.Table:
     })
 
 
-def write_transcripts(path: str, sf: float = 0.01,
-                      tags: list[str] | None = None,
-                      bulk_turns: int = 0, n_files: int = 1) -> str:
-    """Write transcripts as one parquet file (n_files=1) or a directory
-    of n_files shards — sharding matters for scan parallelism: one 40MB
-    file is one Spark scan task regardless of cluster size."""
-    tbl = to_arrow(generate_rows(sf, tags, bulk_turns))
+def write_transcripts(path: str, sf: float = 0.01, bulk_turns: int = 0,
+                      n_files: int = 1) -> str:
+    """Write transcripts (every tag) as one parquet file (n_files=1) or a
+    directory of n_files shards — sharding matters for scan parallelism:
+    one 40MB file is one Spark scan task regardless of cluster size."""
+    tbl = to_arrow(generate_rows(sf, None, bulk_turns))
     if n_files <= 1:
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
         pq.write_table(tbl, path)
@@ -197,15 +196,21 @@ def write_transcripts(path: str, sf: float = 0.01,
     return path
 
 
+# shards of an ensure_transcripts table: enough scan tasks for a 32-core
+# host; the count is part of the cache file name
+CACHE_SHARDS = 32
+
+
 def ensure_transcripts(sf: float = 0.01, base_dir: str | None = None,
-                       bulk_turns: int = 0, n_files: int = 32) -> str:
+                       bulk_turns: int = 0) -> str:
     """Generate-once cache under data/ (gitignored)."""
     base = base_dir or os.path.join(os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), "data")
-    name = f"transcripts_sf{sf}_b{bulk_turns}_f{n_files}.parquet"
+    name = f"transcripts_sf{sf}_b{bulk_turns}_f{CACHE_SHARDS}.parquet"
     path = os.path.join(base, name)
     if not os.path.exists(path):
-        write_transcripts(path, sf, bulk_turns=bulk_turns, n_files=n_files)
+        write_transcripts(path, sf, bulk_turns=bulk_turns,
+                          n_files=CACHE_SHARDS)
     return path
 
 

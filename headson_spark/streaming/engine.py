@@ -108,23 +108,23 @@ def _st_new() -> dict:
     return {"b": bytearray(), "k": {}, "mx": 0}
 
 
-def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list,
-                   max_idx: int = MAX_TURNS_IN_STATE) -> bool:
+def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list) -> bool:
     """LWW-merge pre-extracted column slices into bounded state; True if
     any content or count changed.
 
-    max_idx guards the seen-bitmap against contract-violating rows: the
-    bitmap is O(max turn_idx / 8) bytes of per-conversation state, so a
-    poisoned turn_idx of e.g. 2^31 would balloon state to 256 MB and a
-    negative one would corrupt the bitmap via Python negative indexing.
-    Rows outside [0, max_idx) are dropped (same SAFETY_CAP posture as the
-    reference, scoring.rs:3) rather than crashing the query."""
+    MAX_TURNS_IN_STATE guards the seen-bitmap against contract-violating
+    rows: the bitmap is O(max turn_idx / 8) bytes of per-conversation
+    state, so a poisoned turn_idx of e.g. 2^31 would balloon state to
+    256 MB and a negative one would corrupt the bitmap via Python
+    negative indexing. Rows outside [0, MAX_TURNS_IN_STATE) are dropped
+    (same SAFETY_CAP posture as the reference, scoring.rs:3) rather than
+    crashing the query."""
     kept = st["k"]
     bits = st["b"]
     changed = False
     for t_idx, role, text, tool, ts_us in zip(
             tidxs, roles, texts, tools, ts_list):
-        if t_idx < 0 or t_idx >= max_idx:
+        if t_idx < 0 or t_idx >= MAX_TURNS_IN_STATE:
             continue
         byte = t_idx // 8
         if byte >= len(bits) or not (bits[byte] >> (t_idx % 8)) & 1:
@@ -268,7 +268,8 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
                                   texts[s:e], tools[s:e], ts_list[s:e]):
                     changed.add(cid)
         rows = []
-        for cid in sorted(changed):
+        # a NULL conv_id is one conversation too; it sorts first
+        for cid in sorted(changed, key=lambda c: (c is not None, c)):
             st = convs[cid]
             ranks = _bits_ranks(st["b"])
             _prune_kept(st, rule, *ranks)

@@ -1,16 +1,20 @@
 """Caller census: every top-level function or class under `headson_spark/`
 is named somewhere in the caller set (the library itself, the Spark entry
-point, the scripts and the benchmarks), outside its own definition.
+point, the scripts and the benchmarks), outside its own definition, and
+every parameter with a default is set by some call in that set.
 
 Tests are not callers: a definition that only tests reach is a capability
 nothing uses, and is deleted rather than kept. A name counts when it
 appears as a `Name`, an `Attribute` or an imported name (`from m import f`
-and `from m import f as g` both count `f`). Only `ast` is used; no Spark.
+and `from m import f as g` both count `f`). A parameter that no caller
+sets has one value in use, so it is a constant rather than an option.
+Only `ast` is used; no Spark.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -32,6 +36,24 @@ ALLOWLIST = {
     "has_broadcast_join": "plan inspection helper the plan-shape tests "
                           "share",
 }
+
+# Parameters named after the reference binding's preview arguments
+# (`summarize(text, *, format, style, input_format, character_budget,
+# skew)` and the CLI's string cap and per-input budget): every preview
+# entry point takes them, whether or not a caller sets them.
+REFERENCE_ARGS = {"budget", "character_budget", "style", "skew", "format",
+                  "fmt", "input_format", "string_cap", "per_input_budget"}
+
+# (function, parameter) pairs kept although no call in the caller set
+# passes them, each with its reason. The parameters of a function on
+# ALLOWLIST are exempt too: only tests call it.
+PARAM_ALLOWLIST = {
+    ("conversation_previews", "pushdown"):
+        "scripts/scaling_bench.py sets it inside its worker source string",
+    ("ensure_transcripts", "base_dir"): "a path, a deployment setting",
+}
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
 def _py_files(paths):
@@ -57,13 +79,19 @@ def _names(node) -> set[str]:
     return out
 
 
+@functools.cache
+def _trees() -> list:
+    """(path, parsed module) for every file in the caller set."""
+    return [(path, ast.parse(path.read_text(), filename=str(path)))
+            for path in _py_files(CALLER_SET)]
+
+
 def _census():
     """(definitions, references): definitions maps (path, name) to the
     top-level statement that defines it; references lists, for every
     top-level statement in the caller set, (path, statement, names)."""
     defs, refs = {}, []
-    for path in _py_files(CALLER_SET):
-        tree = ast.parse(path.read_text(), filename=str(path))
+    for path, tree in _trees():
         for stmt in tree.body:
             refs.append((path, stmt, _names(stmt)))
             if path.is_relative_to(LIBRARY) and isinstance(
@@ -96,3 +124,96 @@ def test_allowlisted_names_are_defined():
     defined = {name for _, name in _census()[0]}
     gone = sorted(set(ALLOWLIST) - defined)
     assert not gone, f"allowlisted but no longer defined: {gone}"
+
+
+def _library_functions():
+    """(path, name, def, is_method) for every def at module level, or
+    directly inside a module-level class, under headson_spark/.
+    `__init__` and `__new__` count under the class name."""
+    for path, tree in _trees():
+        if not path.is_relative_to(LIBRARY):
+            continue
+        for stmt in tree.body:
+            if isinstance(stmt, _FUNCS):
+                yield path, stmt.name, stmt, False
+            elif isinstance(stmt, ast.ClassDef):
+                for m in stmt.body:
+                    if isinstance(m, _FUNCS):
+                        static = any(isinstance(d, ast.Name)
+                                     and d.id == "staticmethod"
+                                     for d in m.decorator_list)
+                        name = (stmt.name if m.name in ("__init__",
+                                                        "__new__")
+                                else m.name)
+                        yield path, name, m, not static
+
+
+def _defaulted(fn, is_method: bool) -> list[tuple[int | None, str]]:
+    """(position, name) of each parameter of `fn` with a default; a
+    keyword-only one has no position, and a method's positions start
+    after self."""
+    a = fn.args
+    pos = (a.posonlyargs + a.args)[1 if is_method else 0:]
+    first = len(pos) - len(a.defaults)
+    return ([(i, p.arg) for i, p in enumerate(pos) if i >= first]
+            + [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+               if d is not None])
+
+
+def _calls() -> dict[str, list]:
+    """Called name (a `Name`, or an `Attribute`'s attr) -> every call in
+    the caller set that names it."""
+    out: dict[str, list] = {}
+    for _, tree in _trees():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(
+                    f, "attr", None)
+                if name:
+                    out.setdefault(name, []).append(n)
+    return out
+
+
+def _sets(call, position: int | None, param: str) -> bool:
+    """True when `call` passes `param`: by keyword, by position, or
+    through `*args` / `**kwargs`."""
+    if any(k.arg in (param, None) for k in call.keywords):
+        return True
+    return position is not None and (
+        len(call.args) > position
+        or any(isinstance(x, ast.Starred) for x in call.args))
+
+
+def defaulted_parameters() -> list[tuple[str, str, int | None, str]]:
+    """(location, function, position, parameter) for every parameter
+    with a default, over the census's functions."""
+    return [(f"{path.relative_to(ROOT)}:{fn.lineno}", name, i, p)
+            for path, name, fn, is_method in _library_functions()
+            for i, p in _defaulted(fn, is_method)]
+
+
+def unset_parameters() -> list[str]:
+    calls = _calls()
+    out = []
+    for loc, name, i, p in defaulted_parameters():
+        if (p in REFERENCE_ARGS or name in ALLOWLIST
+                or (name, p) in PARAM_ALLOWLIST):
+            continue
+        if not any(_sets(c, i, p) for c in calls.get(name, ())):
+            out.append(f"{loc} {name}({p})")
+    return sorted(out)
+
+
+def test_every_defaulted_parameter_is_set_by_a_caller():
+    unset = unset_parameters()
+    assert not unset, (
+        "parameters with a default that no call in the caller set passes "
+        "(make each a constant, or add it to PARAM_ALLOWLIST with a "
+        "reason): " + ", ".join(unset))
+
+
+def test_allowlisted_parameters_exist():
+    have = {(name, p) for _, name, _, p in defaulted_parameters()}
+    gone = sorted(set(PARAM_ALLOWLIST) - have)
+    assert not gone, f"allowlisted but no longer a defaulted parameter: {gone}"

@@ -69,36 +69,40 @@ def test_hashmin_components_on_arbitrary_pairs(spark):
                    20: 20, 21: 20}
 
 
-def test_hashmin_warns_when_not_converged(spark):
-    """A path graph with diameter > max_iter must raise the documented
-    RuntimeWarning instead of silently returning non-minimal labels."""
+def test_hashmin_warns_when_not_converged(spark, monkeypatch):
+    """A path graph with diameter > HASHMIN_MAX_ITER must raise the
+    documented RuntimeWarning instead of silently returning non-minimal
+    labels."""
     import warnings
-    from headson_spark.operators.dedup import hashmin_components
+    from headson_spark.operators import dedup
     # path 0-1-2-...-9: min label needs ~9 rounds to reach node 9.
-    # driver_gate_edges=0 forces the distributed HashMin loop (the
+    # A gate of 0 edges forces the distributed HashMin loop (the
     # round-6 driver union-find gate would otherwise solve this small
     # graph exactly with no iteration at all).
+    monkeypatch.setattr(dedup, "HASHMIN_DRIVER_GATE_EDGES", 0)
+    monkeypatch.setattr(dedup, "HASHMIN_MAX_ITER", 2)
     pairs = spark.createDataFrame([(i, i + 1) for i in range(9)],
                                   "id_a int, id_b int")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        hashmin_components(pairs, max_iter=2, driver_gate_edges=0).collect()
+        dedup.hashmin_components(pairs).collect()
     assert any("did not converge" in str(x.message) for x in w), \
         [str(x.message) for x in w]
     # and with enough rounds it converges warning-free to the min label
+    monkeypatch.setattr(dedup, "HASHMIN_MAX_ITER", 30)
     with warnings.catch_warnings(record=True) as w2:
         warnings.simplefilter("always")
         lbl = {r["node"]: r["lbl"]
-               for r in hashmin_components(
-                   pairs, max_iter=30, driver_gate_edges=0).collect()}
+               for r in dedup.hashmin_components(pairs).collect()}
     assert not any("did not converge" in str(x.message) for x in w2)
     assert set(lbl.values()) == {0}
 
 
-def test_hashmin_driver_gate_matches_distributed(spark):
+def test_hashmin_driver_gate_matches_distributed(spark, monkeypatch):
     """The round-6 union-find fast path must produce the identical
     (node, lbl) rows as the distributed HashMin loop, including on
     multi-component graphs with chains and cliques."""
+    from headson_spark.operators import dedup
     from headson_spark.operators.dedup import hashmin_components
     edges = ([(i, i + 1) for i in range(5, 12)]          # chain 5..12
              + [(20, 21), (21, 22), (20, 22)]            # triangle
@@ -107,41 +111,41 @@ def test_hashmin_driver_gate_matches_distributed(spark):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     fast = {(r["node"], r["lbl"])
             for r in hashmin_components(pairs).collect()}
+    monkeypatch.setattr(dedup, "HASHMIN_DRIVER_GATE_EDGES", 0)
     slow = {(r["node"], r["lbl"])
-            for r in hashmin_components(
-                pairs, driver_gate_edges=0).collect()}
+            for r in hashmin_components(pairs).collect()}
     assert fast == slow
     assert fast  # non-empty
 
 
-def test_hashmin_gate_is_logged(spark, caplog):
+def test_hashmin_gate_is_logged(spark, caplog, monkeypatch):
     """hashmin_components logs one INFO line per call: the edges the gate
     probe saw (capped at gate + 1), the gate and the path taken."""
-    from headson_spark.operators.dedup import hashmin_components
+    from headson_spark.operators import dedup
     pairs = spark.createDataFrame([(i, i + 1) for i in range(5)],
                                   "id_a int, id_b int")
     lines = []
     for gate in (10, 3, 0):
         caplog.clear()
+        monkeypatch.setattr(dedup, "HASHMIN_DRIVER_GATE_EDGES", gate)
         with caplog.at_level("INFO", logger="headson_spark.dedup"):
-            hashmin_components(pairs, driver_gate_edges=gate).collect()
+            dedup.hashmin_components(pairs).collect()
         got = [r for r in caplog.records if r.name == "headson_spark.dedup"]
         assert len(got) == 1 and got[0].levelname == "INFO"
         lines.append(got[0].getMessage())
     below, above, off = lines
     assert "edges=5 driver_gate_edges=10 -> union-find" in below
     assert "edges=4 driver_gate_edges=3 -> distributed" in above
-    assert "edges=not probed driver_gate_edges=0 -> distributed" in off
+    assert "edges=1 driver_gate_edges=0 -> distributed" in off
 
 
-def test_hashmin_runs_pairs_lineage_once_above_gate(spark):
+def test_hashmin_runs_pairs_lineage_once_above_gate(spark, monkeypatch):
     """Above the driver gate, the gate probe and both directions of the
     edge union all read `pairs`; its lineage (here a Python UDF that
     counts its calls) must run exactly once per input row, and the
     labels must still be the union-find ones."""
     from pyspark.sql import functions as F
-    from headson_spark.operators.dedup import (_unionfind_min_labels,
-                                               hashmin_components)
+    from headson_spark.operators import dedup
     calls = spark.sparkContext.accumulator(0)
 
     def hub(i):          # star components of 5: every node -> block min
@@ -155,11 +159,11 @@ def test_hashmin_runs_pairs_lineage_once_above_gate(spark):
     pairs = (spark.range(0, n, 1, 4)
              .select(F.col("id").alias("id_a"),
                      F.udf(counted_hub, "long")("id").alias("id_b")))
+    monkeypatch.setattr(dedup, "HASHMIN_DRIVER_GATE_EDGES", 5)
     got = {(r["node"], r["lbl"])
-           for r in hashmin_components(pairs,
-                                       driver_gate_edges=5).collect()}
+           for r in dedup.hashmin_components(pairs).collect()}
     assert calls.value == n
-    want = _unionfind_min_labels([(i, hub(i)) for i in range(n)])
+    want = dedup._unionfind_min_labels([(i, hub(i)) for i in range(n)])
     assert got == set(want.items())
     assert not pairs.is_cached
 

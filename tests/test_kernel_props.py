@@ -188,6 +188,26 @@ def test_unpaired_surrogate_is_a_parse_error(doc):
         summarize_many([("a.json", doc)], format="auto")
 
 
+@pytest.mark.parametrize("text,input_format,point", [
+    ('"\\ud800"', "yaml", "D800"),
+    ('k: "\\udc00x"', "yaml", "DC00"),
+    ('- a\n- b\n- "\\udfff"', "yaml", "DFFF"),  # sampled away below
+    ("a\ud800b", "text", "D800"),
+])
+def test_unpaired_surrogate_in_yaml_and_text_input(text, input_format,
+                                                   point):
+    # a YAML "\u" escape or a text line can carry an unpaired surrogate
+    # past its parser; ingest rejects it, naming the code point, as JSON
+    # parsing does, whether or not the array cap keeps its element
+    from headson_spark.kernel import summarize_many
+    match = rf"unpaired surrogate U\+{point}"
+    with pytest.raises(ValueError, match=match):
+        summarize(text, input_format=input_format, character_budget=2)
+    name = "a.yaml" if input_format == "yaml" else "a.txt"
+    with pytest.raises(ValueError, match=match):
+        summarize_many([(name, text)], input_format="auto")
+
+
 @pytest.mark.parametrize("fmt,want", [("json", '[\n  "😀"\n]'),
                                       ("yaml", "- 😀\n"), ("text", "😀\n")])
 def test_escaped_surrogate_pair_renders(fmt, want):

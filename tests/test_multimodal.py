@@ -76,7 +76,7 @@ def test_wav_roundtrip_mono():
 def test_wav_roundtrip_stereo():
     frames = np.array([[1, -1], [300, -300], [32767, -32768]],
                       dtype=np.int16)
-    payload = wav_encode(frames, 44100, channels=2)
+    payload = wav_encode(frames, 44100)
     rate, channels, out = wav_decode(payload)
     assert (rate, channels) == (44100, 2)
     assert out.shape == (3, 2)
@@ -167,7 +167,7 @@ def test_wav_roundtrip_property():
                          for _ in range(n * channels)],
                         dtype=np.int16)
         frames = vals.reshape(-1, channels) if channels > 1 else vals
-        payload = wav_encode(frames, rate, channels=channels)
+        payload = wav_encode(frames, rate)
         r, c, out = wav_decode(payload)
         assert (r, c) == (rate, channels)
         assert np.array_equal(out.reshape(-1), vals)

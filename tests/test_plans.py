@@ -27,7 +27,7 @@ def test_pushdown_preview_filters_before_shuffle(spark, tdf):
     """Pushdown pipeline: the sampler keep-set must reach the parquet scan
     (PushedFilters on turn_idx), so the exchange carries O(cap) turns per
     conversation instead of all of them."""
-    df = conversation_previews(tdf, budget=300, pushdown=True)
+    df = conversation_previews(tdf, budget=300, pushdown="pushdown")
     plan = formatted_plan(df)
     assert "PushedFilters" in plan and "turn_idx" in plan.split(
         "PushedFilters")[1].split("\n")[0], plan
@@ -46,21 +46,17 @@ def _kernel_exchange_width(df) -> int:
 
 @pytest.mark.parametrize("plan", ["full", "balanced", "tail"])
 def test_kernel_stage_is_one_wave(spark, tdf, plan):
-    """The kernel exchange defaults to one task per task slot (every
-    Python-UDF task pays a fixed start-up cost, so extra waves only add
-    it); an explicit num_partitions still wins."""
+    """The kernel exchange has one task per task slot (every Python-UDF
+    task pays a fixed start-up cost, so extra waves only add it)."""
     from headson_spark.operators.preview import (
         conversation_previews_full, conversation_previews_pushdown)
 
-    def build(**kw):
-        if plan == "full":
-            return conversation_previews_full(tdf, budget=300, **kw)
-        return conversation_previews_pushdown(tdf, budget=300, skew=plan,
-                                              **kw)
-
+    if plan == "full":
+        out = conversation_previews_full(tdf, budget=300)
+    else:
+        out = conversation_previews_pushdown(tdf, budget=300, skew=plan)
     width = spark.sparkContext.defaultParallelism
-    assert _kernel_exchange_width(build()) == width
-    assert _kernel_exchange_width(build(num_partitions=3)) == 3
+    assert _kernel_exchange_width(out) == width
 
 
 def test_tail_kernel_exchange_survives_co_partitioned_union(spark):
@@ -119,21 +115,24 @@ def test_tail_pushdown_aggregates_totals_once(spark, tdf):
 
 
 @pytest.mark.parametrize("pushdown", [False, True])
-def test_previews_do_not_depend_on_kernel_width(spark, tdf, pushdown):
+def test_previews_do_not_depend_on_kernel_width(spark, tdf, pushdown,
+                                                monkeypatch):
     """Each conversation is contiguous in one partition at any width, so
     the rows are the same at the default width, one partition, and four
     waves of partitions."""
+    from headson_spark.operators import preview
     width = spark.sparkContext.defaultParallelism
 
-    def rows(n):
+    def rows():
         return sorted(map(tuple, conversation_previews(
-            tdf, budget=300, pushdown=pushdown,
-            num_partitions=n).collect()))
+            tdf, budget=300,
+            pushdown="pushdown" if pushdown else "full").collect()))
 
-    default = rows(None)
+    default = rows()
     assert len(default) > 0
-    assert rows(1) == default
-    assert rows(4 * width) == default
+    for n in (1, 4 * width):
+        monkeypatch.setattr(preview, "_kernel_width", lambda df, n=n: n)
+        assert rows() == default
 
 
 def test_filter_pushdown_reaches_scan(spark, transcripts_path):
@@ -146,25 +145,28 @@ def test_filter_pushdown_reaches_scan(spark, transcripts_path):
     assert "text" not in plan.split("ReadSchema")[1].split("\n")[0]
 
 
-def test_read_widened_keeps_plain_scan_for_uri_paths(spark, tmp_path):
+def test_read_widened_keeps_plain_scan_for_uri_paths(spark, tmp_path,
+                                                     monkeypatch):
     """A file:// URI has no size the os module can see, so read_widened
     must treat it as large (plain scan) rather than as 0 bytes (a
     round-robin spread of the whole table). The same table read by its
     local path under a large gate is spread."""
-    from headson_spark.session import read_widened
+    from headson_spark import session
     path = str(tmp_path / "small_table.parquet")
     spark.range(10).write.parquet(path)
-    local = formatted_plan(read_widened(spark, path, max_bytes=1 << 30))
+    monkeypatch.setattr(session, "WIDEN_MAX_BYTES", 1 << 30)
+    local = formatted_plan(session.read_widened(spark, path))
     assert "RoundRobinPartitioning" in local, local
-    uri = formatted_plan(read_widened(spark, "file://" + path, max_bytes=1))
+    monkeypatch.setattr(session, "WIDEN_MAX_BYTES", 1)
+    uri = formatted_plan(session.read_widened(spark, "file://" + path))
     assert "RoundRobinPartitioning" not in uri, uri
 
 
-def test_read_widened_gate_is_logged(spark, tmp_path, caplog):
+def test_read_widened_gate_is_logged(spark, tmp_path, caplog, monkeypatch):
     """read_widened logs one INFO line per call: the path's byte size (or
     that it has none the os module can see), the gate and the decision."""
     import os
-    from headson_spark.session import read_widened
+    from headson_spark import session
     path = str(tmp_path / "gate_table.parquet")
     spark.range(10).write.parquet(path)
     nbytes = sum(os.path.getsize(os.path.join(r, f))
@@ -172,8 +174,9 @@ def test_read_widened_gate_is_logged(spark, tmp_path, caplog):
     lines = []
     for p, gate in ((path, 1 << 30), (path, nbytes), ("file://" + path, 1)):
         caplog.clear()
+        monkeypatch.setattr(session, "WIDEN_MAX_BYTES", gate)
         with caplog.at_level("INFO", logger="headson_spark.session"):
-            read_widened(spark, p, max_bytes=gate)
+            session.read_widened(spark, p)
         got = [r for r in caplog.records if r.name == "headson_spark.session"]
         assert len(got) == 1 and got[0].levelname == "INFO"
         lines.append(got[0].getMessage())

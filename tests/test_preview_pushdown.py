@@ -36,9 +36,9 @@ def test_pushdown_equals_full(spark, tdf, skew, budget):
 
 
 def test_forced_dispatch_is_pushdown(spark, tdf):
-    """pushdown=True must produce the pushdown result (and the same bytes
-    as the full pipeline)."""
-    a = _rows(conversation_previews(tdf, budget=300, pushdown=True))
+    """pushdown="pushdown" must produce the pushdown result (and the same
+    bytes as the full pipeline)."""
+    a = _rows(conversation_previews(tdf, budget=300, pushdown="pushdown"))
     b = _rows(conversation_previews_pushdown(tdf, budget=300))
     assert a == b
 
@@ -120,7 +120,7 @@ def test_plan_decision_is_logged(spark, tdf, caplog):
     clear_plan_cache()
     try:
         lines = []
-        for kw in ({}, {}, {"pushdown": False, "num_partitions": 3}):
+        for kw in ({}, {}, {"pushdown": "full"}):
             caplog.clear()
             with caplog.at_level("INFO", logger="headson_spark.preview"):
                 conversation_previews(tdf, budget=500, **kw)
@@ -137,8 +137,8 @@ def test_plan_decision_is_logged(spark, tdf, caplog):
     assert "memo" not in fresh and f"width={width}" in fresh
     assert "plan=pushdown" in memo and f"kept_frac={kept}" in memo
     assert "memo" in memo and f"width={width}" in memo
-    assert "plan=full" in forced and "pushdown=False" in forced
-    assert "kept_frac" not in forced and "width=3" in forced
+    assert "plan=full" in forced and "pushdown='full'" in forced
+    assert "kept_frac" not in forced and f"width={width}" in forced
 
 
 def test_pushdown_nchars_upper_bound_on_unkept_dup(spark):
@@ -266,12 +266,14 @@ def test_edge_shape_matrix_pushdown_equals_full(spark, budget, skew):
             doc, format="json", character_budget=budget, skew=skew), cid
 
 
-@pytest.mark.parametrize("skew", ["tail", "balanced"])
+@pytest.mark.parametrize("skew", ["tail", "balanced", "head"])
 def test_pushdown_survives_negative_turn_idx(spark, skew):
-    """A contract-violating row at turn_idx = -1 must not collide with the
-    pushdown plans' per-conversation sentinel: every run finishes with
-    one row per conversation."""
-    rows = [("neg", -1, "user", "poison", "", 1_000_000)]
+    """Rows at a negative or NULL turn_idx break the dense-position
+    contract. Both plans drop them before counting, so a row at
+    turn_idx = -1 cannot collide with the pushdown plans' sentinel, and
+    the plans agree on preview, n_turns and n_chars."""
+    rows = [("neg", -1, "user", "poison", "", 1_000_000),
+            ("neg", None, "user", "null poison", "", 1_000_000)]
     rows += [("neg", t, "user", f"neg turn {t}", "", 1_000_001 + t)
              for t in range(3)]
     rows += [("ok", t, "user", f"ok turn {t}", "", 1_000_000 + t)
@@ -281,9 +283,14 @@ def test_pushdown_survives_negative_turn_idx(spark, skew):
               "tool string, ts_us long")
         .selectExpr("conv_id", "turn_idx", "role", "text", "tool",
                     "timestamp_micros(ts_us) as ts"))
-    got = conversation_previews(df, budget=500, skew=skew,
-                                pushdown=True).collect()
-    assert sorted(r["conv_id"] for r in got) == ["neg", "ok"]
+    full = _rows(conversation_previews(df, budget=500, skew=skew,
+                                       pushdown="full"))
+    push = _rows(conversation_previews(df, budget=500, skew=skew,
+                                       pushdown="pushdown"))
+    assert sorted(full) == ["neg", "ok"]
+    assert push == full
+    assert full["neg"][1:3] == (3, 3 * len("neg turn 0"))
+    assert "poison" not in full["neg"][0]
 
 
 def test_tail_pushdown_keeps_null_conv_id(spark):
@@ -315,10 +322,11 @@ def test_pushdown_arg_validated(spark, transcripts_df=None):
         [("c1", 0, "user", "hi", "", None)],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp")
-    with pytest.raises(ValueError, match="pushdown"):
-        conversation_previews(df, pushdown="Auto")
-    with pytest.raises(ValueError, match="pushdown"):
-        conversation_previews(df, pushdown="fulll")
+    # a bool is not a second spelling of a plan
+    for bad in ("Auto", "fulll", True, False):
+        with pytest.raises(ValueError,
+                           match="'auto', 'full' or 'pushdown'"):
+            conversation_previews(df, pushdown=bad)
     # the literal strings are accepted as forced plans
     conversation_previews(df, pushdown="full")
     conversation_previews(df, pushdown="pushdown")

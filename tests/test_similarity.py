@@ -137,24 +137,3 @@ def test_banding_splits_hot_bucket(spark, emb_df):
     w2, w10 = max_width(2), max_width(10)
     assert w10 < w2, (w2, w10)
     assert w10 < 400 // 4, "10 planes must split the bulk substantially"
-
-
-def test_ivf_derived_stride_bounds_k(spark):
-    """stride=None derives stride from n so k_centroids <= k_target (the
-    scale-safe posture: forced broadcast only when k is provably
-    bounded); results match the equivalent explicit stride exactly."""
-    from headson_spark.operators.similarity import (derive_ivf_stride,
-                                                    ivf_assign, ivf_topk)
-    rows = [(i, _mk_vec(i)) for i in range(300)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    assert derive_ivf_stride(df, k_target=10) == 30
-    derived = ivf_assign(df, stride=None, k_target=10)
-    assert derived.select("centroid_id").distinct().count() <= 10
-    explicit = ivf_assign(df, stride=30)
-    key = lambda r: r["vec_id"]
-    assert sorted(derived.collect(), key=key) == \
-        sorted(explicit.collect(), key=key)
-    q = _mk_vec(5)
-    t_derived = ivf_topk(df, q, k=5, n_probe=2, stride=None, k_target=10)
-    t_explicit = ivf_topk(df, q, k=5, n_probe=2, stride=30)
-    assert t_derived.collect() == t_explicit.collect()

@@ -38,7 +38,8 @@ def test_preview_matches_kernel(spark, tdf, transcripts_path, budget,
     exp = expected_previews(pdf, budget=budget)
     got = {r["conv_id"]: r["preview"]
            for r in conversation_previews(tdf, budget=budget,
-                                          pushdown=pushdown).collect()}
+                                          pushdown="pushdown" if pushdown
+                                          else "full").collect()}
     assert set(got) == set(exp)
     mismatches = {k for k in exp if got[k] != exp[k]}
     assert not mismatches, sorted(mismatches)[:5]

@@ -321,3 +321,25 @@ def test_new_delivery_after_close_restarts_conversation():
     assert row["last_ts"] == (T0 + pd.Timedelta(days=1)).tz_localize("UTC")
     assert state.timeout_ts == _deadline(86400)
 
+
+
+def test_null_conv_id_shares_a_bucket():
+    """xxhash64(NULL) is the seed, so a NULL conv_id always lands in one
+    fixed bucket, next to whatever conversations hash there. It is one
+    conversation too: both are rendered, and both close."""
+    fn = make_bucketed_preview_fn(budget=500, session_gap_ms=GAP_MS)
+    state = FakeGroupState()
+    pdf = pd.concat([_batch([(0, "named", 0)]),
+                     _batch([(0, "nameless", 0), (1, "more", 0)])],
+                    ignore_index=True)
+    pdf["conv_id"] = ["a", None, None]
+    out = pd.concat(list(fn((7,), iter([pdf]), state)))
+    got = {cid: (n, p) for cid, n, p in
+           zip(out["conv_id"], out["n_turns"], out["preview"])}
+    assert set(got) == {"a", None}
+    assert got["a"][0] == 1 and "named" in got["a"][1]
+    assert got[None][0] == 2 and "nameless" in got[None][1]
+    final = pd.concat(_close(fn, state))
+    assert sorted(final["conv_id"], key=lambda c: c is not None) == [None,
+                                                                      "a"]
+    assert not state.exists

@@ -366,6 +366,29 @@ def test_emit_policies_agree_on_final_states(spark, tmp_path, n_buckets):
     assert intermediates["on_change"]
 
 
+def test_null_conv_id_streams_like_batch(spark, tmp_path):
+    """With one bucket every conversation shares it, the NULL conv_id
+    one included: the stream's final rows equal the batch plan's, which
+    previews the NULL conv_id rows as one conversation."""
+    t0 = pd.Timestamp("2026-01-01")
+    pdf = pd.concat([_policy_rows(c, [0, 1, 2], t0)
+                     for c in ("a", None, "b")], ignore_index=True)
+    src = tmp_path / "null_src"
+    os.makedirs(src, exist_ok=True)
+    _write_chunk(src, 0, pdf)
+    sink = KeyedParquetSink(str(tmp_path / "null_sink"))
+    q = run_stream(spark, str(src), sink, str(tmp_path / "null_ckpt"),
+                   budget=500, available_now=True, n_buckets=1)
+    q.awaitTermination(300)
+    got = {r["conv_id"]: (r["preview"], r["n_turns"])
+           for r in sink.read_latest(spark).collect()}
+    exp = {r["conv_id"]: (r["preview"], r["n_turns"])
+           for r in conversation_previews(spark.createDataFrame(pdf),
+                                          budget=500).collect()}
+    assert set(exp) == {"a", None, "b"}
+    assert got == exp
+
+
 def test_merge_rows_rejects_contract_violating_turn_idx():
     """Bitmap state guard: negative turn_idx must not corrupt the bitmap
     via Python negative indexing and a huge turn_idx must not balloon
@@ -377,7 +400,7 @@ def test_merge_rows_rejects_contract_violating_turn_idx():
     changed = _st_merge_cols(
         st, [0, -5, 1, 2 ** 31 - 1, 1], ["user"] * 5,
         ["ok0", "poison-neg", "ok1", "poison-huge", "ok1-v2"], [""] * 5,
-        [day_us] * 4 + [2 * day_us], max_idx=100_000)
+        [day_us] * 4 + [2 * day_us])
     assert changed
     total, _ = _bits_ranks(st["b"])
     assert total == 2  # only turns 0 and 1 registered

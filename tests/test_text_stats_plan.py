@@ -30,21 +30,6 @@ def test_no_forced_broadcast_of_vocab_dim(spark, docs):
     assert "UnresolvedHint" not in plan
 
 
-def test_no_hint_at_all_when_ndocs_supplied(spark, docs):
-    plan = _analyzed(top_terms(docs, k=2, n_docs=40))
-    assert "ResolvedHint" not in plan, plan
-
-
-def test_explicit_ndocs_matches_inferred(spark, docs):
-    """The broadcast-crossJoin N and an explicitly supplied n_docs must
-    produce bit-identical scores (same double arithmetic)."""
-    a = {(r["doc_id"], r["term"]): (r["score"], r["rank"])
-         for r in top_terms(docs, k=3).collect()}
-    b = {(r["doc_id"], r["term"]): (r["score"], r["rank"])
-         for r in top_terms(docs, k=3, n_docs=40).collect()}
-    assert a == b
-
-
 def test_rolling_fp_shift_invariance_and_dup_keys(spark):
     """doc_fp: equal iff normalized content equal (formatting noise
     collapses); win_fp: invariant under prefix insertion (the minimizing
