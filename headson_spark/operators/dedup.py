@@ -10,6 +10,9 @@ Scale notes (100 TB):
   self-join; bucket sizes are bounded in practice, and AQE skew-join splits
   pathological buckets
 - SimHash is a doc-local aggregate (zero shuffle until the grouping)
+
+Every operator reads a documents table with `doc_id` and `text` columns;
+candidate pairs are `id_a` < `id_b`.
 """
 
 from __future__ import annotations
@@ -18,6 +21,8 @@ import logging
 import re
 
 from pyspark.sql import DataFrame, functions as F
+
+from .text_stats import TOKENS
 
 log = logging.getLogger("headson_spark.dedup")
 
@@ -229,7 +234,6 @@ def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     # because the digest lived inside the per-bit lambda — Spark does not
     # CSE across higher-order-function lambda instantiations.
     nhex = (bits + 3) // 4
-    from .text_stats import TOKENS
     staged = (df.select(F.col("doc_id"), F.col("text"))
                 .withColumn("_th", F.expr(
                     f"transform({TOKENS}, t -> cast(conv(substring(md5(t), "
@@ -288,7 +292,6 @@ def contamination_check(docs: DataFrame, eval_docs: DataFrame,
     broadcasts under AQE; the corpus side explodes ~tokens-per-doc grams
     and semi-joins — no all-pairs, per-doc work is linear, and the only
     wide exchange is the per-doc overlap count aggregate."""
-    from .text_stats import TOKENS
 
     def grams(df):
         g = (f"array_distinct(transform(sequence(1, "
