@@ -193,7 +193,7 @@ def test_unpaired_surrogate_is_a_parse_error(doc):
     ('k: "\\udc00x"', "yaml", "DC00"),
     ('- a\n- b\n- "\\udfff"', "yaml", "DFFF"),  # sampled away below
     ("a\ud800b", "text", "D800"),
-])
+], ids=["yaml-scalar", "yaml-value", "yaml-sampled-away", "text"])
 def test_unpaired_surrogate_in_yaml_and_text_input(text, input_format,
                                                    point):
     # a YAML "\u" escape or a text line can carry an unpaired surrogate
