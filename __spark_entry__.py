@@ -601,7 +601,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def multimodal_features(spark, sf_dir):
         from headson_spark.operators.multimodal import (image_channel_stats,
                                                         synth_ppm_media)
-        media = synth_ppm_media(_docs(spark, sf_dir), "doc_id", "text")
+        media = synth_ppm_media(_docs(spark, sf_dir))
         return image_channel_stats(media)
     q["multimodal_features"] = multimodal_features
 
@@ -613,7 +613,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def multimodal_audio_stats(spark, sf_dir):
         from headson_spark.operators.multimodal import (audio_stats,
                                                         synth_wav_media)
-        media = synth_wav_media(_docs(spark, sf_dir), "doc_id", "text")
+        media = synth_wav_media(_docs(spark, sf_dir))
         return audio_stats(media)
     q["multimodal_audio_stats"] = multimodal_audio_stats
 
@@ -641,8 +641,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def corpus_digest_q(spark, sf_dir):
         from headson_spark.operators.digest import corpus_digest
-        d = corpus_digest(_t(spark, sf_dir), global_budget=2000,
-                          max_conversations=8)
+        d = corpus_digest(_t(spark, sf_dir), global_budget=2000)
         return spark.createDataFrame([(d, len(d.encode("utf-8")))],
                                      "digest string, digest_bytes int")
     q["corpus_digest"] = corpus_digest_q

@@ -161,6 +161,8 @@ def summarize_many(inputs: list[tuple[str, object]], *, format: str = "auto",
                    input_format: str = "json",
                    per_input_budget: int | None = None) -> str:
     """Fileset variant (reference `headson_many*`): inputs are (name, doc).
+    A None name (corpus_digest's NULL conversation) renders as `null`,
+    sorted first.
 
     Effective budget follows main.rs:161-168: min(global, per_input *
     n_inputs) when both given; else whichever is present; else 500/input.

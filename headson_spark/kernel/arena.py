@@ -93,7 +93,8 @@ def sample_indices(sampler: str, cap: int, total: int) -> list[int]:
 
 
 # longest stream a position-only keep-set is listed for: positions at or
-# past it are never kept by the keep rule or the Spark keep-set filter
+# past it are never kept by the keep rule or the Spark keep-set filter,
+# and no preview path counts them (operators.sampling.counted_turns)
 KEPT_POSITIONS_MAX = 1 << 20
 
 

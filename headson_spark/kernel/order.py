@@ -62,7 +62,6 @@ class PriorityOrder:
     by_priority: list[int] = field(default_factory=list)     # pop order
     total_nodes: int = 0
     is_fileset: bool = False
-    root_object_len: int | None = None
     # lazy expansion (build_order lazy=True): pump(n) extends by_priority
     # to >= n pops (or exhaustion); assignable_capped = count_assignable
     # result used by the budget search to pin hi without popping
@@ -208,10 +207,6 @@ def build_order(a: ar.Arena, max_string_graphemes: int,
     root_val = (root_arena.string_value if root_kind == K_STRING
                 else root_arena.token)
     assign(root_kind, None, root_val, -1, None)
-    if root_kind == K_OBJECT:
-        po.root_object_len = (root_arena.object_len
-                              if root_arena.object_len is not None
-                              else len(root_arena.children))
     root_stream = ([(ROOT_BASE_SCORE, 0, a.root_id)], 0)
     push_stream_head(root_stream)
 
@@ -252,8 +247,14 @@ def build_order(a: ar.Arena, max_string_graphemes: int,
         keys = an.keys or []
         po.total_len[pq_id] = (an.object_len if an.object_len is not None
                                else len(keys))
-        # sort by (key, original key index) — build.rs:228-235
-        items = sorted(range(len(keys)), key=lambda i: (keys[i], i))
+        # sort by (key, original key index) — build.rs:228-235; a fileset
+        # input named None (a NULL conversation) sorts first as `null`
+        if None in keys:
+            keys = ["null" if k is None else k for k in keys]
+            items = sorted(range(len(keys)), key=lambda i: (
+                an.keys[i] is not None, keys[i], i))
+        else:
+            items = sorted(range(len(keys)), key=lambda i: (keys[i], i))
         kids: list[int] = []
         entries: list[tuple[int, int, int]] = []
         score = parent_score + OBJECT_CHILD_BASE_INCREMENT

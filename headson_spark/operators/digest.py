@@ -18,6 +18,11 @@ group" mapping from SURVEY §2.1 S7):
 Stage 2 is deliberately driver-side: after stage 1 the data is O(budget),
 not O(input) — collecting it is the correct plan at any scale. The
 result equals summarize_many over the merged full conversations.
+
+The digest reads the rows sampling.counted_turns admits, as every other
+preview path does. A NULL conv_id is one conversation, as in the preview
+engine: it sorts first when the conversations are picked, and its
+section is `null`, rendered first.
 """
 
 from __future__ import annotations
@@ -26,22 +31,25 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.api import array_cap, summarize_many
 from ..kernel.arena import build_conversation_arena
-from .sampling import default_cap, head_cap, tail_cap
+from .sampling import counted_turns, default_cap, head_cap, tail_cap
 
 _REDUCERS = {"balanced": default_cap, "head": head_cap, "tail": tail_cap}
 
+# conversations in one digest: the first ones by conv_id
+MAX_CONVERSATIONS = 8
+
 
 def corpus_digest(df: DataFrame, *, global_budget: int = 4000,
-                  max_conversations: int = 64,
                   style: str = "default", skew: str = "balanced") -> str:
     """DataFrame[transcript schema] -> one budgeted digest string."""
     reduce = _REDUCERS.get(skew.lower())
     if reduce is None:
         raise ValueError(
             f"unknown skew: {skew} (expected 'balanced' | 'head' | 'tail')")
+    df = counted_turns(df)
     n_conv = df.select("conv_id").distinct().limit(
-        max_conversations + 1).count()
-    take = min(n_conv, max_conversations)
+        MAX_CONVERSATIONS + 1).count()
+    take = min(n_conv, MAX_CONVERSATIONS)
     if take == 0:
         return ""
     conv_ids = [r["conv_id"] for r in
@@ -49,7 +57,11 @@ def corpus_digest(df: DataFrame, *, global_budget: int = 4000,
                   .limit(take).collect()]
     # summarize_many's per-input cap for `take` inputs
     cap = array_cap(global_budget // take)
-    picked = df.where(F.col("conv_id").isin(conv_ids))
+    # null-safe: isin never matches the NULL conversation
+    match = F.col("conv_id").isin([c for c in conv_ids if c is not None])
+    if None in conv_ids:
+        match = match | F.col("conv_id").isNull()
+    picked = df.where(match)
     totals = dict(picked.groupBy("conv_id")
                   .agg(F.countDistinct("turn_idx")).collect())
     rows = (reduce(picked, cap)

@@ -155,42 +155,42 @@ def text_to_wav(text: str) -> bytes:
     return wav_encode(samples, WAV_RATE)
 
 
-def synth_ppm_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Deterministic REAL image payloads: each row's text becomes a 16x16
+def synth_ppm_media(df: DataFrame) -> DataFrame:
+    """Deterministic REAL image payloads: each `text` becomes a 16x16
     binary PPM (P6) whose raster repeats the text's printable-ASCII bytes.
     The geometry is fixed so a SQL oracle can reproduce the exact bytes."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [text_to_ppm(t) for t in pdf[text_col]]
+            payloads = [text_to_ppm(t) for t in pdf["text"]]
             yield pd.DataFrame({
-                "media_id": pdf[id_col],
+                "media_id": pdf["doc_id"],
                 "kind": "image",
                 "payload": payloads,
                 "width": PPM_W, "height": PPM_H,
                 "sample_rate": 0,
             })
 
-    return df.select(id_col, text_col).mapInPandas(fn, schema=MEDIA_SCHEMA)
+    return df.select("doc_id", "text").mapInPandas(fn, schema=MEDIA_SCHEMA)
 
 
-def synth_wav_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Deterministic REAL audio payloads: each row's text becomes a
+def synth_wav_media(df: DataFrame) -> DataFrame:
+    """Deterministic REAL audio payloads: each `text` becomes a
     1024-sample mono PCM16 WAV via text_to_wav. The geometry is fixed so
     a SQL oracle can reproduce the exact samples."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [text_to_wav(t) for t in pdf[text_col]]
+            payloads = [text_to_wav(t) for t in pdf["text"]]
             yield pd.DataFrame({
-                "media_id": pdf[id_col],
+                "media_id": pdf["doc_id"],
                 "kind": "audio",
                 "payload": payloads,
                 "width": 0, "height": 0,
                 "sample_rate": WAV_RATE,
             })
 
-    return df.select(id_col, text_col).mapInPandas(fn, schema=MEDIA_SCHEMA)
+    return df.select("doc_id", "text").mapInPandas(fn, schema=MEDIA_SCHEMA)
 
 
 AUDIO_STATS_SCHEMA = ("media_id bigint, n_bytes int, sample_rate int, "

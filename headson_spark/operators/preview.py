@@ -2,6 +2,8 @@
 
 Spark plan (scale-first, one shuffle total):
 
+    filter(counted_turns)                 -- the row contract: 0 <= turn_idx
+                                          -- < KEPT_POSITIONS_MAX
     repartition(N, xxhash64(conv_id))     -- single hash shuffle with an
                                           -- explicit width (REPARTITION_BY_NUM:
                                           -- AQE neither coalesces nor splits it)
@@ -19,6 +21,12 @@ conversation (millions of tiny groups at 100 TB) while computing the exact
 same per-conversation result: rows of one conversation are contiguous after
 the sort, and the mapInPandas generator carries the trailing partial
 conversation across Arrow batch boundaries.
+
+Every plan here (full, pushdown, and the statistic that chooses between
+them) reads the rows `sampling.counted_turns` admits and no others, as the
+stream and the window previews do: a row at a NULL, negative or
+>= KEPT_POSITIONS_MAX turn_idx is neither shown nor counted in n_turns or
+n_chars.
 
 Inside the kernel:
 - duplicate (conv_id, turn_idx) turns merge last-write-wins by ts (the
@@ -38,7 +46,7 @@ from typing import Iterator
 import pandas as pd
 
 from ..kernel.api import array_cap, make_configs, render_conversation
-from .sampling import kept_position_filter
+from .sampling import counted_turns, kept_position_filter
 
 log = logging.getLogger("headson_spark.preview")
 
@@ -177,21 +185,11 @@ def _kernel_width(df) -> int:
     return df.sparkSession.sparkContext.defaultParallelism
 
 
-def _dense_turns(df):
-    """The rows both plans preview: those at turn_idx >= 0. A negative or
-    NULL turn_idx breaks the dense-position contract (a negative one
-    would share the pushdown sentinel's turn_idx = -1 sort slot), so
-    such rows are dropped before any count, and n_turns and n_chars
-    leave them out under either plan."""
-    from pyspark.sql import functions as F
-    return df.filter(F.col("turn_idx") >= 0)
-
-
 def _with_sentinels(kept, totals):
     """Kept rows unioned with one sentinel row per conversation. Kept rows
     carry NULL totals unless they already carry them (the tail join); the
     kernel reads the totals off each conversation's first row only, the
-    sentinel, which sorts first because _dense_turns left no row at a
+    sentinel, which sorts first because counted_turns left no row at a
     negative turn_idx."""
     from pyspark.sql import functions as F
     carried = ("_total", "_chars") if "_total" in kept.columns else (
@@ -228,7 +226,7 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
 
     cap = array_cap(budget)
     keep = kept_position_filter(skew, cap)
-    df = _dense_turns(df)
+    df = counted_turns(df)
     totals = _conv_totals(df)
     if keep is None:
         # The join and the sentinels read one totals plan, so Spark
@@ -319,10 +317,11 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
     avg() over a boolean of the single turn_idx column (column-pruned at
     the scan — far cheaper than the pipeline it steers); correctly
     row-weighted, so one mega-conversation is enough to tip the decision
-    while a short-conversation bulk keeps the full plan. For tail skew,
-    `turn_idx < cap` counts exactly min(cap, len) rows per conversation —
-    the same count the last-cap keep-set retains — so the statistic is
-    exact for all three skews. Pushdown is chosen when more than
+    while a short-conversation bulk keeps the full plan. The average
+    runs over the counted_turns rows, the rows either plan shuffles.
+    For tail skew, `turn_idx < cap` counts exactly min(cap, len) rows
+    per conversation — the same count the last-cap keep-set retains —
+    so the statistic is exact for all three skews. Pushdown is chosen when more than
     PUSHDOWN_MIN_PRUNE of the rows would be pruned. At deployment scale
     this comes from a maintained table-stats aggregate rather than a
     per-query scan."""
@@ -340,7 +339,8 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
             hit = _PLAN_DECISIONS[key]
             return PlanChoice(hit, hit.kept_frac, memo=True)
     keep = kept_position_filter(shape, cap)
-    kept_frac = df.agg(F.avg(keep.cast("double"))).first()[0]
+    kept_frac = counted_turns(df).agg(
+        F.avg(keep.cast("double"))).first()[0]
     if kept_frac is None:
         plan = PlanChoice("full", None)
     else:
@@ -404,4 +404,4 @@ def conversation_previews_full(df, *, budget: int = 500,
     """Full-shuffle preview pipeline: one exchange carrying every turn,
     sampling inside the kernel. The plan conversation_previews picks when
     pruning would not pay for the pushdown plan's totals pre-scan."""
-    return _kernel_step(_dense_turns(df), budget, style, skew, fmt)
+    return _kernel_step(counted_turns(df), budget, style, skew, fmt)

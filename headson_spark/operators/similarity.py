@@ -19,9 +19,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..kernel.arena import mix64
 
 
-def _dot_expr(vec_col: str, lit_vec: list[float]) -> str:
+def _dot_expr(lit_vec: list[float]) -> str:
     arr = "array(" + ",".join(f"cast({x!r} as double)" for x in lit_vec) + ")"
-    return (f"aggregate(zip_with({vec_col}, {arr}, (a, b) -> "
+    return (f"aggregate(zip_with(embedding, {arr}, (a, b) -> "
             f"cast(a as double) * b), 0D, (acc, x) -> acc + x)")
 
 
@@ -32,7 +32,7 @@ def _norm_expr(vec_col: str) -> str:
 
 def cosine_scores(df: DataFrame, query_vec: list[float]) -> DataFrame:
     qnorm = sum(float(x) * float(x) for x in query_vec) ** 0.5
-    dot = _dot_expr("embedding", query_vec)
+    dot = _dot_expr(query_vec)
     return df.select(
         F.col("vec_id"),
         F.round(F.expr(f"({dot}) / ({_norm_expr('embedding')} * {qnorm!r})"),
@@ -59,10 +59,10 @@ def hyperplanes(dim: int, n_planes: int) -> list[list[int]]:
             for j in range(n_planes)]
 
 
-def lsh_signature_expr(vec_col: str, planes: list[list[int]]) -> str:
+def lsh_signature_expr(planes: list[list[int]]) -> str:
     terms = []
     for p, plane in enumerate(planes):
-        dot = _dot_expr(vec_col, [float(x) for x in plane])
+        dot = _dot_expr([float(x) for x in plane])
         terms.append(f"(case when ({dot}) > 0D then {1 << p}L else 0L end)")
     return " + ".join(terms)
 
@@ -72,7 +72,7 @@ def lsh_buckets(df: DataFrame, dim: int = 64, n_planes: int = 8
     planes = hyperplanes(dim, n_planes)
     return df.select(
         F.col("vec_id"),
-        F.expr(lsh_signature_expr("embedding", planes)).alias("bucket"))
+        F.expr(lsh_signature_expr(planes)).alias("bucket"))
 
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
@@ -102,8 +102,7 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     for band in range(n_bands):
         band_planes = planes[band * n_planes:(band + 1) * n_planes]
         b = b.withColumn(f"_band{band}",
-                         F.expr(lsh_signature_expr("embedding",
-                                                   band_planes)))
+                         F.expr(lsh_signature_expr(band_planes)))
     # one row per (vector, band): candidates collide on (band, bucket)
     bands_arr = F.array(*[
         F.struct(F.lit(i).alias("band"),
@@ -179,8 +178,9 @@ def _nominate_pairs(ids: list, vecs, margin: float) -> tuple[list, list]:
     return out_a, out_b
 
 
-def _l2sq_expr(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
+def _l2sq_expr(b: str) -> str:
+    """Squared L2 distance from a centroid's `_cvec` to `b`."""
+    return (f"aggregate(zip_with(_cvec, {b}, (x, y) -> "
             f"(cast(x as double) - cast(y as double)) * "
             f"(cast(x as double) - cast(y as double))), 0D, "
             f"(acc, v) -> acc + v)")
@@ -348,7 +348,7 @@ def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
     arr = ("array(" + ",".join(f"cast({float(x)!r} as double)"
                                for x in query_vec) + ")")
     cents = ivf_centroids(df, stride)
-    probes = (cents.withColumn("_qd", F.expr(_l2sq_expr("_cvec", arr)))
+    probes = (cents.withColumn("_qd", F.expr(_l2sq_expr(arr)))
               .orderBy("_qd", "centroid_id")
               .limit(n_probe)
               .select("centroid_id"))

@@ -70,17 +70,21 @@ def _sentence(tag_ord: int, conv: int, turn: int,
     return " ".join(ws)
 
 
-def _lorem(n_chars: int, tag_ord: int, conv: int, turn: int) -> str:
+# text length of a "long" fixture turn
+LOREM_CHARS = 2000
+
+
+def _lorem(tag_ord: int, conv: int, turn: int) -> str:
     parts = []
     total = 0
     j = 0
-    while total < n_chars:
+    while total < LOREM_CHARS:
         hj = _h(tag_ord, conv, turn, salt=j + 1)
         w = _WORDS[hj % len(_WORDS)]
         parts.append(w)
         total += len(w) + 1
         j += 1
-    return " ".join(parts)[:n_chars]
+    return " ".join(parts)[:LOREM_CHARS]
 
 
 # tag -> (ordinal, conversations at sf 0.01, turns per conv)
@@ -101,7 +105,7 @@ def _text_for(tag: str, tag_ord: int, conv: int, turn: int) -> str:
     if tag == "plain" or tag == "bulk":
         return _sentence(tag_ord, conv, turn)
     if tag == "long":
-        return _lorem(2000, tag_ord, conv, turn)
+        return _lorem(tag_ord, conv, turn)
     if tag == "uni":
         base = _UNI_SNIPPETS[_h(tag_ord, conv, turn) % len(_UNI_SNIPPETS)]
         return f"{base} t{turn}"

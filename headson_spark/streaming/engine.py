@@ -3,6 +3,7 @@
 Pipeline:
 
     readStream (file/rate/Iceberg source)
+      -> filter(counted_turns)     -- 0 <= turn_idx < KEPT_POSITIONS_MAX
       -> withWatermark("ts", late_gap)
       -> groupBy(pmod(xxhash64(conv_id), B) | conv_id)
            .applyInPandasWithState(merge+preview kernel)
@@ -16,10 +17,17 @@ allocation. Conversation sessions close via event-time timeout
 declarative session_window cannot hold arbitrary state). Checkpointed and resumable; replays are idempotent
 because the sink MERGEs on conv_id and skips already-committed batch ids.
 
+Row contract: the stream admits the rows `operators.sampling.counted_turns`
+admits, in the same plan ahead of the state operator, as the batch plans
+and the window previews do, so its final rows equal the batch rows on
+every input. A NULL, negative or >= KEPT_POSITIONS_MAX turn_idx never
+reaches the state function.
+
 Scale notes:
 - state per conversation is O(array_cap) turn contents plus a
-  1-bit-per-turn seen-bitmap, for every skew; the watermark bounds how
-  long state lives
+  1-bit-per-turn seen-bitmap, for every skew; the row contract bounds
+  the bitmap at KEPT_POSITIONS_MAX bits (128 KB), and the watermark
+  bounds how long state lives
 - conv_id skew: the state shuffle hashes conv_id; a hot conversation
   ships every delivered row to one task, but its state and render stay
   O(array_cap) turns
@@ -38,9 +46,6 @@ from ..kernel.arena import KeepRule
 
 OUTPUT_SCHEMA = ("conv_id string, preview string, n_turns int, "
                  "last_ts timestamp, final boolean")
-# seen-bitmap / turn-map bound per conversation: rows at turn_idx outside
-# [0, MAX_TURNS_IN_STATE) are dropped (see _st_merge_cols)
-MAX_TURNS_IN_STATE = 100_000
 
 
 # --------------------------------------------------------------------------
@@ -110,22 +115,13 @@ def _st_new() -> dict:
 
 def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list) -> bool:
     """LWW-merge pre-extracted column slices into bounded state; True if
-    any content or count changed.
-
-    MAX_TURNS_IN_STATE guards the seen-bitmap against contract-violating
-    rows: the bitmap is O(max turn_idx / 8) bytes of per-conversation
-    state, so a poisoned turn_idx of e.g. 2^31 would balloon state to
-    256 MB and a negative one would corrupt the bitmap via Python
-    negative indexing. Rows outside [0, MAX_TURNS_IN_STATE) are dropped
-    (same SAFETY_CAP posture as the reference, scoring.rs:3) rather than
-    crashing the query."""
+    any content or count changed. Every turn_idx is a counted_turns
+    position (streaming_previews filters ahead of the state operator)."""
     kept = st["k"]
     bits = st["b"]
     changed = False
     for t_idx, role, text, tool, ts_us in zip(
             tidxs, roles, texts, tools, ts_list):
-        if t_idx < 0 or t_idx >= MAX_TURNS_IN_STATE:
-            continue
         byte = t_idx // 8
         if byte >= len(bits) or not (bits[byte] >> (t_idx % 8)) & 1:
             _bits_set(bits, t_idx)
@@ -309,9 +305,11 @@ def streaming_previews(stream_df, *, budget: int = 500,
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from ..operators.sampling import counted_turns
+
     fn = make_bucketed_preview_fn(budget, style, skew, fmt, session_gap_ms,
                                   emit_policy=emit_policy)
-    keyed = stream_df.withWatermark("ts", watermark)
+    keyed = counted_turns(stream_df).withWatermark("ts", watermark)
     if n_buckets:
         keyed = (keyed.withColumn(
             "_bucket", F.pmod(F.xxhash64("conv_id"),

@@ -16,6 +16,11 @@ one window holds O(cap) structs in the aggregation buffer instead of
 same groupBy (a plain Filter below the agg would lose them), so
 `n_turns` stays the exact delivered count.
 
+Row contract (the batch plans' and the session engine's): only the rows
+`operators.sampling.counted_turns` admits, 0 <= turn_idx <
+KEPT_POSITIONS_MAX, enter the window aggregate, so a NULL, negative or
+out-of-range turn_idx is neither rendered nor counted in n_turns.
+
 Sampling position contract (same as the batch pushdown,
 operators/preview.py): turn_idx is the dense 0-based CONVERSATION
 position, and the keep decision is a function of that position — the
@@ -94,11 +99,10 @@ def rolling_previews(stream_df, *, window: str = "5 minutes",
     set range (routine for sliding windows that open mid-conversation)
     renders a (near-)empty preview while its n_turns stays > 0 — by
     design, the preview shows the sampler's keep-set, nothing else.
-    Positions >= 1<<20 (default_kept_positions' max_len) are never
-    kept for the same reason. Where whole-conversation previews per
-    window matter, use the stateful session engine instead.
+    Where whole-conversation previews per window matter, use the
+    stateful session engine instead.
     """
-    from ..operators.sampling import kept_position_filter
+    from ..operators.sampling import counted_turns, kept_position_filter
 
     cap = array_cap(budget)
     keep = kept_position_filter(skew, cap)
@@ -112,7 +116,7 @@ def rolling_previews(stream_df, *, window: str = "5 minutes",
     render = make_presampled_render_udf(budget=budget, style=style,
                                         skew=skew)
     turn_struct = F.struct("turn_idx", "role", "text", "tool", "ts")
-    return (stream_df
+    return (counted_turns(stream_df)
             .withWatermark("ts", watermark)
             .groupBy(F.col("conv_id"), win.alias("win"))
             .agg(

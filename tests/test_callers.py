@@ -1,13 +1,16 @@
 """Caller census: every top-level function or class under `headson_spark/`
 is named somewhere in the caller set (the library itself, the Spark entry
 point, the scripts and the benchmarks), outside its own definition, and
-every parameter with a default is set by some call in that set.
+every parameter with a default is set by some call in that set, and
+no parameter is given one and the same literal by every call in it.
 
 Tests are not callers: a definition that only tests reach is a capability
 nothing uses, and is deleted rather than kept. A name counts when it
 appears as a `Name`, an `Attribute` or an imported name (`from m import f`
 and `from m import f as g` both count `f`). A parameter that no caller
-sets has one value in use, so it is a constant rather than an option.
+sets, or that every call gives the same literal (an omitted argument
+giving its default), has one value in use, so it is a constant rather
+than an option.
 Only `ast` is used; no Spark.
 """
 
@@ -39,10 +42,12 @@ ALLOWLIST = {
 
 # Parameters named after the reference binding's preview arguments
 # (`summarize(text, *, format, style, input_format, character_budget,
-# skew)` and the CLI's string cap and per-input budget): every preview
-# entry point takes them, whether or not a caller sets them.
+# skew)` and the CLI's string cap, per-input budget and fileset global
+# budget): every preview entry point takes them, whatever its callers
+# pass.
 REFERENCE_ARGS = {"budget", "character_budget", "style", "skew", "format",
-                  "fmt", "input_format", "string_cap", "per_input_budget"}
+                  "fmt", "input_format", "string_cap", "per_input_budget",
+                  "global_budget"}
 
 # (function, parameter) pairs kept although no call in the caller set
 # passes them, each with its reason. The parameters of a function on
@@ -51,6 +56,20 @@ PARAM_ALLOWLIST = {
     ("conversation_previews", "pushdown"):
         "scripts/scaling_bench.py sets it inside its worker source string",
     ("ensure_transcripts", "base_dir"): "a path, a deployment setting",
+}
+
+# (function, parameter) pairs kept although every call in the caller set
+# gives them the same literal, each with its reason.
+LITERAL_ALLOWLIST = {
+    ("build_order", "lazy"):
+        "perfbench/tracing.py passes it, and perfbench/ is the "
+        "benchmark's own code",
+    ("top_terms", "k"):
+        "a registry size the top_terms oracle SQL shares",
+    ("embedding_near_dup_pairs", "threshold"):
+        "a registry size the emb_near_dup oracle SQL shares",
+    ("embedding_near_dup_pairs", "n_bands"):
+        "a registry size the emb_near_dup oracle SQL shares",
 }
 
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
@@ -217,3 +236,72 @@ def test_allowlisted_parameters_exist():
     have = {(name, p) for _, name, _, p in defaulted_parameters()}
     gone = sorted(set(PARAM_ALLOWLIST) - have)
     assert not gone, f"allowlisted but no longer a defaulted parameter: {gone}"
+
+
+def _parameters(fn, is_method: bool):
+    """(position, name, default node or None) of each named parameter of
+    `fn`; a keyword-only one has no position, and a method's positions
+    start after self."""
+    a = fn.args
+    pos = (a.posonlyargs + a.args)[1 if is_method else 0:]
+    defaults = [None] * (len(pos) - len(a.defaults)) + list(a.defaults)
+    return ([(i, p.arg, d) for i, (p, d) in enumerate(zip(pos, defaults))]
+            + [(None, p.arg, d)
+               for p, d in zip(a.kwonlyargs, a.kw_defaults)])
+
+
+def _literal(node):
+    """A hashable form of `node` when it is a literal, else None."""
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError,
+            RecursionError):
+        return None
+    return (type(value).__name__, repr(value))
+
+
+def _given(call, position: int | None, param: str, default):
+    """The literal `call` gives `param`, or None when it gives a
+    non-literal, passes `*args` / `**kwargs`, or omits a parameter
+    without a literal default."""
+    if any(isinstance(x, ast.Starred) for x in call.args) or any(
+            k.arg is None for k in call.keywords):
+        return None
+    for k in call.keywords:
+        if k.arg == param:
+            return _literal(k.value)
+    if position is not None and len(call.args) > position:
+        return _literal(call.args[position])
+    return None if default is None else _literal(default)
+
+
+def one_literal_parameters() -> list[str]:
+    calls = _calls()
+    out = []
+    for path, name, fn, is_method in _library_functions():
+        if name in ALLOWLIST:
+            continue
+        for i, p, default in _parameters(fn, is_method):
+            if (p in REFERENCE_ARGS or (name, p) in PARAM_ALLOWLIST
+                    or (name, p) in LITERAL_ALLOWLIST):
+                continue
+            given = {_given(c, i, p, default) for c in calls.get(name, ())}
+            if len(given) == 1 and None not in given:
+                out.append(f"{path.relative_to(ROOT)}:{fn.lineno} "
+                           f"{name}({p})")
+    return sorted(out)
+
+
+def test_no_parameter_has_one_literal_in_use():
+    one = one_literal_parameters()
+    assert not one, (
+        "parameters every call in the caller set gives the same literal "
+        "(make each a constant, or add it to LITERAL_ALLOWLIST with a "
+        "reason): " + ", ".join(one))
+
+
+def test_literal_allowlisted_parameters_exist():
+    have = {(name, p) for _, name, fn, is_method in _library_functions()
+            for _, p, _ in _parameters(fn, is_method)}
+    gone = sorted(set(LITERAL_ALLOWLIST) - have)
+    assert not gone, f"allowlisted but no longer a parameter: {gone}"

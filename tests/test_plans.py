@@ -227,7 +227,7 @@ def test_ivf_assign_numpy_matches_catalyst_fold(spark):
     got = {r["vec_id"]: r["centroid_id"]
            for r in ivf_assign(emb, stride=32).collect()}
     cents = F.broadcast(ivf_centroids(emb, 32))
-    d2 = _l2sq_expr("embedding", "_cvec")
+    d2 = _l2sq_expr("embedding")
     ref = (emb.crossJoin(cents)
            .withColumn("_d2", F.expr(d2))
            .groupBy("vec_id")

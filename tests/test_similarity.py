@@ -91,7 +91,7 @@ def test_single_band_unchanged_default(spark, emb_df):
                emb_df, threshold=0.999, dim=DIM, n_planes=8).collect()}
     # reconstruct the legacy plan: single signature over the same planes
     planes = hyperplanes(DIM, 8)
-    sig = F.expr(lsh_signature_expr("embedding", planes))
+    sig = F.expr(lsh_signature_expr(planes))
     b = emb_df.select("vec_id", "embedding", sig.alias("bucket"))
     dot = ("aggregate(zip_with(a.embedding, b.embedding, (x, y) -> "
            "cast(x as double) * cast(y as double)), 0D, "
@@ -117,8 +117,7 @@ def test_banding_splits_hot_bucket(spark, emb_df):
     the in-bucket join width."""
     clump = emb_df.where("vec_id like 'clump%'")
     for planes_n, max_width in ((2, 60), (10, 60)):
-        sig = F.expr(lsh_signature_expr(
-            "embedding", hyperplanes(DIM, planes_n)))
+        sig = F.expr(lsh_signature_expr(hyperplanes(DIM, planes_n)))
         widths = (clump.select(sig.alias("bucket"))
                   .groupBy("bucket").count().agg(F.max("count")).first()[0])
         assert widths <= max_width
@@ -129,8 +128,7 @@ def test_banding_splits_hot_bucket(spark, emb_df):
     bulk = emb_df.where("vec_id like 'v%'")
 
     def max_width(planes_n):
-        sig = F.expr(lsh_signature_expr("embedding",
-                                        hyperplanes(DIM, planes_n)))
+        sig = F.expr(lsh_signature_expr(hyperplanes(DIM, planes_n)))
         return (bulk.select(sig.alias("bucket"))
                 .groupBy("bucket").count().agg(F.max("count")).first()[0])
 

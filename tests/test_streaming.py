@@ -389,24 +389,36 @@ def test_null_conv_id_streams_like_batch(spark, tmp_path):
     assert got == exp
 
 
-def test_merge_rows_rejects_contract_violating_turn_idx():
-    """Bitmap state guard: negative turn_idx must not corrupt the bitmap
-    via Python negative indexing and a huge turn_idx must not balloon
-    state; both rows are dropped, valid rows still merge."""
+def test_merge_rows_rejects_contract_violating_turn_idx(spark):
+    """The stream's row filter: counted_turns, which streaming_previews
+    applies ahead of the state operator, drops NULL, negative and
+    out-of-range turn_idx rows, so the bitmap state never sees one (a
+    NULL would crash the merge, a negative one would corrupt the bitmap
+    through Python negative indexing, a huge one would balloon it); the
+    admitted rows still merge last-write-wins."""
+    from headson_spark.kernel.arena import KEPT_POSITIONS_MAX
+    from headson_spark.operators.sampling import counted_turns
     from headson_spark.streaming.engine import (_st_merge_cols, _st_new,
                                                 _bits_ranks)
-    st = _st_new()
     day_us = 86_400_000_000
-    changed = _st_merge_cols(
-        st, [0, -5, 1, 2 ** 31 - 1, 1], ["user"] * 5,
-        ["ok0", "poison-neg", "ok1", "poison-huge", "ok1-v2"], [""] * 5,
-        [day_us] * 4 + [2 * day_us])
-    assert changed
+    rows = [(0, "ok0", day_us), (-5, "poison-neg", day_us),
+            (1, "ok1", day_us), (2 ** 31 - 1, "poison-huge", day_us),
+            (None, "poison-null", day_us),
+            (KEPT_POSITIONS_MAX, "poison-bound", day_us),
+            (KEPT_POSITIONS_MAX - 1, "ok-last", day_us),
+            (1, "ok1-v2", 2 * day_us)]
+    df = spark.createDataFrame(rows, "turn_idx int, text string, ts long")
+    kept = counted_turns(df).collect()  # in input order
+    st = _st_new()
+    assert _st_merge_cols(
+        st, [r["turn_idx"] for r in kept], ["user"] * len(kept),
+        [r["text"] for r in kept], [""] * len(kept),
+        [r["ts"] for r in kept])
     total, _ = _bits_ranks(st["b"])
-    assert total == 2  # only turns 0 and 1 registered
-    assert set(st["k"]) == {"0", "1"}
+    assert total == 3  # turns 0, 1 and KEPT_POSITIONS_MAX - 1
+    assert set(st["k"]) == {"0", "1", str(KEPT_POSITIONS_MAX - 1)}
     assert st["k"]["1"][1] == "ok1-v2"  # LWW still applied
-    assert len(st["b"]) <= 100_000 // 8 + 1
+    assert len(st["b"]) <= KEPT_POSITIONS_MAX // 8
 
 
 def test_on_close_policy_resumes_from_checkpoint(spark, tmp_path):
