@@ -321,10 +321,10 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
     runs over the counted_turns rows, the rows either plan shuffles.
     For tail skew, `turn_idx < cap` counts exactly min(cap, len) rows
     per conversation — the same count the last-cap keep-set retains —
-    so the statistic is exact for all three skews. Pushdown is chosen when more than
-    PUSHDOWN_MIN_PRUNE of the rows would be pruned. At deployment scale
-    this comes from a maintained table-stats aggregate rather than a
-    per-query scan."""
+    so the statistic is exact for all three skews. Pushdown is chosen
+    when more than PUSHDOWN_MIN_PRUNE of the rows would be pruned. At
+    deployment scale this comes from a maintained table-stats aggregate
+    rather than a per-query scan."""
     from pyspark.sql import functions as F
     cap = array_cap(budget)
     shape = "head" if skew.lower() in ("head", "tail") else "balanced"

@@ -2,9 +2,10 @@
 
 Where the session-window previews live inside applyInPandasWithState
 (engine.py), the rolling variants are pure declarative streaming
-aggregations: watermark -> window() groupBy -> collect turns -> one
-Arrow-vectorized render UDF over the aggregated struct array. Works in
-append mode (window closes at watermark), so any sink supports it.
+aggregations: row filter -> watermark -> window() groupBy -> collect
+turns -> one Arrow-vectorized render UDF over the aggregated struct
+array. Works in append mode (window closes at watermark), so any sink
+supports it.
 
 Bounded-state design (the batch pipeline's limit pushdown, rolling
 form): the sampler keep-set predicate is evaluated BELOW the window
@@ -12,9 +13,9 @@ aggregation — `collect_list(CASE WHEN keep THEN struct END)` buffers
 only keep-set turns (collect_list skips NULL inputs during the partial,
 map-side aggregation), so a mega-conversation delivering 50k turns into
 one window holds O(cap) structs in the aggregation buffer instead of
-50k. Delivered-count and max-turn totals aggregate over ALL rows in the
-same groupBy (a plain Filter below the agg would lose them), so
-`n_turns` stays the exact delivered count.
+50k. Delivered-count and max-turn totals aggregate over every admitted
+row in the same groupBy (a keep-set Filter below the agg would lose
+them), so `n_turns` stays the exact delivered count.
 
 Row contract (the batch plans' and the session engine's): only the rows
 `operators.sampling.counted_turns` admits, 0 <= turn_idx <

@@ -167,16 +167,16 @@ def _library_functions():
                         yield path, name, m, not static
 
 
-def _defaulted(fn, is_method: bool) -> list[tuple[int | None, str]]:
-    """(position, name) of each parameter of `fn` with a default; a
-    keyword-only one has no position, and a method's positions start
-    after self."""
+def _parameters(fn, is_method: bool):
+    """(position, name, default node or None) of each named parameter of
+    `fn`; a keyword-only one has no position, and a method's positions
+    start after self."""
     a = fn.args
     pos = (a.posonlyargs + a.args)[1 if is_method else 0:]
-    first = len(pos) - len(a.defaults)
-    return ([(i, p.arg) for i, p in enumerate(pos) if i >= first]
-            + [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults)
-               if d is not None])
+    defaults = [None] * (len(pos) - len(a.defaults)) + list(a.defaults)
+    return ([(i, p.arg, d) for i, (p, d) in enumerate(zip(pos, defaults))]
+            + [(None, p.arg, d)
+               for p, d in zip(a.kwonlyargs, a.kw_defaults)])
 
 
 def _calls() -> dict[str, list]:
@@ -209,7 +209,7 @@ def defaulted_parameters() -> list[tuple[str, str, int | None, str]]:
     with a default, over the census's functions."""
     return [(f"{path.relative_to(ROOT)}:{fn.lineno}", name, i, p)
             for path, name, fn, is_method in _library_functions()
-            for i, p in _defaulted(fn, is_method)]
+            for i, p, d in _parameters(fn, is_method) if d is not None]
 
 
 def unset_parameters() -> list[str]:
@@ -236,18 +236,6 @@ def test_allowlisted_parameters_exist():
     have = {(name, p) for _, name, _, p in defaulted_parameters()}
     gone = sorted(set(PARAM_ALLOWLIST) - have)
     assert not gone, f"allowlisted but no longer a defaulted parameter: {gone}"
-
-
-def _parameters(fn, is_method: bool):
-    """(position, name, default node or None) of each named parameter of
-    `fn`; a keyword-only one has no position, and a method's positions
-    start after self."""
-    a = fn.args
-    pos = (a.posonlyargs + a.args)[1 if is_method else 0:]
-    defaults = [None] * (len(pos) - len(a.defaults)) + list(a.defaults)
-    return ([(i, p.arg, d) for i, (p, d) in enumerate(zip(pos, defaults))]
-            + [(None, p.arg, d)
-               for p, d in zip(a.kwonlyargs, a.kw_defaults)])
 
 
 def _literal(node):
