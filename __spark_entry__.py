@@ -641,7 +641,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def corpus_digest_q(spark, sf_dir):
         from headson_spark.operators.digest import corpus_digest
-        d = corpus_digest(_t(spark, sf_dir), global_budget=2000)
+        d = corpus_digest(_t(spark, sf_dir), character_budget=2000)
         return spark.createDataFrame([(d, len(d.encode("utf-8")))],
                                      "digest string, digest_bytes int")
     q["corpus_digest"] = corpus_digest_q

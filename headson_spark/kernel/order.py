@@ -249,12 +249,8 @@ def build_order(a: ar.Arena, max_string_graphemes: int,
                                else len(keys))
         # sort by (key, original key index) — build.rs:228-235; a fileset
         # input named None (a NULL conversation) sorts first as `null`
-        if None in keys:
-            keys = ["null" if k is None else k for k in keys]
-            items = sorted(range(len(keys)), key=lambda i: (
-                an.keys[i] is not None, keys[i], i))
-        else:
-            items = sorted(range(len(keys)), key=lambda i: (keys[i], i))
+        items = sorted(range(len(keys)), key=lambda i: (
+            keys[i] is not None, keys[i] or "", i))
         kids: list[int] = []
         entries: list[tuple[int, int, int]] = []
         score = parent_score + OBJECT_CHILD_BASE_INCREMENT
@@ -265,7 +261,8 @@ def build_order(a: ar.Arena, max_string_graphemes: int,
             cn = nodes[child_arena_id]
             ck = _KIND_FROM_ARENA[cn.kind]
             cval = cn.string_value if ck == K_STRING else cn.token
-            cid = assign(ck, keys[i], cval, pq_id, None)
+            cid = assign(ck, "null" if keys[i] is None else keys[i], cval,
+                         pq_id, None)
             kids.append(cid)
             entries.append((score, cid, child_arena_id))
         po.children[pq_id] = kids

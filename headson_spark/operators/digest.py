@@ -39,7 +39,7 @@ _REDUCERS = {"balanced": default_cap, "head": head_cap, "tail": tail_cap}
 MAX_CONVERSATIONS = 8
 
 
-def corpus_digest(df: DataFrame, *, global_budget: int = 4000,
+def corpus_digest(df: DataFrame, *, character_budget: int = 4000,
                   style: str = "default", skew: str = "balanced") -> str:
     """DataFrame[transcript schema] -> one budgeted digest string."""
     reduce = _REDUCERS.get(skew.lower())
@@ -56,7 +56,7 @@ def corpus_digest(df: DataFrame, *, global_budget: int = 4000,
                 df.select("conv_id").distinct().orderBy("conv_id")
                   .limit(take).collect()]
     # summarize_many's per-input cap for `take` inputs
-    cap = array_cap(global_budget // take)
+    cap = array_cap(character_budget // take)
     # null-safe: isin never matches the NULL conversation
     match = F.col("conv_id").isin([c for c in conv_ids if c is not None])
     if None in conv_ids:
@@ -79,4 +79,4 @@ def corpus_digest(df: DataFrame, *, global_budget: int = 4000,
             pre_sampled_indices=[r["turn_ord"] for r in kept],
             pre_sampled_total=totals.get(cid, 0))))
     return summarize_many(inputs, format="json", style=style, skew=skew,
-                          character_budget=global_budget)
+                          character_budget=character_budget)

@@ -42,12 +42,10 @@ ALLOWLIST = {
 
 # Parameters named after the reference binding's preview arguments
 # (`summarize(text, *, format, style, input_format, character_budget,
-# skew)` and the CLI's string cap, per-input budget and fileset global
-# budget): every preview entry point takes them, whatever its callers
-# pass.
+# skew)` and the CLI's string cap and per-input budget): every preview
+# entry point takes them, whatever its callers pass.
 REFERENCE_ARGS = {"budget", "character_budget", "style", "skew", "format",
-                  "fmt", "input_format", "string_cap", "per_input_budget",
-                  "global_budget"}
+                  "fmt", "input_format", "string_cap", "per_input_budget"}
 
 # (function, parameter) pairs kept although no call in the caller set
 # passes them, each with its reason. The parameters of a function on

@@ -13,7 +13,7 @@ def test_corpus_digest_budget_and_sections(spark, transcripts_path,
     monkeypatch.setattr(digest, "MAX_CONVERSATIONS", 6)
     df = spark.read.parquet(transcripts_path).filter(
         "conv_id like 'cplain%' or conv_id like 'cesc%'")
-    out = corpus_digest(df, global_budget=1500)
+    out = corpus_digest(df, character_budget=1500)
     assert len(out.encode("utf-8")) <= 1500
     assert out.count("==> ") >= 2, out[:200]
 
@@ -25,7 +25,7 @@ def test_corpus_digest_omitted_conversations_marker(spark,
     df = spark.read.parquet(transcripts_path).filter(
         "conv_id like 'cplain%'")
     n = df.select("conv_id").distinct().count()
-    out = corpus_digest(df, global_budget=800, style="default")
+    out = corpus_digest(df, character_budget=800, style="default")
     assert len(out.encode("utf-8")) <= 800
     if n > 3:
         # conversations beyond max_conversations aren't in the fileset:
@@ -64,7 +64,7 @@ def test_corpus_digest_equals_summarize_many(spark, skew):
               for cid in sorted(merged)]
     want = summarize_many(inputs, format="json", style="detailed",
                           skew=skew, character_budget=600)
-    got = corpus_digest(df, global_budget=600, style="detailed", skew=skew)
+    got = corpus_digest(df, character_budget=600, style="detailed", skew=skew)
     assert got == want
 
 
@@ -82,7 +82,7 @@ def test_corpus_digest_null_conv_id(spark):
               "tool string, ts_s long")
         .selectExpr("conv_id", "turn_idx", "role", "text", "tool",
                     "timestamp_seconds(ts_s) as ts"))
-    got = corpus_digest(df, global_budget=600)
+    got = corpus_digest(df, character_budget=600)
     assert got.startswith("==> null <=="), got
     assert got.index("==> a <==") < got.index("==> zed <==")
     turns = {}
