@@ -92,14 +92,13 @@ def _run(a: ar.Arena, cfg: RenderConfig, prio: dict, budget: int) -> str:
 
 
 def render_conversation(roles, texts, tools, cfg: RenderConfig, prio: dict,
-                        budget: int, kept: list[int] | None = None,
-                        total: int | None = None) -> str:
+                        budget: int, *, kept: list[int],
+                        total: int) -> str:
     """Render one conversation {"turns": [{role, text, tool}, ...]} from
-    its column lists. Without `kept` the lists are the whole merged
-    conversation and the sampler runs here; with `kept` they are only the
-    rows at those original positions (the keep-set, filtered upstream)
-    and `total` is the conversation length the omission counts run
-    against."""
+    the column lists of the turns it shows: `kept` holds their positions
+    (turn_idx, ascending) and `total` the conversation's position count,
+    max turn_idx + 1, that the omission counts run against. A position
+    in [0, total) that `kept` lacks renders as omitted."""
     a = ar.build_conversation_arena(roles, texts, tools,
                                     prio["array_max_items"], prio["sampler"],
                                     pre_sampled_indices=kept,

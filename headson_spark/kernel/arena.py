@@ -17,8 +17,9 @@ from __future__ import annotations
 
 import json
 import re
-from bisect import bisect_left
 from dataclasses import dataclass, field
+
+import numpy as np
 
 # NodeKind codes (reference order/types.rs:28-35)
 NULL, BOOL, NUMBER, STRING, ARRAY, OBJECT = 0, 1, 2, 3, 4, 5
@@ -99,33 +100,24 @@ KEPT_POSITIONS_MAX = 1 << 20
 
 
 class KeepRule:
-    """The sampler keep-set as a rule over a turn's rank r (its position
-    among the n turns delivered so far) and its dense index i >= r.
-
-    Balanced and head keep a fixed position set K = K(cap), so rank r is
-    shown iff r in K. Tail keeps the last cap ranks, r >= n - cap. A
-    rank only grows toward i as missing earlier turns arrive, and the
-    count n - r of delivered turns at or after i only grows, so a turn
-    can ever be shown again iff K ∩ [r, i] != ∅ (balanced/head) or
-    n - r <= cap (tail). Everything else is droppable state."""
+    """The sampler keep-set as a rule over a turn's position i (its
+    turn_idx) in a conversation of n positions (max turn_idx + 1; a
+    missing position is omitted). Balanced and head keep a fixed
+    position set K = K(cap), whatever n is; tail keeps the last cap
+    positions, i >= n - cap, and n only grows as turns arrive, so a turn
+    tail no longer shows is never shown again. `shown` works elementwise
+    on numpy arrays."""
 
     def __init__(self, sampler: str, cap: int):
         self.cap = cap
         self.tail = sampler == "tail"
         self.positions = ([] if self.tail else
                           sample_indices(sampler, cap, KEPT_POSITIONS_MAX))
-        self._kept = frozenset(self.positions)
 
-    def shown(self, r: int, n: int) -> bool:
+    def shown(self, i, n):
         if self.tail:
-            return r >= n - self.cap
-        return r in self._kept
-
-    def live(self, r: int, i: int, n: int) -> bool:
-        if self.tail:
-            return n - r <= self.cap
-        j = bisect_left(self.positions, r)
-        return j < len(self.positions) and self.positions[j] <= i
+            return i >= n - self.cap
+        return np.isin(i, self.positions)
 
 
 # --- arena -------------------------------------------------------------------

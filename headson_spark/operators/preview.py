@@ -26,7 +26,10 @@ Every plan here (full, pushdown, and the statistic that chooses between
 them) reads the rows `sampling.counted_turns` admits and no others, as the
 stream and the window previews do: a row at a NULL, negative or
 >= KEPT_POSITIONS_MAX turn_idx is neither shown nor counted in n_turns or
-n_chars.
+n_chars. Every plan numbers turns by position, as every other preview
+path does: n_turns = max(turn_idx) + 1, a turn is shown iff
+kernel.arena.KeepRule.shown(turn_idx, n_turns), and a position with no
+row renders as omitted.
 
 Inside the kernel:
 - duplicate (conv_id, turn_idx) turns merge last-write-wins by ts (the
@@ -46,6 +49,7 @@ from typing import Iterator
 import pandas as pd
 
 from ..kernel.api import array_cap, make_configs, render_conversation
+from ..kernel.arena import KeepRule
 from .sampling import counted_turns, kept_position_filter
 
 log = logging.getLogger("headson_spark.preview")
@@ -59,13 +63,17 @@ def make_preview_fn(budget: int = 500, style: str = "default",
     """Build the mapInPandas kernel closure (pickled to executors), shared
     by the full and the pushdown plans.
 
-    Rows arrive sorted by (conv_id, turn_idx, ts). A conversation with no
-    sentinel row is the whole delivered conversation and is sampled in
-    the kernel (full plan). The pushdown plans add one sentinel row per
-    conversation, recognised by a non-null `_total`, that sorts first
-    (turn_idx = -1, ts NULL); its `_total` / `_chars` carry the
-    pre-filter conversation length and the sum of text lengths over ALL
-    delivered rows, and the other rows are only the sampler keep-set.
+    Rows arrive sorted by (conv_id, turn_idx, ts). A conversation's
+    turn_idx is its position: n_turns is max(turn_idx) + 1, a turn is
+    shown iff KeepRule.shown(turn_idx, n_turns), and a missing position
+    renders as omitted. The pushdown plans add one sentinel row per
+    conversation that sorts first (turn_idx = -1, which counted_turns
+    admits for no data row); its `_total` / `_chars` carry the position
+    count and the sum of text lengths over ALL delivered rows, and the
+    other rows are only the keep-set. Without a sentinel the rows are
+    the whole delivered conversation and n_turns is its last turn_idx
+    + 1. Both forms take the shown rows through one mask per flush and
+    render them through the same pre-sampled call.
 
     n_chars is the text length over the LWW-winning turns, NULL text
     counting 0 (as Spark's sum(length(text)) does). With a sentinel it is
@@ -78,6 +86,7 @@ def make_preview_fn(budget: int = 500, style: str = "default",
     import numpy as np
     cfg, prio, budget = make_configs(format=fmt, style=style,
                                      character_budget=budget, skew=skew)
+    rule = KeepRule(prio["sampler"], prio["array_max_items"])
 
     def flush(pdf: pd.DataFrame) -> pd.DataFrame:
         conv = pdf["conv_id"].to_numpy()
@@ -95,39 +104,38 @@ def make_preview_fn(budget: int = 500, style: str = "default",
             pdf = pdf[keep]
             conv = conv[keep]
             tidx = tidx[keep]
-        roles = pdf["role"].tolist()
-        texts = pdf["text"].tolist()
-        tools = pdf["tool"].tolist()
-        has_totals = "_total" in pdf.columns
-        if has_totals:
-            totals = pdf["_total"].tolist()
-            chars = pdf["_chars"].tolist()
         # conversation boundaries on the sorted conv_id column
         bounds = np.flatnonzero(conv[1:] != conv[:-1]) + 1
         starts = np.concatenate(([0], bounds))
         ends = np.concatenate((bounds, [len(conv)]))
-        out = {"conv_id": [], "preview": [], "n_turns": [],
-               "n_chars": [], "preview_bytes": []}
-        for s, e in zip(starts, ends):
-            cid = conv[s]
-            kept = total = None
-            if has_totals and pd.notna(totals[s]):  # the sentinel
-                total = int(totals[s])
-                n_chars = (int(chars[s]) if pd.notna(chars[s]) else 0) \
-                    - loser_chars.get(cid, 0)
-                s += 1
-                kept = [int(x) for x in tidx[s:e]]
-            else:
-                n_chars = sum(map(len, filter(None, texts[s:e])))
-            preview = render_conversation(roles[s:e], texts[s:e],
-                                          tools[s:e], cfg, prio, budget,
-                                          kept=kept, total=total)
-            out["conv_id"].append(cid)
-            out["preview"].append(preview)
-            out["n_turns"].append(e - s if total is None else total)
-            out["n_chars"].append(n_chars)
-            out["preview_bytes"].append(len(preview.encode("utf-8")))
-        return pd.DataFrame(out)
+        total = tidx[ends - 1].astype(np.int64) + 1
+        chars = np.add.reduceat(np.fromiter(
+            (len(t) if isinstance(t, str) else 0 for t in pdf["text"]),
+            dtype=np.int64, count=len(pdf)), starts)
+        sent = tidx[starts] < 0
+        if sent.any():
+            at = starts[sent]
+            total[sent] = pdf["_total"].to_numpy()[at]
+            chars[sent] = np.nan_to_num(
+                pdf["_chars"].to_numpy(np.float64)[at])
+            for k in np.flatnonzero(sent):
+                chars[k] -= loser_chars.get(conv[starts[k]], 0)
+        rows = np.flatnonzero(
+            (tidx >= 0) & rule.shown(tidx, np.repeat(total, ends - starts)))
+        lo = np.searchsorted(rows, starts).tolist()
+        hi = np.searchsorted(rows, ends).tolist()
+        kept = tidx[rows].tolist()
+        roles = pdf["role"].to_numpy()[rows].tolist()
+        texts = pdf["text"].to_numpy()[rows].tolist()
+        tools = pdf["tool"].to_numpy()[rows].tolist()
+        previews = [render_conversation(roles[a:b], texts[a:b], tools[a:b],
+                                        cfg, prio, budget, kept=kept[a:b],
+                                        total=n)
+                    for a, b, n in zip(lo, hi, total.tolist())]
+        return pd.DataFrame({
+            "conv_id": conv[starts], "preview": previews,
+            "n_turns": total, "n_chars": chars,
+            "preview_bytes": [len(p.encode("utf-8")) for p in previews]})
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # concat(carry, batch) preserves the (conv_id, turn_idx, ts) order
@@ -209,47 +217,52 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
     O(budget/2) turns instead of all of them — the Spark analogue of the
     reference's parse-time limit pushdown, at the shuffle boundary.
 
-    PRECONDITION: turn_idx is the dense 0-based position within the
-    conversation (the transcript schema contract, FIXTURES.md §1) — the
-    keep-sets are position-deterministic functions of the cap, so the
-    filter reproduces the kernel's sampling exactly. Balanced (mix64
-    keep-set) and head (prefix) filter the scan directly. Tail kept-ness
-    depends on the conversation length, so tail joins the per-conversation
-    totals back and keeps `turn_idx >= _total - cap`; the join strategy
-    is left to AQE (no forced broadcast of a per-conversation table; the
-    observed plans are in PLANS.md §1a).
+    The keep-sets are functions of the position turn_idx and the cap
+    (KeepRule.shown), so the filter keeps exactly the rows the kernel
+    would show. Balanced (mix64 keep-set) and head (prefix) filter the
+    scan directly. Tail kept-ness depends on the conversation's position
+    count, so tail joins the per-conversation totals back and keeps
+    `turn_idx >= _total - cap`; the join strategy is left to AQE (no
+    forced broadcast of a per-conversation table; the observed plans are
+    in PLANS.md §1a).
 
-    Per-conversation totals (length + char count) travel as one sentinel
-    row per conversation through the same exchange as the kept rows.
+    Per-conversation totals (position count + char count) travel as one
+    sentinel row per conversation through the same exchange as the kept
+    rows.
     """
-    from pyspark.sql import functions as F
-
-    cap = array_cap(budget)
-    keep = kept_position_filter(skew, cap)
     df = counted_turns(df)
-    totals = _conv_totals(df)
-    if keep is None:
-        # The join and the sentinels read one totals plan, so Spark
-        # aggregates the input once and reuses that exchange: the
-        # null-safe key infers no isnotnull(conv_id) filter into it, and
-        # the kept rows keep both totals, so column pruning leaves it
-        # whole.
-        tot = totals.withColumnRenamed("conv_id", "_tc")
-        kept = (df.join(tot, df["conv_id"].eqNullSafe(tot["_tc"]))
-                  .filter(F.col("turn_idx") >= F.col("_total") - cap)
-                  .drop("_tc"))
-    else:
-        kept = df.filter(keep)
+    totals = conv_totals(df)
+    kept = kept_turns(df, totals, skew, array_cap(budget))
     # Totals ride as sentinel rows through the one exchange; the
-    # rejected totals designs (countDistinct, a totals join) and their
+    # rejected totals designs (a distinct count, a totals join) and their
     # measurements are in PLANS.md §1a.
     rows = _with_sentinels(kept, totals)
     return _kernel_step(rows, budget, style, skew, fmt)
 
 
-def _conv_totals(df):
-    """Per-conversation totals: dense length (max(turn_idx)+1 under the
-    dense contract) and char count over all delivered rows. Both
+def kept_turns(df, totals, skew: str, cap: int):
+    """The rows of `df` the skew's keep rule shows at `cap`, by position
+    (KeepRule.shown): a column filter for balanced and head; for tail,
+    a join with `totals` (conv_totals of df) and
+    `turn_idx >= _total - cap`, the kept rows carrying both totals."""
+    from pyspark.sql import functions as F
+    keep = kept_position_filter(skew, cap)
+    if keep is not None:
+        return df.filter(keep)
+    # The join and the sentinels read one totals plan, so Spark
+    # aggregates the input once and reuses that exchange: the null-safe
+    # key infers no isnotnull(conv_id) filter into it, and the kept rows
+    # keep both totals, so column pruning leaves it whole.
+    tot = totals.withColumnRenamed("conv_id", "_tc")
+    return (df.join(tot, df["conv_id"].eqNullSafe(tot["_tc"]))
+              .filter(F.col("turn_idx") >= F.col("_total") - cap)
+              .drop("_tc"))
+
+
+def conv_totals(df):
+    """Per-conversation totals: the position count max(turn_idx) + 1 (the
+    n_turns of every preview path) and the char count over all delivered
+    rows. Both
     aggregate map-side — one narrow row per conversation per task
     through the exchange."""
     from pyspark.sql import functions as F
@@ -259,7 +272,7 @@ def _conv_totals(df):
 
 
 def _total_sentinels(totals):
-    """_conv_totals rows as sentinel rows in the transcript row shape
+    """conv_totals rows as sentinel rows in the transcript row shape
     (turn_idx = -1 and ts NULL, so each sorts before any data row of its
     conversation)."""
     from pyspark.sql import functions as F
@@ -378,7 +391,8 @@ def conversation_previews(df, *, budget: int = 500, style: str = "default",
     n_chars exactness caveat under auto dispatch: the pushdown plan's
     n_chars is an upper bound when a NON-kept position receives
     duplicate deliveries (see make_preview_fn); the full plan is always
-    exact, and preview/n_turns never differ by plan. Pin pushdown="full"
+    exact, and preview/n_turns never differ by plan: both number turns by
+    position (make_preview_fn). Pin pushdown="full"
     where exact n_chars matters more than the pruned shuffle."""
     if pushdown == "auto":
         plan = choose_preview_plan(df, budget=budget, skew=skew)

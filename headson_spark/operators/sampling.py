@@ -26,19 +26,19 @@ def counted_turns(df: DataFrame) -> DataFrame:
     """The row contract every preview path reads: the rows at
     0 <= turn_idx < KEPT_POSITIONS_MAX, the positions the keep rule can
     show. A NULL turn_idx fails the test too. Batch, stream and window
-    previews apply it before anything else reads the rows, so n_turns,
-    n_chars and the turns shown leave the same rows out on every path,
-    and the stream's per-conversation seen-bitmap stays under
-    KEPT_POSITIONS_MAX bits."""
+    previews and the digest apply it before anything else reads the
+    rows, so n_turns (max(turn_idx) + 1 on every path), n_chars and the
+    turns shown leave the same rows out on every path."""
     t = F.col("turn_idx")
     return df.filter((t >= 0) & (t < KEPT_POSITIONS_MAX))
 
 
 def kept_position_filter(skew: str, cap: int):
-    """The sampler keep-set as a column predicate on the dense position
+    """The sampler keep-set as a column predicate on the position
     `turn_idx`: a prefix for head, K(cap) for balanced. None for tail,
-    whose keep-set depends on the conversation length. The Spark form of
-    kernel.arena.KeepRule.shown, evaluated before any shuffle."""
+    whose keep-set depends on the conversation's position count. The
+    Spark form of kernel.arena.KeepRule.shown, evaluated before any
+    shuffle."""
     skew = skew.lower()
     if skew == "tail":
         return None

@@ -23,11 +23,15 @@ and the window previews do, so its final rows equal the batch rows on
 every input. A NULL, negative or >= KEPT_POSITIONS_MAX turn_idx never
 reaches the state function.
 
+Turn numbering: turn_idx is the position, as on every preview path:
+n_turns = max(turn_idx) + 1, a turn is shown iff
+kernel.arena.KeepRule.shown(turn_idx, n_turns), and a position no row
+delivered renders as omitted.
+
 Scale notes:
-- state per conversation is O(array_cap) turn contents plus a
-  1-bit-per-turn seen-bitmap, for every skew; the row contract bounds
-  the bitmap at KEPT_POSITIONS_MAX bits (128 KB), and the watermark
-  bounds how long state lives
+- state per conversation is at most array_cap turn contents plus one
+  position count, for every skew, and the watermark bounds how long
+  state lives
 - conv_id skew: the state shuffle hashes conv_id; a hot conversation
   ships every delivered row to one task, but its state and render stay
   O(array_cap) turns
@@ -51,80 +55,53 @@ OUTPUT_SCHEMA = ("conv_id string, preview string, n_turns int, "
 # --------------------------------------------------------------------------
 # budget-bounded conversation state
 #
-# A turn's rank (position among delivered turns) only GROWS as earlier
-# late turns arrive, and equals its dense turn_idx once the conversation
-# is complete. kernel.arena.KeepRule says, from the rank, the turn_idx
-# and the delivered total, whether a turn is shown now and whether it can
-# ever be shown again; the state keeps only the contents of turns that
-# can, plus a seen-bitmap (1 bit per turn) that yields ranks and the
-# total. A 50k-turn conversation holds ~250 turn contents + 6.2 KB of
-# bitmap in state instead of ~6 MB of turns re-serialized every
+# A turn's number is its position, turn_idx. A conversation's state holds
+# its position count "len" (max turn_idx + 1, the n_turns every preview
+# path reports), its latest event time "mx", and in "k" the contents of
+# the turns kernel.arena.KeepRule shows at that count. Pruning the rest is
+# exact: for balanced and head a turn's kept-ness does not depend on the
+# count, and for tail a turn it no longer shows is never shown again as
+# the count grows. A 50k-turn conversation holds ~250 turn contents and
+# one integer in state instead of ~6 MB of turns re-serialized every
 # micro-batch, for every skew.
 
 
-def _bits_set(bits: bytearray, idx: int) -> None:
-    need = idx // 8 + 1
-    if len(bits) < need:
-        bits.extend(b"\x00" * (need - len(bits)))
-    bits[idx // 8] |= 1 << (idx % 8)
-
-
-def _bits_ranks(bits: bytes):
-    """(total_set, rank array) — rank[i] = #set bits strictly below i."""
+def _prune(st: dict, rule: KeepRule) -> None:
+    """Drop the turn contents the keep rule does not show."""
     import numpy as np
-    arr = np.unpackbits(np.frombuffer(bytes(bits), dtype=np.uint8),
-                        bitorder="little")
-    cum = np.cumsum(arr)
-    total = int(cum[-1]) if len(cum) else 0
-    return total, cum - arr  # exclusive prefix sum
-
-
-def _prune_kept(st: dict, rule: KeepRule, total: int, rank) -> None:
-    """Drop turn contents the keep rule says can never be shown again."""
     kept = st["k"]
-    for key in [k for k in kept
-                if not rule.live(int(rank[int(k)]), int(k), total)]:
-        del kept[key]
+    keys = list(kept)
+    idx = np.fromiter(map(int, keys), dtype=np.int64, count=len(keys))
+    for j in np.flatnonzero(~rule.shown(idx, st["len"])).tolist():
+        del kept[keys[j]]
 
 
-def _render_bounded(st: dict, rule: KeepRule, total: int, rank, cfg, prio,
-                    budget) -> tuple[str, int]:
-    """(preview, delivered total) from bounded state: the turns whose
-    CURRENT rank the keep rule shows, as the pre-sampled arena
-    (byte-equal to the batch pipeline on the same delivered turns — the
-    pushdown equivalence). Contents the rule no longer shows (e.g. a
-    state written before they were pruned) are skipped."""
-    picked = []
-    for key, v in st["k"].items():
-        r = int(rank[int(key)])
-        if rule.shown(r, total):
-            picked.append((r, v))
-    picked.sort()
-    preview = render_conversation(
+def _render(st: dict, cfg, prio, budget) -> str:
+    """The preview from pruned state: every content it holds, by
+    position, as the pre-sampled arena (byte-equal to the batch kernel
+    on the same delivered turns)."""
+    picked = sorted((int(k), v) for k, v in st["k"].items())
+    return render_conversation(
         [v[0] for _, v in picked], [v[1] for _, v in picked],
         [v[2] for _, v in picked], cfg, prio, budget,
-        kept=[r for r, _ in picked], total=total)
-    return preview, total
+        kept=[i for i, _ in picked], total=st["len"])
 
 
 def _st_new() -> dict:
-    # a state written by an earlier layout may also carry "n" or "v";
-    # both are ignored
-    return {"b": bytearray(), "k": {}, "mx": 0}
+    return {"len": 0, "k": {}, "mx": 0}
 
 
 def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list) -> bool:
     """LWW-merge pre-extracted column slices into bounded state; True if
-    any content or count changed. Every turn_idx is a counted_turns
-    position (streaming_previews filters ahead of the state operator)."""
+    any content or the position count changed. Every turn_idx is a
+    counted_turns position (streaming_previews filters ahead of the
+    state operator)."""
     kept = st["k"]
-    bits = st["b"]
     changed = False
     for t_idx, role, text, tool, ts_us in zip(
             tidxs, roles, texts, tools, ts_list):
-        byte = t_idx // 8
-        if byte >= len(bits) or not (bits[byte] >> (t_idx % 8)) & 1:
-            _bits_set(bits, t_idx)
+        if t_idx >= st["len"]:
+            st["len"] = t_idx + 1
             changed = True
         key = str(t_idx)
         prev = kept.get(key)
@@ -141,9 +118,8 @@ BUCKET_STATE_SCHEMA = "blob binary, n_convs int"
 
 def _bucket_encode(convs: dict) -> bytes:
     """Group state blob: pickle (protocol 5) of {conv_id: state dict}.
-    The bitmap stays raw bytes, and state blobs never leave the state
-    store, so pickle's python-only format is fine here (the SINK stays
-    parquet).
+    State blobs never leave the state store, so pickle's python-only
+    format is fine here (the SINK stays parquet).
 
     SECURITY: pickle.loads executes attacker-chosen code, so a tampered
     checkpoint/state directory compromises the executors on resume.
@@ -156,8 +132,16 @@ def _bucket_encode(convs: dict) -> bytes:
 
 
 def _bucket_decode(blob) -> dict:
+    """Inverse of _bucket_encode. A state written by an earlier layout
+    resumes in place: its seen-bitmap "b" (bit i set = turn i delivered)
+    gives the position count as its highest set bit + 1, and its "n" and
+    "v" fields are ignored."""
     import pickle
-    return pickle.loads(bytes(blob))
+    convs = pickle.loads(bytes(blob))
+    for st in convs.values():
+        if "b" in st:
+            st["len"] = int.from_bytes(st.pop("b"), "little").bit_length()
+    return convs
 
 
 def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
@@ -170,8 +154,8 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
     coalescing, where one group invocation carries ~n_convs/B
     conversations and amortizes the per-group Python/Arrow/state-store
     machinery, at the price of rewriting the bucket's blob whenever any
-    member changes. Every skew keeps budget-bounded state: O(cap) turn
-    contents + a seen-bitmap, pruned and rendered through
+    member changes. Every skew keeps budget-bounded state: at most cap
+    turn contents + the position count, pruned through
     kernel.arena.KeepRule (see the module helpers).
 
     Each conversation's session closes by event-time timeout at its max
@@ -190,9 +174,6 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
     cfg, prio, budget = make_configs(format=fmt, style=style,
                                      character_budget=budget, skew=skew)
     rule = KeepRule(prio["sampler"], prio["array_max_items"])
-
-    def render(st: dict, ranks) -> tuple[str, int]:
-        return _render_bounded(st, rule, *ranks, cfg, prio, budget)
 
     def emit(rows):
         return pd.DataFrame({
@@ -219,8 +200,9 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
             closed, remaining = [], {}
             for cid, st in convs.items():
                 if st["mx"] // 1000 + session_gap_ms <= wm_ms:
-                    closed.append((cid, *render(st, _bits_ranks(st["b"])),
-                                   st["mx"], True))
+                    _prune(st, rule)  # a resumed state may hold more
+                    closed.append((cid, _render(st, cfg, prio, budget),
+                                   st["len"], st["mx"], True))
                 else:
                     remaining[cid] = st
             if remaining:
@@ -267,10 +249,10 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
         # a NULL conv_id is one conversation too; it sorts first
         for cid in sorted(changed, key=lambda c: (c is not None, c)):
             st = convs[cid]
-            ranks = _bits_ranks(st["b"])
-            _prune_kept(st, rule, *ranks)
+            _prune(st, rule)
             if on_change:
-                rows.append((cid, *render(st, ranks), st["mx"], False))
+                rows.append((cid, _render(st, cfg, prio, budget),
+                             st["len"], st["mx"], False))
         state.update((_bucket_encode(convs), len(convs)))
         _arm_timeout(state, convs, wm_ms)
         if rows:

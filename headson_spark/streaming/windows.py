@@ -13,25 +13,26 @@ aggregation — `collect_list(CASE WHEN keep THEN struct END)` buffers
 only keep-set turns (collect_list skips NULL inputs during the partial,
 map-side aggregation), so a mega-conversation delivering 50k turns into
 one window holds O(cap) structs in the aggregation buffer instead of
-50k. Delivered-count and max-turn totals aggregate over every admitted
-row in the same groupBy (a keep-set Filter below the agg would lose
-them), so `n_turns` stays the exact delivered count.
+50k. The position count, max(turn_idx) + 1, aggregates over every
+admitted row in the same groupBy (a keep-set Filter below the agg would
+lose it), and is the window's `n_turns`: as on every preview path, a
+turn's number is its position, so a re-delivered turn counts once.
 
 Row contract (the batch plans' and the session engine's): only the rows
 `operators.sampling.counted_turns` admits, 0 <= turn_idx <
 KEPT_POSITIONS_MAX, enter the window aggregate, so a NULL, negative or
 out-of-range turn_idx is neither rendered nor counted in n_turns.
 
-Sampling position contract (same as the batch pushdown,
-operators/preview.py): turn_idx is the dense 0-based CONVERSATION
-position, and the keep decision is a function of that position — the
-same turns of a conversation are kept in every window they land in.
-For a window containing the conversation's dense prefix (the common
-tumbling case: conversation starts inside the window) this is
-byte-identical to sampling the window's merged turn list directly; for
-a window that starts mid-conversation, omission totals count the
-conversation positions up to the window's max delivered turn, i.e. the
-preview reads "conversation so far, this window's kept turns".
+Turn numbering (every preview path's, operators/preview.py): turn_idx
+is the 0-based CONVERSATION position, a turn is shown iff
+kernel.arena.KeepRule.shown(turn_idx, n_turns), and a position no row
+delivered renders as omitted — the same turns of a conversation are
+kept in every window they land in. A window holding all of a
+conversation's rows (the common tumbling case) renders exactly the
+batch preview; for a window that starts mid-conversation, n_turns and
+the omission counts run over the conversation positions up to the
+window's max delivered turn, i.e. the preview reads "conversation so
+far, this window's kept turns".
 """
 
 from __future__ import annotations
@@ -44,12 +45,14 @@ from pyspark.sql.functions import pandas_udf
 from ..kernel.api import array_cap, make_configs, render_conversation
 
 
-def _merged(arr) -> tuple[list[int], list, list, list]:
+def merged_turns(arr) -> tuple[list[int], list, list, list]:
     """Turn structs -> (turn_idxs, roles, texts, tools), last-write-wins
-    by ts per turn_idx, ascending turn_idx."""
+    by ts per turn_idx (a NULL ts first, as Spark sorts it), ascending
+    turn_idx."""
     items = sorted((r for r in (arr if arr is not None else [])
                     if r is not None),
-                   key=lambda r: (r["turn_idx"], r["ts"]))
+                   key=lambda r: (r["turn_idx"], r["ts"] is not None,
+                                  r["ts"]))
     merged: dict[int, tuple] = {}
     for r in items:
         merged[r["turn_idx"]] = (r["role"], r["text"], r["tool"])
@@ -73,10 +76,10 @@ def make_presampled_render_udf(budget: int = 500, style: str = "default",
     def render_kept(turns: pd.Series, total: pd.Series) -> pd.Series:
         out = []
         for arr, tot in zip(turns, total):
-            idxs, roles, texts, tools = _merged(arr)
+            idxs, roles, texts, tools = merged_turns(arr)
             out.append(render_conversation(
                 roles, texts, tools, cfg, prio, budget_, kept=idxs,
-                total=max(int(tot), len(idxs))))
+                total=int(tot)))
         return pd.Series(out)
 
     return render_kept
@@ -98,7 +101,8 @@ def rolling_previews(stream_df, *, window: str = "5 minutes",
     Mid-conversation window caveat: kept-ness is a function of ABSOLUTE
     turn position, so a window that only delivers turns past the keep-
     set range (routine for sliding windows that open mid-conversation)
-    renders a (near-)empty preview while its n_turns stays > 0 — by
+    renders a (near-)empty preview while its n_turns, the conversation's
+    position count so far, stays > 0 — by
     design, the preview shows the sampler's keep-set, nothing else.
     Where whole-conversation previews per window matter, use the
     stateful session engine instead.
@@ -124,11 +128,10 @@ def rolling_previews(stream_df, *, window: str = "5 minutes",
                 # keep-set evaluated map-side, below the exchange: only
                 # kept turns enter the aggregation buffer
                 F.collect_list(F.when(keep, turn_struct)).alias("turns"),
-                F.count(F.lit(1)).alias("n_delivered"),
-                (F.max("turn_idx") + 1).alias("_total"))
+                (F.max("turn_idx") + 1).cast("int").alias("_total"))
             .select("conv_id",
                     F.col("win.start").alias("window_start"),
                     F.col("win.end").alias("window_end"),
-                    F.col("n_delivered").cast("int").alias("n_turns"),
+                    F.col("_total").alias("n_turns"),
                     render(F.col("turns"), F.col("_total"))
                     .alias("preview")))

@@ -1,13 +1,22 @@
 """Scaling-efficiency evidence for the north rule's two-cluster-size
 criterion: the same preview job, same input, at two parallelism levels
-(local[8] = N, local[32] = 4N cores — the sandbox proxy for N vs 4N
-executors). Reports turns/sec at both and efficiency = (T_4N/T_N)/4.
+(local[N] and local[4N] cores, each level pinned to its cores — the
+sandbox proxy for N vs 4N executors). Reports turns/sec at both and
+efficiency = (T_4N/T_N)/4.
 
-Each level runs in a fresh subprocess (its own JVM) so sessions don't
-share executors; the timed run is the steady-state second pass (first
-pass warms Python workers + page cache).
+Each level runs this script in a fresh subprocess (its own JVM, via
+`--level`) so sessions don't share executors; the timed figure is the
+best pass after the first (the first pass warms Python workers + page
+cache).
 
-Usage: python scripts/scaling_bench.py [turns] -> JSON on stdout
+Physical plan under measurement: SPARK_GRAFT_SCALING_PLAN, "full" by
+default — the single-shuffle full pipeline, the optimal plan for this
+fixture's short (16-turn) conversations, where the limit-pushdown
+variant's totals pre-scan is pure overhead (byte-equal output either
+way). SPARK_GRAFT_SCALING_PLAN=pushdown (or auto) measures the other
+plan.
+
+Usage: python scripts/scaling_bench.py [turns] [N cores] -> JSON on stdout
 """
 
 from __future__ import annotations
@@ -16,82 +25,81 @@ import json
 import os
 import subprocess
 import sys
+import time
 
-WORKER = r"""
-import json, os, sys, time
-sys.path.insert(0, sys.argv[3])
-from headson_spark.session import get_spark
-from headson_spark.operators.preview import conversation_previews
-from headson_spark.sources.transcripts import ensure_transcripts
-
-# Physical plan under measurement. Default: the single-shuffle full
-# pipeline — the optimal plan for this fixture's short (16-turn)
-# conversations, where the limit-pushdown variant's totals pre-scan is
-# pure overhead (+~10% at 32 cores; byte-equal output either way). At
-# 100 TB with long conversations the pushdown plan wins on shuffle
-# volume, and per-conversation totals would be a maintained aggregate,
-# not a per-query scan. SPARK_GRAFT_SCALING_PLAN=pushdown measures the
-# other plan.
-PUSHDOWN = os.environ.get("SPARK_GRAFT_SCALING_PLAN", "full") == "pushdown"
-
-cores = int(sys.argv[1])
-turns = int(sys.argv[2])
-spark = get_spark("scaling", master=f"local[{cores}]",
-                  shuffle_partitions=max(cores * 2, 16),
-                  extra={"spark.sql.execution.arrow.maxRecordsPerBatch":
-                         "30000",
-                         "spark.locality.wait": "0"})
-spark.sparkContext.setLogLevel("ERROR")
-path = ensure_transcripts(sf=0.1, bulk_turns=turns)
-tdf = spark.read.parquet(path)
-n = tdf.count()
-runs = []
-for i in range(5):
-    t0 = time.time()
-    conversation_previews(tdf, budget=500, pushdown=PUSHDOWN).write.format(
-        "noop").mode("overwrite").save()
-    runs.append(time.time() - t0)
-# run 1 warms Python workers/page cache; afterwards take the best run —
-# on a shared host, later runs can DEGRADE from external noise, so
-# "min after warmup" is the least noise-biased steady-state estimator
-best = min(runs[1:])
-print(json.dumps({"cores": cores, "turns": n, "sec": round(best, 2),
-                  "turns_per_sec": round(n / best, 1),
-                  "all_runs_sec": [round(r, 2) for r in runs]}))
-spark.stop()
-"""
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# timed passes per level; the first only warms up
+PASSES = 5
 
 
-def run_level(cores: int, turns: int) -> dict:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def timed_passes(tdf, plan: str) -> list[float]:
+    """Wall seconds of PASSES preview runs of `tdf` under `plan`, each
+    written to the noop sink."""
+    from headson_spark.operators.preview import conversation_previews
+    runs = []
+    for _ in range(PASSES):
+        t0 = time.time()
+        conversation_previews(tdf, budget=500, pushdown=plan).write.format(
+            "noop").mode("overwrite").save()
+        runs.append(time.time() - t0)
+    return runs
+
+
+def level(cores: int, turns: int, plan: str) -> dict:
+    """One level, in this process: a local[cores] session over the
+    cached transcripts with `turns` bulk turns."""
+    from headson_spark.session import get_spark
+    from headson_spark.sources.transcripts import ensure_transcripts
+    spark = get_spark("scaling", master=f"local[{cores}]",
+                      shuffle_partitions=max(cores * 2, 16),
+                      extra={"spark.sql.execution.arrow.maxRecordsPerBatch":
+                             "30000",
+                             "spark.locality.wait": "0"})
+    spark.sparkContext.setLogLevel("ERROR")
+    tdf = spark.read.parquet(ensure_transcripts(sf=0.1, bulk_turns=turns))
+    n = tdf.count()
+    runs = timed_passes(tdf, plan)
+    # on a shared host later runs can DEGRADE from external noise, so
+    # "min after warmup" is the least noise-biased steady-state estimator
+    best = min(runs[1:])
+    spark.stop()
+    return {"cores": cores, "plan": plan, "turns": n, "sec": round(best, 2),
+            "turns_per_sec": round(n / best, 1),
+            "all_runs_sec": [round(r, 2) for r in runs]}
+
+
+def run_level(cores: int, turns: int, plan: str) -> dict:
     # pin the WHOLE process tree (JVM + Python workers) to `cores` CPUs:
-    # otherwise local[8] on a 32-core box borrows idle cores for shuffle
-    # and Arrow threads and the N-vs-4N comparison is meaningless
-    cmd = ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c",
-           WORKER, str(cores), str(turns), repo]
-    # large-input levels (24M turns at 8 pinned cores ≈ 20+ min incl.
-    # fixture generation) need headroom beyond the original 20-min cap
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
+    # otherwise local[N] borrows idle cores for shuffle and Arrow
+    # threads and the N-vs-4N comparison is meaningless
+    cmd = ["taskset", "-c", f"0-{cores - 1}", sys.executable,
+           os.path.abspath(__file__), "--level", str(cores), str(turns),
+           plan]
+    out = subprocess.run(cmd, capture_output=True, text=True, timeout=3600,
+                         cwd=REPO)
     if out.returncode != 0:
         raise RuntimeError(out.stderr[-2000:])
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
 def main():
+    if sys.argv[1:2] == ["--level"]:
+        sys.path.insert(0, REPO)
+        cores, turns, plan = sys.argv[2:5]
+        print(json.dumps(level(int(cores), int(turns), plan)))
+        return
     turns = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    # N-level core count; the 4N level is 4x. Geometry 8v32 saturates the
-    # whole 32-core box at the 4N level, so any co-tenant activity lands
-    # on the critical path; 4v16 leaves headroom and is the cleaner
-    # measurement on a shared host (both are valid N-vs-4N evidence).
+    # N-level core count; the 4N level is 4x, so it must fit the host
     n_cores = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    n8 = run_level(n_cores, turns)
-    n32 = run_level(n_cores * 4, turns)
-    eff = (n32["turns_per_sec"] / n8["turns_per_sec"]) / 4.0
+    plan = os.environ.get("SPARK_GRAFT_SCALING_PLAN", "full")
+    lo = run_level(n_cores, turns, plan)
+    hi = run_level(n_cores * 4, turns, plan)
+    eff = (hi["turns_per_sec"] / lo["turns_per_sec"]) / 4.0
     print(json.dumps({
         "metric": "scaling_efficiency_N_to_4N",
-        "geometry": f"{n_cores}v{n_cores * 4}",
-        "N_cores": n8, "four_N_cores": n32,
-        "speedup": round(n32["turns_per_sec"] / n8["turns_per_sec"], 3),
+        "geometry": f"{n_cores}v{n_cores * 4}", "plan": plan,
+        "N_cores": lo, "four_N_cores": hi,
+        "speedup": round(hi["turns_per_sec"] / lo["turns_per_sec"], 3),
         "efficiency": round(eff, 3),
         "target": 0.8,
         "pass": eff >= 0.8,

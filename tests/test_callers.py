@@ -51,8 +51,6 @@ REFERENCE_ARGS = {"budget", "character_budget", "style", "skew", "format",
 # passes them, each with its reason. The parameters of a function on
 # ALLOWLIST are exempt too: only tests call it.
 PARAM_ALLOWLIST = {
-    ("conversation_previews", "pushdown"):
-        "scripts/scaling_bench.py sets it inside its worker source string",
     ("ensure_transcripts", "base_dir"): "a path, a deployment setting",
 }
 

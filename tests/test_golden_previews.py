@@ -90,7 +90,8 @@ def test_matrix_complete():
 @pytest.mark.parametrize("field", ["role", "text", "tool"])
 def test_render_conversation_null_field_matches_value_arena(field, skew):
     """The conversation arena renders a NULL role, text or tool as the
-    value arena does (a JSON null), in the full and pre-sampled forms."""
+    value arena does (a JSON null), fed the shown turns and their
+    positions."""
     from headson_spark.kernel.api import make_configs, render_conversation
     from headson_spark.kernel.arena import sample_indices
     turns = [{"role": "user", "text": f"turn {i}", "tool": "t"}
@@ -103,7 +104,6 @@ def test_render_conversation_null_field_matches_value_arena(field, skew):
                            style="detailed", character_budget=500, skew=skew)
     assert "null" in want
     cols = [[t[k] for t in turns] for k in ("role", "text", "tool")]
-    assert render_conversation(*cols, cfg, prio, budget) == want
     kept = sample_indices(skew, prio["array_max_items"], len(turns))
     picked = [[c[i] for i in kept] for c in cols]
     assert render_conversation(*picked, cfg, prio, budget, kept=kept,

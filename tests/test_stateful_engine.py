@@ -1,18 +1,25 @@
 """The streaming engine's stateful function (make_bucketed_preview_fn),
 driven without Spark through a fake GroupState with key = conv_id: the
 same function streaming_previews(n_buckets=None) runs per conversation.
-Every emitted preview is checked against kernel.summarize_value on the
+Every emitted preview is checked against the batch kernel
+(operators.preview.make_preview_fn) on the rows delivered so far, and,
+when their positions are dense, against kernel.summarize_value on the
 turns merged so far (last-write-wins by ts per turn_idx), including
 late-turn overwrites, stale duplicates, out-of-order backfill, the
-session close and state removal.
+session close and state removal. A Hypothesis gate runs random gapped,
+duplicated, micro-batched conversations through both.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from headson_spark.kernel import summarize_value
+from headson_spark.kernel.api import array_cap
+from headson_spark.kernel.arena import KeepRule
+from headson_spark.operators.preview import make_preview_fn
 from headson_spark.streaming.engine import (_bucket_decode,
                                             make_bucketed_preview_fn)
 
@@ -90,21 +97,39 @@ def run(batches, skew="balanced", expire=True, **fn_kwargs):
     return out, state
 
 
+def _kernel(delivered, skew, budget=500):
+    """The batch kernel on the delivered rows (arrival order breaks ts
+    ties, the later delivery winning), fed every row: {conv_id:
+    (preview, n_turns)}."""
+    rows = (delivered.assign(_seq=range(len(delivered)))
+            .sort_values(["conv_id", "turn_idx", "ts", "_seq"])
+            .drop(columns="_seq"))
+    fn = make_preview_fn(budget=budget, skew=skew)
+    out = pd.concat(list(fn(iter([rows.reset_index(drop=True)]))))
+    return {c: (p, n) for c, p, n in
+            zip(out["conv_id"], out["preview"], out["n_turns"])}
+
+
 def _assert_matches_kernel(out, batches, skew="balanced"):
-    """Every emission equals the kernel on the LWW merge (in arrival
-    order; a later delivery wins a ts tie) of the batches seen so far."""
+    """Every emission equals the batch kernel on the batches seen so far:
+    n_turns is max(turn_idx) + 1 and a missing position is omitted. On
+    dense positions it also equals summarize_value on the LWW merge (in
+    arrival order; a later delivery wins a ts tie)."""
     for seen, row in out:
+        delivered = pd.concat(batches[:seen], ignore_index=True)
+        assert (row["preview"], row["n_turns"]) == _kernel(
+            delivered, skew)["conv"]
         turns = {}
-        for b in batches[:seen]:
-            for t, role, text, ts in zip(b["turn_idx"], b["role"],
-                                         b["text"], b["ts"]):
-                if t not in turns or ts >= turns[t][2]:
-                    turns[t] = (role, text, ts)
-        doc = {"turns": [{"role": turns[t][0], "text": turns[t][1],
-                          "tool": ""} for t in sorted(turns)]}
-        assert row["preview"] == summarize_value(
-            doc, format="json", character_budget=500, skew=skew)
-        assert row["n_turns"] == len(turns)
+        for t, role, text, ts in zip(delivered["turn_idx"],
+                                     delivered["role"], delivered["text"],
+                                     delivered["ts"]):
+            if t not in turns or ts >= turns[t][2]:
+                turns[t] = (role, text, ts)
+        if sorted(turns) == list(range(len(turns))):
+            doc = {"turns": [{"role": turns[t][0], "text": turns[t][1],
+                              "tool": ""} for t in sorted(turns)]}
+            assert row["preview"] == summarize_value(
+                doc, format="json", character_budget=500, skew=skew)
 
 
 def _finals(out):
@@ -143,13 +168,16 @@ def test_stale_duplicate_is_dropped():
 
 
 def test_out_of_order_backfill():
-    """A gap turn arriving after its successors shifts ranks in the
-    bounded state; every emission still equals the kernel on the turns
+    """Gap turns arriving after their successors fill omitted positions:
+    the first emission already counts 5 positions (turn_idx 4 + 1) and
+    omits 1 and 3; every emission equals the kernel on the turns
     delivered so far."""
     batches = [_batch([(0, "first", 0), (2, "third", 2), (4, "fifth", 4)]),
                _batch([(1, "second (late)", 1), (3, "fourth (late)", 3)])]
     out, _ = run(batches)
-    assert out[-1][1]["n_turns"] == 5
+    assert [r["n_turns"] for _, r in out] == [5, 5, 5]
+    assert "…" in out[0][1]["preview"]
+    assert "…" not in out[-1][1]["preview"]
     _assert_matches_kernel(out, batches)
 
 
@@ -161,8 +189,8 @@ def _held(state):
 @pytest.mark.parametrize("skew", ["balanced", "head", "tail"])
 def test_long_conversation_bounded_vs_full_state(skew):
     """600 turns at budget 500: every skew holds bounded state (the
-    contents the keep rule can still show + seen-bitmap), at most the
-    cap of 250 contents, and previews equal the kernel on all turns."""
+    contents the keep rule shows + the position count), at most the cap
+    of 250 contents, and previews equal the kernel on all turns."""
     turns = [(i, f"turn {i} says something number {i * 7}", i)
              for i in range(600)]
     batches = [_batch(turns[:250]), _batch(turns[250:])]
@@ -173,10 +201,11 @@ def test_long_conversation_bounded_vs_full_state(skew):
 
 def test_tail_bounded_state_backfill_redelivery_close():
     """Tail skew on bounded state: 590 turns (10..599) prune the early
-    ones; a late low-index backfill (0..9) shifts every rank; a pruned
-    turn re-delivered with a newer ts is merged and pruned again; a
-    shown turn's rewrite replaces it; the close renders the rest. Every
-    emission equals the kernel on the full merged turns."""
+    ones; a late low-index backfill (0..9) fills positions tail does not
+    show; a pruned turn re-delivered with a newer ts is merged and
+    pruned again; a shown turn's rewrite replaces it; the close renders
+    the rest. Every emission equals the kernel on the rows delivered so
+    far."""
     batches = [_batch([(i, f"tail turn {i}", 100 + i)
                        for i in range(10, 600)]),
                _batch([(i, f"late turn {i}", i) for i in range(10)]),
@@ -194,7 +223,7 @@ def test_tail_bounded_state_backfill_redelivery_close():
     for pdf in _close(fn, state):
         out.extend((len(batches), r) for _, r in pdf.iterrows())
     assert _finals(out) == [False] * 4 + [True]
-    assert [r["n_turns"] for _, r in out] == [590, 600, 600, 600, 600]
+    assert [r["n_turns"] for _, r in out] == [600] * 5
     assert "REWRITE-PRUNED" not in out[2][1]["preview"]
     assert "REWRITE-SHOWN" in out[-1][1]["preview"]
     _assert_matches_kernel(out, batches, skew="tail")
@@ -202,16 +231,17 @@ def test_tail_bounded_state_backfill_redelivery_close():
 
 
 def test_tail_state_from_full_turn_map_resumes():
-    """A tail state written with the full turn map and the `"n"` and
-    `"v"` fields (earlier layouts, same blob schema) resumes in place:
-    the close renders from it directly, and a new batch prunes it to the
-    cap; both count and render like the kernel."""
-    from headson_spark.streaming.engine import _bits_set, _bucket_encode
+    """A tail state written by earlier layouts (same blob schema) resumes
+    in place: the full turn map, the `"n"` and `"v"` fields, and the
+    seen-bitmap `"b"` (bit i set = turn i delivered) in place of the
+    position count. The close renders from it directly, and a new batch
+    prunes it to the cap; both count and render like the kernel."""
+    from headson_spark.streaming.engine import _bucket_encode
     turns = [(i, f"old turn {i}", i) for i in range(300)]
     ts_us = [(T0 + pd.Timedelta(seconds=t[2])).value // 1000 for t in turns]
-    st = {"b": bytearray(), "k": {}, "mx": max(ts_us), "n": 0, "v": 1}
+    bits = bytearray(((1 << 300) - 1).to_bytes(38, "little"))
+    st = {"b": bits, "k": {}, "mx": max(ts_us), "n": 0, "v": 1}
     for (i, text, _), us in zip(turns, ts_us):
-        _bits_set(st["b"], i)
         st["k"][str(i)] = ["user" if i % 2 == 0 else "assistant", text,
                            "", us]
     blob = (_bucket_encode({"conv": st}), 1)
@@ -343,3 +373,85 @@ def test_null_conv_id_shares_a_bucket():
     assert sorted(final["conv_id"], key=lambda c: c is not None) == [None,
                                                                       "a"]
     assert not state.exists
+
+
+# -- Hypothesis gate: the stream equals the batch kernel after every batch
+
+_TEXTS = [None, "", "short", "line one\r\nline two", "astral 𝔘𝔫𝔦 😀 end",
+          "a longer turn text that the small budgets must truncate " * 2]
+
+
+@st.composite
+def _deliveries(draw):
+    """Random rows of conversations `a` and `b` (gapped turn_idx,
+    duplicate deliveries, equal ts, NULL role/text/tool, non-BMP text and
+    CRLF) split into random micro-batches."""
+    rows = draw(st.lists(st.tuples(
+        st.sampled_from(["a", "b"]), st.integers(0, 15) | st.integers(0, 60),
+        st.sampled_from([None, "user", "assistant"]),
+        st.sampled_from(_TEXTS), st.sampled_from([None, "", "tool_1"]),
+        st.integers(0, 6)), min_size=1, max_size=60))
+    cuts = sorted(draw(st.lists(st.integers(1, len(rows)), max_size=4)))
+    bounds = [0, *cuts, len(rows)]
+    return [rows[a:b] for a, b in zip(bounds, bounds[1:]) if a < b]
+
+
+def _frame(rows):
+    return pd.DataFrame({
+        "conv_id": [r[0] for r in rows],
+        "turn_idx": pd.array([r[1] for r in rows], dtype="int32"),
+        "role": [r[2] for r in rows], "text": [r[3] for r in rows],
+        "tool": [r[4] for r in rows],
+        "ts": pd.Series([T0 + pd.Timedelta(seconds=r[5]) for r in rows],
+                        dtype="datetime64[ns]")})
+
+
+def _pushdown_form(delivered, skew, budget):
+    """The delivered rows as the pushdown plan ships them: one sentinel
+    per conversation (turn_idx -1, `_total` = max + 1, `_chars` over
+    every delivery) plus every delivery of a position the keep rule
+    shows."""
+    rule = KeepRule(skew, array_cap(budget))
+    g = delivered.groupby("conv_id")
+    total = g["turn_idx"].transform("max").astype("int64") + 1
+    kept = delivered[rule.shown(delivered["turn_idx"].to_numpy(),
+                                total.to_numpy())]
+    sent = pd.DataFrame({
+        "conv_id": list(g.groups), "turn_idx": -1, "role": None,
+        "text": None, "tool": None, "ts": pd.NaT,
+        "_total": (g["turn_idx"].max() + 1).to_numpy(),
+        "_chars": g["text"].apply(
+            lambda t: sum(len(x) for x in t if x is not None)).to_numpy()})
+    sent["ts"] = sent["ts"].astype("datetime64[ns]")
+    return pd.concat([sent, kept], ignore_index=True)
+
+
+@pytest.mark.parametrize("skew", ["balanced", "head", "tail"])
+@settings(derandomize=True, max_examples=60, deadline=None)
+@given(batches=_deliveries(), budget=st.sampled_from([6, 12, 40, 200]))
+def test_stream_equals_batch_kernel_after_every_batch(skew, batches,
+                                                      budget):
+    """After every micro-batch the stream's latest row per conversation
+    equals the batch kernel on the rows delivered so far, fed every row
+    (full plan) or the sentinel plus keep-set rows (pushdown plan), and
+    the state holds exactly the delivered positions the keep rule shows,
+    at most cap contents per conversation."""
+    rule = KeepRule(skew, array_cap(budget))
+    fn = make_bucketed_preview_fn(budget=budget, skew=skew,
+                                  session_gap_ms=GAP_MS)
+    state = FakeGroupState()
+    latest, delivered = {}, []
+    for rows in batches:
+        delivered += rows
+        for pdf in fn((0,), iter([_frame(rows)]), state):
+            latest.update({c: (p, n) for c, p, n in zip(
+                pdf["conv_id"], pdf["preview"], pdf["n_turns"])})
+        seen = _frame(delivered)
+        assert latest == _kernel(seen, skew, budget)
+        assert latest == _kernel(_pushdown_form(seen, skew, budget), skew,
+                                 budget)
+        for cid, c in _bucket_decode(state.get[0]).items():
+            mine = {r[1] for r in delivered if r[0] == cid}
+            held = {int(k) for k in c["k"]}
+            assert held == {i for i in mine if rule.shown(i, max(mine) + 1)}
+            assert len(held) <= rule.cap
