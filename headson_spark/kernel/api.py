@@ -13,7 +13,7 @@ Arrow-decoded columns never round-trip through JSON text.
 from __future__ import annotations
 
 from . import arena as ar
-from .order import build_order
+from .order import build_conversation_order, build_order
 from .render import (_STYLE_TO_JSON_TEMPLATE, RenderConfig,
                      find_largest_render_under_budget)
 
@@ -99,11 +99,10 @@ def render_conversation(roles, texts, tools, cfg: RenderConfig, prio: dict,
     (turn_idx, ascending) and `total` the conversation's position count,
     max turn_idx + 1, that the omission counts run against. A position
     in [0, total) that `kept` lacks renders as omitted."""
-    a = ar.build_conversation_arena(roles, texts, tools,
-                                    prio["array_max_items"], prio["sampler"],
-                                    pre_sampled_indices=kept,
-                                    pre_sampled_total=total)
-    return _run(a, cfg, prio, budget)
+    po = build_conversation_order(roles, texts, tools, kept, total,
+                                  prio["max_string_graphemes"],
+                                  prio["prefer_tail_arrays"], max(budget, 1))
+    return find_largest_render_under_budget(po, cfg, budget)
 
 
 def summarize(text: str | bytes, *, format: str = "auto",

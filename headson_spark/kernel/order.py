@@ -17,12 +17,24 @@ that preserve bit-exact pop order while bounding work by the budget:
 
 Scores are exact Python ints (the reference uses u128; cubic array weights
 overflow u64 — SURVEY §7.3).
+
+`build_conversation_order` is the same lazy order for the one shape every
+preview path renders, the transcript document {"turns": [{role, text,
+tool}, ...]}, in closed form: the turns pop in tiers of equal array
+distance, and within a tier the turn objects, then their leaves, then
+their strings' parts round-robin by level. It builds no arena and no
+heap, and a part exists only as its id in by_priority: each run of part
+pops is one `part_spans` entry, which the budget search's length table
+folds per string, not per part. `build_order` (with `count_assignable`)
+stays the general builder: summarize*, fileset roots and conversations
+whose ids could reach SAFETY_CAP go through it.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from heapq import heappush, heappop
+from itertools import chain, islice
 
 from . import arena as ar
 from .graphemes import grapheme_breaks, ascii_printable
@@ -60,6 +72,13 @@ class PriorityOrder:
     part_start: list[int] = field(default_factory=list)
     part_count: list[int] = field(default_factory=list)
     by_priority: list[int] = field(default_factory=list)     # pop order
+    # build_conversation_order only: the columns above are dicts keyed
+    # by the ids of non-part nodes (a part is only its id in
+    # by_priority), and each run of part pops is one span (start, end,
+    # r, lvl0, string ids, first part ids): the pop at position i in
+    # [start, end) is part lvl0 + (i - start) // r of string
+    # (i - start) % r
+    part_spans: list[tuple] = field(default_factory=list)
     total_nodes: int = 0
     is_fileset: bool = False
     # lazy expansion (build_order lazy=True): pump(n) extends by_priority
@@ -361,4 +380,200 @@ def build_order(a: ar.Arena, max_string_graphemes: int,
         po.total_nodes = next_id
     else:
         pump(limit)
+    return po
+
+
+def _part_score_above_leaf(level: int) -> int:
+    """Score of a string's part at `level` minus its string's score."""
+    d = level - STRING_INDEX_INFLECTION
+    return (STRING_CHILD_BASE_INCREMENT + level * STRING_CHILD_LINEAR_WEIGHT
+            + (d * d * STRING_INDEX_QUADRATIC_WEIGHT if d > 0 else 0))
+
+
+# build_conversation_order pops all of a tier's parts before the next
+# tier's turns. That holds while a turn's last part (its leaf scores one
+# above the turn) stays under one cubic step, for every string cap the
+# closed form takes: a larger cap can assign SAFETY_CAP ids from one turn,
+# and the builder hands such conversations to build_order. The api's
+# DEFAULT_STRING_CAP (500) gives 1 + 1 + 499 + 479**2 = 229,942.
+assert (OBJECT_CHILD_BASE_INCREMENT + _part_score_above_leaf(SAFETY_CAP // 3)
+        < ARRAY_INDEX_CUBIC_WEIGHT)
+
+_TURN_KEYS = ("role", "text", "tool")
+
+
+def build_conversation_order(roles, texts, tools, kept: list[int],
+                             total: int, max_string_graphemes: int,
+                             prefer_tail_arrays: bool,
+                             max_pops: int) -> PriorityOrder:
+    """The lazy order of the transcript document {"turns": [{role, text,
+    tool}, ...]} in closed form: equal to build_order(
+    build_conversation_arena(roles, texts, tools, ...,
+    pre_sampled_indices=kept, pre_sampled_total=total),
+    max_string_graphemes, prefer_tail_arrays, max_pops, lazy=True) in
+    by_priority after every pump, in assignable_capped and in every render,
+    without an arena, a heap or a row per string part.
+
+    The heap's order on this shape: the root (id 0), "turns" (id 1), then
+    the turn objects (ids 2..K+1) in tiers of equal array distance d
+    (expand_array's head-mid-tail or tail rule), d ascending, and within a
+    tier:
+    - the tier's turn objects, by index;
+    - their leaves (role, text, tool) in id order, a NULL field being the
+      atomic `null`;
+    - the parts of the tier's strings round-robin by level: all level-L
+      parts score the same (base + 1 + L + max(0, L - 20)**2) and tie by
+      id, which is string order.
+    A phase is m whole levels over the r strings that reach all of them;
+    it is emitted as one C-level chain over r id ranges and recorded in
+    po.part_spans, which _LengthTable folds per run, not per part.
+
+    A conversation whose ids could reach SAFETY_CAP takes build_order."""
+    n_turns = len(roles)
+    if 2 + n_turns * (4 + 3 * max_string_graphemes) >= SAFETY_CAP:
+        a = ar.build_conversation_arena(roles, texts, tools, n_turns,
+                                        pre_sampled_indices=kept,
+                                        pre_sampled_total=total)
+        return build_order(a, max_string_graphemes, prefer_tail_arrays,
+                           max_pops, lazy=True)
+    turn_ids = range(2, n_turns + 2)
+    po = PriorityOrder()
+    kind = po.kind = {0: K_OBJECT, 1: K_ARRAY}
+    key = po.key = {0: None, 1: "turns"}
+    value = po.value = {0: None, 1: None}
+    parent = po.parent = {0: -1, 1: 0}
+    children = po.children = {0: [1], 1: list(turn_ids)}
+    po.orig_index = {0: None, 1: None}
+    po.orig_index.update(zip(turn_ids, kept))
+    total_len = po.total_len = {0: 1, 1: total}
+    string_len = po.string_len = {}
+    truncated = po.string_truncated = {}
+    breaks = po.breaks = {}
+    part_start = po.part_start = {}
+    part_count = po.part_count = {}
+    kind.update(dict.fromkeys(turn_ids, K_OBJECT))
+    key.update(dict.fromkeys(turn_ids))
+    value.update(dict.fromkeys(turn_ids))
+    parent.update(dict.fromkeys(turn_ids, 1))
+    total_len.update(dict.fromkeys(turn_ids, 3))
+    fields = (roles, texts, tools)
+    # (graphemes, breaks) per string: the id count and the tiers share it
+    metrics: dict[str, tuple[int, list[int] | None]] = {}
+
+    def measure(s: str) -> tuple[int, list[int] | None]:
+        m = metrics.get(s)
+        if m is None:
+            if s and ascii_printable(s):
+                m = (len(s), None)
+            else:
+                brks = grapheme_breaks(s) if s else [0]
+                m = (len(brks) - 1, brks)
+            metrics[s] = m
+        return m
+
+    # count_assignable's value without the arena: one id per node plus
+    # min(graphemes, cap) per string, exact below max_pops
+    assignable = 2 + 4 * n_turns
+    for s in chain(roles, texts, tools):
+        if assignable >= max_pops:
+            break
+        if s is not None:
+            assignable += min(measure(s)[0], max_string_graphemes)
+    po.assignable_capped = min(assignable, max_pops)
+
+    if prefer_tail_arrays:
+        tiers = [[i] for i in range(n_turns - 1, -1, -1)]
+    else:
+        mid = max(n_turns - 1, 0) // 2
+        dist = [min(i, n_turns - 1 - i, abs(i - mid))
+                for i in range(n_turns)]
+        tiers = {}
+        for i in sorted(range(n_turns), key=dist.__getitem__):
+            tiers.setdefault(dist[i], []).append(i)
+        tiers = list(tiers.values())
+
+    bp = po.by_priority
+    spans = po.part_spans
+    next_id = n_turns + 2
+
+    def segments():
+        """(ids, count) in pop order, one tier at a time; registers the
+        tier's leaves, strings and part spans as it reaches them."""
+        nonlocal next_id
+        yield [0, 1], 2
+        for tier in tiers:
+            leaf0 = next_id
+            strings = []
+            for i in tier:
+                tid = 2 + i
+                children[tid] = [next_id, next_id + 1, next_id + 2]
+                for f, col in enumerate(fields):
+                    s = col[i]
+                    lid = next_id
+                    next_id += 1
+                    key[lid] = _TURN_KEYS[f]
+                    parent[lid] = tid
+                    if s is None:
+                        kind[lid] = K_ATOMIC
+                        value[lid] = "null"
+                    else:
+                        kind[lid] = K_STRING
+                        value[lid] = s
+                        strings.append((lid, s))
+            runs = []   # (string id, first part id, part count)
+            for lid, s in strings:
+                g, brks = measure(s)
+                count = min(g, max_string_graphemes)
+                string_len[lid] = count
+                truncated[lid] = g > count
+                breaks[lid] = brks
+                if count:
+                    part_start[lid] = next_id
+                    part_count[lid] = count
+                    runs.append((lid, next_id, count))
+                    next_id += count
+                else:
+                    part_start[lid] = -1
+                    part_count[lid] = 0
+            yield [2 + i for i in tier], len(tier)
+            yield range(leaf0, leaf0 + 3 * len(tier)), 3 * len(tier)
+            lvl = 0
+            for end in sorted({c for _, _, c in runs}):
+                r = len(runs)
+                start = len(bp)
+                sids = [sid for sid, _, _ in runs]
+                firsts = [p for _, p, _ in runs]
+                spans.append((start, start + r * (end - lvl), r, lvl, sids,
+                              firsts))
+                yield (chain.from_iterable(zip(*[range(p + lvl, p + end)
+                                                 for p in firsts])),
+                       r * (end - lvl))
+                lvl = end
+                runs = [run for run in runs if run[2] > end]
+
+    segs = segments()
+    cur = [iter(()), 0]   # the segment being emitted, ids left in it
+
+    def pump(target: int):
+        """Extend by_priority to min(target, max_pops) pops or the end."""
+        need = min(target, max_pops) - len(bp)
+        while need > 0:
+            if not cur[1]:
+                seg = next(segs, None)
+                if seg is None:
+                    break
+                cur[0], cur[1] = iter(seg[0]), seg[1]
+            if cur[1] <= need:
+                bp.extend(cur[0])
+                need -= cur[1]
+                cur[1] = 0
+            else:
+                bp.extend(islice(cur[0], need))
+                cur[1] -= need
+                need = 0
+        po.total_nodes = next_id
+
+    po.pump = pump
+    po.pop_limit = max_pops
+    po.total_nodes = next_id
     return po

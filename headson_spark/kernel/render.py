@@ -27,6 +27,7 @@ from .order import (PriorityOrder, K_ARRAY, K_OBJECT, K_STRING, K_ATOMIC,
                     K_PART)
 
 OMISSION = "…"
+_UNPOPPED = 1 << 60   # rank of a node outside by_priority
 
 _STYLE_TO_JSON_TEMPLATE = {
     "strict": "json", "default": "pseudo", "detailed": "js"}
@@ -66,7 +67,7 @@ def json_key(s: str) -> str:
 
 class RenderSet:
     """Per-conversation inclusion index: a node is in the render set for
-    any k iff eff_rank[node] < k.
+    any k iff its pop rank is below k.
 
     Equivalent to the reference's top-k + ancestor-closure marking
     (graph.rs:41-61) but computed ONCE: because children enter the heap
@@ -75,39 +76,38 @@ class RenderSet:
     the node's own pop rank and the ancestor closure is automatic
     (property-tested in test_kernel_props: ancestors-pop-first
     invariant). A string's LeafParts hold a contiguous id block and pop
-    in id order, so its ranks ascend along the block and the kept-part
-    count for k is a bisect over that slice of eff_rank.
+    in id order, so their ranks ascend along the block and the kept-part
+    count for k is a bisect over it.
     """
 
     __slots__ = ("eff_rank", "_po", "_synced")
 
-    _INF = 1 << 60
-
     def __init__(self, po: PriorityOrder):
         self._po = po
         self._synced = 0
-        self.eff_rank: list[int] = []
+        self.eff_rank: dict[int, int] = {}   # popped id -> pop rank
         self.sync()
+
+    def rank(self, node: int) -> int:
+        return self.eff_rank.get(node, _UNPOPPED)
 
     def sync(self):
         """Fold pops appended since the last sync (lazy pumping extends
         by_priority between probes; rank order is append-only)."""
-        po = self._po
-        bp = po.by_priority
-        rank = self.eff_rank
-        if len(rank) < po.total_nodes:
-            rank.extend([self._INF] * (po.total_nodes - len(rank)))
-        for i in range(self._synced, len(bp)):
-            rank[bp[i]] = i
-        self._synced = len(bp)
+        bp = self._po.by_priority
+        n = len(bp)
+        self.eff_rank.update(zip(bp[self._synced:], range(self._synced, n)))
+        self._synced = n
 
     def kept_parts_for(self, string_id: int, k: int) -> int:
         po = self._po
         start = po.part_start[string_id]
         if start < 0:
             return 0
-        return bisect_left(self.eff_rank, k, start,
-                           start + po.part_count[string_id]) - start
+        end = start + po.part_count[string_id]
+        if self.rank(end - 1) < k:
+            return end - start
+        return bisect_left(range(start, end), k, key=self.rank)
 
 
 class _Renderer:
@@ -117,7 +117,6 @@ class _Renderer:
         self.po = po
         self.cfg = cfg
         self.rset = rset
-        self.eff_rank = rset.eff_rank
         self.k = k
         # escaped full-string literals are probe-invariant: cache per node
         self.escaped = escaped_cache if escaped_cache is not None else {}
@@ -165,9 +164,9 @@ class _Renderer:
         kids = self.po.children[pq_id]
         if not kids:
             return []
-        eff = self.eff_rank
+        rank = self.rset.eff_rank.get
         k = self.k
-        return [c for c in kids if eff[c] < k]
+        return [c for c in kids if rank(c, _UNPOPPED) < k]
 
     def _omitted_for(self, pq_id: int, kept: int) -> int:
         total = self.po.total_len[pq_id]
@@ -498,7 +497,7 @@ class _Renderer:
         kids = po.children[0] or []
         kept = 0
         for c in kids:
-            if self.eff_rank[c] >= self.k:
+            if self.rset.rank(c) >= self.k:
                 continue
             if kept > 0:
                 out.append(cfg.newline)
@@ -587,7 +586,7 @@ class _LengthTable:
 
     __slots__ = ("po", "lens", "_ind", "_nl", "_sp", "_tail", "_arr_mark",
                  "_obj_mark", "_depth", "_kept", "_frame", "_orig", "_gaps",
-                 "_fast", "_slow", "_keylen")
+                 "_fast", "_slow", "_keylen", "_span")
 
     def __init__(self, po: PriorityOrder, cfg: RenderConfig):
         self.po = po
@@ -617,6 +616,7 @@ class _LengthTable:
         # other strings -> (that id, value, grapheme breaks, first part id)
         self._slow: dict[int, tuple] = {}
         self._keylen: dict[str | None, int] = {}
+        self._span = 0   # first part span not yet folded past
 
     def length(self, k: int) -> int:
         """Byte length of render_top_k(k); k <= len(by_priority)."""
@@ -625,15 +625,32 @@ class _LengthTable:
         return self.lens[k - 1]
 
     def _fold(self, upto: int):
+        """Fold the pops up to `upto`: a part span (PriorityOrder.part_spans)
+        per run of its strings, any other pop one at a time."""
+        spans = self.po.part_spans
+        lens = self.lens
+        while len(lens) < upto:
+            i = len(lens)
+            j = self._span
+            while j < len(spans) and spans[j][1] <= i:
+                j += 1
+            self._span = j
+            if j == len(spans):
+                self._fold_pops(i, upto)
+            elif spans[j][0] <= i:
+                self._fold_span(spans[j], i, min(upto, spans[j][1]))
+            else:
+                self._fold_pops(i, min(upto, spans[j][0]))
+
+    def _fold_pops(self, a: int, b: int):
         po = self.po
         bp = po.by_priority
         kind = po.kind
         parent = po.parent
         fast = self._fast
-        slow = self._slow
         lens = self.lens
         total = lens[-1] if lens else 0
-        for i in range(len(lens), upto):
+        for i in range(a, b):
             x = bp[i]
             kx = kind[x]
             if kx == K_PART:
@@ -642,17 +659,54 @@ class _LengthTable:
                 if last is not None:
                     total += 1 - _OMISSION_BYTES if x == last else 1
                 else:
-                    last, value, brks, start = slow[s]
-                    j = x - start
-                    g = (value[j] if brks is None
-                         else value[brks[j]:brks[j + 1]])
-                    n = _escaped_bytes(g)
-                    total += n - _OMISSION_BYTES if x == last else n
+                    total += self._slow_part(s, x)
             else:
                 p = parent[x]
                 own = self._open(x, kx, p)
                 total = own if p < 0 else total + own + self._attach(p, x, kx)
             lens.append(total)
+
+    def _fold_span(self, span: tuple, a: int, b: int):
+        """Fold positions [a, b) of one part span. When every string in it
+        is printable ASCII with no escapes, each part adds one byte and an
+        untruncated string's last part drops the "…": one range per run."""
+        start, _, r, lvl0, sids, firsts = span
+        lens = self.lens
+        total = lens[-1]
+        fast = self._fast
+        lasts = [fast.get(sid) for sid in sids]
+        if None not in lasts:
+            pos = a
+            for c in sorted(start + (last - first - lvl0) * r + j
+                            for j, (last, first) in enumerate(zip(lasts,
+                                                                  firsts))
+                            if last >= 0):
+                if a <= c < b:
+                    lens.extend(range(total + 1, total + 1 + c - pos))
+                    total += c - pos + 1 - _OMISSION_BYTES
+                    lens.append(total)
+                    pos = c + 1
+            lens.extend(range(total + 1, total + 1 + b - pos))
+            return
+        for i in range(a, b):
+            lvl, j = divmod(i - start, r)
+            x = firsts[j] + lvl0 + lvl
+            last = lasts[j]
+            if last is not None:
+                total += 1 - _OMISSION_BYTES if x == last else 1
+            else:
+                total += self._slow_part(sids[j], x)
+            lens.append(total)
+
+    def _slow_part(self, s: int, x: int) -> int:
+        """Bytes part x adds to string s, which needs escapes or is not
+        printable ASCII: its grapheme's escaped bytes, less the "…" at the
+        part that completes an untruncated string."""
+        last, value, brks, start = self._slow[s]
+        j = x - start
+        g = value[j] if brks is None else value[brks[j]:brks[j + 1]]
+        n = _escaped_bytes(g)
+        return n - _OMISSION_BYTES if x == last else n
 
     def _open(self, x: int, kx: int, p: int) -> int:
         """Bytes of node x as it renders on entering the set (no children

@@ -91,26 +91,34 @@ def _st_new() -> dict:
     return {"len": 0, "k": {}, "mx": 0}
 
 
-def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list) -> bool:
-    """LWW-merge pre-extracted column slices into bounded state; True if
-    any content or the position count changed. Every turn_idx is a
-    counted_turns position (streaming_previews filters ahead of the
-    state operator)."""
+def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list,
+                   rule: KeepRule) -> bool:
+    """LWW-merge pre-extracted column slices into state; True if the
+    conversation's row can differ: its position count or its max ts grew,
+    or a content it wrote is one the keep rule shows (and _prune keeps).
+    A delivery on a position the rule does not show (a backfill of pruned
+    tail positions, a re-delivery of a pruned turn) changes nothing the
+    row shows. Every turn_idx is a counted_turns position
+    (streaming_previews filters ahead of the state operator)."""
+    import numpy as np
     kept = st["k"]
-    changed = False
+    n0, mx0 = st["len"], st["mx"]
+    written = []
     for t_idx, role, text, tool, ts_us in zip(
             tidxs, roles, texts, tools, ts_list):
         if t_idx >= st["len"]:
             st["len"] = t_idx + 1
-            changed = True
         key = str(t_idx)
         prev = kept.get(key)
         if prev is None or ts_us >= prev[3]:
             kept[key] = [role, text, tool, ts_us]
-            changed = True
+            written.append(t_idx)
         if ts_us > st["mx"]:
             st["mx"] = ts_us
-    return changed
+    if st["len"] > n0 or st["mx"] > mx0:
+        return True
+    return bool(written) and bool(
+        rule.shown(np.array(written), st["len"]).any())
 
 
 BUCKET_STATE_SCHEMA = "blob binary, n_convs int"
@@ -215,6 +223,7 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
             return
 
         convs = _bucket_decode(state.get[0]) if state.exists else {}
+        touched: set[str] = set()
         changed: set[str] = set()
         import numpy as np
         for pdf in pdf_iter:
@@ -242,15 +251,18 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
                 st = convs.get(cid)
                 if st is None:
                     st = convs[cid] = _st_new()
+                touched.add(cid)
                 if _st_merge_cols(st, tidxs[s:e], roles[s:e],
-                                  texts[s:e], tools[s:e], ts_list[s:e]):
+                                  texts[s:e], tools[s:e], ts_list[s:e],
+                                  rule):
                     changed.add(cid)
+        for cid in touched:
+            _prune(convs[cid], rule)
         rows = []
-        # a NULL conv_id is one conversation too; it sorts first
-        for cid in sorted(changed, key=lambda c: (c is not None, c)):
-            st = convs[cid]
-            _prune(st, rule)
-            if on_change:
+        if on_change:
+            # a NULL conv_id is one conversation too; it sorts first
+            for cid in sorted(changed, key=lambda c: (c is not None, c)):
+                st = convs[cid]
                 rows.append((cid, _render(st, cfg, prio, budget),
                              st["len"], st["mx"], False))
         state.update((_bucket_encode(convs), len(convs)))

@@ -202,9 +202,10 @@ def test_long_conversation_bounded_vs_full_state(skew):
 def test_tail_bounded_state_backfill_redelivery_close():
     """Tail skew on bounded state: 590 turns (10..599) prune the early
     ones; a late low-index backfill (0..9) fills positions tail does not
-    show; a pruned turn re-delivered with a newer ts is merged and
-    pruned again; a shown turn's rewrite replaces it; the close renders
-    the rest. Every emission equals the kernel on the rows delivered so
+    show and emits nothing (its ts are older, so the row cannot change);
+    a pruned turn re-delivered with a newer ts is merged and pruned
+    again; a shown turn's rewrite replaces it; the close renders the
+    rest. Every emission equals the kernel on the rows delivered so
     far."""
     batches = [_batch([(i, f"tail turn {i}", 100 + i)
                        for i in range(10, 600)]),
@@ -222,12 +223,39 @@ def test_tail_bounded_state_backfill_redelivery_close():
         assert set(_bucket_decode(state.get[0])["conv"]["k"]) == last_250
     for pdf in _close(fn, state):
         out.extend((len(batches), r) for _, r in pdf.iterrows())
-    assert _finals(out) == [False] * 4 + [True]
-    assert [r["n_turns"] for _, r in out] == [600] * 5
-    assert "REWRITE-PRUNED" not in out[2][1]["preview"]
+    assert [seen for seen, _ in out] == [1, 3, 4, 4]
+    assert _finals(out) == [False] * 3 + [True]
+    assert [r["n_turns"] for _, r in out] == [600] * 4
+    assert "REWRITE-PRUNED" not in out[1][1]["preview"]
     assert "REWRITE-SHOWN" in out[-1][1]["preview"]
     _assert_matches_kernel(out, batches, skew="tail")
     assert not state.exists
+
+
+@pytest.mark.parametrize("skew", ["balanced", "head", "tail"])
+def test_delivery_on_unshown_positions_emits_no_row(skew):
+    """A batch that only lands on positions the keep rule does not show,
+    with no newer ts and no new position, leaves the row as it was, so
+    the stream emits nothing for it: tail, budget 500, turns 10..599 then
+    turns 0..9 with older ts; balanced and head the same shape on
+    positions past their keep-set."""
+    cap = array_cap(500)
+    unshown = ([i for i in range(600) if i not in
+                KeepRule(skew, cap).positions] if skew != "tail"
+               else list(range(10)))[:10]
+    first = [i for i in range(600) if i not in unshown]
+    batches = [_batch([(i, f"turn {i}", 100 + i) for i in first]),
+               _batch([(i, f"late turn {i}", i) for i in unshown])]
+    fn = make_bucketed_preview_fn(budget=500, skew=skew,
+                                  session_gap_ms=GAP_MS)
+    state = FakeGroupState()
+    emitted = [list(fn(("conv",), iter([b]), state)) for b in batches]
+    assert len(emitted[0]) == 1 and emitted[1] == []
+    held = {int(k) for k in _bucket_decode(state.get[0])["conv"]["k"]}
+    assert held.isdisjoint(unshown) and len(held) <= cap
+    out = [(2, r) for pdf in _close(fn, state) for _, r in pdf.iterrows()]
+    assert out[0][1]["preview"] == emitted[0][0]["preview"][0]
+    _assert_matches_kernel(out, batches, skew=skew)
 
 
 def test_tail_state_from_full_turn_map_resumes():

@@ -395,7 +395,7 @@ def test_merge_rows_rejects_contract_violating_turn_idx(spark):
     out-of-range turn_idx rows, so the state never sees one (a NULL
     would crash the merge, a negative or huge one would corrupt the
     position count); the admitted rows still merge last-write-wins."""
-    from headson_spark.kernel.arena import KEPT_POSITIONS_MAX
+    from headson_spark.kernel.arena import KEPT_POSITIONS_MAX, KeepRule
     from headson_spark.operators.sampling import counted_turns
     from headson_spark.streaming.engine import _st_merge_cols, _st_new
     day_us = 86_400_000_000
@@ -411,7 +411,7 @@ def test_merge_rows_rejects_contract_violating_turn_idx(spark):
     assert _st_merge_cols(
         st, [r["turn_idx"] for r in kept], ["user"] * len(kept),
         [r["text"] for r in kept], [""] * len(kept),
-        [r["ts"] for r in kept])
+        [r["ts"] for r in kept], KeepRule("balanced", 250))
     # positions 0, 1 and KEPT_POSITIONS_MAX - 1 delivered
     assert st["len"] == KEPT_POSITIONS_MAX
     assert set(st["k"]) == {"0", "1", str(KEPT_POSITIONS_MAX - 1)}
