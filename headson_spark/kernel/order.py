@@ -411,8 +411,9 @@ def build_conversation_order(roles, texts, tools, kept: list[int],
     build_conversation_arena(roles, texts, tools, ...,
     pre_sampled_indices=kept, pre_sampled_total=total),
     max_string_graphemes, prefer_tail_arrays, max_pops, lazy=True) in
-    by_priority after every pump, in assignable_capped and in every render,
-    without an arena, a heap or a row per string part.
+    by_priority after every pump, in assignable_capped and so in every
+    budget search up to max_pops, without an arena, a heap or a row per
+    string part. total_nodes counts the ids of the tiers reached so far.
 
     The heap's order on this shape: the root (id 0), "turns" (id 1), then
     the turn objects (ids 2..K+1) in tiers of equal array distance d
@@ -487,10 +488,10 @@ def build_conversation_order(roles, texts, tools, kept: list[int],
         mid = max(n_turns - 1, 0) // 2
         dist = [min(i, n_turns - 1 - i, abs(i - mid))
                 for i in range(n_turns)]
-        tiers = {}
+        by_dist: dict[int, list[int]] = {}
         for i in sorted(range(n_turns), key=dist.__getitem__):
-            tiers.setdefault(dist[i], []).append(i)
-        tiers = list(tiers.values())
+            by_dist.setdefault(dist[i], []).append(i)
+        tiers = list(by_dist.values())
 
     bp = po.by_priority
     spans = po.part_spans

@@ -676,12 +676,12 @@ class _LengthTable:
         fast = self._fast
         lasts = [fast.get(sid) for sid in sids]
         if None not in lasts:
+            # a string's last part falls in this span only at its last
+            # level, so the ones in [a, b) come in run order
             pos = a
-            for c in sorted(start + (last - first - lvl0) * r + j
-                            for j, (last, first) in enumerate(zip(lasts,
-                                                                  firsts))
-                            if last >= 0):
-                if a <= c < b:
+            for j, last in enumerate(lasts):
+                c = start + (last - firsts[j] - lvl0) * r + j
+                if last >= 0 and a <= c < b:
                     lens.extend(range(total + 1, total + 1 + c - pos))
                     total += c - pos + 1 - _OMISSION_BYTES
                     lens.append(total)
