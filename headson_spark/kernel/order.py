@@ -114,6 +114,16 @@ _KIND_FROM_ARENA = {
 }
 
 
+def _graphemes(s: str) -> tuple[int, list[int] | None]:
+    """(grapheme count, break offsets) of a string value. Printable ASCII
+    has no breaks list: one char is one grapheme, and the renderer slices
+    it directly."""
+    if s and ascii_printable(s):
+        return len(s), None
+    brks = grapheme_breaks(s) if s else [0]
+    return len(brks) - 1, brks
+
+
 def count_assignable(a: ar.Arena, max_string_graphemes: int,
                      cap: int) -> int:
     """Total PQ ids a full (budget-bounded) expansion would assign,
@@ -138,11 +148,7 @@ def count_assignable(a: ar.Arena, max_string_graphemes: int,
         if k == ar.STRING:
             s = n.string_value or ""
             if s:
-                if ascii_printable(s):
-                    g = len(s)
-                else:
-                    g = len(grapheme_breaks(s)) - 1
-                total += min(g, max_string_graphemes)
+                total += min(_graphemes(s)[0], max_string_graphemes)
                 if total >= cap:
                     return cap
         elif n.children:
@@ -290,15 +296,7 @@ def build_order(a: ar.Arena, max_string_graphemes: int,
 
     def expand_string(pq_id, parent_score):
         nonlocal next_id
-        s = po.value[pq_id] or ""
-        # ASCII fast path: 1 char == 1 grapheme; breaks stays None and the
-        # renderer slices directly
-        if s and ascii_printable(s):
-            n_actual = len(s)
-        else:
-            brks = grapheme_breaks(s) if s else [0]
-            po.breaks[pq_id] = brks
-            n_actual = len(brks) - 1
+        n_actual, po.breaks[pq_id] = _graphemes(po.value[pq_id] or "")
         count = min(n_actual, max_string_graphemes)
         po.string_len[pq_id] = count
         po.string_truncated[pq_id] = n_actual > count
@@ -464,12 +462,7 @@ def build_conversation_order(roles, texts, tools, kept: list[int],
     def measure(s: str) -> tuple[int, list[int] | None]:
         m = metrics.get(s)
         if m is None:
-            if s and ascii_printable(s):
-                m = (len(s), None)
-            else:
-                brks = grapheme_breaks(s) if s else [0]
-                m = (len(brks) - 1, brks)
-            metrics[s] = m
+            m = metrics[s] = _graphemes(s)
         return m
 
     # count_assignable's value without the arena: one id per node plus
