@@ -61,8 +61,8 @@ STRATA_DEFAULT = 0.5
 QUERY_VEC = [round((mix64(1000 + i) % 2_000_000) / 1_000_000.0 - 1.0, 6)
              for i in range(EMB_DIM)]
 
-DEFAULT_KEPT = sampling.default_kept_positions(CAP, 100_000)
-# positions are prefix-closed; embed only the plausible range in SQL
+DEFAULT_KEPT = sampling.default_kept_positions(CAP)
+# K(CAP), the balanced keep-set, as the oracle SQL's IN list
 DEFAULT_KEPT_SQL = ",".join(str(i) for i in DEFAULT_KEPT)
 
 _TRANSCRIPT_SQL = """
@@ -150,19 +150,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                       .alias("n_chars")))
     q["conv_assemble"] = conv_assemble
 
+    # the samplers select by position, as the preview plans do: the
+    # transcript's turn_idx is the event ordinal, so turn_ord = turn_idx
     def head_cap(spark, sf_dir):
-        return (sampling.head_cap(_t(spark, sf_dir), HEAD_TAIL_CAP)
-                .select("conv_id", "turn_idx", "turn_ord"))
+        keep = sampling.kept_position_filter("head", HEAD_TAIL_CAP)
+        return (_t(spark, sf_dir).filter(keep)
+                .select("conv_id", "turn_idx",
+                        F.col("turn_idx").alias("turn_ord")))
     q["head_cap"] = head_cap
 
     def tail_cap(spark, sf_dir):
-        return (sampling.tail_cap(_t(spark, sf_dir), HEAD_TAIL_CAP)
+        t = _t(spark, sf_dir)
+        return (sampling.kept_turns(t, sampling.conv_totals(t), "tail",
+                                    HEAD_TAIL_CAP)
                 .select("conv_id", "turn_idx"))
     q["tail_cap"] = tail_cap
 
     def default_sample(spark, sf_dir):
-        return (sampling.default_cap(_t(spark, sf_dir), CAP)
-                .select("conv_id", "turn_idx", "turn_ord"))
+        keep = sampling.kept_position_filter("balanced", CAP)
+        return (_t(spark, sf_dir).filter(keep)
+                .select("conv_id", "turn_idx",
+                        F.col("turn_idx").alias("turn_ord")))
     q["default_sample"] = default_sample
 
     def omission_counts(spark, sf_dir):

@@ -126,12 +126,8 @@ class _Renderer:
     def _string_omitted(self, pq_id: int, kept: int) -> int:
         po = self.po
         orig = po.string_len[pq_id]
-        if orig is not None:
-            if orig > kept:
-                return orig - kept
-            if po.string_truncated[pq_id]:
-                return 1
-            return 0
+        if orig > kept:
+            return orig - kept
         return 1 if po.string_truncated[pq_id] else 0
 
     def _take_graphemes(self, pq_id: int, n: int) -> str:

@@ -7,10 +7,11 @@ group" mapping from SURVEY §2.1 S7):
 
   1. distributed: each conversation is reduced to the turns the skew's
      keep rule shows at the per-conversation cap the fileset renderer
-     uses, by position, through the pushdown plan's keep filter
-     (preview.kept_turns), plus its position count max(turn_idx) + 1
+     uses, by position, plus one sentinel row carrying its position
+     count max(turn_idx) + 1: the pushdown preview plan's own rows
+     (sampling.pushdown_rows), collected in one job
   2. driver-side final assembly: the surviving sample (bounded by
-     max_conversations x cap rows — small by construction) is merged
+     MAX_CONVERSATIONS x (cap + 1) rows — small by construction) is merged
      last-write-wins and rendered as pre-sampled conversation arenas by
      the kernel's fileset renderer, which allocates the global budget
      across conversations with `==> conv <==` section headers
@@ -34,8 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..kernel.api import array_cap, summarize_many
 from ..kernel.arena import build_conversation_arena
 from ..streaming.windows import merged_turns
-from .preview import conv_totals, kept_turns
-from .sampling import counted_turns
+from .sampling import counted_turns, pushdown_rows
 
 # conversations in one digest: the first ones by conv_id
 MAX_CONVERSATIONS = 8
@@ -56,12 +56,13 @@ def corpus_digest(df: DataFrame, *, character_budget: int = 4000,
     match = F.col("conv_id").isin([c for c in conv_ids if c is not None])
     if None in conv_ids:
         match = match | F.col("conv_id").isNull()
-    picked = df.where(match)
-    totals = conv_totals(picked)
     by_conv: dict = {}
-    for r in kept_turns(picked, totals, skew, cap).collect():
-        by_conv.setdefault(r["conv_id"], []).append(r)
-    n_turns = dict(totals.select("conv_id", "_total").collect())
+    n_turns: dict = {}
+    for r in pushdown_rows(df.where(match), skew, cap).collect():
+        if r["turn_idx"] < 0:  # the conversation's sentinel
+            n_turns[r["conv_id"]] = r["_total"]
+        else:
+            by_conv.setdefault(r["conv_id"], []).append(r)
     inputs = []
     for cid in conv_ids:
         idxs, roles, texts, tools = merged_turns(by_conv.get(cid))

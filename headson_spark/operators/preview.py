@@ -29,7 +29,10 @@ stream and the window previews do: a row at a NULL, negative or
 n_chars. Every plan numbers turns by position, as every other preview
 path does: n_turns = max(turn_idx) + 1, a turn is shown iff
 kernel.arena.KeepRule.shown(turn_idx, n_turns), and a position with no
-row renders as omitted.
+row renders as omitted. This module decides only the plan and runs the
+kernel: which rows the pushdown plan ships (the keep filter and one
+totals sentinel per conversation) is `sampling.pushdown_rows`, the
+selection `corpus_digest` collects too.
 
 Inside the kernel:
 - duplicate (conv_id, turn_idx) turns merge last-write-wins by ts (the
@@ -50,7 +53,7 @@ import pandas as pd
 
 from ..kernel.api import array_cap, make_configs, render_conversation
 from ..kernel.arena import KeepRule
-from .sampling import counted_turns, kept_position_filter
+from .sampling import counted_turns, kept_position_filter, pushdown_rows
 
 log = logging.getLogger("headson_spark.preview")
 
@@ -193,21 +196,6 @@ def _kernel_width(df) -> int:
     return df.sparkSession.sparkContext.defaultParallelism
 
 
-def _with_sentinels(kept, totals):
-    """Kept rows unioned with one sentinel row per conversation. Kept rows
-    carry NULL totals unless they already carry them (the tail join); the
-    kernel reads the totals off each conversation's first row only, the
-    sentinel, which sorts first because counted_turns left no row at a
-    negative turn_idx."""
-    from pyspark.sql import functions as F
-    carried = ("_total", "_chars") if "_total" in kept.columns else (
-        F.lit(None).cast("int").alias("_total"),
-        F.lit(None).cast("bigint").alias("_chars"))
-    kept = kept.select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts", *carried)
-    return kept.unionByName(_total_sentinels(totals))
-
-
 def conversation_previews_pushdown(df, *, budget: int = 500,
                                    style: str = "default",
                                    skew: str = "balanced",
@@ -226,64 +214,14 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
     forced broadcast of a per-conversation table; the observed plans are
     in PLANS.md §1a).
 
-    Per-conversation totals (position count + char count) travel as one
-    sentinel row per conversation through the same exchange as the kept
-    rows.
+    The rows are sampling.pushdown_rows: per-conversation totals
+    (position count + char count) travel as one sentinel row per
+    conversation through the same exchange as the kept rows. The
+    rejected totals designs (a distinct count, a totals join) and their
+    measurements are in PLANS.md §1a.
     """
-    df = counted_turns(df)
-    totals = conv_totals(df)
-    kept = kept_turns(df, totals, skew, array_cap(budget))
-    # Totals ride as sentinel rows through the one exchange; the
-    # rejected totals designs (a distinct count, a totals join) and their
-    # measurements are in PLANS.md §1a.
-    rows = _with_sentinels(kept, totals)
+    rows = pushdown_rows(counted_turns(df), skew, array_cap(budget))
     return _kernel_step(rows, budget, style, skew, fmt)
-
-
-def kept_turns(df, totals, skew: str, cap: int):
-    """The rows of `df` the skew's keep rule shows at `cap`, by position
-    (KeepRule.shown): a column filter for balanced and head; for tail,
-    a join with `totals` (conv_totals of df) and
-    `turn_idx >= _total - cap`, the kept rows carrying both totals."""
-    from pyspark.sql import functions as F
-    keep = kept_position_filter(skew, cap)
-    if keep is not None:
-        return df.filter(keep)
-    # The join and the sentinels read one totals plan, so Spark
-    # aggregates the input once and reuses that exchange: the null-safe
-    # key infers no isnotnull(conv_id) filter into it, and the kept rows
-    # keep both totals, so column pruning leaves it whole.
-    tot = totals.withColumnRenamed("conv_id", "_tc")
-    return (df.join(tot, df["conv_id"].eqNullSafe(tot["_tc"]))
-              .filter(F.col("turn_idx") >= F.col("_total") - cap)
-              .drop("_tc"))
-
-
-def conv_totals(df):
-    """Per-conversation totals: the position count max(turn_idx) + 1 (the
-    n_turns of every preview path) and the char count over all delivered
-    rows. Both
-    aggregate map-side — one narrow row per conversation per task
-    through the exchange."""
-    from pyspark.sql import functions as F
-    return df.groupBy("conv_id").agg(
-        (F.max("turn_idx") + 1).cast("int").alias("_total"),
-        F.sum(F.length("text")).cast("bigint").alias("_chars"))
-
-
-def _total_sentinels(totals):
-    """conv_totals rows as sentinel rows in the transcript row shape
-    (turn_idx = -1 and ts NULL, so each sorts before any data row of its
-    conversation)."""
-    from pyspark.sql import functions as F
-    return totals.select(
-        "conv_id",
-        F.lit(-1).cast("int").alias("turn_idx"),
-        F.lit(None).cast("string").alias("role"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-        "_total", "_chars")
 
 
 # auto-dispatch threshold: the pushdown plan pays a totals pre-scan (one

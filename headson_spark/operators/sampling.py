@@ -1,25 +1,34 @@
-"""Sampler pushdown — the Spark analogue of the reference's
-"limit pushdown into the parse" (samplers applied during deserialization,
-SURVEY.md §4). Because all three samplers keep a set of ORIGINAL indices
-that is a deterministic function of the cap alone (head: prefix; tail:
-suffix; default: fixed 3-phase prefix-closed sequence), the keep-decision
-can be evaluated as a vectorized column filter BEFORE the conv_id shuffle,
-cutting shuffle volume to O(cap) turns per conversation.
+"""Spark-side turn selection: which rows every plan reads.
+
+The reference applies its samplers during deserialization, a limit
+pushdown into the parse (SURVEY.md §4). Every sampler keeps a set of
+positions: head a prefix, balanced the fixed prefix-closed sequence
+K(cap), tail the last cap positions of the conversation. So the keep
+decision is a column filter on the position `turn_idx`, evaluated
+BEFORE the conv_id shuffle, which cuts the shuffle to O(cap) turns per
+conversation. Only tail needs the conversation's position count, which
+it joins back.
+
+`counted_turns` is the row contract of every preview path;
+`kept_position_filter` and `kept_turns` are the keep rule
+(kernel.arena.KeepRule.shown) in column form; `pushdown_rows` adds
+each conversation's totals as one sentinel row. The pushdown preview
+plan, `corpus_digest` and the registry's `head_cap`, `tail_cap` and
+`default_sample` queries all select their turns here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.arena import KEPT_POSITIONS_MAX, default_sample_indices
 
 
-def default_kept_positions(cap: int,
-                           max_len: int = KEPT_POSITIONS_MAX) -> list[int]:
+def default_kept_positions(cap: int) -> list[int]:
     """The default sampler's kept-position sequence K(cap): for any stream
     of length L the kept set is {i in K(cap) : i < L} (prefix-closed), so
     one precomputed list serves every conversation."""
-    return default_sample_indices(cap, max_len)
+    return default_sample_indices(cap, KEPT_POSITIONS_MAX)
 
 
 def counted_turns(df: DataFrame) -> DataFrame:
@@ -50,53 +59,57 @@ def kept_position_filter(skew: str, cap: int):
         f"unknown skew: {skew} (expected 'balanced' | 'head' | 'tail')")
 
 
-def with_turn_ordinal(df: DataFrame) -> DataFrame:
-    """Dense 0-based position per conversation in stable turn order
-    (dedupes (conv_id, turn_idx) last-write-wins by ts first).
-
-    Single-sort plan: one window sorted (conv_id, turn_idx, ts DESC)
-    serves BOTH steps — the LWW winner is the first row of each turn_idx
-    run (lag(turn_idx) != turn_idx), and after the winners-only filter
-    the ordinal window's required ordering (conv_id, turn_idx) is a
-    prefix of the ordering the data already has, so EnsureRequirements
-    elides its sort. Net: one exchange + one sort for dedup+ordinal
-    (previously two window sorts — the round-3 default_sample
-    regression)."""
-    w_full = Window.partitionBy("conv_id").orderBy("turn_idx",
-                                                   F.desc("ts"))
-    w_ord = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return (df.withColumn("_prev_idx", F.lag("turn_idx").over(w_full))
-              .filter(F.col("_prev_idx").isNull()
-                      | (F.col("_prev_idx") != F.col("turn_idx")))
-              .drop("_prev_idx")
-              .withColumn("turn_ord",
-                          (F.row_number().over(w_ord) - 1).cast("int")))
+def kept_turns(df: DataFrame, totals: DataFrame, skew: str,
+               cap: int) -> DataFrame:
+    """The rows of `df` the skew's keep rule shows at `cap`, by position
+    (KeepRule.shown): a column filter for balanced and head; for tail,
+    a join with `totals` (conv_totals of df) and
+    `turn_idx >= _total - cap`, the kept rows carrying both totals."""
+    keep = kept_position_filter(skew, cap)
+    if keep is not None:
+        return df.filter(keep)
+    # The join and the sentinels read one totals plan, so Spark
+    # aggregates the input once and reuses that exchange: the null-safe
+    # key infers no isnotnull(conv_id) filter into it, and the kept rows
+    # keep both totals, so column pruning leaves it whole.
+    tot = totals.withColumnRenamed("conv_id", "_tc")
+    return (df.join(tot, df["conv_id"].eqNullSafe(tot["_tc"]))
+              .filter(F.col("turn_idx") >= F.col("_total") - cap)
+              .drop("_tc"))
 
 
-def head_cap(df: DataFrame, cap: int) -> DataFrame:
-    """Head sampler as a window filter (samplers/head.rs:33-79)."""
-    return with_turn_ordinal(df).filter(F.col("turn_ord") < cap)
+def conv_totals(df: DataFrame) -> DataFrame:
+    """Per-conversation totals: the position count max(turn_idx) + 1 (the
+    n_turns of every preview path) and the char count over all delivered
+    rows. Both aggregate map-side — one narrow row per conversation per
+    task through the exchange."""
+    return df.groupBy("conv_id").agg(
+        (F.max("turn_idx") + 1).cast("int").alias("_total"),
+        F.sum(F.length("text")).cast("bigint").alias("_chars"))
 
 
-def tail_cap(df: DataFrame, cap: int) -> DataFrame:
-    """Tail sampler (samplers/tail.rs:5-80): last `cap` turns.
-
-    Uses an unordered count window over the same conv_id partitioning
-    (turn_ord >= n - cap) instead of a descending row_number — no third
-    sort; the data is already clustered by conv_id from
-    with_turn_ordinal's single window sort."""
-    w_all = Window.partitionBy("conv_id")
-    base = with_turn_ordinal(df)
-    return (base.withColumn("_n", F.count("*").over(w_all))
-                .filter(F.col("turn_ord") >= F.col("_n") - cap)
-                .drop("_n"))
-
-
-def default_cap(df: DataFrame, cap: int) -> DataFrame:
-    """Default 3-phase sampler as a broadcast IN-set filter — bit-exact
-    with the kernel's mix64 acceptance (samplers/default.rs:131-217)."""
-    return (with_turn_ordinal(df)
-            .filter(F.col("turn_ord").isin(default_kept_positions(cap))))
+def pushdown_rows(df: DataFrame, skew: str, cap: int) -> DataFrame:
+    """The kept rows of `df` (counted_turns rows) unioned with one
+    sentinel row per conversation: turn_idx = -1, ts NULL and NULL
+    content, carrying the conversation's conv_totals `_total` and
+    `_chars`. No data row sits at a negative turn_idx, so the sentinel
+    sorts first in its conversation. Kept rows carry NULL totals, or
+    both totals under tail, whose keep filter joins them in."""
+    totals = conv_totals(df)
+    kept = kept_turns(df, totals, skew, cap)
+    carried = ("_total", "_chars") if "_total" in kept.columns else (
+        F.lit(None).cast("int").alias("_total"),
+        F.lit(None).cast("bigint").alias("_chars"))
+    kept = kept.select(
+        "conv_id", "turn_idx", "role", "text", "tool", "ts", *carried)
+    return kept.unionByName(totals.select(
+        "conv_id",
+        F.lit(-1).cast("int").alias("turn_idx"),
+        F.lit(None).cast("string").alias("role"),
+        F.lit(None).cast("string").alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        F.lit(None).cast("timestamp").alias("ts"),
+        "_total", "_chars"))
 
 
 def stratified_sample(df: DataFrame, fractions: dict[str, float],

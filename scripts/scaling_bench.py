@@ -7,7 +7,9 @@ efficiency = (T_4N/T_N)/4.
 Each level runs this script in a fresh subprocess (its own JVM, via
 `--level`) so sessions don't share executors; the timed figure is the
 best pass after the first (the first pass warms Python workers + page
-cache).
+cache). A level runs passes until two in a row fail to lower that best
+by more than 2%, at most 12, and reports `steady` false when the cap
+stopped it.
 
 Physical plan under measurement: SPARK_GRAFT_SCALING_PLAN, "full" by
 default — the single-shuffle full pipeline, the optimal plan for this
@@ -28,26 +30,48 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# timed passes per level; the first only warms up
-PASSES = 5
+# at most this many passes per level; the first only warms up
+PASSES = 12
+# a pass lowers a level's best when it beats it by more than this share
+STEADY_GAIN = 0.02
+
+
+def steady(runs: list[float]) -> bool:
+    """Whether the last two passes after the warm-up one each failed to
+    lower the best of the timed passes before them by more than
+    STEADY_GAIN."""
+    timed = runs[1:]
+    return len(timed) >= 3 and all(
+        timed[i] >= min(timed[:i]) * (1 - STEADY_GAIN) for i in (-2, -1))
+
+
+def passes_until_steady(one_pass) -> list[float]:
+    """Wall seconds of one_pass() calls, run until the passes are steady
+    or PASSES have run."""
+    runs: list[float] = []
+    while len(runs) < PASSES and not steady(runs):
+        runs.append(one_pass())
+    return runs
 
 
 def timed_passes(tdf, plan: str) -> list[float]:
-    """Wall seconds of PASSES preview runs of `tdf` under `plan`, each
-    written to the noop sink."""
+    """Wall seconds of preview runs of `tdf` under `plan`, each written
+    to the noop sink, until steady or PASSES have run."""
     from headson_spark.operators.preview import conversation_previews
-    runs = []
-    for _ in range(PASSES):
+
+    def one_pass() -> float:
         t0 = time.time()
         conversation_previews(tdf, budget=500, pushdown=plan).write.format(
             "noop").mode("overwrite").save()
-        runs.append(time.time() - t0)
-    return runs
+        return time.time() - t0
+
+    return passes_until_steady(one_pass)
 
 
 def level(cores: int, turns: int, plan: str) -> dict:
     """One level, in this process: a local[cores] session over the
-    cached transcripts with `turns` bulk turns."""
+    cached transcripts with `turns` bulk turns. `steady` is false when
+    the PASSES cap, not the steady rule, ended the passes."""
     from headson_spark.session import get_spark
     from headson_spark.sources.transcripts import ensure_transcripts
     spark = get_spark("scaling", master=f"local[{cores}]",
@@ -64,7 +88,7 @@ def level(cores: int, turns: int, plan: str) -> dict:
     best = min(runs[1:])
     spark.stop()
     return {"cores": cores, "plan": plan, "turns": n, "sec": round(best, 2),
-            "turns_per_sec": round(n / best, 1),
+            "turns_per_sec": round(n / best, 1), "steady": steady(runs),
             "all_runs_sec": [round(r, 2) for r in runs]}
 
 

@@ -189,6 +189,17 @@ def test_read_widened_gate_is_logged(spark, tmp_path, caplog, monkeypatch):
     assert uri.endswith("-> plain scan")
 
 
+@pytest.mark.parametrize("name", ["head_cap", "default_sample"])
+def test_registry_samplers_plan_only_the_transcript_exchange(spark, name):
+    """The registry's head and balanced samplers filter by position
+    (sampling.kept_position_filter), so their one exchange is the
+    transcript table's own turn-numbering window: no second exchange
+    and sort to rank the turns."""
+    import __spark_entry__ as em
+    df = em.queries()[name](spark, "/root/testdata/sf0.001")
+    assert count_exchanges(df) == 1, formatted_plan(df)
+
+
 def test_broadcast_join_for_small_dim(spark):
     import __spark_entry__ as em
     df = em.queries()["join_top_customers"](spark, "/root/testdata/sf0.001")
